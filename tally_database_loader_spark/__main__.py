@@ -23,6 +23,15 @@ Sinks (``database.technology``):
 - ``mssql`` / ``mysql`` / ``postgres``: JDBC batched inserts with the
   reference's batching levers (B1-B4).
 
+Every sink loads the tables concurrently, one driver thread per table
+(each load is a single-task job, so a serial loop would leave all but
+one core idle); extraction stays serial, so a live Tally server sees one
+request at a time. Each table's row count is observed on its write job,
+never by a second scan. Import-log lines keep definition order and carry
+each table's own seconds; in incremental mode the E-protocol merge is
+logged once as a phase, followed by each merged table's row count from
+the store's file statistics.
+
 Table definitions come from ``tally.definition`` when it points at an
 existing YAML file (A4), else the built-in 22-table reference model.
 """
@@ -75,47 +84,46 @@ def _check_abort(aborted) -> None:
         raise SyncAborted("sync aborted")
 
 
-def _load(spark: SparkSession, cfg, frames: dict[str, DataFrame],
-          log, aborted=None) -> dict[str, int]:
+def _sink(spark: SparkSession, db):
+    """``load_one(name, df)``: the full-load writer of one table for the
+    configured ``database.technology``."""
     from .sinks import writers
-    db = cfg["database"]
     tech = db["technology"]
     loadpath = str(db.get("loadpath", "") or "output")
-    counts: dict[str, int] = {}
     if tech == "parquet":
         from .operators.table_format import make_store
         store = make_store(loadpath, spark=spark,
                            fmt=str(db.get("format", "manifest") or "manifest"))
-        for name, df in frames.items():
-            _check_abort(aborted)
-            t0 = time.perf_counter()
-            store.write(df, name)
-            counts[name] = store.read(spark, name).count()
-            log.log_table(name, counts[name], time.perf_counter() - t0)
-        return counts
+        return lambda name, df: store.write(df, name)
     if tech in ("csv", "json"):
         os.makedirs(loadpath, exist_ok=True)
         write = writers.write_csv if tech == "csv" else writers.write_json
-        for name, df in frames.items():
-            _check_abort(aborted)
-            t0 = time.perf_counter()
-            write(df, os.path.join(loadpath, f"{name}.{tech}"),
-                  single_file=True)
-            counts[name] = df.count()
-            log.log_table(name, counts[name], time.perf_counter() - t0)
-        return counts
+        return lambda name, df: write(
+            df, os.path.join(loadpath, f"{name}.{tech}"), single_file=True)
     if tech in ("mssql", "mysql", "postgres"):
         url = _jdbc_url(tech, db)
         creds = {"user": str(db["username"]), "password": str(db["password"])}
-        for name, df in frames.items():
-            _check_abort(aborted)
-            t0 = time.perf_counter()
-            writers.write_jdbc(df, url, f"{db['schema']}.{name}",
-                               technology=tech, properties=creds)
-            counts[name] = df.count()
-            log.log_table(name, counts[name], time.perf_counter() - t0)
-        return counts
+        return lambda name, df: writers.write_jdbc(
+            df, url, f"{db['schema']}.{name}", technology=tech,
+            properties=creds)
     raise SystemExit(f"unsupported database.technology: {tech}")
+
+
+def _load(spark: SparkSession, cfg, frames: dict[str, DataFrame],
+          log, aborted=None) -> dict[str, int]:
+    """Full load of ``frames`` into the sink, the tables concurrently
+    (``sinks.writers.load_tables``); one import-log line per loaded
+    table, in definition order, with its observed row count and its own
+    seconds. Raises ``SyncAborted`` after logging the tables that loaded
+    when ``aborted()`` stopped any table from starting."""
+    from .sinks.writers import load_tables
+    loaded = load_tables(spark, frames, _sink(spark, cfg["database"]),
+                         aborted)
+    for name, (rows, seconds) in loaded.items():
+        log.log_table(name, rows, seconds)
+    if len(loaded) < len(frames):
+        raise SyncAborted("sync aborted")
+    return {name: rows for name, (rows, _) in loaded.items()}
 
 
 def _jdbc_url(tech: str, db) -> str:
@@ -134,46 +142,45 @@ def run_import(spark: SparkSession, cfg, log,
     ``tally.sync: full`` = truncate-and-load (B9, the reference default).
     ``tally.sync: incremental`` (parquet sink only) runs the E-protocol
     over the extracted frames — anti-join deletes, version-mismatch
-    modifies, scoped upsert commits, cascades. Any table missing from
-    the store (the very first run, or one newly added to the
-    definition) bootstraps with a full load first — the reference's
+    modifies, scoped upsert commits, cascades — logged as one timed
+    phase plus each merged table's post-merge row count. Any table
+    missing from the store (the very first run, or one newly added to
+    the definition) then bootstraps with a full load — the reference's
     first-run behavior, applied per table so a definition edit can
     never be silently skipped. ``aborted`` is the cooperative-stop
-    predicate (checked between tables)."""
+    predicate (checked before the merge and as each table's load
+    starts)."""
     specs = _load_specs(cfg)
     frames = _extract(spark, cfg, specs)
     db = cfg["database"]
-    if str(cfg.get("tally", "sync")) == "incremental" \
-            and db["technology"] == "parquet":
-        import time as _t
-
-        from .operators.incremental import IncrementalSync
-        from .operators.table_format import make_store
-        store = make_store(str(db.get("loadpath", "") or "output"),
-                           spark=spark,
-                           fmt=str(db.get("format", "manifest") or "manifest"))
-        eng = IncrementalSync(spark, store, specs)
-        t0 = _t.perf_counter()
-        # diff/merge over the already-synced tables FIRST — bootstrapping
-        # a new table would advance the sink AlterId watermark and mask
-        # the pending changes of the old ones — then full-load any table
-        # missing from the store (first run, or newly added to the
-        # definition; silently skipping it would lose the table forever)
-        existing = {t: df for t, df in frames.items() if store.exists(t)}
-        if existing:
-            _check_abort(aborted)
-            eng.incremental_sync_frames(existing)
-        for name, df in frames.items():
-            if not store.exists(name):
-                _check_abort(aborted)
-                store.write(df, name)
-        counts = {t: store.read(spark, t).count() for t in frames
-                  if store.exists(t)}
-        dt = _t.perf_counter() - t0
-        for name in sorted(counts):
-            log.log_table(name, counts[name], dt / max(len(counts), 1))
-        return counts
-    return _load(spark, cfg, frames, log, aborted=aborted)
+    if str(cfg.get("tally", "sync")) != "incremental" \
+            or db["technology"] != "parquet":
+        return _load(spark, cfg, frames, log, aborted=aborted)
+    from .operators.incremental import IncrementalSync
+    from .operators.table_format import make_store
+    store = make_store(str(db.get("loadpath", "") or "output"), spark=spark,
+                       fmt=str(db.get("format", "manifest") or "manifest"))
+    # diff/merge over the already-synced tables FIRST — bootstrapping a
+    # new table would advance the sink AlterId watermark and mask the
+    # pending changes of the old ones — then full-load any table missing
+    # from the store (first run, or newly added to the definition;
+    # silently skipping it would lose the table forever)
+    existing = {t: df for t, df in frames.items() if store.exists(t)}
+    counts: dict[str, int] = {}
+    if existing:
+        _check_abort(aborted)
+        t0 = time.perf_counter()
+        IncrementalSync(spark, store, specs).incremental_sync_frames(existing)
+        log.log_phase("incremental sync", time.perf_counter() - t0)
+        # post-merge sizes from the store's metadata; the merge is one
+        # phase, so these lines carry no per-table time
+        for name in existing:
+            counts[name] = store.row_count(spark, name)
+            log.log_table(name, counts[name])
+    counts.update(_load(spark, cfg, {t: df for t, df in frames.items()
+                                     if t not in existing},
+                        log, aborted=aborted))
+    return {t: counts[t] for t in frames}
 
 
 def serve(cfg_path: str, *, spark: SparkSession,
@@ -205,9 +212,9 @@ def serve(cfg_path: str, *, spark: SparkSession,
         cfg = load_config(cfg_text, overrides)
 
         class _FeedLogger(SyncLogger):
-            def log_table(self, table, rows, seconds):
-                super().log_table(table, rows, seconds)
-                emit(f"{table}: {rows} in {seconds:.3f} sec")
+            def log_line(self, line):
+                super().log_line(line)
+                emit(line)
 
         log = _FeedLogger(str(cfg["database"].get("logpath", "")
                               or "import-log.txt"))

@@ -3,13 +3,17 @@
 
 Protocol per sync (maps E1-E11):
 
-1. probe source + sink max AlterIds; early-exit when equal (E1/E2, H2)
-2. per Primary table: pull the (guid, alterid) changed-set; deletes =
+1. probe source + sink max AlterIds, one union-of-max probe per
+   watermark group; early-exit when equal (E1/E2, H2)
+2. per Primary table (the read-only diffs of all of them run
+   concurrently): pull the (guid, alterid) changed-set; deletes =
    sink ⟕̸ changed-set (anti-join, E4); modified = equi-join with
    alterid ≠ (E5); drop both from the sink (E6) and cascade-delete child
-   rows via their FK edges (E7)
+   rows via their FK edges (E7) — the table's commit and each child's
+   run concurrently
 3. re-extract rows with alterid > last sink id and append — deleted +
-   modified rows were removed, so append ≡ upsert (E8, C8 filter)
+   modified rows were removed, so append ≡ upsert (E8, C8 filter). A
+   table with nothing to delete or append is skipped whole (no commit)
 4. cascade-update: refresh denormalized parent-name columns on children
    via broadcast join (E9)
 5. auto voucher renumbering: re-pull (guid, voucher_number) of vouchers
@@ -30,10 +34,13 @@ src/tally.mts:406-446).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
+from ..sinks.writers import load_tables
 from ..sources.registry import TableSpec
 from .flatten import extract_all
 from .table_format import TableFormat
@@ -262,6 +269,13 @@ class ParquetStore(TableFormat):
 
     # -- snapshot I/O -------------------------------------------------------
 
+    def _files(self, table: str, v: int) -> list[str]:
+        """Absolute paths of every data file snapshot ``v`` lists."""
+        troot = os.path.join(self.root, table)
+        return [os.path.join(troot, rel)
+                for rels in self._read_manifest(table, v).values()
+                for rel in rels]
+
     def read(self, spark: SparkSession, table: str,
              version: int | None = None) -> DataFrame:
         """Read the latest snapshot, or time-travel to ``version`` — the
@@ -276,10 +290,7 @@ class ParquetStore(TableFormat):
         elif version not in vs:
             raise FileNotFoundError(f"{table} has no version {version}; "
                                     f"available: {vs}")
-        troot = os.path.join(self.root, table)
-        files = [os.path.join(troot, rel)
-                 for rels in self._read_manifest(table, version).values()
-                 for rel in rels]
+        files = self._files(table, version)
         sj = self._manifest_schema(table, version)
         if not files:  # a committed-empty snapshot
             if sj is not None:
@@ -490,10 +501,7 @@ class ParquetStore(TableFormat):
         vs = self._versions(table)
         if not vs:
             return None
-        man = self._read_manifest(table, vs[-1])
-        troot = os.path.join(self.root, table)
-        files = [os.path.join(troot, rel)
-                 for rels in man.values() for rel in rels]
+        files = self._files(table, vs[-1])
         if not files:
             return None  # committed-empty snapshot: no rows, no max
 
@@ -534,6 +542,26 @@ class ParquetStore(TableFormat):
             # abort the sync (ADVICE r10)
             return None
         return max(maxes) if maxes else None
+
+    def row_count(self, spark: SparkSession, table: str) -> int:
+        """Rows of the latest snapshot from the PARQUET FOOTERS of its
+        manifest's data files (``num_rows``, exact) — a metadata sweep
+        like ``column_max``, so logging a table's size after a sync costs
+        no scan. An unreadable footer falls back to the scan."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        vs = self._versions(table)
+        if vs:
+            try:
+                with ThreadPoolExecutor(max_workers=32) as pool:
+                    return sum(pool.map(
+                        lambda p: pq.ParquetFile(p).metadata.num_rows,
+                        self._files(table, vs[-1])))
+            except (OSError, pa.ArrowException):
+                pass
+        return super().row_count(spark, table)
 
     def compact(self, spark: SparkSession, table: str,
                 sort_col: str | None = None) -> int:
@@ -582,15 +610,21 @@ def sink_max_alterid(spark: SparkSession, store: TableFormat,
             scan.append(t)
         else:
             best = max(best, int(m))
-    frames = [store.read(spark, t).agg(F.max("alterid").alias("v"))
-              for t in scan]
-    if frames:
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        row = out.agg(F.coalesce(F.max("v"), F.lit(0)).alias("m")).collect()[0]
-        best = max(best, int(row.m))
-    return best
+    return max(best, union_max([store.read(spark, t) for t in scan],
+                               "alterid"))
+
+
+def union_max(frames: list[DataFrame], col: str) -> int:
+    """The maximum of ``col`` over several frames, floored at 0, in ONE
+    action: the union of their per-frame maxima, the reference's
+    ``union all`` probe shape (src/tally.mts:118-124)."""
+    if not frames:
+        return 0
+    out = frames[0].agg(F.max(col).alias("v"))
+    for f in frames[1:]:
+        out = out.unionByName(f.agg(F.max(col).alias("v")))
+    return max(0, int(out.agg(F.coalesce(F.max("v"), F.lit(0)))
+                      .collect()[0][0]))
 
 
 class IncrementalSync:
@@ -605,12 +639,12 @@ class IncrementalSync:
     # -- full sync: truncate-and-load (reference B9 truncate + bulk load) --
 
     def full_sync(self, source_by_root: dict[str, DataFrame]) -> dict[str, int]:
+        """The CLI's full load (``sinks.writers.load_tables``): tables
+        load concurrently, each row count observed on its write job."""
         frames = extract_all(source_by_root, self.specs, include_alterid=True)
-        counts = {}
-        for name, df in frames.items():
-            self.store.write(df, name)
-            counts[name] = self.store.read(self.spark, name).count()
-        return counts
+        loaded = load_tables(self.spark, frames,
+                             lambda name, df: self.store.write(df, name))
+        return {name: rows for name, (rows, _) in loaded.items()}
 
     # -- incremental sync --------------------------------------------------
 
@@ -626,12 +660,12 @@ class IncrementalSync:
         # E1/E2: version probes; H2 change gate. Masters and vouchers
         # advance on INDEPENDENT AlterId counters ($AltMstId/$AltVchId,
         # reference src/tally.mts:114-128) — one probe per group
-        src_max = {"master": 0, "transaction": 0}
+        by_group: dict[str, list[DataFrame]] = {"master": [], "transaction": []}
         for root, df in source_by_root.items():
             if "AlterId" in df.columns:
-                g = "transaction" if root == "Voucher" else "master"
-                row = df.agg(F.coalesce(F.max("AlterId"), F.lit(0)).alias("m")).collect()[0]
-                src_max[g] = max(src_max[g], int(row.m))
+                by_group["transaction" if root == "Voucher"
+                         else "master"].append(df)
+        src_max = {g: union_max(dfs, "AlterId") for g, dfs in by_group.items()}
         frames = extract_all(source_by_root, self.specs, include_alterid=True)
         return self.incremental_sync_frames(frames, primaries=primaries,
                                             src_max=src_max)
@@ -667,19 +701,15 @@ class IncrementalSync:
         by_group: dict[str, list[str]] = {"master": [], "transaction": []}
         for name in primaries:
             by_group[self._group_of(name)].append(name)
-        if src_max is None or isinstance(src_max, int):
-            legacy = src_max if isinstance(src_max, int) else None
-            src_max = {"master": 0, "transaction": 0}
-            for g, names in by_group.items():
-                if legacy is not None:
-                    src_max[g] = legacy  # pre-split callers: one counter
-                    continue
-                for name in names:
-                    if "alterid" in frames[name].columns:
-                        row = frames[name].agg(
-                            F.coalesce(F.max("alterid"), F.lit(0)).alias("m")
-                        ).collect()[0]
-                        src_max[g] = max(src_max[g], int(row.m))
+        if isinstance(src_max, int):  # pre-split callers: one counter
+            src_max = dict.fromkeys(by_group, src_max)
+        elif src_max is None:  # one union-of-max probe per group, concurrently
+            src_max = dict(zip(by_group, run_concurrently(
+                self.spark,
+                lambda names: union_max([frames[n] for n in names
+                                         if "alterid" in frames[n].columns],
+                                        "alterid"),
+                by_group.values())))
         sink_max = {g: sink_max_alterid(self.spark, self.store, names)
                     for g, names in by_group.items()}
         if all(src_max.get(g, 0) == sink_max[g]
@@ -687,64 +717,28 @@ class IncrementalSync:
             stats["skipped"] = True
             return stats
 
-        removed_keys: dict[str, DataFrame] = {}
+        # The diffs (E3-E5, E8) only READ the sink and the source, so
+        # every primary's diff runs concurrently. The commits below go
+        # one primary at a time, so two primaries never rewrite the same
+        # child at once.
+        live = [n for n in primaries if self.store.exists(n)]
+        diffs = run_concurrently(
+            self.spark,
+            lambda n: self._diff(frames[n], self.store.read(self.spark, n),
+                                 sink_max[self._group_of(n)]),
+            live)
         changed_keys: dict[str, DataFrame] = {}
-        for name in primaries:
-            if not self.store.exists(name):
+        for name, (target, remove, fresh, deleted, appended) \
+                in zip(live, diffs):
+            stats["deleted"][name] = deleted
+            stats["appended"][name] = appended
+            # A primary this batch did not touch is skipped whole: no
+            # scoped read, no commit (so no empty new version), no
+            # cascade edges, and no entry in ``changed_keys``, so E9
+            # leaves its children alone too.
+            if not (deleted or appended):
                 continue
             spec = self.specs[name]
-            wm = sink_max[self._group_of(name)]  # this table's counter
-            # E3: slim changed-set (guid, alterid)
-            diff = frames[name].select("guid", F.col("alterid").alias("src_alterid"))
-            target = self.store.read(self.spark, name)
-            # E4 + E5 in ONE store pass (VERDICT r9 #1): a left-outer
-            # join classifies each sink row as gone-from-source (E4) or
-            # version-mismatched (E5). The sink side is column-pruned to
-            # (guid, alterid) — the only full-table read the merge pays,
-            # and it never carries the wide columns through the shuffle.
-            # The changed-set is mutation-sized; MATERIALIZE it once
-            # (eager localCheckpoint, same device as dup_clusters) — it
-            # is consumed by the scoped-base probe, the scoped write,
-            # the stats counts and the cascade edges, and without the
-            # checkpoint each consumer re-runs the diff join (measured
-            # 97s → 27.6s at the 10×sf0.1 decade replay in r9).
-            remove = (target.select("guid", "alterid")
-                            .join(diff.withColumn("__in_src", F.lit(True)),
-                                  "guid", "left")
-                            # gone (no source row — E4's anti-join) or
-                            # version-mismatched (E5; the strict != keeps
-                            # NULL-alterid rows, matching the two-join
-                            # form this replaces). A NULL-alterid sink row
-                            # is additionally flagged when its source twin
-                            # is beyond the watermark: E8 below derives
-                            # fresh rows from the source alone, so that
-                            # twin WILL be appended — without this clause
-                            # the stale NULL row would survive alongside
-                            # it, a duplicate guid the two-join form never
-                            # produced (ADVICE r10, medium)
-                            .filter(F.col("__in_src").isNull()
-                                    | (F.col("alterid")
-                                       != F.col("src_alterid"))
-                                    | (F.col("alterid").isNull()
-                                       & (F.col("src_alterid") > wm)))
-                            # .distinct(): a malformed source carrying
-                            # duplicate guids multiplies sink rows through
-                            # the left join — without it stats["deleted"]
-                            # and the broadcast anti-join/union inputs
-                            # hold duplicate guids (ADVICE r10)
-                            .select("guid").distinct()
-                            .localCheckpoint(eager=True))
-            removed_keys[name] = remove
-            # E8: fresh rows — alterid beyond the sink watermark (C8), or
-            # re-extraction of modified rows (their alterid > old one
-            # too). Derived from the SOURCE alone: a source row with
-            # alterid > wm cannot survive in the post-removal sink —
-            # every sink row has alterid <= wm (wm is the sink's group
-            # maximum), so a same-guid sink row either mismatches (then
-            # it is in ``remove``) or cannot exist; the anti-join the
-            # old code paid a full sink scan for was provably vacuous.
-            fresh = (frames[name].filter(F.col("alterid") > wm)
-                                 .localCheckpoint(eager=True))
             # E6: partition-scoped commit — only storage partitions
             # holding a removed or fresh guid are re-read AND rewritten;
             # the rest carry forward by manifest reference. scoped_base
@@ -752,77 +746,20 @@ class IncrementalSync:
             # wide-row I/O is O(changed buckets) on both sides.
             touched = remove.unionByName(fresh.select("guid"))
             changed_keys[name] = touched
-            base = self.store.scoped_base(self.spark, name, touched)
-            merged = (base.join(F.broadcast(remove), "guid", "left_anti")
-                          .unionByName(fresh))
-            self.store.write_scoped(merged, name, touched)
-            stats["deleted"][name] = remove.count()
-            stats["appended"][name] = fresh.count()
 
-            # E7: cascade delete through FK edges; children of fresh
-            # (new/modified) parents are re-derived from the source.
-            # ``fresh`` is already materialized above, so the parent-key
-            # projections below are cheap scans of the checkpoint. Each
-            # child edge reads ONLY the storage partitions holding an
-            # affected child row (scoped_base) — the wide child table is
-            # never fully scanned for a guid-keyed edge; a name-keyed
-            # edge pays one (fk, key)-pruned scan to locate the affected
-            # rows, then reads the wide columns scoped.
-            fresh_parents = fresh.select("guid")
-            for child, fk in spec.cascade_delete.items():
-                if not self.store.exists(child):
-                    continue
-                if fk == "guid":
-                    # children carry the parent voucher guid, so the
-                    # touched buckets are exactly those of removed +
-                    # fresh parents
-                    touched_c = remove.unionByName(fresh_parents)
-                    base_c = self.store.scoped_base(self.spark, child,
-                                                    touched_c)
-                    kept_c = base_c.join(F.broadcast(remove), "guid",
-                                         "left_anti")
-                    if child in frames:
-                        refreshed = frames[child].join(
-                            F.broadcast(fresh_parents), "guid", "left_semi")
-                        kept_c = (kept_c.join(F.broadcast(fresh_parents),
-                                              "guid", "left_anti")
-                                        .unionByName(refreshed))
-                else:
-                    # FK is by parent NAME: map removed guids → names via
-                    # the pre-removal sink image (a (guid, name)-pruned
-                    # scan of the parent, not the child)
-                    child_df = self.store.read(self.spark, child)
-                    ckey = self.store._key_of(child_df)
-                    gone = (target.join(F.broadcast(remove), "guid",
-                                        "left_semi")
-                                  .select(F.col("name").alias(fk))
-                                  .distinct().localCheckpoint(eager=True))
-                    affected = gone
-                    refreshed = None
-                    if child in frames:
-                        fresh_names = (fresh.select(F.col("name").alias(fk))
-                                            .distinct()
-                                            .localCheckpoint(eager=True))
-                        refreshed = frames[child].join(
-                            F.broadcast(fresh_names), fk, "left_semi")
-                        affected = affected.unionByName(fresh_names)
-                    # locate affected child rows: one (fk, key)-pruned
-                    # scan; the wide read below is bucket-scoped
-                    touched_c = (child_df.join(F.broadcast(affected), fk,
-                                               "left_semi")
-                                         .select(ckey))
-                    if refreshed is not None:
-                        touched_c = touched_c.unionByName(
-                            refreshed.select(ckey))
-                    touched_c = touched_c.localCheckpoint(eager=True)
-                    base_c = self.store.scoped_base(self.spark, child,
-                                                    touched_c)
-                    kept_c = base_c.join(F.broadcast(gone), fk, "left_anti")
-                    if refreshed is not None:
-                        kept_c = (kept_c.join(F.broadcast(fresh_names), fk,
-                                              "left_anti")
-                                        .unionByName(refreshed))
-                self.store.write_scoped(kept_c, child, touched_c)
+            # E7: cascade delete through FK edges. Each child is a
+            # different table that only reads the checkpointed
+            # ``remove``/``fresh`` and the parent's pre-merge image, so
+            # the parent's commit and every edge run concurrently, one
+            # driver thread each.
+            commits = [partial(self._scoped_commit, name, remove, fresh,
+                               touched)]
+            commits += [partial(self._cascade_delete, child, fk,
+                                remove=remove, fresh=fresh, target=target,
+                                frames=frames)
+                        for child, fk in spec.cascade_delete.items()
+                        if self.store.exists(child)]
+            run_concurrently(self.spark, lambda commit: commit(), commits)
 
         # E9: cascade update — repair denormalized parent-name columns,
         # scoped to children of parents this sync actually changed
@@ -832,6 +769,134 @@ class IncrementalSync:
         if "trn_voucher" in frames and "mst_vouchertype" in frames:
             self._renumber_vouchers(frames)
         return stats
+
+    def _scoped_commit(self, name: str, remove: DataFrame, fresh: DataFrame,
+                       touched: DataFrame) -> None:
+        """E6 + E8 for one Primary table: drop ``remove`` and append
+        ``fresh`` in one commit scoped to the ``touched`` keys' buckets."""
+        base = self.store.scoped_base(self.spark, name, touched)
+        merged = (base.join(F.broadcast(remove), "guid", "left_anti")
+                      .unionByName(fresh))
+        self.store.write_scoped(merged, name, touched)
+
+    @staticmethod
+    def _diff(source: DataFrame, target: DataFrame, wm: int) -> tuple:
+        """E3-E5 + E8 for one Primary table against its watermark
+        ``wm``: ``(target, remove, fresh, deleted, appended)`` — the
+        sink image ``target``, the materialized guids to drop from it,
+        the materialized source rows to append, and the sizes of those
+        two. Reads only."""
+        # E3: slim changed-set (guid, alterid)
+        diff = source.select("guid", F.col("alterid").alias("src_alterid"))
+        # E4 + E5 in ONE store pass (VERDICT r9 #1): a left-outer
+        # join classifies each sink row as gone-from-source (E4) or
+        # version-mismatched (E5). The sink side is column-pruned to
+        # (guid, alterid) — the only full-table read the merge pays,
+        # and it never carries the wide columns through the shuffle.
+        # The changed-set is mutation-sized; MATERIALIZE it once
+        # (eager localCheckpoint, same device as dup_clusters) — it
+        # is consumed by the scoped-base probe, the scoped write,
+        # the stats counts and the cascade edges, and without the
+        # checkpoint each consumer re-runs the diff join (measured
+        # 97s → 27.6s at the 10×sf0.1 decade replay in r9).
+        remove = (target.select("guid", "alterid")
+                        .join(diff.withColumn("__in_src", F.lit(True)),
+                              "guid", "left")
+                        # gone (no source row — E4's anti-join) or
+                        # version-mismatched (E5; the strict != keeps
+                        # NULL-alterid rows, matching the two-join
+                        # form this replaces). A NULL-alterid sink row
+                        # is additionally flagged when its source twin
+                        # is beyond the watermark: E8 below derives
+                        # fresh rows from the source alone, so that
+                        # twin WILL be appended — without this clause
+                        # the stale NULL row would survive alongside
+                        # it, a duplicate guid the two-join form never
+                        # produced (ADVICE r10, medium)
+                        .filter(F.col("__in_src").isNull()
+                                | (F.col("alterid")
+                                   != F.col("src_alterid"))
+                                | (F.col("alterid").isNull()
+                                   & (F.col("src_alterid") > wm)))
+                        # .distinct(): a malformed source carrying
+                        # duplicate guids multiplies sink rows through
+                        # the left join — without it stats["deleted"]
+                        # and the broadcast anti-join/union inputs
+                        # hold duplicate guids (ADVICE r10)
+                        .select("guid").distinct()
+                        .localCheckpoint(eager=True))
+        # E8: fresh rows — alterid beyond the sink watermark (C8), or
+        # re-extraction of modified rows (their alterid > old one
+        # too). Derived from the SOURCE alone: a source row with
+        # alterid > wm cannot survive in the post-removal sink —
+        # every sink row has alterid <= wm (wm is the sink's group
+        # maximum), so a same-guid sink row either mismatches (then
+        # it is in ``remove``) or cannot exist; the anti-join the
+        # old code paid a full sink scan for was provably vacuous.
+        fresh = (source.filter(F.col("alterid") > wm)
+                       .localCheckpoint(eager=True))
+        # both sides are materialized, so their sizes are cheap counts
+        return target, remove, fresh, remove.count(), fresh.count()
+
+    def _cascade_delete(self, child: str, fk: str, *, remove: DataFrame,
+                        fresh: DataFrame, target: DataFrame,
+                        frames: dict[str, DataFrame]) -> None:
+        """E7 for one child edge: drop the child rows of ``remove``d
+        parents and re-derive the children of ``fresh`` (new/modified)
+        parents from the source. ``fresh`` is already materialized, so
+        the parent-key projections below are cheap scans of the
+        checkpoint. The edge reads ONLY the storage partitions holding
+        an affected child row (scoped_base) — the wide child table is
+        never fully scanned for a guid-keyed edge; a name-keyed edge pays
+        one (fk, key)-pruned scan to locate the affected rows, then reads
+        the wide columns scoped. ``target`` is the parent's pre-merge
+        image."""
+        fresh_parents = fresh.select("guid")
+        if fk == "guid":
+            # children carry the parent voucher guid, so the touched
+            # buckets are exactly those of removed + fresh parents
+            touched_c = remove.unionByName(fresh_parents)
+            base_c = self.store.scoped_base(self.spark, child, touched_c)
+            kept_c = base_c.join(F.broadcast(remove), "guid", "left_anti")
+            if child in frames:
+                refreshed = frames[child].join(
+                    F.broadcast(fresh_parents), "guid", "left_semi")
+                kept_c = (kept_c.join(F.broadcast(fresh_parents),
+                                      "guid", "left_anti")
+                                .unionByName(refreshed))
+        else:
+            # FK is by parent NAME: map removed guids → names via the
+            # pre-removal sink image (a (guid, name)-pruned scan of the
+            # parent, not the child)
+            child_df = self.store.read(self.spark, child)
+            ckey = self.store._key_of(child_df)
+            gone = (target.join(F.broadcast(remove), "guid", "left_semi")
+                          .select(F.col("name").alias(fk))
+                          .distinct().localCheckpoint(eager=True))
+            affected = gone
+            refreshed = None
+            if child in frames:
+                fresh_names = (fresh.select(F.col("name").alias(fk))
+                                    .distinct()
+                                    .localCheckpoint(eager=True))
+                refreshed = frames[child].join(
+                    F.broadcast(fresh_names), fk, "left_semi")
+                affected = affected.unionByName(fresh_names)
+            # locate affected child rows: one (fk, key)-pruned scan; the
+            # wide read below is bucket-scoped
+            touched_c = (child_df.join(F.broadcast(affected), fk,
+                                       "left_semi")
+                                 .select(ckey))
+            if refreshed is not None:
+                touched_c = touched_c.unionByName(refreshed.select(ckey))
+            touched_c = touched_c.localCheckpoint(eager=True)
+            base_c = self.store.scoped_base(self.spark, child, touched_c)
+            kept_c = base_c.join(F.broadcast(gone), fk, "left_anti")
+            if refreshed is not None:
+                kept_c = (kept_c.join(F.broadcast(fresh_names), fk,
+                                      "left_anti")
+                                .unionByName(refreshed))
+        self.store.write_scoped(kept_c, child, touched_c)
 
     def apply_cascade_updates(
             self,

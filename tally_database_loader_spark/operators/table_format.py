@@ -121,6 +121,12 @@ class TableFormat(abc.ABC):
         a 100 TB store cannot amortize per micro-batch."""
         return None
 
+    def row_count(self, spark: SparkSession, table: str) -> int:
+        """Rows of the latest snapshot. A backend that keeps file
+        statistics serves it from metadata (``ParquetStore``: footer
+        ``num_rows``); this default is the scan."""
+        return self.read(spark, table).count()
+
     @abc.abstractmethod
     def read(self, spark: SparkSession, table: str,
              version: int | None = None) -> DataFrame: ...

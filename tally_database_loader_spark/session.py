@@ -101,3 +101,25 @@ def get_spark(app_name: str = "tally_database_loader_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, fn, items) -> list:
+    """``[fn(item) for item in items]`` with every call on its own driver
+    thread, so independent single-task jobs (one table's load, one
+    child's merge) share the cores instead of queueing behind each
+    other. Each call is wrapped in ``inheritable_thread_target(spark)``
+    at submit time, so it runs with the caller's local properties (job
+    group, job description) and tags — ``cancelJobGroup`` reaches it —
+    on a private copy that concurrent queries cannot clobber. Results
+    come back in item order; after every call has finished, the first
+    exception in item order is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    items = list(items)
+    if len(items) < 2:
+        return [fn(item) for item in items]
+    with ThreadPoolExecutor(max_workers=len(items)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), item)
+                   for item in items]
+    return [f.result() for f in futures]

@@ -28,9 +28,12 @@ import glob
 import json
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 _BOM = b"\xef\xbb\xbf"
 
@@ -60,6 +63,41 @@ def _finalize_single_file(tmp_dir: str, dest: str, bom: bool) -> None:
                     src.readline()
                 shutil.copyfileobj(src, out)
     shutil.rmtree(tmp_dir)
+
+
+def write_counted(df: DataFrame, write) -> int:
+    """Run ``write(df)`` and return the rows it wrote, observed ON the
+    write job itself (``DataFrame.observe``) — a trailing ``df.count()``
+    would re-run the whole plan as a second job (and could disagree with
+    what was written for a non-deterministic input), and re-reading the
+    sink would be a second scan."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return int(obs.get["n"])
+
+
+def load_tables(spark: SparkSession, frames: dict[str, DataFrame], load_one,
+                aborted=None) -> dict[str, tuple[int, float]]:
+    """Full load of every frame through ``load_one(name, df)``, each
+    table on its own driver thread (``session.run_concurrently``): one
+    table's load is one single-task parse-plus-write job, so loading the
+    tables one after another leaves all but one core idle. Each row
+    count comes from the table's write job (``write_counted``).
+
+    ``aborted`` (the cooperative-stop predicate) is checked as each table
+    starts; a table whose check is true is not loaded. Returns
+    ``name → (rows, seconds)`` for the loaded tables, in ``frames``
+    order, each with its own measured seconds."""
+    def one(item):
+        name, df = item
+        if aborted is not None and aborted():
+            return None
+        t0 = time.perf_counter()
+        rows = write_counted(df, lambda d: load_one(name, d))
+        return name, (rows, time.perf_counter() - t0)
+
+    return dict(r for r in run_concurrently(spark, one, frames.items()) if r)
 
 
 def write_csv(df: DataFrame, path: str, *, single_file: bool = False,
@@ -198,16 +236,10 @@ def write_bigquery(df: DataFrame, dataset: str, table: str, *,
     ``outputRows``)."""
     opts = bigquery_writer_options(dataset, table, truncate=truncate,
                                    temp_bucket=temp_bucket)
-    # observe the row count ON the write job itself — a trailing
-    # df.count() would re-run the whole plan as a second job (and could
-    # disagree with what was written for a non-deterministic input)
-    from pyspark.sql import Observation
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
     if stub_dir is not None:
         stage = os.path.join(stub_dir, f"{table}.csv")
-        write_csv(df, stage, single_file=True, bom=False)
-        n_rows = int(obs.get["n"])
+        n_rows = write_counted(df, lambda d: write_csv(
+            d, stage, single_file=True, bom=False))
         job = {
             "configuration": {
                 "load": {
@@ -223,18 +255,21 @@ def write_bigquery(df: DataFrame, dataset: str, table: str, *,
                   encoding="utf-8") as fh:
             json.dump(job, fh, indent=2, sort_keys=True)
         return n_rows
-    try:
-        writer = df.write.mode("overwrite").format("bigquery")
+
+    def save(d: DataFrame) -> None:
+        writer = d.write.mode("overwrite").format("bigquery")
         for k, v in opts.items():
             writer = writer.option(k, v)
         writer.save()
+
+    try:
+        return write_counted(df, save)
     except Exception as exc:  # connector jar absent / misconfigured
         raise RuntimeError(
             "BigQuery write requires the spark-bigquery connector on the "
             "classpath (--packages com.google.cloud.spark:spark-bigquery-"
             "with-dependencies); pass stub_dir= for a local dry run"
         ) from exc
-    return int(obs.get["n"])
 
 
 def write_cdm(dfs: dict[str, DataFrame], specs: dict, out_dir: str, *,
