@@ -14,15 +14,21 @@ Cross-cutting semantics (reference docs/data-structure.md):
 - accounting effects = is_order_voucher=0 AND is_inventory_voucher=0 (:203-213)
 - partial-workflow dedup on tracking_number via ROW_NUMBER (:242-258)
 
-Scale notes: masters broadcast onto transaction facts; the date spine is a
-tiny exploded sequence broadcast onto daily aggregates; aggregations are
-single groupBys with map-side partials; the group-tree traversals use the
-iterative closure operator (operators/hierarchy.py) instead of recursion.
+Scale notes: masters broadcast onto transaction facts; the date and month
+spines are tiny exploded sequences broadcast onto the aggregates;
+aggregations are single groupBys with map-side partials. The header ⋈
+detail joins are staged once per catalog snapshot (``acct_voucher``), and
+the group trees read ``mst_group`` once and walk it on the driver
+(``_walk_groups``): each report costs a handful of Spark jobs, and at the
+library's table sizes a job's fixed cost is what a report pays for.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import threading
+import weakref
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -37,26 +43,39 @@ def _dzero():
     return F.lit("0").cast(_D17)
 
 
+# (detail, header) → their join on guid, staged; keyed on the catalog's
+# own DataFrame objects, so a catalog's reports share one staged join,
+# a catalog re-read from the store (new objects) gets a fresh one, and
+# an entry — with its checkpoint blocks — goes when its catalog does
+_STAGED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_STAGED_LOCK = threading.Lock()
+
+
+def _staged_join(detail: DataFrame, header: DataFrame) -> DataFrame:
+    """``detail ⋈ header`` on guid, lazily ``localCheckpoint``-ed once per
+    pair of DataFrame objects: the first report to run it materializes
+    the join, every later report reads the checkpoint blocks."""
+    with _STAGED_LOCK:
+        by_header = _STAGED.setdefault(detail, weakref.WeakKeyDictionary())
+        staged = by_header.get(header)
+        if staged is None:
+            staged = detail.join(header, "guid").localCheckpoint(eager=False)
+            by_header[header] = staged
+        return staged
+
+
 def acct_voucher(cat: Catalog) -> DataFrame:
     """trn_accounting ⋈ trn_voucher on guid (all voucher columns) — the
     report library's hottest join: nearly every report starts from it.
-    A catalog may pre-stage it under ``__acct_voucher__`` (report_gate
-    materializes it once per catalog), so the whole library pays the
-    header/detail shuffle once instead of once per report; Catalyst
-    prunes unused columns per consumer either way."""
-    pre = cat.get("__acct_voucher__")
-    if pre is not None:
-        return pre
-    return cat["trn_accounting"].join(cat["trn_voucher"], "guid")
+    Staged once per catalog snapshot (``_staged_join``), so the whole
+    library pays the header/detail join once instead of once per report."""
+    return _staged_join(cat["trn_accounting"], cat["trn_voucher"])
 
 
 def inv_voucher(cat: Catalog) -> DataFrame:
     """trn_inventory ⋈ trn_voucher on guid — the inventory-side analogue
-    of ``acct_voucher`` (same optional ``__inv_voucher__`` staging)."""
-    pre = cat.get("__inv_voucher__")
-    if pre is not None:
-        return pre
-    return cat["trn_inventory"].join(cat["trn_voucher"], "guid")
+    of ``acct_voucher``, staged the same way."""
+    return _staged_join(cat["trn_inventory"], cat["trn_voucher"])
 
 
 def _accounting_effects(cat: Catalog) -> DataFrame:
@@ -66,13 +85,33 @@ def _accounting_effects(cat: Catalog) -> DataFrame:
                                     & (F.col("is_inventory_voucher") == 0))
 
 
+def _range_bounds(from_date: str, to_date: str):
+    """(start, stop) date columns; stop is NULL when the range is
+    inverted, which makes ``sequence`` NULL and its explode empty
+    (Spark's ``sequence`` would otherwise count down, or raise with a
+    positive step)."""
+    start, stop = F.lit(from_date).cast("date"), F.lit(to_date).cast("date")
+    return start, F.when(start <= stop, stop)
+
+
 def _date_spine(spark, from_date: str, to_date: str) -> DataFrame:
     """Closed-form calendar spine — replaces the reference's recursive CTE
     capped at maxrecursion 500 (reports/mssql/sales-daily.sql:4-9);
-    formulation follows reports/bigquery/sales-daily.sql:13."""
-    return spark.range(1).select(
-        F.explode(F.sequence(F.lit(from_date).cast("date"),
-                             F.lit(to_date).cast("date"))).alias("date"))
+    formulation follows reports/bigquery/sales-daily.sql:13. An inverted
+    range (``from_date > to_date``) is empty, as ``generate_series`` is."""
+    start, stop = _range_bounds(from_date, to_date)
+    return spark.range(1).select(F.explode(F.sequence(start, stop)).alias("date"))
+
+
+def _month_spine(spark, from_date: str, to_date: str) -> DataFrame:
+    """(year, month) of every month the range touches, one row each —
+    the months of ``_date_spine`` without exploding and deduplicating
+    its days; empty for an inverted range."""
+    start, stop = _range_bounds(from_date, to_date)
+    month = F.explode(F.sequence(F.trunc(start, "month"), stop,
+                                 F.expr("INTERVAL 1 MONTH")))
+    return (spark.range(1).select(month.alias("m"))
+                 .select(F.year("m").alias("year"), F.month("m").alias("month")))
 
 
 # ---------------------------------------------------------------------------
@@ -82,23 +121,25 @@ def trial_balance(cat: Catalog, from_date: str, to_date: str) -> DataFrame:
     credit/closing; revenue ledgers report period movement only."""
     eff = _accounting_effects(cat)
     led = cat["mst_ledger"]
-    op = (eff.filter(F.col("date") < F.lit(from_date).cast("date"))
-             .groupBy(F.col("ledger").alias("op_ledger"))
-             .agg(F.sum("amount").alias("op_amount")))
-    curr = (eff.filter(F.col("date").between(from_date, to_date))
-               .groupBy(F.col("ledger").alias("cu_ledger"))
-               .agg(F.sum(F.when(F.col("amount") < 0, F.abs(F.col("amount")))
-                           .otherwise(_dzero())).alias("cu_debit"),
-                    F.sum(F.when(F.col("amount") > 0, F.col("amount"))
-                           .otherwise(_dzero())).alias("cu_credit")))
+    # opening movement, debit and credit in one aggregate: each sum only
+    # sees its own date window (rows outside it are NULL to the sum)
+    before = F.col("date") < F.lit(from_date).cast("date")
+    within = F.col("date").between(from_date, to_date)
+    amt = F.col("amount")
+    mov = (eff.filter(before | within)
+              .groupBy(F.col("ledger").alias("mv_ledger"))
+              .agg(F.sum(F.when(before, amt)).alias("op_amount"),
+                   F.sum(F.when(within, F.when(amt < 0, F.abs(amt))
+                                        .otherwise(_dzero()))).alias("cu_debit"),
+                   F.sum(F.when(within, F.when(amt > 0, amt)
+                                        .otherwise(_dzero()))).alias("cu_credit")))
     opening_all = F.col("opening_balance") + F.coalesce(F.col("op_amount"), _dzero())
     opening = F.when(F.col("is_revenue") == 0, opening_all).otherwise(_dzero())
     debit = F.coalesce(F.col("cu_debit"), _dzero())
     credit = F.coalesce(F.col("cu_credit"), _dzero())
     closing = F.when(F.col("is_revenue") == 0, opening_all + credit - debit) \
                .otherwise(credit - debit)
-    return (led.join(F.broadcast(op), led.name == F.col("op_ledger"), "left")
-               .join(F.broadcast(curr), led.name == F.col("cu_ledger"), "left")
+    return (led.join(F.broadcast(mov), led.name == F.col("mv_ledger"), "left")
                .select(F.col("name"),
                        opening.cast(_D17).alias("opening"),
                        debit.cast(_D17).alias("debit"),
@@ -355,9 +396,7 @@ def _monthly_series(cat: Catalog, primary_group: str, from_date: str,
                     to_date: str, negate: bool,
                     accounting_only: bool = False) -> DataFrame:
     spark = cat["trn_voucher"].sparkSession
-    months = (_date_spine(spark, from_date, to_date)
-              .select(F.year("date").alias("year"), F.month("date").alias("month"))
-              .distinct())
+    months = _month_spine(spark, from_date, to_date)
     eff = (acct_voucher(cat)
            .join(F.broadcast(cat["mst_ledger"].select(F.col("name").alias("ledger"),
                                                       F.col("parent").alias("l_parent"))),
@@ -420,39 +459,41 @@ def daily_cash_movement(cat: Catalog, from_date: str, to_date: str) -> DataFrame
                          F.coalesce("payment", _dzero()).cast(_D17).alias("payment")))
 
 
+def _walk_groups(cat: Catalog, group: str, max_depth: int,
+                 down: bool) -> DataFrame:
+    """Rows of ``mst_group(name, parent)`` reachable from ``group``: down
+    to its descendants (a row's parent equals a reached name) or up its
+    ancestor chain (a row's name equals a reached parent). One read of
+    the dimension, walked on the driver, level by level exactly as the
+    recursive CTE joins: NULL matches nothing, every matching row is
+    emitted (duplicate names keep the join's multiplicity) and a cycle
+    stops after ``max_depth`` levels."""
+    g = cat["mst_group"].select("name", "parent")
+    rows = g.collect()
+    match, link = (1, 0) if down else (0, 1)
+    edges = defaultdict(list)
+    for r in rows:
+        if r[match] is not None:  # NULL matches nothing, so never index it
+            edges[r[match]].append(r)
+    level = [r for r in rows if r[0] == group]
+    out = list(level)
+    for _ in range(max_depth - 1):
+        level = [e for r in level for e in edges.get(r[link], ())]
+        if not level:
+            break
+        out += level
+    return g.sparkSession.createDataFrame(out, g.schema)
+
+
 def group_tree_parent_child(cat: Catalog, group: str, max_depth: int = 32) -> DataFrame:
     """reports/mssql/group-tree-parent-child.sql — all descendants of a
-    group, via the iterative frontier join (no recursive CTE in Spark)."""
-    g = cat["mst_group"].select("name", "parent")
-    frontier = g.filter(F.col("name") == group)
-    out = frontier
-    children = F.broadcast(g.select(F.col("name").alias("c_name"),
-                                    F.col("parent").alias("c_parent")))
-    for _ in range(max_depth - 1):
-        frontier = (frontier.join(children, frontier.name == F.col("c_parent"))
-                    .select(F.col("c_name").alias("name"),
-                            F.col("c_parent").alias("parent")))
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier)
-    return out
+    group (the group itself included)."""
+    return _walk_groups(cat, group, max_depth, down=True)
 
 
 def group_tree_children_parent(cat: Catalog, group: str, max_depth: int = 32) -> DataFrame:
     """reports/mssql/group-tree-children-parent.sql — ancestor chain."""
-    g = cat["mst_group"].select("name", "parent")
-    frontier = g.filter(F.col("name") == group)
-    out = frontier
-    parents = F.broadcast(g.select(F.col("name").alias("p_name"),
-                                   F.col("parent").alias("p_parent")))
-    for _ in range(max_depth - 1):
-        frontier = (frontier.join(parents, frontier.parent == F.col("p_name"))
-                    .select(F.col("p_name").alias("name"),
-                            F.col("p_parent").alias("parent")))
-        if frontier.isEmpty():
-            break
-        out = out.unionByName(frontier)
-    return out
+    return _walk_groups(cat, group, max_depth, down=False)
 
 
 ALL_REPORTS = {

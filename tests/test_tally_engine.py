@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import decimal
 import os
+import re
 
 import pytest
 
@@ -381,6 +382,175 @@ def test_reports_nonempty(tally_cat):
     """Guard against trivially-matching empty reports."""
     for name, (fn, _) in REPORT_ORACLES.items():
         assert fn(tally_cat).count() > 0, f"{name} returned no rows"
+
+
+_SPINE_REPORTS = ("sales_daily", "purchase_daily", "sales_monthly",
+                  "purchase_monthly", "daily_cash_movement")
+
+
+@pytest.mark.parametrize("name", _SPINE_REPORTS)
+def test_inverted_range_is_empty(name, tally_cat, tally_duck):
+    """``from > to`` spans no day: ``generate_series`` yields none, so a
+    spine report has no rows (Spark's ``sequence`` would count down and
+    fabricate a zero-filled spine)."""
+    swap = {FROM: TO, TO: FROM}
+    sql = re.sub("|".join(map(re.escape, swap)), lambda m: swap[m.group(0)],
+                 REPORT_ORACLES[name][1])
+    df = getattr(R, name)(tally_cat, TO, FROM)
+    ok, msg = compare_spark_duckdb(df, tally_duck, sql)
+    assert ok, f"{name}: {msg}"
+    assert df.count() == 0
+
+
+def test_staged_join_shared_per_catalog(spark, tally_cat):
+    """Reports over one catalog share one staged header ⋈ detail join:
+    a second report scans trn_voucher no more, and the caller's dict
+    gains no key (the memo is keyed on its DataFrames, not stored in it)."""
+    from pyspark.sql import functions as F
+    scans = spark.sparkContext.accumulator(0)
+
+    def seen(guid):
+        scans.add(1)
+        return guid
+
+    cat = dict(tally_cat)
+    cat["trn_voucher"] = tally_cat["trn_voucher"].withColumn(
+        "guid", F.udf(seen, "string").asNondeterministic()("guid"))
+    keys = list(cat)
+    assert R.acct_voucher(cat) is R.acct_voucher(cat)
+    R.trial_balance(cat, FROM, TO).collect()
+    assert scans.value == EXPECTED_COUNTS["trn_voucher"]
+    R.sales_register(cat).collect()
+    R.account_ledger(cat, "Cash", FROM, TO).collect()
+    assert scans.value == EXPECTED_COUNTS["trn_voucher"]
+    assert list(cat) == keys
+
+
+def test_staging_follows_store_snapshot(spark, tally_cat, tmp_path):
+    """A catalog re-read after a scoped commit is a new snapshot: it gets
+    its own staged join, which sees the committed rows, while the old
+    catalog's staging keeps the old snapshot and is released with it."""
+    import gc
+    import weakref
+
+    from pyspark.sql import functions as F
+
+    from tally_database_loader_spark.operators.incremental import ParquetStore
+    store = ParquetStore(str(tmp_path))
+    tables = ("trn_accounting", "trn_voucher", "mst_ledger", "mst_vouchertype")
+    for t in tables:
+        store.write(tally_cat[t], t)
+
+    def read():
+        return {t: store.read(spark, t) for t in tables}
+
+    def copied(av):
+        return av.filter(F.col("guid") == "v-902").count()
+
+    old = read()
+    before = R.sales_register(old).count()
+    assert copied(R.acct_voucher(old)) == 0
+    keys = spark.createDataFrame([("v-902",)], "guid string")
+    for t in ("trn_voucher", "trn_accounting"):
+        new = tally_cat[t].filter("guid = 'v-002'").withColumn("guid", F.lit("v-902"))
+        store.write_scoped(store.scoped_base(spark, t, keys).unionByName(new),
+                           t, keys)
+
+    cat = read()
+    assert R.acct_voucher(cat) is not R.acct_voucher(old)
+    assert copied(R.acct_voucher(cat)) == 2
+    assert copied(R.acct_voucher(old)) == 0
+    # v-002 is a sales voucher with one non-party line
+    assert R.sales_register(cat).count() == before + 1
+    staged = weakref.ref(R.acct_voucher(old))
+    del old
+    gc.collect()
+    assert staged() is None
+
+
+# the group trees against DuckDB's recursive CTE, depth-capped like the
+# driver walk, on hand-built mst_group edge cases: (rows, group, max_depth)
+_TREE_CASES = {
+    "unknown_group": ([("A", "Root"), ("Root", "")], "Nope", 32),
+    "null_parent": ([("Root", None), ("A", "Root"), (None, "A"),
+                     ("B", None), (None, None)], "A", 32),
+    "null_from_root": ([("Root", None), ("A", "Root"), (None, "A"),
+                        ("B", None), (None, None)], "Root", 32),
+    "duplicate_names": ([("Root", ""), ("A", "Root"), ("A", "Root"),
+                         ("B", "A"), ("B", "A")], "Root", 32),
+    "duplicate_leaf": ([("Root", ""), ("A", "Root"), ("A", "Root"),
+                        ("B", "A"), ("B", "A")], "B", 32),
+    "cycle": ([("A", "B"), ("B", "A"), ("C", "A")], "A", 5),
+}
+
+
+@pytest.mark.parametrize("down", [True, False], ids=["parent_child",
+                                                     "children_parent"])
+@pytest.mark.parametrize("case", sorted(_TREE_CASES))
+def test_group_tree_edges(spark, case, down):
+    import duckdb
+    from pyspark.sql import types as T
+    rows, group, depth = _TREE_CASES[case]
+    g = spark.createDataFrame(rows, "name string, parent string")
+    fn = R.group_tree_parent_child if down else R.group_tree_children_parent
+    df = fn({"mst_group": g}, group, max_depth=depth)
+    assert [f.dataType for f in df.schema] == [T.StringType()] * 2
+    con = duckdb.connect()
+    con.execute("CREATE TABLE mst_group (name VARCHAR, parent VARCHAR)")
+    con.executemany("INSERT INTO mst_group VALUES (?, ?)", rows)
+    on = "cte.name = e.parent" if down else "cte.parent = e.name"
+    ok, msg = compare_spark_duckdb(df, con, f"""
+WITH RECURSIVE cte AS (
+  SELECT name, parent, 1 AS depth FROM mst_group WHERE name = '{group}'
+  UNION ALL
+  SELECT e.name, e.parent, cte.depth + 1 FROM mst_group e JOIN cte ON {on}
+  WHERE cte.depth < {depth}
+)
+SELECT name, parent FROM cte
+""")
+    con.close()
+    assert ok, f"{case}: {msg}"
+
+
+# Spark jobs per report over a fresh copy of the test catalog, run in
+# REPORT_ORACLES order, so trial_balance pays for staging acct_voucher
+# and stock_summary for inv_voucher: 80 in all
+REPORT_JOBS = {
+    "trial_balance": 6, "profit_loss": 9, "stock_summary": 6,
+    "account_ledger": 7, "accounting_voucher_view": 4,
+    "stock_voucher_view": 2, "sales_register": 6, "purchase_register": 6,
+    "sales_daily": 5, "purchase_daily": 5, "sales_monthly": 7,
+    "purchase_monthly": 7, "daily_cash_movement": 6,
+    "group_tree_parent_child": 2, "group_tree_children_parent": 2,
+}
+
+
+def test_report_job_budget(spark, tally_cat):
+    """A plan edit that adds a Spark job to a report fails here: each
+    report's jobs are counted by job group and pinned (REPORT_JOBS).
+
+    Before the header ⋈ detail staging, the driver walk of the group
+    trees, the one-aggregate trial balance and the month sequence, the
+    same run counted 118: trial_balance 9, profit_loss 10, stock_summary
+    6, account_ledger 10, accounting_voucher_view 5, stock_voucher_view
+    3, sales_register 7, purchase_register 7, sales_daily 6,
+    purchase_daily 6, sales_monthly 9, purchase_monthly 9,
+    daily_cash_movement 7, group_tree_parent_child 13,
+    group_tree_children_parent 11."""
+    sc = spark.sparkContext
+    cat = {name: df.select("*") for name, df in tally_cat.items()}
+    got = {}
+    for name, (fn, _) in REPORT_ORACLES.items():
+        group = f"report-jobs-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            fn(cat).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert got == REPORT_JOBS
 
 
 def test_guid_fk_resolution(spark):
