@@ -3,35 +3,36 @@
 Two paths:
 
 - ``cosine_topk`` — brute-force exact top-k: queries broadcast against the
-  corpus, dot products evaluated with higher-order functions inside
-  codegen. O(queries × corpus); the right answer for small query sets and
-  the correctness baseline for the ANN path.
+  corpus, dot products evaluated by one Arrow kernel per batch.
+  O(queries × corpus); the right answer for small query sets and the
+  correctness baseline for the ANN path.
 - ``lsh_topk`` — sign-random-projection LSH: every vector gets a B-bit
   bucket (sign of B fixed pseudo-random hyperplane projections); search
   compares only same-bucket vectors. At 100 TB the bucket join replaces
   the full cross product; recall is tunable via B (fewer bits → bigger
   buckets → higher recall, more compute).
 
-All arithmetic is double-precision and sequential (zip_with → aggregate
-left fold), which a SQL oracle reproduces bit-for-bit — see
-plans/llm_gate.py.
+All arithmetic is double-precision and sequential (a left fold over the
+zipped elements), which a SQL oracle reproduces bit-for-bit — see
+plans/llm_gate.py, whose DuckDB ``list_zip`` + ``list_reduce`` folds are
+the semantic reference.
 
-Execution note (round 3): Spark evaluates higher-order functions as
-CodegenFallback, so every fold/argmin here carries an Arrow-vectorized
-numpy twin producing the IDENTICAL bits (sequential dimension-at-a-time
-accumulation for floats; exact int64 matrix math for the k-means/PQ/int8
-paths), dispatched via ``VECTORIZED_FOLD`` / ``VECTORIZED_ASSIGN``. The
-relational forms remain the semantic reference the oracles replay and
-the fallback; bitwise equality of both paths is test-asserted.
+Execution note: every embedding kernel has exactly one implementation.
+The float folds, the int8 kernels and the SRP bucket are ``arrow_udf``s
+and the two pair stages are ``applyInArrow`` kernels, so a null vector
+element arrives as SQL NULL (never as NaN) and NULL-propagates the way
+``zip_with`` and DuckDB do. Floats accumulate dimension-at-a-time across
+the batch, which is the oracle's left fold bit-for-bit; the k-means/PQ
+assignment is exact int64 matrix math in numpy.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -40,173 +41,97 @@ def dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] in double, left-to-right (float→double is exact, so the
     only rounding is the adds — deterministic and oracle-reproducible).
 
-    Like the k-means argmin, this relational fold is the SEMANTIC
-    definition (what the SQL oracles replay) but evaluates as
-    CodegenFallback — interpreted, boxed, per element. The vectorized
-    twin reproduces the left-to-right fold BIT-FOR-BIT by accumulating
-    one dimension at a time across the whole Arrow batch
+    The kernel reproduces the left-to-right fold BIT-FOR-BIT by
+    accumulating one dimension at a time across the whole Arrow batch
     (``acc += P[:, i]`` — per ROW that is exactly init + x₀ + x₁ + …,
     the same IEEE adds in the same order; numpy's own ``sum`` would
-    pairwise-sum and change the bits). Dispatch via ``VECTORIZED_FOLD``;
-    equality of both paths is asserted in tests."""
-    if VECTORIZED_FOLD:
-        return _fold_vec("dot")(a, b)
-    return _dot_rel(a, b)
-
-
-def _dot_rel(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    pairwise-sum and change the bits)."""
+    return _fold_vec("dot")(a, b)
 
 
 def cosine(a: Column, b: Column) -> Column:
-    """dot/(‖a‖·‖b‖) with every operand derived by the same fold rules;
-    vectorized as ONE Arrow exchange (three sequential folds + sqrt +
-    divide in numpy, each op correctly-rounded IEEE like the JVM)."""
-    if VECTORIZED_FOLD:
-        return _fold_vec("cosine")(a, b)
-    return _cosine_rel(a, b)
+    """dot/(‖a‖·‖b‖) with every operand derived by the same fold rules,
+    as ONE Arrow exchange (three sequential folds + sqrt + divide in
+    numpy, each op correctly-rounded IEEE like the JVM)."""
+    return _fold_vec("cosine")(a, b)
 
 
-def _cosine_rel(a: Column, b: Column) -> Column:
-    # zero-norm pin: cosine with a zero denominator is NULL — Spark 4's
-    # default ANSI mode would otherwise raise DIVIDE_BY_ZERO here while
-    # the vectorized twin produced a float, and DuckDB's double x/0 is
-    # NULL anyway, so NULL is the one value all three agree on. A NaN
-    # denominator is NOT zero (Spark orders NaN above everything, so
-    # `!= 0` holds) and propagates NaN, same as numpy/Python.
-    num = _dot_rel(a, b)
-    den = F.sqrt(_dot_rel(a, a)) * F.sqrt(_dot_rel(b, b))
-    return F.when(den != F.lit(0.0), num / den)
-
-
-# Arrow-vectorized float folds on by default; the relational twins stay
-# the oracle-checked definitions and the fallback.
-VECTORIZED_FOLD = True
-
-# Grouped per-cell pair stage for semantic_dedup on by default (round
-# 12): ships each (id, vector) to Python ONCE PER CELL instead of once
-# per PAIR. The relational self-join + per-pair fold stays the semantic
-# reference and the fallback; bit-identity of the pair decisions is
-# test-asserted (tests/test_semantic_pair_kernel.py).
-VECTORIZED_PAIR_STAGE = True
-
-
-def _seq_fold(prod: "pd.DataFrame | object") -> "object":
+def _seq_fold(prod: "np.ndarray") -> "np.ndarray":
     """Left-to-right accumulation across columns: per row this is
-    0.0 + p₀ + p₁ + … — the exact add order of the relational fold."""
-    acc = np.zeros(prod.shape[0], dtype=np.float64)
+    0.0 + p₀ + p₁ + … — the exact add order of the SQL fold."""
+    acc = np.zeros(prod.shape[0], dtype=prod.dtype)
     for i in range(prod.shape[1]):
         acc = acc + prod[:, i]
     return acc
 
 
+def _flat(arr: pa.Array, dtype) -> tuple:
+    """``(vals, starts, lens)`` of an Arrow ``list<number>`` array: the
+    child elements as ``dtype`` (a NULL element reads as 0), each row's
+    start in ``vals``, and each row's length — -1 for a NULL vector AND
+    for a vector holding a NULL element, since a SQL fold over either
+    is NULL."""
+    offs = arr.offsets.to_numpy().astype(np.int64)
+    child = arr.values
+    vals = child.fill_null(0).to_numpy(zero_copy_only=False).astype(dtype)
+    # NULL elements per row as a difference of prefix counts: one pass
+    # over the child, no per-row Python
+    nul = np.concatenate(([0], np.cumsum(
+        child.is_null().to_numpy(zero_copy_only=False))))
+    lens = np.diff(offs)
+    bad = arr.is_null().to_numpy(zero_copy_only=False) \
+        | (nul[offs[1:]] != nul[offs[:-1]])
+    return vals, offs[:-1], np.where(bad, -1, lens)
+
+
+def _rows(vals: np.ndarray, starts: np.ndarray, idx: np.ndarray,
+          L: int) -> np.ndarray:
+    """The ``len(idx) × L`` matrix of the length-``L`` rows ``idx``."""
+    return vals[starts[idx][:, None] + np.arange(L)[None, :]]
+
+
 def _fold_vec(kind: str):
-    """Build the pandas_udf for a float fold family (``dot`` /
-    ``cosine`` / ``l2``). Null vectors and RAGGED pairs degrade to a
-    per-row Python-float fold (Python float IS IEEE double, so results
-    match); the fast path stacks the batch and folds dimension-at-a-time.
+    """Build the arrow_udf for a float fold family (``dot`` /
+    ``cosine`` / ``l2``). Rows are grouped by length and each group is
+    stacked and folded dimension-at-a-time — no per-row Python.
 
-    Edge parity with the relational twins (ADVICE r3):
+    Edges (each one matches the DuckDB oracle's ``list_zip`` +
+    ``list_reduce`` fold):
 
-    - null VECTOR → NULL (both paths).
-    - ragged lengths (within a pair, or mixed dims across the batch) →
-      the relational ``zip_with`` pads with nulls, so the fold is NULL;
-      the twins detect the mismatch and NULL-propagate identically
-      instead of raising in ``np.stack``.
-    - NaN elements → NaN results, identical IEEE arithmetic both paths.
-    - zero-norm cosine → NULL in both twins (and in DuckDB oracles,
-      where double x/0 is NULL) — Spark 4's default ANSI mode would
-      raise DIVIDE_BY_ZERO in the relational form otherwise, and a NaN
-      result would poison similarity thresholds (NaN orders above every
-      τ in Spark AND DuckDB).
-    - null ELEMENTS are the one unbridgeable case: Arrow transfers
-      ``array<double>`` nulls as NaN, so inside any pandas_udf a null
-      element is INDISTINGUISHABLE from a genuine NaN — the engine pins
-      the semantics to "null element ≡ NaN" under ``VECTORIZED_FOLD``
-      (the relational path would NULL-propagate). Feed pre-cleaned
-      embeddings, or flip ``VECTORIZED_FOLD`` off for strict SQL
-      semantics at CodegenFallback speed."""
+    - null VECTOR → NULL.
+    - null ELEMENT → NULL: Arrow hands the kernel a real null (a
+      pandas_udf would have seen NaN), and a fold over a NULL operand is
+      NULL, as under ``zip_with`` + ``aggregate``.
+    - ragged lengths within a pair → NULL (``zip_with`` pads the short
+      side with nulls); mixed dims across the batch still compute.
+    - NaN elements → NaN results, returned as a VALUE (an Arrow array
+      built with an explicit mask keeps NaN distinct from NULL).
+    - zero-norm cosine → NULL (DuckDB's double x/0 is NULL, and Spark 4's
+      default ANSI mode would raise DIVIDE_BY_ZERO) — a NaN result would
+      poison similarity thresholds (NaN orders above every τ in Spark
+      AND DuckDB). A NaN denominator is not zero and propagates NaN."""
 
-    def _rowwise(x, y):
-        if x is None or y is None or len(x) != len(y):
-            # len mismatch: zip_with pads the short side with nulls →
-            # null product → the whole fold is NULL
-            return None
-        if kind == "dot":
-            acc = 0.0
-            for xi, yi in zip(x, y):
-                acc += float(xi) * float(yi)
-            return acc
-        if kind == "l2":
-            acc = 0.0
-            for xi, yi in zip(x, y):
-                d = float(xi) - float(yi)
-                acc += d * d
-            return acc
-        num = 0.0
-        na = 0.0
-        nb = 0.0
-        for xi, yi in zip(x, y):
-            xf, yf = float(xi), float(yi)
-            num += xf * yf
-            na += xf * xf
-            nb += yf * yf
-        import math
-        den = math.sqrt(na) * math.sqrt(nb)
-        if den == 0.0:  # zero-norm pin: NULL (see _cosine_rel)
-            return None
-        return num / den
-
-    def _ret(vals, mask=None):
-        # NaN is a VALUE here (an IEEE arithmetic result), never a null —
-        # but a plain float64 Series NULLS every NaN at the Arrow return
-        # boundary. A masked FloatingArray keeps the distinction: mask
-        # marks true NULLs, values carry NaN through bit-intact.
-        v = np.asarray(vals, dtype=np.float64)
-        m = np.zeros(len(v), dtype=bool) if mask is None \
-            else np.asarray(mask, dtype=bool)
-        return pd.Series(pd.arrays.FloatingArray(v, m))
-
-    def _slow(xs, ys):
-        out = [_rowwise(x, y) for x, y in zip(xs, ys)]
-        return _ret([0.0 if v is None else v for v in out],
-                    [v is None for v in out])
-
-    @F.pandas_udf("double")
-    def fold(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="float64")
-        if xs.isna().any() or ys.isna().any():
-            return _slow(xs, ys)
-        try:
-            # clean batches pay no ragged-detection pass: np.array over the
-            # row list raises ValueError on mixed dims, which routes the
-            # (rare) ragged batch through the bit-equal rowwise path.
-            # np.array(list) iterates in C — ~5× faster per batch than the
-            # former np.stack([np.asarray(v) ...]) Python-level loop
-            # (guide §4.2: the boundary cost you control is per-row work);
-            # the produced float64 matrix is bit-identical.
-            A = np.array(list(xs), dtype=np.float64)
-            B = np.array(list(ys), dtype=np.float64)
-        except ValueError:
-            return _slow(xs, ys)
-        if A.shape[1] != B.shape[1]:
-            return _slow(xs, ys)
-        if kind == "dot":
-            return _ret(_seq_fold(A * B))
-        if kind == "l2":
-            d = A - B
-            return _ret(_seq_fold(d * d))
-        num = _seq_fold(A * B)
-        den = np.sqrt(_seq_fold(A * A)) * np.sqrt(_seq_fold(B * B))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            # zero-norm pin: NULL where den == 0 (see _cosine_rel); a NaN
-            # den fails the == and propagates NaN like the JVM
-            return _ret(num / den, den == 0.0)
+    @F.arrow_udf("double")
+    def fold(xs: pa.Array, ys: pa.Array) -> pa.Array:
+        xv, xo, xl = _flat(xs, np.float64)
+        yv, yo, yl = _flat(ys, np.float64)
+        out = np.zeros(len(xs))
+        null = (xl < 0) | (xl != yl)
+        for L in np.unique(xl[~null]):
+            idx = np.flatnonzero(~null & (xl == L))
+            A = _rows(xv, xo, idx, L)
+            B = _rows(yv, yo, idx, L)
+            if kind == "dot":
+                out[idx] = _seq_fold(A * B)
+            elif kind == "l2":
+                d = A - B
+                out[idx] = _seq_fold(d * d)
+            else:
+                den = np.sqrt(_seq_fold(A * A)) * np.sqrt(_seq_fold(B * B))
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    out[idx] = _seq_fold(A * B) / den
+                null[idx[den == 0.0]] = True
+        return pa.array(out, mask=null)
 
     return fold
 
@@ -246,118 +171,69 @@ def quantize_int8(vec: Column) -> Column:
     and the dot product becomes *exact integer* arithmetic — associative,
     so partial aggregation and AQE reordering cannot perturb it.
 
-    Dispatches like ``dot``: every step (abs-max, divide, floor) is an
-    elementwise correctly-rounded IEEE op, so the numpy twin is
-    bit-identical with no fold-order care needed."""
-    if VECTORIZED_FOLD:
-        return _quantize_int8_vec(vec)
-    return _quantize_int8_rel(vec)
+    Every step (abs-max, divide, floor) is an elementwise
+    correctly-rounded IEEE op, so the kernel needs no fold-order care.
+    Edges, as in the DuckDB oracle: a NULL element is skipped by the
+    abs-max and quantizes to NULL (an all-NULL or empty vector has NULL
+    scale); a NaN component, or a NULL vector, gives a fields-NULL
+    struct — the NaN pin, since ``floor(NaN)`` has no int8 value."""
 
-
-def _quantize_int8_vec(vec: Column) -> Column:
-    @F.pandas_udf("struct<scale: double, q: array<tinyint>>")
-    def quant(xs: pd.Series) -> pd.DataFrame:
-        scales: list = []
-        qs: list = []
-        for v in xs:
-            if v is None:
-                scales.append(None)
-                qs.append(None)
-                continue
-            a = np.asarray(v, dtype=np.float64)
-            if np.isnan(a).any():
-                # NaN-component pin: NULL in both twins — numpy's
-                # floor(NaN).astype(int8) is platform garbage and the
-                # relational ANSI cast of NaN to tinyint raises
-                scales.append(None)
-                qs.append(None)
-                continue
-            amax = np.abs(a).max() if a.size else 0.0
-            if amax == 0.0:
-                scales.append(0.0)
-                qs.append(np.zeros(a.size, dtype=np.int8))
-            else:
-                scale = amax / 127.0
-                scales.append(scale)
-                qs.append(np.floor(a / scale + 0.5).astype(np.int8))
-        return pd.DataFrame({"scale": scales, "q": qs})
+    @F.arrow_udf("struct<scale: double, q: array<tinyint>>")
+    def quant(xs: pa.Array) -> pa.Array:
+        n = len(xs)
+        offs = xs.offsets.to_numpy().astype(np.int64)
+        child = xs.values.slice(offs[0], offs[-1] - offs[0])
+        offs = offs - offs[0]
+        en = child.is_null().to_numpy(zero_copy_only=False)
+        v = child.fill_null(0).to_numpy(zero_copy_only=False) \
+            .astype(np.float64)
+        row = np.repeat(np.arange(n), np.diff(offs))
+        # -1 marks a NULL element: below every |x|, so the max skips it,
+        # and a row with no non-NULL element keeps amax = -1 → NULL scale
+        amax = np.full(n, -1.0)
+        np.maximum.at(amax, row, np.where(en, -1.0, np.abs(v)))
+        pinned = xs.is_null().to_numpy(zero_copy_only=False) \
+            | (np.bincount(row, weights=np.isnan(v) & ~en, minlength=n) > 0)
+        scale = amax / 127.0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            q = np.floor(v / scale[row] + 0.5)
+        zero = amax[row] == 0.0
+        q_null = en & ~zero
+        # Stored as array<tinyint> — values are in [-127, 127] by
+        # construction, so the materialized column really is 1
+        # byte/component (the claimed 4-8× memory reduction); int_dot
+        # widens before multiplying.
+        q = np.where(zero | q_null | pinned[row], 0.0, q).astype(np.int8)
+        # a pinned row is a struct with NULL fields, not a NULL struct:
+        # the shape quantized_topk's consumers have always been given
+        return pa.StructArray.from_arrays(
+            [pa.array(scale, mask=pinned | (amax < 0)),
+             pa.ListArray.from_arrays(
+                 pa.array(offs.astype(np.int32)),
+                 pa.array(q, mask=q_null), mask=pa.array(pinned))],
+            names=["scale", "q"])
 
     return quant(vec)
-
-
-def _quantize_int8_rel(vec: Column) -> Column:
-    xd = F.transform(vec, lambda x: x.cast("double"))
-    amax = F.array_max(F.transform(xd, F.abs))
-    scale = amax / F.lit(127.0)
-    # Stored as array<tinyint> — values are in [-127, 127] by construction,
-    # so the materialized column really is 1 byte/component (the claimed
-    # 4-8× memory reduction); int_dot widens before multiplying.
-    q = F.when(amax == 0.0, F.transform(xd, lambda x: F.lit(0).cast("tinyint"))) \
-         .otherwise(F.transform(
-             xd, lambda x: F.floor(x / scale + F.lit(0.5)).cast("tinyint")))
-    # NaN-component pin (matches the vectorized twin): a struct with NULL
-    # fields — the ANSI cast of NaN to tinyint would otherwise abort the
-    # query. Fields-null (not a top-level NULL struct) because a
-    # pandas_udf's returned all-None row materializes as exactly that
-    # shape, and the twins must agree bit-for-bit.
-    nan_in = F.coalesce(F.exists(xd, F.isnan), F.lit(False))
-    return F.struct(
-        F.when(~nan_in, scale).alias("scale"),
-        F.when(~nan_in, q).alias("q"))
 
 
 def int_dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] over int64 — exact, order-independent. Inputs may be
     stored narrow (tinyint); each component is widened to long *before*
     the multiply so tinyint×tinyint can never wrap. Integer addition is
-    associative, so the vectorized twin may sum in any order — no
-    fold-order ceremony needed."""
-    if VECTORIZED_FOLD:
-        return _int_dot_vec(a, b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
+    associative, so the kernel may sum in any order. A NULL vector, a
+    NULL element or a ragged pair gives NULL, as ``_fold_vec``."""
 
-
-def _int_dot_vec(a: Column, b: Column) -> Column:
-    @F.pandas_udf("long")
-    def idot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        def _has_nan(v):
-            # null ELEMENTS of an int array arrive as NaN through Arrow
-            # (ints can't carry null, so the batch comes as float64) —
-            # and np.asarray(<nan>, int64) does NOT reliably raise: some
-            # numpy versions silently wrap NaN to INT64_MIN, which would
-            # make the fast path return a confidently wrong finite dot.
-            # Real int-dtype arrays skip the scan entirely.
-            a = np.asarray(v)
-            return a.dtype.kind == "f" and np.isnan(a).any()
-
-        def _slow():
-            # ragged pair / null element → NULL (zip_with pads with
-            # nulls and the fold NULL-propagates in the relational twin)
-            # — same edge contract as _fold_vec
-            return pd.Series([
-                None if x is None or y is None or len(x) != len(y)
-                or _has_nan(x) or _has_nan(y)
-                else sum(int(xi) * int(yi) for xi, yi in zip(x, y))
-                for x, y in zip(xs, ys)])
-
-        if len(xs) == 0:
-            return pd.Series([], dtype="int64")
-        if xs.isna().any() or ys.isna().any() \
-                or any(_has_nan(v) for v in xs) \
-                or any(_has_nan(v) for v in ys):
-            return _slow()
-        try:
-            # C-level row-list ingestion (see _fold_vec) — NaN inputs never
-            # reach this cast: the _has_nan pre-scan above routed them slow
-            A = np.array(list(xs), dtype=np.int64)
-            B = np.array(list(ys), dtype=np.int64)
-        except ValueError:  # mixed dims across the batch
-            return _slow()
-        if A.shape[1] != B.shape[1]:
-            return _slow()
-        return pd.Series((A * B).sum(axis=1))
+    @F.arrow_udf("long")
+    def idot(xs: pa.Array, ys: pa.Array) -> pa.Array:
+        xv, xo, xl = _flat(xs, np.int64)
+        yv, yo, yl = _flat(ys, np.int64)
+        out = np.zeros(len(xs), dtype=np.int64)
+        null = (xl < 0) | (xl != yl)
+        for L in np.unique(xl[~null]):
+            idx = np.flatnonzero(~null & (xl == L))
+            out[idx] = (_rows(xv, xo, idx, L) * _rows(yv, yo, idx, L)) \
+                .sum(axis=1)
+        return pa.array(out, mask=null)
 
     return idot(a, b)
 
@@ -402,69 +278,30 @@ def _planes(n_bits: int, dim: int) -> list[list[float]]:
 
 
 def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """B-bit bucket id: bit p = sign(vec · plane_p). Dispatches like
-    ``dot``: the relational per-plane folds are the oracle definition;
-    the vectorized twin runs the same left-to-right projections batched
-    (n_bits sequential folds over the Arrow batch).
+    """B-bit bucket id: bit p = sign(vec · plane_p), each projection the
+    same left-to-right fold as ``dot`` (n_bits sequential folds over the
+    Arrow batch).
 
-    Edge parity (ADVICE r3): the bit test is ``NOT (proj <= 0)`` in both
-    twins, because Spark SQL orders NaN above every number (``NaN > 0``
-    is TRUE) while IEEE/numpy comparisons on NaN are all false — a NaN
-    projection sets the bit under both paths. A NULL vector, or one
-    whose length differs from the plane dimension, buckets to 0 (null
-    projection → the ``otherwise(0)`` branch), reproduced in the twin.
-    Null ELEMENTS arrive as NaN through Arrow (see ``_fold_vec``)."""
-    if VECTORIZED_FOLD:
-        return _srp_bucket_vec(vec, planes)
-    return _srp_bucket_rel(vec, planes)
-
-
-def _srp_bucket_rel(vec: Column, planes: list[list[float]]) -> Column:
-    bits = []
-    for p, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(w) for w in plane]),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        bits.append(F.when(proj > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def _srp_bucket_vec(vec: Column, planes: list[list[float]]) -> Column:
+    Edges: the bit test is ``NOT (proj <= 0)``, because Spark SQL and
+    DuckDB order NaN above every number (``NaN > 0`` is TRUE) while
+    numpy comparisons on NaN are all false — a NaN projection sets the
+    bit. A NULL vector, a NULL element, or a length other than the plane
+    dimension gives NULL projections, and ``CASE WHEN NULL > 0`` takes
+    the ELSE branch, so the bucket is 0."""
     pl = np.asarray(planes, dtype=np.float64)      # n_bits × dim
     weights = np.array([1 << p for p in range(len(planes))], dtype=np.int64)
-
     dim = pl.shape[1]
 
-    @F.pandas_udf("long")
-    def bucket(xs: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="int64")
-        if xs.isna().any() or any(len(v) != dim for v in xs):
-            out = []
-            for v in xs:
-                if v is None or len(v) != dim:
-                    # null vector / ragged: zip_with and the fold yield a
-                    # null projection, and when(null > 0) falls through
-                    # to otherwise(0) — the relational bucket is 0
-                    out.append(0)
-                    continue
-                acc = 0
-                for p, plane in enumerate(planes):
-                    proj = 0.0
-                    for xi, w in zip(v, plane):
-                        proj += float(xi) * w
-                    if not proj <= 0:   # Spark NaN ordering: NaN > 0
-                        acc += 1 << p
-                out.append(acc)
-            return pd.Series(out)
-        A = np.array(list(xs), dtype=np.float64)
+    @F.arrow_udf("long")
+    def bucket(xs: pa.Array) -> pa.Array:
+        vals, starts, lens = _flat(xs, np.float64)
+        out = np.zeros(len(xs), dtype=np.int64)
+        idx = np.flatnonzero(lens == dim)
+        A = _rows(vals, starts, idx, dim)
         projs = np.stack([_seq_fold(A * pl[p]) for p in range(pl.shape[0])],
                          axis=1)                   # n × n_bits
-        return pd.Series((~(projs <= 0) @ weights).astype("int64"))
+        out[idx] = ~(projs <= 0) @ weights
+        return pa.array(out)
 
     return bucket(vec)
 
@@ -485,41 +322,14 @@ def embedding_near_duplicates(corpus: DataFrame, threshold: float = 0.95,
     thresholds (≥0.9) is effectively total; raise n_bits to shrink buckets
     on bigger corpora."""
     planes = _planes(n_bits, dim)
-    if VECTORIZED_PAIR_STAGE:
-        # grouped per-bucket pair stage (round 12 — the semantic_dedup
-        # _cell_drops rationale: ship each vector once per BUCKET, not
-        # once per pair): the bucket projection runs once (single
-        # consumer, so the old both-sides checkpoint is gone too) and
-        # one numpy task per bucket emits the (d1, d2, cos) pairs with
-        # the exact left-fold bits. Bit-identity with the join form is
-        # asserted by tests/test_semantic_pair_kernel.py.
-        b = corpus.select(F.col(id_col).alias("n_id"),
-                          F.col(vec_col).alias("n_vec"),
-                          srp_bucket(F.col(vec_col), planes).alias("bucket"))
-        return _bucket_pairs(b, ["bucket"], float(threshold))
-    # norms computed once per vector (not per pair) — bit-identical values,
-    # ~3× fewer double folds inside the bucket join. Checkpointed because
-    # both self-join sides consume it: the SRP projection is n_bits × dim
-    # interpreted folds per row, the priciest expression in the plan, and
-    # without the checkpoint it runs twice.
-    b = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"),
-                      srp_bucket(F.col(vec_col), planes).alias("bucket"),
-                      F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("nrm")) \
-              .localCheckpoint(eager=True)
-    a = b.select(F.col("vid").alias("d1"), F.col("vec").alias("v1"),
-                 F.col("nrm").alias("n1"), "bucket")
-    c = b.select(F.col("vid").alias("d2"), F.col("vec").alias("v2"),
-                 F.col("nrm").alias("n2"), "bucket")
-    # zero-norm pin (see _cosine_rel): NULL, not an ANSI DIVIDE_BY_ZERO —
-    # a zero-norm vector is near-duplicate of nothing and the NULL fails
-    # the >= threshold filter
-    den = F.col("n1") * F.col("n2")
-    cos = F.when(den != F.lit(0.0),
-                 dot(F.col("v1"), F.col("v2")) / den)
-    return (a.join(c, "bucket")
-             .filter(F.col("d1") < F.col("d2"))
-             .select("d1", "d2", cos.alias("cos"))
-             .filter(F.col("cos") >= threshold))
+    # grouped per-bucket pair stage (the semantic_dedup _cell_drops
+    # rationale: ship each vector once per BUCKET, not once per pair):
+    # the bucket projection runs once and one numpy task per bucket
+    # emits the (d1, d2, cos) pairs with the exact left-fold bits.
+    b = corpus.select(F.col(id_col).alias("n_id"),
+                      F.col(vec_col).alias("n_vec"),
+                      srp_bucket(F.col(vec_col), planes).alias("bucket"))
+    return _bucket_pairs(b, ["bucket"], float(threshold))
 
 
 _CQ = 1 << 14  # component quantization for centroid arithmetic
@@ -587,11 +397,18 @@ def _kmeans_uq(vec: Column) -> Column:
     engine (Spark ``div``, DuckDB ``//``, Python ``//`` all agree on
     non-negative operands). Distances are differences, so the common
     offset cancels — cluster geometry is unchanged. The clamp bounds the
-    domain for unnormalized vectors (components beyond ±1 saturate)."""
+    domain for unnormalized vectors (components beyond ±1 saturate).
+
+    The clamp runs in double BEFORE the floor (the two commute for
+    integer bounds): Spark's ``floor`` returns a long and turns NaN into
+    0, where the oracle's double ``floor`` keeps NaN, which ``least``
+    then saturates to +2^14 — clamping first gives that in both. A NULL
+    element is skipped by ``greatest`` in both engines (→ 0), so the
+    output holds no NULL."""
     return F.transform(vec, lambda x: (
-        F.least(F.greatest(F.floor(x.cast("double") * F.lit(float(_KQ))
-                                   + F.lit(0.5)),
-                           F.lit(-_KQ)), F.lit(_KQ)) + F.lit(_KQ)).cast("long"))
+        F.floor(F.least(F.greatest(x.cast("double") * F.lit(float(_KQ))
+                                   + F.lit(0.5), F.lit(-float(_KQ))),
+                        F.lit(float(_KQ)))) + F.lit(_KQ)).cast("long"))
 
 
 def _sql_array2(rows: list[list[int]]) -> Column:
@@ -629,41 +446,24 @@ def _dist_table(u: Column, cents: list[list[int]]) -> Column:
         F.lit(0).cast("long"), lambda acc, d: acc + d))
 
 
-def _argmin_cell(u: Column, cents: list[list[int]]) -> Column:
-    """Index of the nearest centroid by exact integer squared distance;
-    ``array_position`` returns the FIRST minimum, so ties break on the
-    lower cell id. Map-side only — no join, no shuffle.
+def _assign_cell(u: Column, cents: list[list[int]]) -> Column:
+    """Index of the nearest centroid by exact integer squared distance,
+    ties to the lower cell id: a batch argmin over the codebook in numpy
+    int64. Exactness: ``(64u-c)² = (64u)² - 2·64u·c + c²`` — every
+    product ≤ 2^42 and every sum ≤ dim·2^42 ≤ 2^48, so int64 matrix ops
+    are exact (no float, no overflow), and ``np.argmin`` returns the
+    FIRST minimum — the lower-cell tie rule the SQL oracles replay
+    (``ORDER BY`` distance, cell). The assignment is the
+    k-means hot loop (corpus × k × dim integer ops per pass); a
+    higher-order-function form would run as interpreted CodegenFallback,
+    ~1.3 ms per vector at k=64 (FAISS makes the same choice: quantizer
+    assignment is vectorized native code).
 
-    This relational form is the SEMANTIC definition (it is what the SQL
-    oracles replay), but Spark evaluates higher-order functions
-    (transform/aggregate/zip_with) as CodegenFallback — the projection
-    drops out of whole-stage codegen and runs interpreted, ~1.3 ms per
-    vector at k=64 (measured). The hot paths therefore dispatch through
-    ``_assign_cell``, whose Arrow-vectorized twin computes the SAME
-    int64 integers in numpy; tests assert the two paths agree row-for-
-    row, and every k-means family gate still hash-matches its oracle."""
-    d = _dist_table(u, cents)
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-
-# Arrow-vectorized assignment on by default; the relational twin stays the
-# oracle-checked definition and the fallback (flip for A/B in tests).
-VECTORIZED_ASSIGN = True
-
-
-def _argmin_cell_vec(u: Column, cents: list[list[int]]) -> Column:
-    """Arrow-vectorized twin of ``_argmin_cell``: batch argmin over the
-    codebook in numpy int64. Exactness: ``(64u-c)² = (64u)² - 2·64u·c +
-    c²`` — every product ≤ 2^42 and every sum ≤ dim·2^42 ≤ 2^48, so
-    int64 matrix ops are exact (no float, no overflow), and
-    ``np.argmin`` returns the FIRST minimum — the same lower-cell tie
-    rule as ``array_position``. The assignment is the k-means hot loop
-    (corpus × k × dim integer ops per pass); vectorized it runs at
-    numpy/BLAS speed instead of interpreted-expression speed, ~100×
-    (FAISS makes the same choice: quantizer assignment is vectorized
-    native code). Contract: non-null fixed-dim vectors with non-null
-    elements (the ``kmeans_cells`` id/vector requirement); corrupt rows
-    raise rather than silently diverge."""
+    A pandas UDF suffices here: its input is ``_kmeans_uq``'s output,
+    which holds no NULL element (``greatest``/``least`` skip nulls).
+    Contract: non-null fixed-dim vectors (the ``kmeans_cells``
+    id/vector requirement); corrupt rows raise rather than silently
+    diverge."""
     cb = np.asarray(cents, dtype=np.int64)          # k × d
     cb2 = (cb * cb).sum(axis=1)                     # k
 
@@ -679,38 +479,12 @@ def _argmin_cell_vec(u: Column, cents: list[list[int]]) -> Column:
     return enc(u)
 
 
-def _assign_cell(u: Column, cents: list[list[int]]) -> Column:
-    """Nearest-centroid assignment: vectorized by default, relational
-    twin as the semantic reference/fallback."""
-    if VECTORIZED_ASSIGN:
-        return _argmin_cell_vec(u, cents)
-    return _argmin_cell(u, cents)
-
-
-def _argmin_cell_tagged(codebooks: list[list[list[int]]]) -> Column:
-    """Relational argmin for the PQ training loop's tagged-subspace rows
-    (columns ``s``, ``su``): each row selects its subspace codebook from
-    one triple-nested literal. Same HOF/CodegenFallback caveat as
-    ``_argmin_cell`` — kept as the semantic reference."""
-    cb = F.expr("array(" + ",".join(
-        "array(" + ",".join(
-            "array(" + ",".join(f"{int(v)}L" for v in cent) + ")"
-            for cent in codebooks[s]) + ")"
-        for s in range(len(codebooks))) + ")")
-    d = F.transform(F.element_at(cb, F.col("s") + 1),
-                    lambda c: F.aggregate(
-                        F.zip_with(F.col("su"), c,
-                                   lambda x, y: (x * F.lit(64) - y)
-                                   * (x * F.lit(64) - y)),
-                        F.lit(0).cast("long"), lambda acc, dd: acc + dd))
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-
 def _assign_cell_tagged(s: Column, su: Column,
                         codebooks: list[list[list[int]]]) -> Column:
-    """Vectorized twin of ``_argmin_cell_tagged``: one Arrow batch holds
-    rows of every subspace; the batch is partitioned by the tag and each
-    group runs the exact-int64 matrix argmin against its own codebook."""
+    """``_assign_cell`` for the PQ training loop's tagged-subspace rows:
+    one Arrow batch holds rows of every subspace; the batch is
+    partitioned by the tag and each group runs the exact-int64 matrix
+    argmin against its own codebook."""
     cbs = [np.asarray(cb, dtype=np.int64) for cb in codebooks]
     cb2s = [(cb * cb).sum(axis=1) for cb in cbs]
 
@@ -793,12 +567,10 @@ def kmeans_cells(corpus: DataFrame, n_lists: int = 8, iters: int = 2,
     # evaluates the assignment UDF TWICE per join side — once under the
     # pushed filter, once in the projection (guide §4.4). The plans for
     # semantic_dedup went from 4 `enc` ArrowEvalPython nodes to 2.
-    # The inner when/raise_error makes a NULL input vector fail LOUDLY on
-    # BOTH assignment paths (ADVICE r11): the vectorized UDF raises on
-    # its own, but the relational fallback (VECTORIZED_ASSIGN=False)
-    # returned NULL — which the -1 sentinel would have silently merged
-    # into one shared pair cell instead of the old never-equi-joins
-    # behavior. raise_error sits only on the contract-violating branch,
+    # The inner when/raise_error validates the input: a NULL vector
+    # fails LOUDLY with a message naming the contract, where the -1
+    # sentinel would otherwise silently merge such rows into one shared
+    # pair cell. raise_error sits only on the contract-violating branch,
     # so valid rows pay one isNotNull test.
     assigned = corpus.select(
         F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
@@ -910,11 +682,11 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.3,
     gentler pruning).
 
     Scale shape: assignment is map-side (codebook literals); the
-    pairwise stage is a self-equi-join ON CELL — with ``n_lists``
-    scaled so clusters stay O(corpus/n_lists), the pair count is
-    corpus²/n_lists, the SemDeDup trade, and the join is a plain
-    shuffle-hash on uniform cell keys (never a cartesian). The drop set
-    anti-joins back on id.
+    pairwise stage groups BY CELL into one numpy task per cell
+    (``_cell_drops``) — with ``n_lists`` scaled so clusters stay
+    O(corpus/n_lists), the pair count is corpus²/n_lists, the SemDeDup
+    trade, over one shuffle on uniform cell keys (never a cartesian).
+    The drop set anti-joins back on id.
 
     Hot-cluster guard (round-5): pass ``n_lists=None`` to auto-scale
     the cluster count from a corpus count probe (SemDeDup at web scale
@@ -937,215 +709,124 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.3,
     assigned, key = semantic_cells(corpus, n_lists=n_lists, iters=iters,
                                    id_col=id_col, vec_col=vec_col,
                                    cell_cap=cell_cap)
-    if VECTORIZED_PAIR_STAGE:
-        drops = _cell_drops(assigned, key, float(threshold))
-    else:
-        drops = _cell_drops_join(assigned, key, float(threshold))
+    drops = _cell_drops(assigned, key, float(threshold))
     return (assigned.join(drops,
                           assigned["n_id"] == drops["drop_id"], "left_anti")
                     .select(F.col("n_id").alias(id_col),
                             F.col("cell").cast("int").alias("cell")))
 
 
-def _cell_drops_join(assigned: DataFrame, key: list[str],
-                     threshold: float) -> DataFrame:
-    """The relational pair stage — the semantic reference the SQL
-    oracles replay, and the ``VECTORIZED_PAIR_STAGE=False`` fallback.
-
-    Per-VECTOR norms computed once before the pair join (the
-    embedding_near_duplicates factoring): cosine(a,b) =
-    dot(a,b)/(sqrt(dot(a,a))·sqrt(dot(b,b))) — sqrt and · are single
-    correctly-rounded IEEE ops, so n1·n2 here produces bit-for-bit the
-    same double as the fused 3-fold cosine (and the same algebra the
-    DuckDB oracle spells out). Moves 2 of the 3 per-PAIR folds to
-    per-ROW: at corpus²/n_lists pairs that is ~3× less Python-side
-    arithmetic in the hot stage (guide §4.1 — fewer bytes of work per
-    boundary row). Zero-norm pin unchanged: den == 0 → NULL → fails
-    the > threshold filter."""
-    an = assigned.withColumn(
-        "__nrm", F.sqrt(dot(F.col("n_vec"), F.col("n_vec"))))
-    a = an.select(F.col("n_id").alias("a_id"), *key,
-                  F.col("n_vec").alias("a_vec"), F.col("__nrm").alias("n1"))
-    b = an.select(F.col("n_id").alias("b_id"), *key,
-                  F.col("n_vec").alias("b_vec"), F.col("__nrm").alias("n2"))
-    den = F.col("n1") * F.col("n2")
-    pair_cos = F.when(den != F.lit(0.0),
-                      dot(F.col("a_vec"), F.col("b_vec")) / den)
-    return (a.join(b, key)
-              .filter(F.col("a_id") < F.col("b_id"))
-              .filter(pair_cos > F.lit(float(threshold)))
-              .select(F.col("b_id").alias("drop_id"))
-              .distinct())
-
-
 # columns of the pairwise block a kernel task holds at once: bounds the
 # per-task accumulator at cell_size × _PAIR_BLOCK doubles (a 20k-row
-# capped cell at block 2048 holds ~330 MB ÷ 8 = 40 MB extra) — env knob
-# for bigger executors
-_PAIR_BLOCK = max(64, int(os.environ.get("SPARK_GRAFT_PAIR_BLOCK", "2048")))
+# capped cell at block 2048 holds ~330 MB ÷ 8 = 40 MB extra)
+_PAIR_BLOCK = 2048
+
+
+def _pair_blocks(tbl: pa.Table):
+    """Blocked pairwise cosine inside one group of ``(n_id, n_vec)``
+    rows, shared by the two grouped pair stages. Yields ``(row_ids,
+    col_ids, cos, ok)`` per block of at most ``_PAIR_BLOCK`` columns;
+    ``ok`` marks the pairs whose cosine is defined and that satisfy
+    ``row_id < col_id``. Each caller applies its own threshold test.
+
+    Bit-identity with the SQL fold (oracle-checked):
+
+    - products and adds in float64 after an exact float32→float64
+      upcast, accumulated DIMENSION-AT-A-TIME (``S += outer(A[:,k],
+      A[:,k])`` — per pair exactly ``0.0 + p₀ + p₁ + …``, the SQL left
+      fold, same trick as ``_seq_fold``);
+    - norms via the same per-row fold + one correctly-rounded sqrt;
+    - ``den == 0`` → NULL cosine → not ``ok`` (the zero-norm pin);
+    - a NaN cosine (NaN element, or NaN den) stays ``ok``: Spark and
+      DuckDB order NaN above every threshold, so callers test
+      ``(cos ⋛ τ) | isnan(cos)``;
+    - a NULL vector or a vector with a NULL element has a NULL norm →
+      never ``ok`` (``_flat`` gives it length -1);
+    - ragged dims inside a group → ``zip_with`` pads → NULL fold →
+      never ``ok``: pairs are computed only within same-length groups.
+
+    ``row_id < col_id`` becomes the strict upper triangle after an id
+    sort (ids are unique by contract). Memory is bounded by
+    ``_PAIR_BLOCK`` accumulator columns at a time, so a ``cell_cap``'d
+    cell never materializes a full n×n matrix."""
+    ids = tbl.column("n_id").to_numpy()
+    vals, starts, lens = _flat(tbl.column("n_vec").combine_chunks(),
+                               np.float64)
+    order = np.argsort(ids, kind="stable")
+    ids, starts, lens = ids[order], starts[order], lens[order]
+    for L in np.unique(lens):
+        idx = np.flatnonzero(lens == L)
+        if L <= 0 or len(idx) < 2:
+            # NULL (or NULL-element) vector, or dim-0 (zero norm → NULL
+            # cosine): never similar — and a singleton length-group has
+            # no same-dim partner
+            continue
+        A = _rows(vals, starts, idx, L)
+        m = len(idx)
+        nrm = np.sqrt(_seq_fold(A * A))
+        gids = ids[idx]
+        for j0 in range(0, m, _PAIR_BLOCK):
+            j1 = min(j0 + _PAIR_BLOCK, m)
+            S = np.zeros((m, j1 - j0))
+            for k in range(L):
+                S += np.outer(A[:, k], A[j0:j1, k])
+            den = nrm[:, None] * nrm[None, j0:j1]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = S / den
+            # strict upper triangle in GLOBAL sorted-id order
+            ok = (den != 0.0) & (np.arange(m)[:, None]
+                                 < np.arange(j0, j1)[None, :])
+            yield gids, gids[j0:j1], cos, ok
 
 
 def _cell_drops(assigned: DataFrame, key: list[str],
                 threshold: float) -> DataFrame:
-    """(drop_id) — grouped per-cell pair stage (round 12, guide §2.3
-    "shuffle keys and metadata instead of payloads" + §4.2).
+    """(drop_id) — grouped per-cell pair stage (guide §2.3 "shuffle keys
+    and metadata instead of payloads" + §4.2): a row is dropped when a
+    lower-id row of its group is ``> threshold`` similar.
 
-    The relational form above ships BOTH embedding vectors across the
-    Arrow boundary once per PAIR — corpus²/n_lists × 2·dim doubles; at
-    bench SF that is ~400 MB of Arrow traffic per execution and it
-    grows quadratically in cell size. This kernel groups by the same
-    pair key and ships each (id, vector) once per CELL, computing the
-    pairwise decisions inside one numpy task per cell.
-
-    Bit-identity with the relational/vectorized fold (oracle-checked):
-
-    - products and adds in float64 after an exact float32→float64
-      upcast, accumulated DIMENSION-AT-A-TIME (``S += outer(A[:,k],
-      A[:,k])`` — per pair exactly ``0.0 + p₀ + p₁ + …``, the
-      relational left fold, same trick as ``_seq_fold``);
-    - norms via the same per-row fold + one correctly-rounded sqrt;
-    - ``den == 0`` → NULL cosine → never similar (the zero-norm pin);
-    - NaN cosine (NaN element, or NaN den) → SIMILAR, because Spark
-      orders NaN above every threshold — ``(cos > τ) | isnan(cos)``;
-    - ragged dims inside a cell → ``zip_with`` pads → NULL fold → never
-      similar: pairs are computed only within same-length groups;
-    - a NULL vector cannot reach here (the kmeans assignment raises),
-      but a defensive skip keeps the relational NULL-fold semantics.
-
-    ``a_id < b_id`` becomes the strict upper triangle after an id sort
-    (ids are unique by contract). Per-cell memory is bounded by
-    ``_PAIR_BLOCK`` accumulator columns at a time, so a ``cell_cap``'d
-    cell never materializes a full n×n matrix."""
-    schema = "drop_id long"
+    A pair join would ship BOTH embedding vectors across the Arrow
+    boundary once per PAIR — corpus²/n_lists × 2·dim doubles; at bench
+    SF that is ~400 MB of Arrow traffic per execution and it grows
+    quadratically in cell size. This kernel groups by the pair key and
+    ships each (id, vector) once per CELL, computing the pairwise
+    decisions inside one numpy task per cell (``_pair_blocks``)."""
     tau = float(threshold)
-    blk = _PAIR_BLOCK
 
-    def kern(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        out = np.array([], dtype=np.int64)
-        ids = pdf["n_id"].to_numpy()
-        n = len(ids)
-        if n >= 2:
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            vecs = pdf["n_vec"].to_numpy()[order]
-            lens = np.fromiter(
-                ((-1 if v is None else len(v)) for v in vecs),
-                dtype=np.int64, count=n)
-            dropped = np.zeros(n, dtype=bool)
-            for L in np.unique(lens):
-                idx = np.flatnonzero(lens == L)
-                if L <= 0 or len(idx) < 2:
-                    # null vector (guarded upstream) or dim-0 (zero norm
-                    # → NULL cosine): never similar, skip — and a
-                    # singleton length-group has no same-dim partner
-                    continue
-                A = np.array(list(vecs[idx]), dtype=np.float64)
-                m = len(idx)
-                acc = np.zeros(m)
-                for k in range(L):
-                    acc = acc + A[:, k] * A[:, k]
-                nrm = np.sqrt(acc)
-                for j0 in range(0, m, blk):
-                    j1 = min(j0 + blk, m)
-                    S = np.zeros((m, j1 - j0))
-                    for k in range(L):
-                        S += np.outer(A[:, k], A[j0:j1, k])
-                    den = nrm[:, None] * nrm[None, j0:j1]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = S / den
-                    sim = np.where(den == 0.0, False,
-                                   (cos > tau) | np.isnan(cos))
-                    # strict upper triangle in GLOBAL sorted-id order:
-                    # row i similar to column j drops j iff i < j
-                    gi = np.arange(m)[:, None]
-                    gj = np.arange(j0, j1)[None, :]
-                    sim &= gi < gj
-                    hit = sim.any(axis=0)
-                    dropped[idx[j0:j1][hit]] = True
-            out = ids[dropped]
-        return pd.DataFrame({"drop_id": pd.array(out, dtype="int64")})
+    def kern(tbl: pa.Table) -> pa.Table:
+        hits = [cols[(ok & ((cos > tau) | np.isnan(cos))).any(axis=0)]
+                for _, cols, cos, ok in _pair_blocks(tbl)]
+        return pa.table({"drop_id": pa.array(
+            np.concatenate(hits) if hits else [], pa.int64())})
 
     return (assigned.select("n_id", "n_vec", *key)
                     .groupBy(*key)
-                    .applyInPandas(kern, schema))
+                    .applyInArrow(kern, "drop_id long"))
 
 
 def _bucket_pairs(b: DataFrame, key: list[str],
                   threshold: float) -> DataFrame:
     """(d1, d2, cos) — grouped per-bucket pair LISTING (the
     embedding_near_duplicates output shape; `_cell_drops` emits only the
-    losers). Same bit-identity rules as `_cell_drops`, plus:
-
-    - the filter is ``>=`` (near-duplicate grade), and a NaN cosine
-      passes it (Spark orders NaN above every threshold) with the NaN
-      VALUE in the output — carried through the Arrow return boundary
-      by a masked FloatingArray exactly like ``_fold_vec._ret`` (a
-      plain float64 Series would null it);
-    - ``den == 0`` → NULL cosine → the pair is filtered out."""
+    losers), over the same ``_pair_blocks``. The filter is ``>=``
+    (near-duplicate grade), and a NaN cosine passes it (Spark orders NaN
+    above every threshold) with the NaN VALUE in the output."""
     tau = float(threshold)
-    blk = _PAIR_BLOCK
-    schema = "d1 long, d2 long, cos double"
 
-    def kern(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        d1s: list[np.ndarray] = []
-        d2s: list[np.ndarray] = []
-        coss: list[np.ndarray] = []
-        ids = pdf["n_id"].to_numpy()
-        n = len(ids)
-        if n >= 2:
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            vecs = pdf["n_vec"].to_numpy()[order]
-            lens = np.fromiter(
-                ((-1 if v is None else len(v)) for v in vecs),
-                dtype=np.int64, count=n)
-            for L in np.unique(lens):
-                idx = np.flatnonzero(lens == L)
-                if L <= 0 or len(idx) < 2:
-                    continue
-                A = np.array(list(vecs[idx]), dtype=np.float64)
-                m = len(idx)
-                acc = np.zeros(m)
-                for k in range(L):
-                    acc = acc + A[:, k] * A[:, k]
-                nrm = np.sqrt(acc)
-                gids = ids[idx]
-                for j0 in range(0, m, blk):
-                    j1 = min(j0 + blk, m)
-                    S = np.zeros((m, j1 - j0))
-                    for k in range(L):
-                        S += np.outer(A[:, k], A[j0:j1, k])
-                    den = nrm[:, None] * nrm[None, j0:j1]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = S / den
-                    keep = np.where(den == 0.0, False,
-                                    (cos >= tau) | np.isnan(cos))
-                    gi = np.arange(m)[:, None]
-                    gj = np.arange(j0, j1)[None, :]
-                    keep &= gi < gj
-                    ii, jj = np.nonzero(keep)
-                    if len(ii):
-                        d1s.append(gids[ii])
-                        d2s.append(gids[jj + j0])
-                        coss.append(cos[ii, jj])
-        if d1s:
-            d1 = np.concatenate(d1s)
-            d2 = np.concatenate(d2s)
-            cv = np.concatenate(coss)
-        else:
-            d1 = d2 = np.array([], dtype=np.int64)
-            cv = np.array([], dtype=np.float64)
-        return pd.DataFrame({
-            "d1": pd.array(d1, dtype="int64"),
-            "d2": pd.array(d2, dtype="int64"),
-            # masked FloatingArray: mask all-false, values carry NaN
-            # bit-intact through Arrow (see _fold_vec._ret)
-            "cos": pd.Series(pd.arrays.FloatingArray(
-                np.asarray(cv, dtype=np.float64),
-                np.zeros(len(cv), dtype=bool))),
-        })
+    def kern(tbl: pa.Table) -> pa.Table:
+        d1s, d2s, coss = [], [], []
+        for rows, cols, cos, ok in _pair_blocks(tbl):
+            ii, jj = np.nonzero(ok & ((cos >= tau) | np.isnan(cos)))
+            d1s.append(rows[ii])
+            d2s.append(cols[jj])
+            coss.append(cos[ii, jj])
+        return pa.table({
+            "d1": pa.array(np.concatenate(d1s) if d1s else [], pa.int64()),
+            "d2": pa.array(np.concatenate(d2s) if d2s else [], pa.int64()),
+            "cos": pa.array(np.concatenate(coss) if coss else [],
+                            pa.float64())})
 
-    return b.groupBy(*key).applyInPandas(kern, schema)
+    return b.groupBy(*key).applyInArrow(kern, "d1 long, d2 long, cos double")
 
 
 def semantic_cells(corpus: DataFrame, n_lists: int | None = 8,
@@ -1169,7 +850,7 @@ def semantic_cells(corpus: DataFrame, n_lists: int | None = 8,
     assigned, _ = kmeans_cells(corpus, n_lists=n_lists, iters=iters,
                                id_col=id_col, vec_col=vec_col)
     # NOT checkpointed (round 12, measured): every semantic_dedup
-    # execution reads `assigned` three times (both pair sides + the
+    # execution reads `assigned` more than once (the pair stage + the
     # anti-join base), but materializing it means writing/reading the
     # full embedding vectors (n_vec rides every consumer) — cold-run
     # A/B at bench SF put the localCheckpoint variant ~15% SLOWER than
@@ -1254,8 +935,7 @@ def pq_encode(corpus: DataFrame, m: int = 4, n_codes: int = 16,
             for s in range(m)])).alias("e")) \
         .select("vid", "e.s", "e.su")
     for _ in range(iters):
-        cell = _assign_cell_tagged(F.col("s"), F.col("su"), codebooks) \
-            if VECTORIZED_ASSIGN else _argmin_cell_tagged(codebooks)
+        cell = _assign_cell_tagged(F.col("s"), F.col("su"), codebooks)
         sums = (subs
                 .select("s", cell.alias("cell"), "su")
                 .select("s", "cell", F.posexplode("su").alias("pos", "uv"))
@@ -1278,14 +958,9 @@ def pq_encode(corpus: DataFrame, m: int = 4, n_codes: int = 16,
 
 def l2_dist(a: Column, b: Column) -> Column:
     """Σ (a[i]-b[i])² in double, left-to-right — same fold discipline
-    (and same vectorized-twin dispatch) as ``dot``, so a SQL oracle
-    reproduces it bit-for-bit."""
-    if VECTORIZED_FOLD:
-        return _fold_vec("l2")(a, b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0), lambda acc, x: acc + x)
+    (and same kernel) as ``dot``, so a SQL oracle reproduces it
+    bit-for-bit."""
+    return _fold_vec("l2")(a, b)
 
 
 def pq_adc_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,

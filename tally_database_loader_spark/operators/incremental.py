@@ -130,9 +130,12 @@ class ParquetStore(TableFormat):
         return F.pmod(F.xxhash64(F.col(key).cast("string")),
                       F.lit(self.n_buckets)).cast("int")
 
-    @staticmethod
-    def _key_of(df: DataFrame) -> str:
-        return "guid" if "guid" in df.columns else df.columns[0]
+    def _touched_buckets(self, touched_keys: DataFrame) -> list[int]:
+        """Sorted buckets holding a key of ``touched_keys`` (its first
+        column) — ≤ n_buckets ints, a scalar probe."""
+        return sorted(r[0] for r in touched_keys
+                      .select(self._bucket_col(touched_keys.columns[0]))
+                      .distinct().collect())
 
     # -- manifest mechanics -------------------------------------------------
 
@@ -419,12 +422,7 @@ class ParquetStore(TableFormat):
             self.write(df, table)
             return self.n_buckets
         key = self._key_of(df)
-        tkey = touched_keys.columns[0]
-        touched = sorted(
-            r[0] for r in touched_keys
-            .select(F.pmod(F.xxhash64(F.col(tkey).cast("string")),
-                           F.lit(self.n_buckets)).cast("int").alias("b"))
-            .distinct().collect())  # ≤ n_buckets ints — a scalar probe
+        touched = self._touched_buckets(touched_keys)
         nxt = vs[-1] + 1
         stage = self._stage_dir(table, nxt)
         if touched:
@@ -458,12 +456,7 @@ class ParquetStore(TableFormat):
         vs = self._versions(table)
         if not vs:
             raise FileNotFoundError(f"no versions for table {table}")
-        tkey = touched_keys.columns[0]
-        touched = sorted(
-            r[0] for r in touched_keys
-            .select(F.pmod(F.xxhash64(F.col(tkey).cast("string")),
-                           F.lit(self.n_buckets)).cast("int").alias("b"))
-            .distinct().collect())  # ≤ n_buckets ints — a scalar probe
+        touched = self._touched_buckets(touched_keys)
         sj = self._manifest_schema(table, vs[-1])
         if sj is None:
             # legacy pre-manifest snapshot: no recorded schema, so fall
@@ -676,7 +669,7 @@ class IncrementalSync:
 
     def incremental_sync_frames(self, frames: dict[str, DataFrame],
                                 primaries: list[str] | None = None,
-                                src_max: dict[str, int] | int | None = None,
+                                src_max: dict[str, int] | None = None,
                                 ) -> dict:
         """The E-protocol over PRE-EXTRACTED flat per-table frames (each
         with ``guid`` + ``alterid``) — the entry the CLI's XML-dump
@@ -701,9 +694,7 @@ class IncrementalSync:
         by_group: dict[str, list[str]] = {"master": [], "transaction": []}
         for name in primaries:
             by_group[self._group_of(name)].append(name)
-        if isinstance(src_max, int):  # pre-split callers: one counter
-            src_max = dict.fromkeys(by_group, src_max)
-        elif src_max is None:  # one union-of-max probe per group, concurrently
+        if src_max is None:  # one union-of-max probe per group, concurrently
             src_max = dict(zip(by_group, run_concurrently(
                 self.spark,
                 lambda names: union_max([frames[n] for n in names
@@ -899,21 +890,19 @@ class IncrementalSync:
         self.store.write_scoped(kept_c, child, touched_c)
 
     def apply_cascade_updates(
-            self,
-            changed_parent_keys: dict[str, DataFrame] | None = None) -> None:
+            self, changed_parent_keys: dict[str, DataFrame]) -> None:
         """UPDATE child SET col = parent.name FROM child JOIN parent — as a
         broadcast-join rewrite (reference src/tally.mts:225-246 has three
         dialect-specific UPDATE forms; one plan here).
 
-        With ``changed_parent_keys`` (parent table → guid DataFrame of
-        rows this sync changed) the repair is partition-scoped: a child
-        is rewritten only when one of its parents changed, and only the
-        buckets holding affected child rows. Locating those rows costs
-        one (fk, key)-pruned scan per child; the WIDE columns are then
-        read bucket-scoped (``scoped_base``) and the repair joins run
-        over that slice only — never a full wide-table rewrite (VERDICT
-        r9 #1). Without it (standalone call) every child is fully
-        rewritten."""
+        ``changed_parent_keys`` (parent table → guid DataFrame of rows
+        this sync changed) scopes the repair: a child is rewritten only
+        when one of its parents changed, and only the buckets holding
+        affected child rows. Locating those rows costs one (fk,
+        key)-pruned scan per child; the WIDE columns are then read
+        bucket-scoped (``scoped_base``) and the repair joins run over
+        that slice only — never a full wide-table rewrite (VERDICT r9
+        #1)."""
         for name, spec in self.specs.items():
             if not spec.cascade_update or not self.store.exists(name):
                 continue
@@ -926,27 +915,22 @@ class IncrementalSync:
                 fk = f"_{col}"
                 if fk not in child.columns or not self.store.exists(parent_table):
                     continue
-                if changed_parent_keys is not None \
-                        and parent_table not in changed_parent_keys:
+                if parent_table not in changed_parent_keys:
                     continue  # parent untouched this sync — nothing to repair
-                if changed_parent_keys is None:
-                    parent_rows = self.store.read(self.spark, parent_table)
-                else:
-                    # only CHANGED parents can have a stale name to push:
-                    # read just their storage partitions — children of
-                    # unchanged parents keep their current (already
-                    # repaired) value through the left join's coalesce
-                    parent_rows = self.store.scoped_base(
-                        self.spark, parent_table,
-                        changed_parent_keys[parent_table])
+                # only CHANGED parents can have a stale name to push:
+                # read just their storage partitions — children of
+                # unchanged parents keep their current (already
+                # repaired) value through the left join's coalesce
+                parent_rows = self.store.scoped_base(
+                    self.spark, parent_table,
+                    changed_parent_keys[parent_table])
                 parent = parent_rows.select(
                     F.col("guid").alias(fk), F.col(parent_col).alias(f"__new_{col}"))
                 repairs.append((col, fk, parent))
-                if changed_parent_keys is not None:
-                    affected_fks.append(
-                        changed_parent_keys[parent_table]
-                        .select(F.col(changed_parent_keys[parent_table].columns[0])
-                                .alias(fk)))
+                affected_fks.append(
+                    changed_parent_keys[parent_table]
+                    .select(F.col(changed_parent_keys[parent_table].columns[0])
+                            .alias(fk)))
             if not repairs:
                 continue
 
@@ -957,18 +941,15 @@ class IncrementalSync:
                             .drop(f"__new_{col}"))
                 return df
 
-            if changed_parent_keys is None:
-                self.store.write(apply_repairs(child), name)
-            else:
-                touched = None
-                for fk_keys in affected_fks:
-                    fk = fk_keys.columns[0]
-                    part = (child.join(F.broadcast(fk_keys.distinct()), fk,
-                                       "left_semi").select(ckey))
-                    touched = part if touched is None else touched.unionByName(part)
-                touched = touched.localCheckpoint(eager=True)
-                scoped = self.store.scoped_base(self.spark, name, touched)
-                self.store.write_scoped(apply_repairs(scoped), name, touched)
+            touched = None
+            for fk_keys in affected_fks:
+                fk = fk_keys.columns[0]
+                part = (child.join(F.broadcast(fk_keys.distinct()), fk,
+                                   "left_semi").select(ckey))
+                touched = part if touched is None else touched.unionByName(part)
+            touched = touched.localCheckpoint(eager=True)
+            scoped = self.store.scoped_base(self.spark, name, touched)
+            self.store.write_scoped(apply_repairs(scoped), name, touched)
 
     def _renumber_vouchers(self, frames: dict[str, DataFrame]) -> None:
         """Reference src/tally.mts:248-298: an insert shifts every later

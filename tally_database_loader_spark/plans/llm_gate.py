@@ -7,7 +7,8 @@ Oracle strategy (every query below is hash-matched against DuckDB):
   16,10)`` is reproduced in SQL by folding the hex digits with
   ``list_reduce`` — so MinHash/LSH bucketing matches digit-for-digit;
 - float parity: dot products are computed as a left fold over doubles in
-  both engines (zip_with+aggregate ↔ list_zip+list_apply+list_reduce);
+  both engines (the Arrow kernels' dimension-at-a-time fold ↔
+  list_zip+list_apply+list_reduce);
   float→double casts and double add/mul/sqrt/div are IEEE-deterministic,
   so cosine scores are bit-identical — no rounding tolerance needed;
 - count columns are cast to INT/BIGINT explicitly on both sides.
@@ -83,7 +84,7 @@ _DD_SHINGLE_TABLE = f"""
 
 
 def _dd_dot(a: str, b: str) -> str:
-    """Left-fold double dot product (== Spark zip_with + aggregate)."""
+    """Left-fold double dot product (== llm/similarity.py ``dot``)."""
     return ("list_reduce(list_apply(list_zip(" + a + ", " + b + "), "
             "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)), (x, y) -> x + y)")
 
@@ -918,8 +919,7 @@ def two_tier_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dd_l2(a: str, b: str) -> str:
-    """Left-fold double squared-L2 (== Spark zip_with + aggregate in
-    llm/similarity.py l2_dist)."""
+    """Left-fold double squared-L2 (== llm/similarity.py l2_dist)."""
     return ("list_reduce(list_apply(list_zip(" + a + ", " + b + "), "
             "p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) "
             "* (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), "

@@ -82,70 +82,57 @@ def test_minhash_fast_path_matches_parity_path(spark):
     assert inter >= 0.8, f"fast/parity overlap too low: {inter}"
 
 
-def test_vectorized_assignment_equals_relational(spark):
-    """The Arrow-vectorized numpy argmin (the k-means/PQ hot path — the
-    relational HOF form is CodegenFallback and runs interpreted) must
-    produce EXACTLY the relational form's integers: same centroids after
-    Lloyd rounds, same cell per vector, same PQ codebooks and codes.
-    Both are exact int64 arithmetic with a first-minimum tie rule, so
-    equality is bitwise, not approximate."""
+def test_vectorized_assignment_equals_relational(spark, duck):
+    """The Arrow-vectorized numpy argmin (the k-means/PQ hot path) must
+    produce EXACTLY the integers of the DuckDB Lloyd chain the oracles
+    replay over the same rows: same centroids after Lloyd rounds, same
+    cell per vector, same PQ codebooks and codes. Both are exact int64
+    arithmetic with a first-minimum tie rule, so equality is bitwise,
+    not approximate."""
     import tally_database_loader_spark.llm.similarity as sim
     from tally_database_loader_spark.sources.catalog import load_table
+    from tests import embedding_oracle as ref
     e = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    prev = sim.VECTORIZED_ASSIGN
-    try:
-        sim.VECTORIZED_ASSIGN = False
-        a1, c1 = sim.kmeans_cells(e, n_lists=8, iters=2)
-        r1 = sorted((r.n_id, r.cell)
-                    for r in a1.select("n_id", "cell").collect())
-        enc1, cb1 = sim.pq_encode(e, m=4, n_codes=16, iters=2, dim=64)
-        p1 = sorted(tuple(r) for r in enc1.collect())
-        sim.VECTORIZED_ASSIGN = True
-        a2, c2 = sim.kmeans_cells(e, n_lists=8, iters=2)
-        r2 = sorted((r.n_id, r.cell)
-                    for r in a2.select("n_id", "cell").collect())
-        enc2, cb2 = sim.pq_encode(e, m=4, n_codes=16, iters=2, dim=64)
-        p2 = sorted(tuple(r) for r in enc2.collect())
-    finally:
-        sim.VECTORIZED_ASSIGN = prev
-    assert c1 == c2 and r1 == r2
-    assert cb1 == cb2 and p1 == p2
+    a, c = sim.kmeans_cells(e, n_lists=8, iters=2)
+    cells = {r.n_id: r.cell for r in a.select("n_id", "cell").collect()}
+    enc, cb = sim.pq_encode(e, m=4, n_codes=16, iters=2, dim=64)
+    codes = sorted(tuple(r) for r in enc.collect())
+    assert (cells, c) == ref.kmeans(duck, 8, 2)
+    subs = [ref.kmeans(duck, 16, 2, vec=f"embedding[{s * 16 + 1}:"
+                       f"{(s + 1) * 16}]", prefix=f"p{s}")
+            for s in range(4)]
+    assert cb == [book for _, book in subs]
+    assert codes == sorted((v, *(sc[v] for sc, _ in subs))
+                           for v in subs[0][0])
 
 
-def test_vectorized_float_folds_equal_relational(spark):
-    """The Arrow-vectorized dot/cosine/l2/SRP twins must reproduce the
-    relational left-to-right folds BIT-for-bit (same IEEE adds in the
-    same order via dimension-at-a-time accumulation — numpy's pairwise
-    sum would not). Checked over full query results including the float
-    scores, not just the id sets."""
+def test_vectorized_float_folds_equal_relational(spark, duck):
+    """The Arrow-vectorized dot/cosine/l2/SRP kernels must reproduce the
+    oracles' left-to-right folds BIT-for-bit (same IEEE adds in the same
+    order via dimension-at-a-time accumulation — numpy's pairwise sum
+    would not). Checked over full query results including the float
+    scores, not just the id sets, against the DuckDB oracles of the
+    same queries over the same rows."""
     import tally_database_loader_spark.llm.similarity as sim
+    from tally_database_loader_spark.plans.gate import ORACLES
     from tally_database_loader_spark.sources.catalog import load_table
     e = load_table(spark, "/root/testdata/sf0.01", "embeddings")
     q = e.filter("vec_id < 8")
 
-    def snap():
-        return (
-            sorted(tuple(r) for r in sim.cosine_topk(e, q, k=5).collect()),
-            sorted(tuple(r) for r in
-                   sim.embedding_near_duplicates(e, threshold=0.2).collect()),
-            sorted(tuple(r) for r in
-                   sim.lsh_topk(e, q, k=5, n_bits=4, dim=64).collect()),
-        )
+    def rows(df):
+        return sorted(tuple(repr(v) for v in r) for r in df.collect())
 
-    prev = sim.VECTORIZED_FOLD
-    try:
-        sim.VECTORIZED_FOLD = False
-        rel = snap()
-        i8r = sorted(tuple(r) for r in
-                     sim.quantized_topk(e, q, k=5).collect())
-        sim.VECTORIZED_FOLD = True
-        vec = snap()
-        i8v = sorted(tuple(r) for r in
-                     sim.quantized_topk(e, q, k=5).collect())
-    finally:
-        sim.VECTORIZED_FOLD = prev
-    assert rel == vec
-    assert i8r == i8v  # quantize + integer dot twins bit-identical too
+    def ref(name):
+        return sorted(tuple(repr(v) for v in r)
+                      for r in duck.sql(ORACLES[name]).fetchall())
+
+    assert rows(sim.cosine_topk(e, q, k=5)) == ref("cosine_topk")
+    assert rows(sim.embedding_near_duplicates(e, threshold=0.2)) \
+        == ref("embedding_cosine_dups")
+    assert rows(sim.lsh_topk(e, q, k=5, n_bits=4, dim=64)) \
+        == ref("ann_lsh_topk")
+    # quantize + integer dot bit-identical too
+    assert rows(sim.quantized_topk(e, q, k=5)) == ref("quantized_topk")
 
 
 def test_ivf_recall_vs_bruteforce(spark):
@@ -1268,14 +1255,14 @@ def test_dsir_importance_ranks_target_like_docs_higher(spark):
 
 
 def test_twin_edge_parity_on_edge_vectors(spark):
-    """ADVICE r3: flipping VECTORIZED_FOLD must not change results on
-    edge inputs. Ragged pairs and null vectors NULL-propagate like the
-    relational zip_with/aggregate forms; NaN elements produce NaN folds
-    and SET srp bits under Spark's NaN-above-everything ordering in BOTH
-    twins; pairwise-equal rows of different dims still compute even when
-    one Arrow batch mixes dimensions. (Null ELEMENTS arrive as NaN
-    through Arrow — pinned to NaN semantics, documented in _fold_vec.)"""
+    """ADVICE r3: the fold kernels must match the DuckDB left fold on
+    edge inputs. Ragged pairs and null vectors NULL-propagate like
+    ``list_zip``/``list_reduce``; NaN elements produce NaN folds and
+    SET srp bits under the SQL NaN-above-everything ordering;
+    pairwise-equal rows of different dims still compute even when one
+    Arrow batch mixes dimensions."""
     import tally_database_loader_spark.llm.similarity as sim
+    from tests import embedding_oracle as ref
 
     rows = [
         (1, [1.0, 2.0, 3.0, 4.0], [1.0, 1.0, 1.0, 1.0]),           # clean
@@ -1288,50 +1275,35 @@ def test_twin_edge_parity_on_edge_vectors(spark):
     ]
     df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
     planes = sim._planes(4, 4)
-
-    def snap():
-        out = df.select(
-            "id",
-            sim.dot(F.col("a"), F.col("b")).alias("d"),
-            sim.cosine(F.col("a"), F.col("b")).alias("c"),
-            sim.l2_dist(F.col("a"), F.col("b")).alias("l"),
-            sim.srp_bucket(F.col("a"), planes).alias("bk"))
-        return {r.id: (repr(r.d), repr(r.c), repr(r.l), r.bk)
-                for r in out.collect()}
-
-    prev = sim.VECTORIZED_FOLD
-    try:
-        sim.VECTORIZED_FOLD = False
-        rel = snap()
-        sim.VECTORIZED_FOLD = True
-        vec = snap()
-    finally:
-        sim.VECTORIZED_FOLD = prev
-    assert rel == vec, f"twins diverged: {rel} vs {vec}"
-    assert rel[3][0] == "None" and rel[4][0] == "None"  # ragged/null → NULL
-    assert rel[2][0] == "nan"            # NaN element → NaN fold, not null
-    assert rel[2][3] == 15               # NaN proj sets every srp bit
-    # null vector / ragged srp: when(null > 0) → otherwise(0), bucket 0
-    assert rel[4][3] == 0 and rel[3][3] == 0 and rel[5][3] == 0
-    assert rel[5][0] == repr(6.0)        # mixed-dim batch still computes
+    out = df.select(
+        "id",
+        sim.dot(F.col("a"), F.col("b")).alias("d"),
+        sim.cosine(F.col("a"), F.col("b")).alias("c"),
+        sim.l2_dist(F.col("a"), F.col("b")).alias("l"),
+        sim.srp_bucket(F.col("a"), planes).alias("bk"))
+    got = {r.id: (repr(r.d), repr(r.c), repr(r.l), r.bk)
+           for r in out.collect()}
+    assert got == ref.folds(rows, planes), "kernels diverged from DuckDB"
+    assert got[3][0] == "None" and got[4][0] == "None"  # ragged/null → NULL
+    assert got[2][0] == "nan"            # NaN element → NaN fold, not null
+    assert got[2][3] == 15               # NaN proj sets every srp bit
+    # null vector / ragged srp: CASE WHEN NULL > 0 → ELSE 0, bucket 0
+    assert got[4][3] == 0 and got[3][3] == 0 and got[5][3] == 0
+    assert got[5][0] == repr(6.0)        # mixed-dim batch still computes
     # zero-norm pin: cosine NULL (ANSI-safe, DuckDB x/0 ≡ NULL), dot 0,
     # bucket 0 — NOT NaN, which would order above every threshold
-    assert rel[7] == (repr(0.0), "None", repr(4.0), 0)
-    # and through the CLEAN batch path too (no nulls/ragged in batch —
-    # the masked den == 0 branch, not the rowwise fallback)
+    assert got[7] == (repr(0.0), "None", repr(4.0), 0)
+    # and through a CLEAN batch too (no nulls/ragged in the batch)
+    import math
+    clean_rows = [(1, [0.0, 0.0], [1.0, 1.0]), (2, [3.0, 4.0], [1.0, 1.0])]
     clean = spark.createDataFrame(
-        [(1, [0.0, 0.0], [1.0, 1.0]), (2, [3.0, 4.0], [1.0, 1.0])],
-        "id int, a array<double>, b array<double>")
-    for flag in (False, True):
-        try:
-            sim.VECTORIZED_FOLD = flag
-            got = {r.id: r.c for r in clean.select(
-                "id", sim.cosine(F.col("a"), F.col("b")).alias("c")).collect()}
-        finally:
-            sim.VECTORIZED_FOLD = prev
-        import math
-        assert got[1] is None, f"zero-norm cosine not NULL (flag={flag})"
-        assert got[2] == 7.0 / (math.sqrt(25.0) * math.sqrt(2.0)), f"flag={flag}"
+        clean_rows, "id int, a array<double>, b array<double>")
+    got = {r.id: r.c for r in clean.select(
+        "id", sim.cosine(F.col("a"), F.col("b")).alias("c")).collect()}
+    assert got[1] is None, "zero-norm cosine not NULL"
+    assert got[2] == 7.0 / (math.sqrt(25.0) * math.sqrt(2.0))
+    assert {i: repr(c) for i, c in got.items()} == \
+        {i: v[1] for i, v in ref.folds(clean_rows, sim._planes(4, 2)).items()}
 
 
 def test_hll_unsupported_b_has_actionable_error():
@@ -1632,60 +1604,43 @@ def test_hll_excludes_nulls_like_count_distinct(spark):
 
 
 def test_int8_twins_edge_parity(spark):
-    """Review r4: the int8 quantize/dot twins must agree with the
-    relational forms on edge vectors — NaN components pin to a NULL
-    struct (the ANSI cast would abort), ragged int-dot pairs
-    NULL-propagate."""
+    """Review r4: the int8 quantize/dot kernels must agree with the
+    DuckDB oracle's quantization and integer fold on edge vectors — NaN
+    components pin to a NULL struct (``floor(NaN)`` has no int8 value),
+    ragged int-dot pairs NULL-propagate."""
     import tally_database_loader_spark.llm.similarity as sim
-    df = spark.createDataFrame(
-        [(1, [1.0, -2.0, 4.0]), (2, [1.0, float("nan"), 3.0]),
-         (3, None), (4, [0.0, 0.0, 0.0])],
-        "id int, v array<double>")
+    from tests import embedding_oracle as ref
+    rows = [(1, [1.0, -2.0, 4.0]), (2, [1.0, float("nan"), 3.0]),
+            (3, None), (4, [0.0, 0.0, 0.0])]
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    out = df.select("id", sim.quantize_int8(F.col("v")).alias("qz"))
+    got = {r.id: (r.qz["scale"], tuple(r.qz["q"] or ()))
+           for r in out.collect()}
+    want = {i: (sc, tuple(q or ())) for i, (sc, q) in ref.quantize(rows).items()}
+    assert got == want, f"quantize diverged: {got} vs {want}"
+    # NaN / NULL vector → fields-NULL struct
+    assert got[2] == (None, ()) and got[3] == (None, ())
+    assert got[4] == (0.0, (0, 0, 0))              # zero vector
 
-    def snap():
-        out = df.select("id", sim.quantize_int8(F.col("v")).alias("qz"))
-        return {r.id: (None if r.qz is None
-                       else (r.qz["scale"], tuple(r.qz["q"] or ())))
-                for r in out.collect()}
-
-    prev = sim.VECTORIZED_FOLD
-    try:
-        sim.VECTORIZED_FOLD = False
-        rel = snap()
-        sim.VECTORIZED_FOLD = True
-        vec = snap()
-    finally:
-        sim.VECTORIZED_FOLD = prev
-    assert rel == vec, f"quantize twins diverged: {rel} vs {vec}"
-    # NaN / NULL vector → fields-NULL struct (the shape a pandas_udf's
-    # all-None row materializes as) in BOTH twins
-    assert rel[2] == (None, ()) and rel[3] == (None, ())
-    assert rel[4] == (0.0, (0, 0, 0))              # zero vector
-
-    pairs = spark.createDataFrame(
-        [(1, [1, 2, 3], [4, 5, 6]), (2, [1, 2], [4, 5, 6]), (3, None, [1])],
-        "id int, a array<int>, b array<int>")
-    try:
-        sim.VECTORIZED_FOLD = False
-        r2 = {r.id: r.d for r in pairs.select(
-            "id", sim.int_dot(F.col("a"), F.col("b")).alias("d")).collect()}
-        sim.VECTORIZED_FOLD = True
-        v2 = {r.id: r.d for r in pairs.select(
-            "id", sim.int_dot(F.col("a"), F.col("b")).alias("d")).collect()}
-    finally:
-        sim.VECTORIZED_FOLD = prev
-    assert r2 == v2 == {1: 32, 2: None, 3: None}
+    pair_rows = [(1, [1, 2, 3], [4, 5, 6]), (2, [1, 2], [4, 5, 6]),
+                 (3, None, [1])]
+    pairs = spark.createDataFrame(pair_rows,
+                                  "id int, a array<int>, b array<int>")
+    got = {r.id: r.d for r in pairs.select(
+        "id", sim.int_dot(F.col("a"), F.col("b")).alias("d")).collect()}
+    assert got == ref.int_dots(pair_rows) == {1: 32, 2: None, 3: None}
 
 
 def test_twin_parity_randomized_sweep(spark):
     """Breadth companion to the hand-picked edge cases: 300 seeded-random
     vector pairs — mixed magnitudes (1e-30..1e30), negatives, zeros,
     zero-norm rows, NaN/inf elements, a few ragged and NULL rows — must
-    produce IDENTICAL results under both fold dispatches, compared at
-    full repr precision in one batched pass per flag."""
+    produce IDENTICAL results to the DuckDB folds over the same rows,
+    compared at full repr precision in one batched pass."""
     import random
 
     import tally_database_loader_spark.llm.similarity as sim
+    from tests import embedding_oracle as ref
 
     rng = random.Random(0xC0FFEE)
 
@@ -1719,29 +1674,113 @@ def test_twin_parity_randomized_sweep(spark):
     df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
     planes = sim._planes(4, 8)
 
-    def snap():
-        out = df.select(
-            "id",
-            sim.dot(F.col("a"), F.col("b")).alias("d"),
-            sim.cosine(F.col("a"), F.col("b")).alias("c"),
-            sim.l2_dist(F.col("a"), F.col("b")).alias("l"),
-            sim.srp_bucket(F.col("a"), planes).alias("bk"),
-            sim.int_dot(F.transform("a", lambda x: x.try_cast("int")),
-                        F.transform("b", lambda x: x.try_cast("int"))).alias("i"))
-        return {r.id: (repr(r.d), repr(r.c), repr(r.l), r.bk, r.i)
-                for r in out.collect()}
-
-    prev = sim.VECTORIZED_FOLD
-    try:
-        sim.VECTORIZED_FOLD = False
-        rel = snap()
-        sim.VECTORIZED_FOLD = True
-        vec_ = snap()
-    finally:
-        sim.VECTORIZED_FOLD = prev
-    diffs = {k: (rel[k], vec_[k]) for k in rel if rel[k] != vec_[k]}
-    assert not diffs, f"{len(diffs)} twin divergences, first: " \
+    out = df.select(
+        "id",
+        sim.dot(F.col("a"), F.col("b")).alias("d"),
+        sim.cosine(F.col("a"), F.col("b")).alias("c"),
+        sim.l2_dist(F.col("a"), F.col("b")).alias("l"),
+        sim.srp_bucket(F.col("a"), planes).alias("bk"),
+        F.transform("a", lambda x: x.try_cast("int")).alias("ia"),
+        F.transform("b", lambda x: x.try_cast("int")).alias("ib"))
+    out = out.select("*", sim.int_dot(F.col("ia"), F.col("ib")).alias("i"))
+    got = {}
+    int_rows = []
+    for r in out.collect():
+        got[r.id] = (repr(r.d), repr(r.c), repr(r.l), r.bk, r.i)
+        int_rows.append((r.id, r.ia, r.ib))
+    folds = ref.folds(rows, planes)
+    idots = ref.int_dots(int_rows)
+    want = {k: (*folds[k], idots[k]) for k in folds}
+    diffs = {k: (got[k], want[k]) for k in want if got[k] != want[k]}
+    assert not diffs, f"{len(diffs)} divergences from DuckDB, first: " \
                       f"{next(iter(diffs.items()))}"
+
+
+def test_null_element_matches_duckdb(spark):
+    """A NULL vector element is SQL NULL in every embedding kernel, as
+    in DuckDB: the folds over it are NULL (never NaN), its SRP bucket is
+    0, it pairs with nothing, and it never counts as "similar" in the
+    semantic pair stage. Each kernel is compared with DuckDB over the
+    same rows, next to a NaN element, a NULL vector, a ragged pair and
+    a zero-norm vector."""
+    import random
+
+    import tally_database_loader_spark.llm.similarity as sim
+    from tests import embedding_oracle as ref
+
+    nan = float("nan")
+    rows = [
+        (1, [1.0, None, 2.0], [1.0, 1.0, 1.0]),    # null element
+        (2, [1.0, nan, 2.0], [1.0, 1.0, 1.0]),     # NaN element
+        (3, None, [1.0, 1.0, 1.0]),                # NULL vector
+        (4, [1.0, 2.0], [1.0, 1.0, 1.0]),          # ragged pair
+        (5, [0.0, 0.0, 0.0], [1.0, 1.0, 1.0]),     # zero norm
+        (6, [1.0, 2.0, 2.0], [2.0, None, 1.0]),    # null element, b side
+        (7, [3.0, -1.0, 0.5], [1.0, 2.0, 3.0]),    # clean
+    ]
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
+    planes = sim._planes(3, 3)
+    out = df.select(
+        "id",
+        sim.dot(F.col("a"), F.col("b")).alias("d"),
+        sim.cosine(F.col("a"), F.col("b")).alias("c"),
+        sim.l2_dist(F.col("a"), F.col("b")).alias("l"),
+        sim.srp_bucket(F.col("a"), planes).alias("bk"),
+        sim.quantize_int8(F.col("a")).alias("qz"))
+    got = out.collect()
+    folds = {r.id: (repr(r.d), repr(r.c), repr(r.l), r.bk) for r in got}
+    assert folds == ref.folds(rows, planes)
+    assert folds[1] == ("None", "None", "None", 0)
+    assert folds[6][:3] == ("None", "None", "None")
+    assert folds[2][0] == "nan" and folds[2][3] == 7
+    quant = {r.id: (r.qz["scale"], r.qz["q"]) for r in got}
+    want = {i: (sc, None if q is None else list(q))
+            for i, (sc, q) in ref.quantize([(i, a) for i, a, _ in rows]).items()}
+    assert quant == want
+    # the NULL element is skipped by the abs-max and quantizes to NULL
+    assert quant[1] == (2.0 / 127.0, [64, None, 127])
+
+    int_rows = [(1, [1, None, 2], [1, 1, 1]), (3, None, [1, 1, 1]),
+                (4, [1, 2], [1, 1, 1]), (5, [0, 0, 0], [1, 1, 1]),
+                (7, [3, -1, 5], [1, 2, 3])]
+    idf = spark.createDataFrame(int_rows, "id int, a array<int>, b array<int>")
+    idots = {r.id: r.d for r in idf.select(
+        "id", sim.int_dot(F.col("a"), F.col("b")).alias("d")).collect()}
+    assert idots == ref.int_dots(int_rows) == \
+        {1: None, 3: None, 4: None, 5: 0, 7: 16}
+
+    corpus = [(1, [1.0, None, 2.0]), (2, [1.0, nan, 2.0]), (3, None),
+              (4, [1.0, 2.0]), (5, [0.0, 0.0, 0.0]), (7, [3.0, -1.0, 0.5]),
+              (8, [3.0, -1.0, 0.5]), (9, [1.0, 1.0, 2.0]),
+              (10, [1.0, 1.0, 2.0001])]
+    cdf = spark.createDataFrame(corpus, "vec_id long, embedding array<float>")
+    pairs = sorted((r.d1, r.d2, repr(r.cos)) for r in
+                   sim.embedding_near_duplicates(cdf, threshold=0.9,
+                                                 n_bits=2, dim=3).collect())
+    assert pairs == ref.near_dups(corpus, 0.9, 2, 3)
+    assert (7, 8, repr(1.0)) in pairs
+    assert not {1, 3, 4, 5} & {d for p in pairs for d in p[:2]}
+
+    # semantic_dedup takes fixed-dim non-NULL vectors (kmeans_cells
+    # contract), so the NULL vector and the ragged row stay out
+    fixed = [r for r in corpus if r[0] not in (3, 4)]
+    fdf = spark.createDataFrame(fixed, "vec_id long, embedding array<float>")
+    kept = sorted((r.vec_id, r.cell) for r in sim.semantic_dedup(
+        fdf, threshold=0.9, n_lists=2, iters=1).collect())
+    assert kept == ref.semantic_dedup(fixed, 0.9, 2, 1)
+    assert 1 in {v for v, _ in kept}
+
+    # 40 random vectors, one NULL element in vector 0: read as NaN, its
+    # cosine would count as similar and vector 0 would drop every other
+    # member of its cell; as SQL NULL it drops nothing
+    rnd = random.Random(7)
+    probe = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    probe[0][1][3] = None
+    pdf = spark.createDataFrame(probe, "vec_id long, embedding array<float>")
+    kept = sorted((r.vec_id, r.cell) for r in sim.semantic_dedup(
+        pdf, threshold=0.9, n_lists=2, iters=1).collect())
+    assert kept == ref.semantic_dedup(probe, 0.9, 2, 1)
+    assert len(kept) == 39
 
 
 def test_temperature_resample_thresholds_broadcast_at_5000_groups(spark):

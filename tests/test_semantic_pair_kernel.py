@@ -1,24 +1,20 @@
-"""Round 12: the grouped per-cell pair stage of semantic_dedup must make
-bit-for-bit the same pair decisions as the relational self-join + fold
-(the oracle-replayed reference) — including the documented edge
-semantics (zero-norm NULL, NaN-similar, ragged-dim NULL)."""
+"""The grouped pair stages of semantic_dedup (``_cell_drops``) and
+embedding_near_duplicates (``_bucket_pairs``) must make bit-for-bit the
+pair decisions of the SQL self-join + left fold that DuckDB evaluates
+over the same rows — including the documented edge semantics
+(zero-norm NULL, NaN-similar, ragged-dim NULL)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tally_database_loader_spark.llm import similarity as sim
+from tests import embedding_oracle as ref
 
 
-def _survivors(spark, rows, threshold, use_kernel, cell_cap=None):
+def _survivors(spark, rows, threshold, cell_cap=None):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    old = sim.VECTORIZED_PAIR_STAGE
-    sim.VECTORIZED_PAIR_STAGE = use_kernel
-    try:
-        out = sim.semantic_dedup(df, threshold=threshold, n_lists=2,
-                                 iters=1, cell_cap=cell_cap).collect()
-    finally:
-        sim.VECTORIZED_PAIR_STAGE = old
+    out = sim.semantic_dedup(df, threshold=threshold, n_lists=2,
+                             iters=1, cell_cap=cell_cap).collect()
     return sorted((r["vec_id"], r["cell"]) for r in out)
 
 
@@ -44,54 +40,46 @@ def _mk_rows():
 def test_kernel_matches_relational_join(spark, cell_cap):
     rows = _mk_rows()
     for tau in (0.3, 0.9):
-        a = _survivors(spark, rows, tau, use_kernel=False, cell_cap=cell_cap)
-        b = _survivors(spark, rows, tau, use_kernel=True, cell_cap=cell_cap)
-        assert a == b, f"tau={tau} cell_cap={cell_cap}"
+        got = _survivors(spark, rows, tau, cell_cap=cell_cap)
+        assert got == ref.semantic_dedup(rows, tau, 2, 1, cell_cap), \
+            f"tau={tau} cell_cap={cell_cap}"
 
 
 def test_kernel_ragged_dims_never_pair(spark):
     # Ragged dims cannot reach the pair stage through semantic_dedup
     # (the k-means assignment raises on mixed dims per its fixed-dim
-    # contract), so exercise the two pair-stage implementations
-    # directly on a hand-built assignment: relational zip_with pads the
-    # short side -> NULL fold -> pairs across dim groups never drop;
-    # identical duplicates within a dim group still collapse.
+    # contract), so exercise the pair stage directly on a hand-built
+    # assignment: the SQL zip pads the short side -> NULL fold -> pairs
+    # across dim groups never drop; identical duplicates within a dim
+    # group still collapse.
+    rows = [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0),
+            (3, [1.0, 0.0, 0.0], 0), (4, [1.0, 0.0, 0.0], 0)]
     assigned = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0),
-         (3, [1.0, 0.0, 0.0], 0), (4, [1.0, 0.0, 0.0], 0)],
-        "n_id long, n_vec array<float>, cell int")
-    a = sorted(r["drop_id"] for r in
-               sim._cell_drops_join(assigned, ["cell"], 0.5).collect())
-    b = sorted(r["drop_id"] for r in
-               sim._cell_drops(assigned, ["cell"], 0.5).collect())
-    assert a == b == [2, 4]
+        rows, "n_id long, n_vec array<float>, cell int")
+    got = sorted(r["drop_id"] for r in
+                 sim._cell_drops(assigned, ["cell"], 0.5).collect())
+    assert got == ref.cell_drops(rows, 0.5) == [2, 4]
 
 
-def _pairs(spark, rows, threshold, use_kernel):
+def _pairs(spark, rows, threshold):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    old = sim.VECTORIZED_PAIR_STAGE
-    sim.VECTORIZED_PAIR_STAGE = use_kernel
-    try:
-        out = sim.embedding_near_duplicates(df, threshold=threshold,
-                                            n_bits=2, dim=8).collect()
-    finally:
-        sim.VECTORIZED_PAIR_STAGE = old
+    out = sim.embedding_near_duplicates(df, threshold=threshold,
+                                        n_bits=2, dim=8).collect()
     return sorted((r["d1"], r["d2"], repr(r["cos"])) for r in out)
 
 
 def test_bucket_pair_kernel_matches_join(spark):
     rows = _mk_rows()
     for tau in (0.8, 0.95):
-        a = _pairs(spark, rows, tau, use_kernel=False)
-        b = _pairs(spark, rows, tau, use_kernel=True)
-        assert a == b and len(b) > 0, f"tau={tau}"
+        got = _pairs(spark, rows, tau)
+        assert got == ref.near_dups(rows, tau, 2, 8) and len(got) > 0, \
+            f"tau={tau}"
 
 
 def test_bucket_pair_kernel_nan_and_zero_norm(spark):
     import math
     rows = [(1, [0.0] * 8), (2, [0.0] * 8),              # zero norm: no pair
             (3, [math.nan] + [0.3] * 7), (4, [0.3] * 8)]  # NaN cos: pair, cos NaN
-    a = _pairs(spark, rows, 0.9, use_kernel=False)
-    b = _pairs(spark, rows, 0.9, use_kernel=True)
-    assert a == b
-    assert all(d1 != 1 and d2 != 2 for d1, d2, _ in b)
+    got = _pairs(spark, rows, 0.9)
+    assert got == ref.near_dups(rows, 0.9, 2, 8)
+    assert all(d1 != 1 and d2 != 2 for d1, d2, _ in got)
