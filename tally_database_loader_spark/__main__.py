@@ -92,8 +92,7 @@ def _sink(spark: SparkSession, db):
     loadpath = str(db.get("loadpath", "") or "output")
     if tech == "parquet":
         from .operators.table_format import make_store
-        store = make_store(loadpath, spark=spark,
-                           fmt=str(db.get("format", "manifest") or "manifest"))
+        store = make_store(loadpath, spark=spark)
         return lambda name, df: store.write(df, name)
     if tech in ("csv", "json"):
         os.makedirs(loadpath, exist_ok=True)
@@ -158,8 +157,7 @@ def run_import(spark: SparkSession, cfg, log,
         return _load(spark, cfg, frames, log, aborted=aborted)
     from .operators.incremental import IncrementalSync
     from .operators.table_format import make_store
-    store = make_store(str(db.get("loadpath", "") or "output"), spark=spark,
-                       fmt=str(db.get("format", "manifest") or "manifest"))
+    store = make_store(str(db.get("loadpath", "") or "output"), spark=spark)
     # diff/merge over the already-synced tables FIRST — bootstrapping a
     # new table would advance the sink AlterId watermark and mask the
     # pending changes of the old ones — then full-load any table missing

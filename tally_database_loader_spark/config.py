@@ -17,10 +17,6 @@ from typing import Any
 DEFAULTS: dict[str, dict[str, Any]] = {
     "database": {
         "technology": "parquet",      # + mssql/mysql/postgres/csv/json/bigquery/adls
-        # table-format backend for technology=parquet:
-        # 'manifest' (zero-dependency versioned-parquet store, default)
-        # | 'delta' (Delta Lake — needs delta-spark on the classpath)
-        "format": "manifest",
         "server": "localhost",
         "port": 0,
         "schema": "tallydb",
@@ -69,7 +65,8 @@ def load_config(config_json: str | None = None,
                 cli_args: list[str] | None = None) -> EngineConfig:
     """defaults ← config file ← ``--section-key value`` CLI overrides
     (e.g. ``--tally-fromdate 2024-04-01``), exactly the reference's
-    precedence (src/index.mts:10-26)."""
+    precedence (src/index.mts:10-26). ``database.format`` may only be
+    ``manifest``; any other value raises ``ValueError``."""
     merged = {s: dict(kv) for s, kv in DEFAULTS.items()}
     if config_json:
         doc = json.loads(config_json)
@@ -87,4 +84,10 @@ def load_config(config_json: str | None = None,
             i += 2
         else:
             i += 1
+    # the parquet sink has one store; a config written for another
+    # table format must fail here, not sync into the manifest store
+    fmt = merged["database"].pop("format", "manifest")
+    if fmt != "manifest":
+        raise ValueError(f"database.format {fmt!r} is not supported: "
+                         "the parquet sink is the manifest store only")
     return EngineConfig(merged)

@@ -1,8 +1,7 @@
 """Baseline + progressive JPEG (ITU-T T.81) decoder, numpy-only — no
-PIL/libjpeg.
+native codec library.
 
-Round 5 retired the JPEG half of the ``decode_image`` stub the same way
-round 4/5 retired WAV/PPM/BMP/PNG; round 6 adds progressive (SOF2) and
+Round 5 added JPEG decode the same way round 4/5 added WAV/PPM/BMP/PNG; round 6 adds progressive (SOF2) and
 multi-scan baseline, closing the two honest gaps the round-5 review
 called out: progressive decode is the same numpy math (spectral
 selection + successive approximation over the identical huffman/
@@ -59,10 +58,8 @@ means) plus the full pixel array for tests.
 Throughput note: this is a correctness-first reference decoder — the
 entropy loop is per-block Python (the IDCT and color math are numpy).
 Inside ``mapInPandas`` it parallelizes across executors like any other
-payload decode, but a production deployment with libjpeg available
-swaps PIL into the same inner loop for ~100× per-image throughput with
-zero plumbing changes; this module keeps the capability honest where no
-native codec exists.
+payload decode; it is the engine's only JPEG decoder, so every host
+decodes the same pixels.
 """
 
 from __future__ import annotations

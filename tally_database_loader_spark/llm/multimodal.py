@@ -5,7 +5,7 @@ column (or a pointer to object storage); metadata (size, content hash,
 decoded dimensions) is computed once at ingest and carried as plain
 columns so downstream filters prune without touching bytes.
 
-Decoders come in two tiers:
+Decoders:
 
 - **Real** for formats the standard library + numpy can parse — WAV
   audio (``wave``), binary PPM (P6), uncompressed BMP (24/32-bit +
@@ -19,28 +19,18 @@ Decoders come in two tiers:
   (variable-width LSB codes, interlacing, local color tables). MP4's
   CONTAINER metadata (brand/duration/tracks/dims) is a stdlib box walk
   — ``decode_video_metadata``. ``decode_audio_features``
-  / ``decode_image_features`` / ``resize_ppm`` / ``resize_images`` (all
-  decodable formats → nearest resample → P6 re-emit) run genuine
-  decode/resample math over Arrow batches.
-- **Native (accelerated)** — round 7: the documented "~100× swap seam"
-  is executable. ``llm/native_codec.py`` serves the SAME per-payload
-  record contract via Pillow when it is importable;
-  ``decode_image_features`` / ``resize_images`` take ``tier=``
-  ("reference" default — the hash-verified tier every gate pins |
-  "native" — loud ImportError where PIL is absent | "auto"), also
-  settable via ``$SPARK_GRAFT_DECODE_TIER``. Parity pinned by
-  tests/test_native_tier.py on the spec-side encoder corpora
-  (byte-exact for lossless formats, mean-tolerance for JPEG), skipping
-  cleanly where Pillow is absent.
-- **Stubbed** for the codec inner loops that genuinely need native
-  libraries (lossy VP8 WebP, arithmetic-coded JPEG, MP4 FRAME decode —
-  PIL/ffmpeg are not in this container):
-  ``decode_image`` raises
-  ``NotImplementedError`` by design, and the ``fake_*`` operators
-  exercise the identical Spark plumbing — Arrow batches through
-  ``mapInPandas``, binary in, fixed-schema out — which is the part that
-  must be right at scale (batch sizes, schema, partition mapping); a
-  codec swap touches only the per-payload inner loop.
+  / ``decode_image_features`` / ``resize_images`` (all decodable
+  formats → nearest resample → P6 re-emit) / ``image_ahash`` run
+  genuine decode/resample math over Arrow batches. These pure-Python
+  spec decoders are the only decode path, so every value-hash gate
+  sees the same pixels on every host.
+- **Not decoded**: lossy VP8 WebP and arithmetic-coded JPEG payloads
+  yield NULL-feature rows; MP4 is read at the container level only
+  (``decode_video_metadata``, ``sample_frames``). The ``fake_*``
+  operators exercise the identical Spark plumbing — Arrow batches
+  through ``mapInPandas``, binary in, fixed-schema out — which is the
+  part that must be right at scale (batch sizes, schema, partition
+  mapping).
 """
 
 from __future__ import annotations
@@ -54,6 +44,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .jpeg import decode_jpeg_bytes
+from .webp import decode_webp_bytes
 
 DECODE_SCHEMA = ("doc_id bigint, n_bytes int, mean_byte double, "
                  "max_byte int, width int, height int")
@@ -78,31 +71,6 @@ def payload_metadata(df: DataFrame, id_col: str, payload: Column) -> DataFrame:
         (F.conv(F.substring(F.md5(payload), 16, 15), 16, 10).cast("long") % 448 + 64)
             .cast("int").alias("height"),
     )
-
-
-def decode_image(payload: bytes) -> object:
-    """Residual codec stub — by round 6 this covers only LOSSY WebP
-    (VP8), arithmetic-coded JPEG and MP4 FRAME decode, which genuinely
-    need libvips/ffmpeg (VP8 intra-prediction loops / the MQ arithmetic
-    coder / H.264). Everything else parses for REAL: baseline AND
-    progressive huffman JPEG (``llm/jpeg.py`` — huffman + dequant +
-    IDCT in pure numpy, SOF0/SOF2, multi-scan, spectral selection +
-    successive approximation), LOSSLESS WebP (``llm/webp.py`` — VP8L
-    prefix codes, LZ77, color cache, all four transforms), PNG (stdlib
-    zlib, incl. 16-bit + Adam7), GIF (LZW), PPM, BMP, MP4 container
-    metadata (``_decode_mp4_bytes``). The Spark plumbing
-    (decode_image_features / fake_decode_features) is identical either
-    way."""
-    raise NotImplementedError(
-        "lossy (VP8) WebP, arithmetic-coded JPEG and MP4 frame decode "
-        "require PIL/libvips/ffmpeg which are not installed; "
-        "baseline+progressive JPEG, lossless (VP8L) WebP, PNG, GIF, PPM "
-        "(P6), uncompressed BMP and MP4 container metadata decode "
-        "natively via decode_image_features / decode_video_metadata. "
-        "Where Pillow IS installed, decode_image_features(tier='native') "
-        "(llm/native_codec.py, round 7) also covers lossy WebP and — "
-        "when libjpeg is built with arithmetic support — arithmetic "
-        "JPEG; MP4 frames still need ffmpeg")
 
 
 # ---------------------------------------------------------------------------
@@ -351,7 +319,7 @@ def _decode_png_bytes(b: bytes) -> dict:
     ``zlib`` DEFLATE of the concatenated IDATs, and per-row unfiltering
     of all five PNG filter types (None/Sub/Up/Average/Paeth). Supported:
     bit depths 8 and 16 (16-bit samples fold to their high byte — the
-    PIL ``I;16 → L`` convention — AFTER exact byte-level unfiltering),
+    usual 16 → 8-bit convention — AFTER exact byte-level unfiltering),
     color types 0 (gray), 2 (RGB), 3 (palette), 4 (gray+alpha), 6
     (RGBA), sequential AND Adam7-interlaced (each of the 7 passes is
     its own independently filtered sub-image scattered back on the
@@ -387,8 +355,8 @@ def _decode_png_bytes(b: bytes) -> dict:
     if w <= 0 or h <= 0:
         raise ValueError(f"degenerate PNG dimensions {w}x{h}")
     if depth not in (8, 16):
-        raise ValueError(f"PNG bit depth {depth} unsupported (8/16 only); "
-                         "use PIL-backed decode")
+        raise ValueError(f"PNG bit depth {depth} unsupported "
+                         "(8/16 only)")
     if ctype_n not in _PNG_RASTER_CH or comp != 0 or filt != 0:
         raise ValueError(f"PNG color type {ctype_n} / compression {comp} "
                          "unsupported")
@@ -629,17 +597,14 @@ def _decode_image_pixels(b: bytes) -> dict:
     palette, bottom-up or top-down rows). Returns the feature record PLUS ``pixels`` —
     the decoded h×w×3 RGB uint8 raster (gray replicated) — so
     resize/transcode operators share one decode path. Raises ValueError
-    for other magics (lossy WebP/arithmetic JPEG need PIL — see
-    decode_image)."""
+    for other magics (lossy WebP and arithmetic JPEG are not decoded)."""
     if b[:8] == _PNG_SIG:
         return _decode_png_bytes(b)
     if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from .webp import decode_webp_bytes
         return decode_webp_bytes(b)
     if b[:6] in (b"GIF87a", b"GIF89a"):
         return _decode_gif_bytes(b)
     if b[:3] == b"\xff\xd8\xff":
-        from .jpeg import decode_jpeg_bytes
         rec = decode_jpeg_bytes(b)
         px = rec["pixels"]
         if px.shape[2] == 1:               # gray → replicated RGB raster
@@ -683,7 +648,7 @@ def _decode_image_pixels(b: bytes) -> dict:
         planes, bpp = struct.unpack_from("<HH", b, 26)
         compression, = struct.unpack_from("<I", b, 30)
         if bpp not in (8, 24, 32) or compression != 0:
-            raise ValueError(f"BMP variant unsupported without PIL "
+            raise ValueError(f"BMP variant unsupported "
                              f"(bpp={bpp}, compression={compression})")
         if w <= 0 or h == 0:
             # structurally valid but zero-area (or negative-width) BMP:
@@ -706,7 +671,7 @@ def _decode_image_pixels(b: bytes) -> dict:
             bisize, = struct.unpack_from("<I", b, 14)
             if bisize < 40:
                 raise ValueError("BMP core-header palettes (3-byte "
-                                 "entries) unsupported without PIL")
+                                 "entries) unsupported")
             clr_used, = struct.unpack_from("<I", b, 46)
             n_pal = clr_used or 256
             pal = np.frombuffer(b, dtype=np.uint8, count=n_pal * 4,
@@ -725,8 +690,8 @@ def _decode_image_pixels(b: bytes) -> dict:
                 "mean_r": float(means[2]), "mean_g": float(means[1]),
                 "mean_b": float(means[0]),
                 "pixels": np.ascontiguousarray(px[:, :, ::-1])}
-    raise ValueError("unsupported image magic (WebP/non-baseline JPEG "
-                     "need PIL; see decode_image)")
+    raise ValueError("unsupported image magic (lossy WebP and "
+                     "arithmetic JPEG are not decoded)")
 
 
 def decode_audio_features(df: DataFrame, id_col: str = "doc_id",
@@ -752,38 +717,14 @@ def decode_audio_features(df: DataFrame, id_col: str = "doc_id",
     return df.mapInPandas(decode, schema=AUDIO_SCHEMA)
 
 
-def _pixel_decoder(tier: str | None):
-    """Resolve the per-payload pixel decoder for a tier request (see
-    ``llm/native_codec.py``): ``"reference"`` → the pure-Python spec
-    decoders (the hash-verified tier every gate pins), ``"native"`` →
-    the PIL-backed twin (~100× faster entropy loops, raises loudly
-    where PIL is absent), ``"auto"`` → native when importable. Tier
-    resolution happens on the DRIVER; the returned callable's own
-    ImportError (executor missing Pillow on a heterogeneous cluster)
-    must stay LOUD — the decode loops below re-raise it instead of
-    mapping it to a NULL row."""
-    from .native_codec import decode_image_pixels_native, resolve_tier
-    if resolve_tier(tier) == "native":
-        return decode_image_pixels_native
-    return _decode_image_pixels
-
-
 def decode_image_features(df: DataFrame, id_col: str = "doc_id",
-                          payload_col: str = "payload",
-                          tier: str | None = None) -> DataFrame:
+                          payload_col: str = "payload") -> DataFrame:
     """REAL image decode over Arrow batches (dimensions + per-channel
     means) for every format ``_decode_image_pixels`` handles: PNG
     (incl. 16-bit + Adam7), lossless WebP (VP8L, incl. VP8X containers
     and full-canvas first animation frames), GIF, baseline+progressive
     JPEG, PPM (P6) and uncompressed BMP (24/32-bit BI_RGB and 8-bit
-    palette); other formats (or corrupt bytes) yield NULL-feature rows.
-
-    ``tier`` selects the decoder (``llm/native_codec.py``): the default
-    ``"reference"`` runs the pure-Python spec decoders whose output the
-    DuckDB oracles value-hash; ``"native"``/``"auto"`` swap in the
-    PIL-backed twin behind this SAME mapInPandas plumbing — the 100 TB
-    throughput path, parity-tested in tests/test_native_tier.py."""
-    decode_px = _pixel_decoder(tier)
+    palette); other formats (or corrupt bytes) yield NULL-feature rows."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["doc_id", "format", "width", "height", "channels",
@@ -792,13 +733,8 @@ def decode_image_features(df: DataFrame, id_col: str = "doc_id",
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 try:
-                    rec = decode_px(bytes(payload))
+                    rec = _decode_image_pixels(bytes(payload))
                     rec.pop("pixels", None)
-                except ImportError:
-                    # executor missing Pillow under tier="native": fail
-                    # the TASK — an all-NULL "success" would corrupt
-                    # every conclusion drawn from the run
-                    raise
                 except Exception:
                     rec = dict.fromkeys(cols[1:])
                 rows.append({"doc_id": doc_id, **rec})
@@ -807,49 +743,9 @@ def decode_image_features(df: DataFrame, id_col: str = "doc_id",
     return df.mapInPandas(decode, schema=IMAGE_SCHEMA)
 
 
-def resize_ppm(df: DataFrame, width: int, height: int,
-               id_col: str = "doc_id",
-               payload_col: str = "payload") -> DataFrame:
-    """REAL image resize for PPM payloads: nearest-neighbor resample with
-    numpy fancy indexing, re-emitted as a valid P6 payload. The genuine
-    version of ``fake_resize``'s tile/truncate — same mapInPandas shape,
-    schema-predictable output size (header + width*height*3 bytes).
-    Non-PPM payloads pass through as NULL."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out = None
-                try:
-                    b = bytes(payload)
-                    if b[:2] == b"P6":
-                        sw, sh, maxval, off = _parse_ppm_header(b)
-                        if maxval != 255:  # 16-bit P6 → NULL passthrough
-                            raise ValueError("maxval != 255")
-                        px = np.frombuffer(b, dtype=np.uint8,
-                                           count=sw * sh * 3,
-                                           offset=off).reshape(sh, sw, 3)
-                        yi = (np.arange(height) * sh) // height
-                        xi = (np.arange(width) * sw) // width
-                        res = px[yi][:, xi]
-                        out = (f"P6\n{width} {height}\n255\n".encode("ascii")
-                               + res.tobytes())
-                except Exception:
-                    out = None
-                rows.append({"doc_id": doc_id, "width": width,
-                             "height": height, "payload": out})
-            yield pd.DataFrame(rows, columns=["doc_id", "width", "height",
-                                              "payload"])
-
-    return df.mapInPandas(
-        resize, schema="doc_id bigint, width int, height int, payload binary")
-
-
 def resize_images(df: DataFrame, width: int, height: int,
                   id_col: str = "doc_id",
-                  payload_col: str = "payload",
-                  tier: str | None = None) -> DataFrame:
+                  payload_col: str = "payload") -> DataFrame:
     """REAL resize + transcode for EVERY decodable format (round 5):
     PPM, PNG, BMP and baseline JPEG payloads decode to their RGB raster
     (one shared path, ``_decode_image_pixels``), nearest-neighbor
@@ -857,12 +753,9 @@ def resize_images(df: DataFrame, width: int, height: int,
     can also ENCODE (raw raster, no codec). This is the thumbnail /
     normalize-for-vision-model stage of a multimodal pipeline run for
     real end-to-end; undecodable or corrupt payloads pass through as
-    NULL, never task failures. ``tier`` selects the pixel decoder
-    exactly as in ``decode_image_features`` (reference | native | auto;
-    the resample and P6 re-emit are tier-independent numpy)."""
+    NULL, never task failures."""
     if width < 1 or height < 1:
         raise ValueError("resize dimensions must be positive")
-    decode_px = _pixel_decoder(tier)
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         header = f"P6\n{width} {height}\n255\n".encode("ascii")
@@ -871,15 +764,13 @@ def resize_images(df: DataFrame, width: int, height: int,
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 out = src = None
                 try:
-                    rec = decode_px(bytes(payload))
+                    rec = _decode_image_pixels(bytes(payload))
                     px = rec["pixels"]
                     sh, sw = px.shape[:2]
                     yi = (np.arange(height) * sh) // height
                     xi = (np.arange(width) * sw) // width
                     out = header + px[yi][:, xi].tobytes()
                     src = rec["format"]
-                except ImportError:
-                    raise  # executor missing Pillow under tier="native"
                 except Exception:
                     out = src = None
                 rows.append({"doc_id": doc_id, "src_format": src,
@@ -893,23 +784,12 @@ def resize_images(df: DataFrame, width: int, height: int,
                        "height int, payload binary")
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Compressed-format image RE-ENCODE after resize — requires
-    PIL/libvips (decode is real for baseline JPEG/PNG/PPM/BMP, but
-    re-encoding needs an encoder this container lacks). PPM payloads
-    resize for real via ``resize_ppm``; ``fake_resize`` exercises the
-    same plumbing for everything else."""
-    raise NotImplementedError(
-        "compressed image resizing requires PIL/libvips which are not "
-        "installed; PPM resizes natively via resize_ppm")
-
-
 def fake_resize(df: DataFrame, width: int, height: int,
                 id_col: str = "doc_id",
                 payload_col: str = "payload") -> DataFrame:
     """Arrow-batched 'resize': binary in → fixed-size binary out via
-    ``mapInPandas`` — the exact shape a real resampler plugs into (swap
-    the tile/truncate line for PIL). The fake output is the source bytes
+    ``mapInPandas`` — the exact shape a real resampler plugs into
+    (``resize_images`` is that resampler). The fake output is the source bytes
     tiled/truncated to a width×height 'pixel buffer', so tests can assert
     byte-exact results and output size is schema-predictable — the
     property that matters at scale, where the sink partitions by
@@ -1116,11 +996,10 @@ def _ahash_record(px: "np.ndarray") -> tuple[int, int, int, int, int]:
 
 
 def image_ahash(df: DataFrame, id_col: str = "doc_id",
-                payload_col: str = "payload",
-                tier: str | None = None) -> DataFrame:
+                payload_col: str = "payload") -> DataFrame:
     """Perceptual hash extraction for image near-dup detection: decode
     (REAL decoders — PPM/PNG/GIF/BMP/JPEG/lossless-WebP via
-    ``_decode_image_pixels``; ``tier`` as in ``decode_image_features``),
+    ``_decode_image_pixels``),
     8×8 average-hash, and the 4×16-bit band split, one Arrow batch at a
     time. Undecodable payloads yield NULL hash columns — never task
     failures, and never a confident garbage hash.
@@ -1128,7 +1007,6 @@ def image_ahash(df: DataFrame, id_col: str = "doc_id",
     Returns (doc_id, ahash bigint, b0..b3 int). At 100 TB this is the
     map-only feature pass; the quadratic work lives downstream in
     ``ahash_near_duplicates`` where banding bounds it."""
-    decode_px = _pixel_decoder(tier)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1137,11 +1015,9 @@ def image_ahash(df: DataFrame, id_col: str = "doc_id",
                 rec = dict.fromkeys(("ahash", "b0", "b1", "b2", "b3"))
                 try:
                     h, b0, b1, b2, b3 = _ahash_record(
-                        decode_px(bytes(payload))["pixels"])
+                        _decode_image_pixels(bytes(payload))["pixels"])
                     rec = {"ahash": h, "b0": b0, "b1": b1,
                            "b2": b2, "b3": b3}
-                except ImportError:
-                    raise  # executor missing Pillow under tier="native"
                 except Exception:
                     pass
                 rows.append({"doc_id": doc_id, **rec})

@@ -43,8 +43,7 @@ channels (4 when any alpha < 255 else 3), per-channel RGB means, plus
 the (h, w, 3) RGB ``pixels`` raster for the shared resize path.
 
 Throughput note: correctness-first Python entropy loop, like the other
-reference decoders — partition-parallel inside ``mapInPandas``, with
-the documented libwebp/PIL swap for production throughput.
+reference decoders — partition-parallel inside ``mapInPandas``.
 """
 
 from __future__ import annotations

@@ -20,9 +20,9 @@ Protocol per sync (maps E1-E11):
    whose type numbers automatically and join-update (E10)
 
 Storage is a versioned-parquet store (``v{n}`` directories, latest wins) —
-the UPDATE/DELETE statements of the reference become write-new-version;
-on Delta Lake the same plans become MERGE/DELETE without code changes.
-Temp tables (_diff/_delete/_vchnumber, E11) are just DataFrames.
+the UPDATE/DELETE statements of the reference become write-new-version
+commits of ``ParquetStore``, the engine's one store. Temp tables
+(_diff/_delete/_vchnumber, E11) are just DataFrames.
 
 Scale: every step is an anti-/semi-/equi-join on guid or alterid —
 uniform keys, partial-agg probes, broadcast for dimension-sized sides.
@@ -43,7 +43,6 @@ from ..session import run_concurrently
 from ..sinks.writers import load_tables
 from ..sources.registry import TableSpec
 from .flatten import extract_all
-from .table_format import TableFormat
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -54,10 +53,34 @@ class ConcurrentWriteError(RuntimeError):
     Delta/Iceberg commit conflict."""
 
 
-class ParquetStore(TableFormat):
+class ParquetStore:
     """Versioned, hash-bucketed parquet target: each commit lands in
     ``{table}/v{n+1}``, laid out as ``__bucket=K`` partitions on a stable
     hash of the table key. Readers resolve the latest version.
+
+    Commit semantics the incremental engine relies on:
+
+    - ``write`` is a full-table snapshot commit (truncate-and-load).
+    - ``write_scoped(df, table, touched_keys)``: ``df`` carries the new
+      content for every key in ``touched_keys`` (single-column
+      DataFrame) — either the complete new table content, or the
+      SCOPED content derived from ``scoped_base`` (the touched keys'
+      new rows plus the surviving rows of their buckets). ``df`` must
+      equal the intended new content in every bucket holding a touched
+      key — exactly what ``scoped_base`` + the caller's edits produce;
+      rows beyond those buckets are ignored, and rows outside them
+      survive byte-identically from the previous snapshot. Falls back
+      to a full write when the table does not exist yet.
+    - ``read`` with ``version=None`` returns the latest committed
+      snapshot; a concurrent in-flight commit must never be visible.
+    - ``history`` lists committed versions oldest-first; ``read`` with
+      any listed version time-travels to it.
+    - ``vacuum(keep_last)`` reclaims storage while keeping at least the
+      newest ``keep_last`` versions readable.
+    - ``compact`` is a maintenance commit that reduces file count
+      without changing table content.
+    - Two writers racing to commit: exactly one wins; the loser raises
+      ``ConcurrentWriteError`` and leaves no partial state visible.
 
     ``write`` rewrites the whole table (full sync / truncate-and-load);
     ``write_scoped`` is the incremental commit: only buckets containing a
@@ -70,8 +93,7 @@ class ParquetStore(TableFormat):
     Iceberg/Delta snapshot shape (new manifest references old files for
     unchanged partitions) emulated on plain parquet, and unlike the
     hard-link emulation it works on object stores (S3/ABFS/GCS) where
-    links don't exist; on a real table format the engine code is
-    unchanged and the MERGE writes the manifest.
+    links don't exist.
 
     ``n_buckets`` bounds the scoped-write granularity: at bench scale 16
     is plenty; at 100 TB you'd raise it (and/or add a date partition for
@@ -125,6 +147,10 @@ class ParquetStore(TableFormat):
 
     def exists(self, table: str) -> bool:
         return bool(self._versions(table))
+
+    @staticmethod
+    def _key_of(df: DataFrame) -> str:
+        return "guid" if "guid" in df.columns else df.columns[0]
 
     def _bucket_col(self, key) -> F.Column:
         return F.pmod(F.xxhash64(F.col(key).cast("string")),
@@ -554,7 +580,7 @@ class ParquetStore(TableFormat):
                         self._files(table, vs[-1])))
             except (OSError, pa.ArrowException):
                 pass
-        return super().row_count(spark, table)
+        return self.read(spark, table).count()
 
     def compact(self, spark: SparkSession, table: str,
                 sort_col: str | None = None) -> int:
@@ -584,15 +610,14 @@ class ParquetStore(TableFormat):
         return [t for t in os.listdir(self.root) if self._versions(t)]
 
 
-def sink_max_alterid(spark: SparkSession, store: TableFormat,
+def sink_max_alterid(spark: SparkSession, store: ParquetStore,
                      tables: list[str]) -> int:
     """Union-of-max probe over Primary tables (reference src/tally.mts:118-124:
     ``select max(coalesce(alterid,0)) from (select max(alterid) ... union all ...)``).
 
-    Served from the store's column statistics when available
-    (``TableFormat.column_max`` — parquet footer stats on the manifest
-    store, metadata on a real table format), falling back to a
-    column-pruned scan per table that keeps none."""
+    Served from the store's parquet footer statistics
+    (``ParquetStore.column_max``), falling back to a column-pruned scan
+    per table whose footers cannot answer."""
     best = 0
     scan = []
     for t in tables:
@@ -623,7 +648,7 @@ def union_max(frames: list[DataFrame], col: str) -> int:
 class IncrementalSync:
     """Drives full + incremental syncs of a spec set against a store."""
 
-    def __init__(self, spark: SparkSession, store: TableFormat,
+    def __init__(self, spark: SparkSession, store: ParquetStore,
                  specs: dict[str, TableSpec]):
         self.spark = spark
         self.store = store

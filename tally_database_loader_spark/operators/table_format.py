@@ -1,282 +1,27 @@
-"""Pluggable table-format backend for the incremental sink (review r4 #3).
+"""The incremental sink's store constructor.
 
-The incremental engine (``operators/incremental.py``) talks to its sink
-through the ``TableFormat`` contract below — versioned commits, scoped
-(changed-buckets-only) commits, time-travel reads, vacuum, compaction.
-Two implementations:
-
-- ``ParquetStore`` (the default, zero-dependency): a manifest-based
-  snapshot store on bare parquet — CAS stage-then-rename commits,
-  carried-forward files, typed read schemas. It reimplements a
-  production table format's commit layer by hand, which round 4 proved
-  needs real care (claim races, vacuum leaks, seq monotonicity were all
-  bugs found there); where a maintained format is available, prefer it.
-- ``DeltaStore``: the same contract on Delta Lake — commits become Delta
-  transactions, scoped commits become MERGE, vacuum/compact map to
-  Delta's own VACUUM/OPTIMIZE, and time-travel is ``versionAsOf``.
-  **Environment blocker, documented:** the ``delta-spark`` package and
-  its jars are not installable in this container (no network / no pip —
-  per-round install attempts with exact resolver errors are committed
-  in ``operators/DELTA_ATTEMPT.md``), so ``DeltaStore`` raises
-  ``DeltaUnavailableError`` at construction here; the E-protocol tests parametrize over both backends and skip
-  the Delta leg when the import fails. On a cluster with Delta on the
-  classpath (``spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension``,
-  ``spark.sql.catalog.spark_catalog=org.apache.spark.sql.delta.catalog.DeltaCatalog``)
-  the same tests drive both.
-
-Backend selection is a config knob: ``database.format`` =
-``"manifest"`` (default) | ``"delta"`` — see ``make_store``.
+The engine has one table store: ``ParquetStore``
+(``operators/incremental.py``), a manifest-based snapshot store on bare
+parquet — CAS stage-then-rename commits, carried-forward files, typed
+read schemas. Its docstring states the commit semantics the incremental
+engine relies on.
 
 Reference parity: the reference loader's sink abstraction is one
 ``database.mts`` module fronting five SQL/file targets (reference
-src/database.mts:33-90); this module is the same seam for the
-table-format targets.
+src/database.mts:33-90); ``make_store`` is the same seam for the
+versioned parquet target.
 """
 
 from __future__ import annotations
 
-import abc
-import os
+from pyspark.sql import SparkSession
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from .incremental import ParquetStore
 
 
-class DeltaUnavailableError(ImportError):
-    """Raised when DeltaStore is constructed but delta-spark (or the
-    Delta jars) are absent from the environment."""
-
-
-class TableFormat(abc.ABC):
-    """The sink contract of the incremental engine.
-
-    Commit semantics every implementation must honor:
-
-    - ``write`` is a full-table snapshot commit (truncate-and-load).
-    - ``write_scoped(df, table, touched_keys)``: ``df`` carries the new
-      content for every key in ``touched_keys`` (single-column
-      DataFrame) — either the complete new table content, or the
-      SCOPED content derived from ``scoped_base`` (the touched keys'
-      new rows plus, for partition-granular backends, the surviving
-      rows of their storage partitions). ``df`` must equal the intended
-      new content wherever the backend's scoped granularity reaches
-      (per key on a MERGE backend; per storage partition holding a
-      touched key on a partition-granular one — exactly what
-      ``scoped_base`` + the caller's edits produce); rows beyond that
-      reach are ignored, and rows outside the touched set survive
-      byte-identically from the previous snapshot. Falls back to a
-      full write when the table does not exist yet.
-    - ``read`` with ``version=None`` returns the latest committed
-      snapshot; a concurrent in-flight commit must never be visible.
-    - ``history`` lists committed versions oldest-first; ``read`` with
-      any listed version time-travels to it.
-    - ``vacuum(keep_last)`` reclaims storage while keeping at least the
-      newest ``keep_last`` versions readable.
-    - ``compact`` is a maintenance commit that reduces file count
-      without changing table content.
-    - Two writers racing to commit: exactly one wins; the loser raises
-      (``ConcurrentWriteError`` / Delta's concurrent-modification
-      exceptions) and leaves no partial state visible.
-    """
-
-    @abc.abstractmethod
-    def write(self, df: DataFrame, table: str) -> None: ...
-
-    @abc.abstractmethod
-    def write_scoped(self, df: DataFrame, table: str,
-                     touched_keys: DataFrame) -> int: ...
-
-    @staticmethod
-    def _key_of(df: DataFrame) -> str:
-        return "guid" if "guid" in df.columns else df.columns[0]
-
-    def scoped_base(self, spark: SparkSession, table: str,
-                    touched_keys: DataFrame) -> DataFrame:
-        """The current rows a scoped commit must RE-PRESENT: at minimum
-        every live row whose key appears in ``touched_keys``; a backend
-        may return a superset (e.g. the full storage partitions holding
-        a touched key). The incremental engine derives the new content
-        it passes to ``write_scoped`` from this base instead of a full
-        table scan, so a micro-batch reads O(changed partitions) of the
-        store, not the whole table (VERDICT r9 #1).
-
-        Default (keyed backends like Delta, whose scoped commit is a
-        MERGE): exactly the touched keys' current rows — the MERGE
-        carries every other row natively."""
-        df = self.read(spark, table)
-        key = self._key_of(df)
-        tkey = touched_keys.columns[0]
-        return df.join(F.broadcast(touched_keys.select(
-                           F.col(tkey).alias(key)).distinct()),
-                       key, "left_semi")
-
-    def column_max(self, table: str, col: str):
-        """Maximum of an INTEGER column across the latest snapshot
-        served from METADATA when the backend can (file/manifest column
-        statistics — the probe Delta/Iceberg answer without touching
-        data). Returns the max, or None when the backend keeps no
-        usable statistics — the caller falls back to a scan. The
-        E-protocol's per-sync version probe (E2) is exactly this query,
-        and paying a full-table scan for one scalar is the kind of cost
-        a 100 TB store cannot amortize per micro-batch."""
-        return None
-
-    def row_count(self, spark: SparkSession, table: str) -> int:
-        """Rows of the latest snapshot. A backend that keeps file
-        statistics serves it from metadata (``ParquetStore``: footer
-        ``num_rows``); this default is the scan."""
-        return self.read(spark, table).count()
-
-    @abc.abstractmethod
-    def read(self, spark: SparkSession, table: str,
-             version: int | None = None) -> DataFrame: ...
-
-    @abc.abstractmethod
-    def exists(self, table: str) -> bool: ...
-
-    @abc.abstractmethod
-    def tables(self) -> list[str]: ...
-
-    @abc.abstractmethod
-    def history(self, table: str) -> list[int]: ...
-
-    @abc.abstractmethod
-    def vacuum(self, table: str, keep_last: int = 1) -> list[int]: ...
-
-    @abc.abstractmethod
-    def compact(self, spark: SparkSession, table: str,
-                sort_col: str | None = None) -> int: ...
-
-
-def scoped_merge_source(df: DataFrame, touched_keys: DataFrame,
-                        key: str) -> DataFrame:
-    """Source relation for the scoped-commit MERGE: exactly one row per
-    distinct touched key, decorated with the key's new content from
-    ``df``; ``__gone`` is true when the key has no row in ``df`` (i.e.
-    it was deleted). Plain DataFrame logic — factored out of
-    ``DeltaStore.write_scoped`` so the merge-source semantics are
-    unit-testable without Delta on the classpath (the MERGE itself maps
-    each row to delete / update / insert by ``__gone`` and match)."""
-    tkey = touched_keys.columns[0]
-    touched = touched_keys.select(F.col(tkey).alias("__k")).distinct()
-    return (touched.join(df, touched["__k"] == df[key], "left")
-            .select("__k", df[key].isNull().alias("__gone"),
-                    *[df[c].alias(c) for c in df.columns]))
-
-
-class DeltaStore(TableFormat):
-    """Delta Lake implementation of the sink contract: one Delta table
-    per logical table under ``root``, keys = the table's first column
-    (the guid convention shared with ParquetStore).
-
-    Scoped commits are a single MERGE whose source is ``touched_keys``
-    left-joined to the new content: matched+present → update, absent →
-    insert, matched-but-gone-from-df → delete — one transaction, the
-    exact E6/E8 shape the manifest store emulates with bucket rewrites.
-    """
-
-    def __init__(self, root: str, spark: SparkSession):
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except Exception as exc:  # pragma: no cover - env-dependent
-            raise DeltaUnavailableError(
-                "DeltaStore needs the delta-spark package and Delta jars "
-                "on the Spark classpath (spark.sql.extensions="
-                "io.delta.sql.DeltaSparkSessionExtension); not available "
-                "in this environment — use the default manifest "
-                "ParquetStore (database.format='manifest')") from exc
-        self.root = root
-        self.spark = spark
-
-    # -- helpers -----------------------------------------------------
-    def _path(self, table: str) -> str:
-        return os.path.join(self.root, table)
-
-    def _delta(self, table: str):
-        from delta.tables import DeltaTable
-        return DeltaTable.forPath(self.spark, self._path(table))
-
-    @staticmethod
-    def _key_of(df: DataFrame) -> str:
-        return df.columns[0]
-
-    # -- contract ----------------------------------------------------
-    def write(self, df: DataFrame, table: str) -> None:
-        (df.write.format("delta").mode("overwrite")
-           .option("overwriteSchema", "true").save(self._path(table)))
-
-    def write_scoped(self, df: DataFrame, table: str,
-                     touched_keys: DataFrame) -> int:
-        if not self.exists(table):
-            self.write(df, table)
-            return -1
-        key = self._key_of(df)
-        src = scoped_merge_source(df, touched_keys, key)
-        n_touched = src.count()
-        sets = {c: f"s.{c}" for c in df.columns}
-        (self._delta(table).alias("t")
-             .merge(src.alias("s"), f"t.{key} = s.__k")
-             .whenMatchedDelete(condition="s.__gone")
-             .whenMatchedUpdate(condition="NOT s.__gone", set=sets)
-             .whenNotMatchedInsert(condition="NOT s.__gone", values=sets)
-             .execute())
-        return n_touched
-
-    def read(self, spark: SparkSession, table: str,
-             version: int | None = None) -> DataFrame:
-        if not self.exists(table):
-            raise FileNotFoundError(f"no versions for table {table}")
-        r = spark.read.format("delta")
-        if version is not None:
-            r = r.option("versionAsOf", version)
-        return r.load(self._path(table))
-
-    def exists(self, table: str) -> bool:
-        from delta.tables import DeltaTable
-        return DeltaTable.isDeltaTable(self.spark, self._path(table))
-
-    def tables(self) -> list[str]:
-        if not os.path.isdir(self.root):
-            return []
-        return [t for t in os.listdir(self.root) if self.exists(t)]
-
-    def history(self, table: str) -> list[int]:
-        rows = self._delta(table).history().select("version").collect()
-        return sorted(int(r["version"]) for r in rows)
-
-    def vacuum(self, table: str, keep_last: int = 1) -> list[int]:
-        # Delta's retention is time-based, not count-based: the default
-        # 7-day window is the safe analog of the manifest store's
-        # keep_last sweep (retain < 168h would need
-        # spark.databricks.delta.retentionDurationCheck.enabled=false —
-        # a deliberate operator decision, not something a library
-        # default should flip). Returns [] (Delta does not report
-        # dropped version ids).
-        self._delta(table).vacuum()
-        return []
-
-    def compact(self, spark: SparkSession, table: str,
-                sort_col: str | None = None) -> int:
-        opt = self._delta(table).optimize()
-        if sort_col is not None:
-            opt.executeZOrderBy(sort_col)
-        else:
-            opt.executeCompaction()
-        return self.history(table)[-1]
-
-
-def make_store(loadpath: str, spark: SparkSession | None = None,
-               fmt: str = "manifest") -> TableFormat:
-    """Config-driven backend selection (``database.format``):
-    ``manifest`` → the zero-dependency ParquetStore; ``delta`` →
-    DeltaStore (raises ``DeltaUnavailableError`` where Delta is not on
-    the classpath, with the manifest fallback named)."""
-    if fmt in ("", "manifest", "parquet"):
-        from .incremental import ParquetStore
-        return ParquetStore(loadpath)
-    if fmt == "delta":
-        if spark is None:
-            raise ValueError("DeltaStore needs an active SparkSession")
-        return DeltaStore(loadpath, spark)
-    raise ValueError(f"unknown database.format {fmt!r}: "
-                     "expected 'manifest' or 'delta'")
+def make_store(loadpath: str,
+               spark: SparkSession | None = None) -> ParquetStore:
+    """The store the CLI and the benchmark sync into. ``spark`` is
+    accepted for callers that pass their session; the store needs
+    none."""
+    return ParquetStore(loadpath)

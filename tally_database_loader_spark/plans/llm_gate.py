@@ -407,7 +407,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched resize plumbing: binary in → fixed 64×48 'pixel
     buffer' out via mapInPandas (llm/multimodal.py fake_resize; the real
-    resampler is a one-line swap, PIL not installable here). The fake
+    resampler is resize_images, gated by ppm_resize_real). The fake
     buffer is the payload tiled/truncated to width×height bytes — a pure
     function of encode(text), so the oracle rebuilds it with
     repeat+substr (ASCII ⇒ chars == bytes) and compares md5s; empty
@@ -496,14 +496,10 @@ def ppm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(F.concat(F.lit("P6\n4 2\n65535\n"),
                           F.substring(F.rpad(F.col("text"), 48, "x"), 1, 48)),
                  "utf-8").alias("payload"))
-    # tier pinned: the value hash must never float with an installed
-    # codec or the SPARK_GRAFT_DECODE_TIER env var
-    return (mm.decode_image_features(narrow, "doc_id", "payload",
-                                     tier="reference")
+    return (mm.decode_image_features(narrow, "doc_id", "payload")
             .withColumn("arm", F.lit("maxval255"))
             .unionByName(
-                mm.decode_image_features(wide, "doc_id", "payload",
-                                         tier="reference")
+                mm.decode_image_features(wide, "doc_id", "payload")
                 .withColumn("arm", F.lit("maxval65535"))))
 
 
@@ -539,7 +535,7 @@ def ppm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(F.concat(F.lit("P6\n8 4\n255\n"),
                           F.substring(F.rpad(F.col("text"), 96, "x"), 1, 96)),
                  "utf-8").alias("payload"))
-    out = mm.resize_images(payload, 4, 2, tier="reference")  # pinned
+    out = mm.resize_images(payload, 4, 2)
     return out.select("doc_id", "src_format", "width", "height",
                       F.md5("payload").alias("payload_md5"))
 
@@ -562,8 +558,7 @@ def multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All three multimodal plumbing families in ONE driver slot, unioned
     with a stage tag: Arrow-batched fake decode features, the 64×48
     resize buffer (md5-compared), and every-4th-frame sampling — each a
-    mapInPandas over the same binary payloads (llm/multimodal.py; the
-    real PIL/ffmpeg decoders are documented one-line swaps). The
+    mapInPandas over the same binary payloads (llm/multimodal.py). The
     standalone gates stay registered; this slot hash-checks the full
     modality surface at once."""
     ni = F.lit(None).cast("int")
@@ -3546,7 +3541,7 @@ def ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.substring(F.rpad(_ascii_text(768), 768, "x"),
                                       1, 768)),
                  "utf-8").alias("payload"))
-    return mm.image_ahash(payload, tier="reference")
+    return mm.image_ahash(payload)
 
 
 @gate_query("image_ahash_dups", oracle=f"""
@@ -3784,7 +3779,7 @@ def video_fp_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.concat(F.lit(bytearray(b"P6\n8 8\n255\n")),
                  F.col("frame")).alias("payload"))
-    fh = mm.image_ahash(fppm, tier="reference")
+    fh = mm.image_ahash(fppm)
     return mm.video_fingerprint(fh)
 
 

@@ -38,8 +38,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.incremental import IncrementalSync, ParquetStore  # noqa: F401 (re-export)
-from ..operators.table_format import TableFormat
+from ..operators.incremental import IncrementalSync, ParquetStore
 from ..sources.registry import TableSpec
 
 _MANIFEST_SCHEMA = "drop_id string, seq long, roots array<string>, path string"
@@ -125,7 +124,7 @@ class ContinuousTallySync:
     merge. One query per store — micro-batch serialization is the
     reentrancy guard."""
 
-    def __init__(self, spark: SparkSession, store: TableFormat,
+    def __init__(self, spark: SparkSession, store: ParquetStore,
                  specs: dict[str, TableSpec], landing_dir: str,
                  checkpoint_dir: str):
         self.spark = spark

@@ -382,32 +382,32 @@ def test_gui_applies_cli_overrides(spark, setup, tmp_path):
 
 
 def test_cli_format_knob_selects_backend(spark, setup, tmp_path):
-    """Round-5 database.format knob end-to-end through the CLI: the
-    default ('manifest') syncs through ParquetStore; 'delta' either
-    works (Delta on the classpath) or fails AT CONFIG TIME with the
-    manifest fallback named — never deep inside a sync; an unknown
-    format is a named ValueError."""
+    """``database.format`` has one legal value. 'manifest' syncs through
+    ParquetStore; any other value, from the CLI flag or from the config
+    file, fails in ``load_config`` with a ValueError naming the key,
+    before any store directory exists, so a config written for another
+    table format never silently gets a manifest store."""
+    from tally_database_loader_spark.operators.incremental import (
+        ParquetStore)
     _, cfgpath = setup
     counts = main(["--config", str(cfgpath),
                    "--database-technology", "parquet",
                    "--database-format", "manifest",
                    "--database-loadpath", str(tmp_path / "m")], spark=spark)
     assert counts == {"mst_unit": 2}
-    try:
-        import delta  # noqa: F401
-        have_delta = True
-    except ImportError:
-        have_delta = False
-    if not have_delta:
-        from tally_database_loader_spark.operators.table_format import (
-            DeltaUnavailableError)
-        with pytest.raises(DeltaUnavailableError, match="manifest"):
+    assert ParquetStore(str(tmp_path / "m")).exists("mst_unit")
+    for fmt in ("delta", "iceberg"):
+        with pytest.raises(ValueError, match="database.format"):
             main(["--config", str(cfgpath),
                   "--database-technology", "parquet",
-                  "--database-format", "delta",
-                  "--database-loadpath", str(tmp_path / "d")], spark=spark)
-    with pytest.raises(ValueError, match="manifest.*delta|delta.*manifest"):
-        main(["--config", str(cfgpath),
-              "--database-technology", "parquet",
-              "--database-format", "iceberg",
-              "--database-loadpath", str(tmp_path / "x")], spark=spark)
+                  "--database-format", fmt,
+                  "--database-loadpath", str(tmp_path / fmt)], spark=spark)
+        assert not (tmp_path / fmt).exists()
+    doc = json.loads(cfgpath.read_text(encoding="utf-8"))
+    doc["database"].update(technology="parquet", format="delta",
+                           loadpath=str(tmp_path / "file"))
+    delta_cfg = tmp_path / "delta.json"
+    delta_cfg.write_text(json.dumps(doc), encoding="utf-8")
+    with pytest.raises(ValueError, match="database.format"):
+        main(["--config", str(delta_cfg)], spark=spark)
+    assert not (tmp_path / "file").exists()

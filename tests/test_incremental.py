@@ -49,37 +49,18 @@ def _mutate(spark, src):
     return out
 
 
-def _backend_store(backend, path, spark):
-    """Construct one TableFormat backend (review r4 #3: the E-protocol
-    must converge on both the zero-dependency manifest store and a
-    battle-tested table format). The Delta leg is the documented
-    environment blocker: delta-spark's jars are not installable in this
-    container, so it importorskips here and runs wherever Delta is on
-    the Spark classpath."""
-    from tally_database_loader_spark.operators.table_format import make_store
-    if backend == "delta":
-        pytest.importorskip(
-            "delta", reason="delta-spark not installed (documented "
-                            "environment blocker; manifest store is the "
-                            "default backend)")
-    return make_store(path, spark=spark, fmt=backend)
-
-
-@pytest.fixture(scope="module", params=["manifest", "delta"])
-def stores(request, spark, tmp_path_factory):
-    backend = request.param
+@pytest.fixture(scope="module")
+def stores(spark, tmp_path_factory):
     specs = default_tables()
     src1 = tally_source(spark)
     src2 = _mutate(spark, src1)
 
-    inc_store = _backend_store(backend, str(tmp_path_factory.mktemp("inc")),
-                               spark)
+    inc_store = ParquetStore(str(tmp_path_factory.mktemp("inc")))
     inc = IncrementalSync(spark, inc_store, specs)
     inc.full_sync(src1)
     stats = inc.incremental_sync(src2)
 
-    full_store = _backend_store(backend,
-                                str(tmp_path_factory.mktemp("full")), spark)
+    full_store = ParquetStore(str(tmp_path_factory.mktemp("full")))
     full = IncrementalSync(spark, full_store, specs)
     full.full_sync(src2)
     return inc_store, full_store, stats, specs
@@ -138,8 +119,6 @@ def test_untouched_buckets_carried_forward_across_sync(spark, stores):
     directory must hold physical files only for the touched buckets."""
     import os
     inc_store, _, _, specs = stores
-    if not isinstance(inc_store, ParquetStore):
-        pytest.skip("manifest mechanics are backend-specific")
     carried = rewritten = 0
     for table in inc_store.tables():
         vs = inc_store._versions(table)
@@ -217,12 +196,10 @@ def test_scoped_base_reads_only_touched_buckets(spark, tmp_path):
     `scoped_base` must physically open ONLY the manifest files of
     buckets holding a touched key — checked at the FILE level via
     inputFiles(), not just by row content — while returning exactly
-    those buckets' rows; and the Delta-shaped default (TableFormat)
-    returns exactly the touched keys' rows."""
+    those buckets' rows."""
     from pyspark.sql import functions as F
 
     from tally_database_loader_spark.operators.incremental import ParquetStore
-    from tally_database_loader_spark.operators.table_format import TableFormat
 
     store = ParquetStore(str(tmp_path / "s"), n_buckets=8)
     df = spark.createDataFrame(
@@ -247,9 +224,6 @@ def test_scoped_base_reads_only_touched_buckets(spark, tmp_path):
             .filter(b7 == want_bucket).collect()}
     assert got == want and "g-7" in got
     assert base.columns == ["guid", "alterid", "name"]
-    # the keyed default (what a MERGE backend inherits): touched keys only
-    keyed = TableFormat.scoped_base(store, spark, "t", touched)
-    assert {r["guid"] for r in keyed.collect()} == {"g-7"}
 
 
 def test_write_scoped_rewrites_only_touched_buckets(spark, tmp_path):
@@ -613,201 +587,6 @@ def test_live_slow_stage_not_swept_by_root_mtime(spark, tmp_path):
     os.utime(bucket, (old, old))
     store.vacuum("t", keep_last=1)
     assert not os.path.isdir(stage), "dead stage not reclaimed"
-
-
-def test_table_format_interface_and_delta_blocker(spark, tmp_path):
-    """Review r4 #3: the sink contract is a pluggable TableFormat.
-    ParquetStore implements it; DeltaStore either works (Delta on the
-    classpath) or fails AT CONSTRUCTION with the manifest fallback named
-    — never deep inside a sync."""
-    from tally_database_loader_spark.operators.table_format import (
-        DeltaStore, DeltaUnavailableError, TableFormat, make_store)
-    assert issubclass(ParquetStore, TableFormat)
-    st = make_store(str(tmp_path / "m"), spark=spark, fmt="manifest")
-    assert isinstance(st, ParquetStore)
-    with pytest.raises(ValueError, match="manifest.*delta|delta.*manifest"):
-        make_store(str(tmp_path / "x"), spark=spark, fmt="iceberg")
-    try:
-        import delta  # noqa: F401
-        have_delta = True
-    except ImportError:
-        have_delta = False
-    if have_delta:
-        ds = DeltaStore(str(tmp_path / "d"), spark)
-        df = _guid_df(spark, n=8)
-        ds.write(df, "t")
-        assert ds.exists("t") and ds.read(spark, "t").count() == 8
-    else:
-        with pytest.raises(DeltaUnavailableError, match="manifest"):
-            DeltaStore(str(tmp_path / "d"), spark)
-        with pytest.raises(DeltaUnavailableError, match="manifest"):
-            make_store(str(tmp_path / "d"), spark=spark, fmt="delta")
-
-
-def test_scoped_merge_source_semantics(spark):
-    """DeltaStore's MERGE source, unit-checked without Delta: simulate
-    the merge's three arms (matched+__gone → delete, matched+present →
-    update, unmatched+present → insert) in plain Spark and assert the
-    result equals the write_scoped contract — rows for touched keys come
-    from df, rows outside the touched set survive untouched."""
-    from tally_database_loader_spark.operators.table_format import (
-        scoped_merge_source)
-    target = spark.createDataFrame(
-        [("a", 1), ("b", 2), ("c", 3), ("d", 4)], "guid string, v int")
-    # new content: a modified, b deleted, e inserted; c/d untouched
-    df = spark.createDataFrame(
-        [("a", 10), ("c", 3), ("d", 4), ("e", 50)], "guid string, v int")
-    touched = spark.createDataFrame(
-        [("a",), ("b",), ("e",), ("e",)], "k string")  # dup key on purpose
-    src = scoped_merge_source(df, touched, "guid")
-    rows = {r["__k"]: r for r in src.collect()}
-    assert set(rows) == {"a", "b", "e"}, "one row per DISTINCT touched key"
-    assert rows["b"]["__gone"] and rows["b"]["guid"] is None
-    assert not rows["a"]["__gone"] and rows["a"]["v"] == 10
-    assert not rows["e"]["__gone"] and rows["e"]["v"] == 50
-    # simulate the MERGE arms
-    matched_del = {k for k, r in rows.items() if r["__gone"]}
-    upserts = {k: r["v"] for k, r in rows.items() if not r["__gone"]}
-    result = {r["guid"]: r["v"] for r in target.collect()
-              if r["guid"] not in matched_del and r["guid"] not in upserts}
-    result.update(upserts)
-    want = {r["guid"]: r["v"] for r in target.collect()}
-    for k in ("b",):
-        want.pop(k)
-    want.update({"a": 10, "e": 50})
-    assert result == want == {"a": 10, "c": 3, "d": 4, "e": 50}
-
-
-def test_delta_write_scoped_emits_the_exact_merge_triple(spark, tmp_path,
-                                                         monkeypatch):
-    """Review r5 #6: the Delta jars are not installable here, so the
-    MERGE the real ``DeltaStore.write_scoped`` emits has never executed.
-    This drives the REAL write_scoped code against a shape-asserting
-    fake ``delta.tables.DeltaTable``: the fake records the merge
-    condition and the whenMatchedDelete / whenMatchedUpdate /
-    whenNotMatchedInsert triple, REFUSES to execute anything but that
-    exact shape, applies the recorded semantics, and the resulting
-    table must equal ParquetStore.write_scoped on the same inputs —
-    cross-backend convergence without Delta on the classpath."""
-    import os
-    import re
-    import sys
-    import types
-
-    from pyspark.sql import functions as F
-
-    from tally_database_loader_spark.operators.table_format import DeltaStore
-
-    class _FakeMergeBuilder:
-        def __init__(self, tbl, source, cond):
-            self.tbl, self.source, self.cond = tbl, source, cond
-            self.calls = []
-
-        def whenMatchedDelete(self, condition=None):
-            self.calls.append(("whenMatchedDelete", condition, None))
-            return self
-
-        def whenMatchedUpdate(self, condition=None, set=None):
-            self.calls.append(("whenMatchedUpdate", condition, dict(set)))
-            return self
-
-        def whenNotMatchedInsert(self, condition=None, values=None):
-            self.calls.append(("whenNotMatchedInsert", condition,
-                               dict(values)))
-            return self
-
-        def execute(self):
-            m = re.fullmatch(r"t\.(\w+) = s\.__k", self.cond)
-            if m is None:
-                raise NotImplementedError(f"merge condition {self.cond!r}")
-            key = m.group(1)
-            target = self.tbl.spark.read.parquet(self.tbl.path)
-            sets = {c: f"s.{c}" for c in target.columns}
-            if self.calls != [
-                ("whenMatchedDelete", "s.__gone", None),
-                ("whenMatchedUpdate", "NOT s.__gone", sets),
-                ("whenNotMatchedInsert", "NOT s.__gone", sets),
-            ]:
-                raise NotImplementedError(
-                    f"unexpected merge clause shape: {self.calls}")
-            # the recorded triple's semantics: matched rows leave the
-            # target (delete or full-column update), source rows with
-            # NOT __gone re-enter (update ∪ insert), unmatched target
-            # rows survive untouched
-            src = self.source
-            keep = target.join(src.select("__k").distinct(),
-                               target[key] == F.col("__k"), "left_anti")
-            add = src.filter(~F.col("__gone")).select(
-                *[F.col(c) for c in target.columns])
-            rows = keep.unionByName(add).collect()
-            out = self.tbl.spark.createDataFrame(rows, target.schema)
-            out.write.mode("overwrite").parquet(self.tbl.path + ".next")
-            import shutil
-            shutil.rmtree(self.tbl.path)
-            shutil.move(self.tbl.path + ".next", self.tbl.path)
-
-    class _FakeDeltaTable:
-        merges: list = []
-
-        def __init__(self, spark_, path):
-            self.spark, self.path = spark_, path
-
-        @classmethod
-        def forPath(cls, spark_, path):
-            return cls(spark_, path)
-
-        @staticmethod
-        def isDeltaTable(spark_, path):
-            return os.path.isdir(path)
-
-        def alias(self, a):
-            return self
-
-        def merge(self, source, cond):
-            b = _FakeMergeBuilder(self, source, cond)
-            _FakeDeltaTable.merges.append(b)
-            return b
-
-    delta_mod = types.ModuleType("delta")
-    tables_mod = types.ModuleType("delta.tables")
-    tables_mod.DeltaTable = _FakeDeltaTable
-    delta_mod.tables = tables_mod
-    monkeypatch.setitem(sys.modules, "delta", delta_mod)
-    monkeypatch.setitem(sys.modules, "delta.tables", tables_mod)
-    # snapshot writes use the delta datasource (not available without the
-    # jars); the MERGE path under test is write_scoped, so snapshots fall
-    # back to plain parquet at the same path
-    monkeypatch.setattr(
-        DeltaStore, "write",
-        lambda self, df, table: df.write.mode("overwrite")
-                                  .parquet(self._path(table)))
-
-    store = DeltaStore(str(tmp_path / "delta"), spark)
-    schema = "guid string, alterid long, val string"
-    base = spark.createDataFrame(
-        [("g1", 1, "a"), ("g2", 2, "b"), ("g3", 3, "c"), ("g4", 4, "d")],
-        schema)
-    store.write(base, "t")
-    # g2 modified, g3 deleted, g5 inserted; g1/g4 untouched
-    new = spark.createDataFrame(
-        [("g1", 1, "a"), ("g2", 20, "B"), ("g4", 4, "d"), ("g5", 5, "e")],
-        schema)
-    touched = spark.createDataFrame([("g2",), ("g3",), ("g5",)],
-                                    "guid string")
-    assert store.write_scoped(new, "t", touched) == 3
-    assert len(_FakeDeltaTable.merges) == 1   # one transaction
-    got = sorted(tuple(r) for r in
-                 spark.read.parquet(str(tmp_path / "delta" / "t")).collect())
-    # same inputs through the manifest backend: identical content
-    ps = ParquetStore(str(tmp_path / "manifest"))
-    ps.write(base, "t")
-    ps.write_scoped(new, "t", touched)
-    want = sorted(tuple(r) for r in ps.read(spark, "t").collect())
-    assert got == want == [("g1", 1, "a"), ("g2", 20, "B"),
-                           ("g4", 4, "d"), ("g5", 5, "e")]
-    # first-write fallback: scoped commit on a missing table snapshots
-    assert store.write_scoped(new, "t2", touched) == -1
-    assert len(_FakeDeltaTable.merges) == 1   # no merge for the snapshot
 
 
 def test_null_alterid_sink_row_replaced_not_duplicated(spark, tmp_path):

@@ -1525,10 +1525,11 @@ def _np32(v):
 def test_real_ppm_bmp_decode_and_resize(spark):
     """decode_image_features really parses PPM P6 and uncompressed 24-bit
     BMP (dimensions + per-channel means, BMP's BGR order and 4-byte row
-    padding handled); resize_ppm emits a valid smaller P6 payload whose
-    pixels come from nearest-neighbor sampling."""
+    padding handled); resize_images emits a valid smaller P6 payload
+    whose pixels come from nearest-neighbor sampling, for the BMP row as
+    for the PPM row."""
     from tally_database_loader_spark.llm.multimodal import (
-        decode_image_features, resize_ppm)
+        decode_image_features, resize_images)
     ppm = _ppm_bytes(6, 4, (10, 200, 30))
     bmp = _bmp_bytes(5, 3, (30, 200, 10))      # BGR on disk == same RGB
     df = spark.createDataFrame(
@@ -1582,11 +1583,11 @@ def test_real_ppm_bmp_decode_and_resize(spark):
     if rec is not None:
         assert rec["rms"] is None, "undecoded RMS must be NULL, not 0.0"
 
-    out = {r.doc_id: r for r in resize_ppm(df, 3, 2).collect()}
-    resized = bytes(out[1].payload)
-    assert resized.startswith(b"P6\n3 2\n255\n")
-    assert resized[-3 * 2 * 3:] == bytes((10, 200, 30)) * 6  # uniform image
-    assert out[2].payload is None              # BMP passthrough → NULL
+    out = {r.doc_id: r for r in resize_images(df, 3, 2).collect()}
+    uniform = b"P6\n3 2\n255\n" + bytes((10, 200, 30)) * 6
+    assert (out[1].src_format, bytes(out[1].payload)) == ("ppm", uniform)
+    assert (out[2].src_format, bytes(out[2].payload)) == ("bmp", uniform)
+    assert out[3].payload is None              # truncated PNG → NULL
 
 
 def test_hll_excludes_nulls_like_count_distinct(spark):

@@ -287,28 +287,26 @@ def test_semantic_cell_cap_properties(spark, sizes, cap):
 )
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_scoped_merge_source_contract(spark, target, new, touched):
-    """Round-5 DeltaStore merge source, property-checked against the
-    write_scoped contract for ANY (target, new-content, touched) shape:
-    simulating the MERGE arms over the source must yield exactly
+def test_scoped_commit_contract(spark, tmp_path_factory, target, new,
+                                touched):
+    """``ParquetStore.write_scoped``, property-checked for ANY (target,
+    new-content, touched) shape: committing ``scoped_base``'s rows with
+    the touched keys' new content in their place must leave exactly
     {untouched target rows} ∪ {new rows for touched keys}."""
-    from tally_database_loader_spark.operators.table_format import (
-        scoped_merge_source)
-    df = spark.createDataFrame(
-        [(k, v) for k, v in sorted(new.items())] or [(None, None)],
-        "guid int, v int").filter("guid is not null")
-    tdf = spark.createDataFrame(
-        [(k,) for k in sorted(touched)] or [(None,)],
-        "k int").filter("k is not null")
-    src = {r["__k"]: r for r in scoped_merge_source(df, tdf, "guid").collect()}
-    assert set(src) == touched
-    deletes = {k for k, r in src.items() if r["__gone"]}
-    upserts = {k: r["v"] for k, r in src.items() if not r["__gone"]}
-    assert deletes == {k for k in touched if k not in new}
-    assert upserts == {k: new[k] for k in touched if k in new}
-    result = {k: v for k, v in target.items()
-              if k not in deletes and k not in upserts}
-    result.update(upserts)
+    from tally_database_loader_spark.operators.incremental import (
+        ParquetStore)
+    store = ParquetStore(str(tmp_path_factory.mktemp("scoped")),
+                         n_buckets=4)
+    schema = "guid int, v int"
+    store.write(spark.createDataFrame(sorted(target.items()), schema), "t")
+    tdf = spark.createDataFrame([(k,) for k in sorted(touched)], "k int")
+    edits = spark.createDataFrame(
+        [(k, new[k]) for k in sorted(touched) if k in new], schema)
+    df = (store.scoped_base(spark, "t", tdf)
+          .join(tdf.withColumnRenamed("k", "guid"), "guid", "left_anti")
+          .unionByName(edits))
+    store.write_scoped(df, "t", tdf)
+    got = {r["guid"]: r["v"] for r in store.read(spark, "t").collect()}
     want = {k: v for k, v in target.items() if k not in touched}
     want.update({k: new[k] for k in touched if k in new})
-    assert result == want
+    assert got == want
