@@ -13,11 +13,13 @@ Sources (``tally`` section):
   ``{table}.xml`` (the XML-dump workflow; parsed distributed by
   ``read_tdl_response``). Missing files are skipped.
 - otherwise ``server``/``port``: live Tally HTTP fetch per table spec
-  (requires a reachable Tally XML server, like the reference).
+  (requires a reachable Tally XML server, like the reference), over the
+  ``fromdate``..``todate`` window (ISO dates; ``auto`` is the
+  1990-01-01..2099-12-31 window ``format("tally")`` also defaults to).
 
 Sinks (``database.technology``):
 - ``parquet`` (native): versioned hash-bucketed ``ParquetStore`` under
-  ``database.loadpath`` + the B10 config table.
+  ``database.loadpath``.
 - ``csv`` / ``json``: one file per table under ``database.loadpath``
   with the reference's CSV conventions (BOM, quoting, blank dates).
 - ``mssql`` / ``mysql`` / ``postgres``: JDBC batched inserts with the
@@ -38,6 +40,7 @@ existing YAML file (A4), else the built-in 22-table reference model.
 
 from __future__ import annotations
 
+import datetime
 import os
 import sys
 import time
@@ -56,6 +59,18 @@ def _load_specs(cfg):
     return default_tables()
 
 
+def _window(tally) -> dict[str, datetime.date]:
+    """``tally.fromdate``/``todate`` as the TDL ``{fromDate}``/``{toDate}``
+    substitutions; ``auto`` takes the default extraction window."""
+    from .sources.tally_xml import DATE_WINDOW
+
+    def day(opt: str, default: str) -> datetime.date:
+        v = str(tally[opt])
+        return datetime.date.fromisoformat(default if v == "auto" else v)
+    return {"fromDate": day("fromdate", DATE_WINDOW[0]),
+            "toDate": day("todate", DATE_WINDOW[1])}
+
+
 def _extract(spark: SparkSession, cfg, specs) -> dict[str, DataFrame]:
     tally = cfg["tally"]
     dumpdir = str(tally.get("dumpdir", "") or "")
@@ -69,9 +84,11 @@ def _extract(spark: SparkSession, cfg, specs) -> dict[str, DataFrame]:
     else:
         from .sources.tally_http import fetch_table
         url = f"http://{tally['server']}:{tally['port']}"
+        subs = _window(tally)
         for name, spec in specs.items():
             frames[name] = fetch_table(
-                spark, spec, url=url, company=tally["company"] or None)
+                spark, spec, url=url, subs=subs,
+                company=tally["company"] or None)
     return frames
 
 

@@ -9,7 +9,7 @@ hash (ADVICE r2: weighted_sample's ``floor(ln(u)/w·1e9)`` and
 HyperLogLog's linear-counting ``m·ln(m/V)`` both carried that residual
 risk).
 
-``ln_fixed`` removes the transcendental entirely: for an integer
+The fixed-point ln removes the transcendental entirely: for an integer
 ``v ∈ [1, 2^20]`` it computes ``round-ish(ln(v)·2^30)`` with PURE int64
 arithmetic —
 
@@ -29,8 +29,9 @@ sampling/sketch quality, which only need a monotone-ish deterministic
 log — and the value is the SAME everywhere, which is what the hash gate
 needs.
 
-The three renderings (Column / SQL / Python) are generated from the one
-term schedule in ``_SERIES`` so they cannot drift.
+The three renderings (staged Spark projections ``ln_fixed_staged``,
+DuckDB SQL ``dd_ln_fixed``, Python ``ln_fixed_py``) are generated from
+the one term schedule in ``_SERIES`` so they cannot drift.
 """
 
 from __future__ import annotations
@@ -41,8 +42,8 @@ from operator import add
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["LN_SCALE", "LN2_F", "ln_fixed", "ln_fixed_staged",
-           "ln_fixed_py", "dd_ln_fixed"]
+__all__ = ["LN_SCALE", "LN2_F", "ln_fixed_staged", "ln_fixed_py",
+           "dd_ln_fixed"]
 
 MAX_BITS = 20          # domain: v in [1, 2^20]
 LN_SCALE = 1 << 30     # fixed-point scale of the result
@@ -51,45 +52,22 @@ LN2_F = 744261117      # floor(ln 2 · 2^30) — shared by all renderings
 _SERIES = (3, 5, 7, 9)  # atanh denominators after the leading z term
 
 
-def ln_fixed(v: Column) -> Column:
-    """``ln(v)·2^30`` as exact int64 for integer ``v ∈ [1, 2^20]``.
-
-    Map-side codegen only (a comparison fold, one variable-amount
-    shift via ``shiftleft``, and a handful of int64 mul/div) — no
-    shuffle, no UDF."""
-    v = v.cast("long")
-    e = reduce(add, [(v >= F.lit(1 << k)).cast("int")
-                     for k in range(1, MAX_BITS + 1)])
-
-    def _div(a: Column, b: Column) -> Column:
-        return F.call_function("div", a, b)
-
-    m_ = _div(v * F.lit(_K),
-              F.call_function("shiftleft", F.lit(1).cast("long"), e))
-    z = _div((m_ - F.lit(_K)) * F.lit(LN_SCALE), m_ + F.lit(_K))
-    z2 = _div(z * z, F.lit(LN_SCALE))
-    terms, t = z, z
-    for d in _SERIES:
-        t = _div(t * z2, F.lit(LN_SCALE))
-        terms = terms + _div(t, F.lit(d))
-    return (F.lit(2) * terms + e.cast("long") * F.lit(LN2_F)).cast("long")
-
-
 def ln_fixed_staged(df, v: Column, out: str):
-    """``ln_fixed`` as STAGED projections: each intermediate (e, M, z,
-    z², series terms) lands in its own column, so every level references
-    an attribute instead of re-embedding the whole subtree.
+    """``ln(v)·2^30`` as exact int64 for integer ``v ∈ [1, 2^20]``, as
+    STAGED projections: each intermediate (e, M, z, z², series terms)
+    lands in its own column, so every level references an attribute
+    instead of re-embedding the whole subtree. Map-side codegen only (a
+    comparison fold, one variable-amount shift via ``shiftleft``, and a
+    handful of int64 mul/div) — no shuffle, no UDF.
 
-    The inline ``ln_fixed`` Column is correct but its expression tree is
-    multiplicative — z² embeds z twice, every series term embeds the
-    previous term, and z itself embeds the 20-comparison bit-length fold
-    — ~2,500 nodes that Catalyst re-analyzes on EVERY action (a
-    DataFrameWriter re-plans per save). Measured at sf0.1: the
-    weighted_sample projection dropped 0.44s → 0.11s per noop run with
-    the staged form, bits identical (CollapseProject declines to
-    re-inline multiply-referenced non-trivial expressions, so the plan
-    keeps the layered shape). Same integer schedule, same int64s —
-    generated from the same ``_SERIES`` table.
+    A single inline Column would be multiplicative — z² embeds z twice,
+    every series term embeds the previous term, and z itself embeds the
+    20-comparison bit-length fold — ~2,500 nodes that Catalyst
+    re-analyzes on EVERY action (a DataFrameWriter re-plans per save).
+    Measured at sf0.1: the weighted_sample projection dropped 0.44s →
+    0.11s per noop run with the staged form, bits identical
+    (CollapseProject declines to re-inline multiply-referenced
+    non-trivial expressions, so the plan keeps the layered shape).
 
     Adds column ``out`` to ``df``; the ``__lnf_*`` scratch columns are
     dropped before return."""
@@ -125,7 +103,7 @@ def ln_fixed_staged(df, v: Column, out: str):
 
 
 def ln_fixed_py(v: int) -> int:
-    """Python reference of ``ln_fixed`` — same integer schedule."""
+    """Python reference of the fixed-point ln — same integer schedule."""
     if not 1 <= v <= _K:
         raise ValueError(f"v out of domain [1, 2^{MAX_BITS}]: {v}")
     e = v.bit_length() - 1

@@ -9,10 +9,11 @@ Design for 100 TB:
   signature, O(docs × bands) to bucket, pairs only within buckets.
 - Banding join is a self-equi-join on (band_index, band_signature) —
   uniform hash keys again, broadcast-free but skew-free.
-- Hash function: the default is xxhash64 (one JVM intrinsic per shingle);
-  ``parity_hash=True`` switches to an md5-prefix hash that a SQL oracle
-  can reproduce digit-for-digit (plans/llm_gate.py) — same plan shape,
-  pricier per-shingle constant.
+- Hash functions: MinHash and SimHash hash each shingle once with a
+  60-bit md5 prefix, which a SQL oracle reproduces digit-for-digit
+  (plans/llm_gate.py). Substring dedup keys its grams by xxhash64; its
+  output never carries the key, and the raw-gram oracle would show a
+  64-bit collision as a mismatch.
 
 Reference note: the reference ETL (tally-database-loader) has no dedup
 operators; these are the training-data-pipeline extension required by the
@@ -134,14 +135,8 @@ def _parity_base(s: Column) -> Column:
     return F.conv(F.substring(F.md5(F.encode(s, "utf-8")), 1, 15), 16, 10).cast("long")
 
 
-def _fast_base(s: Column) -> Column:
-    """xxhash64 — the production per-shingle base hash (JVM intrinsic)."""
-    return F.xxhash64(s)
-
-
 def minhash_signature_table(df: DataFrame, id_col: str, text_col: str,
                             k: int = 16, n: int = 3,
-                            parity_hash: bool = False,
                             _shingles: DataFrame | None = None) -> DataFrame:
     """(doc_id, mh0..mh{k-1}) MinHash signature columns.
 
@@ -150,10 +145,9 @@ def minhash_signature_table(df: DataFrame, id_col: str, text_col: str,
     Everything is flat codegen'd expressions — no nested higher-order
     functions (those run interpreted per element and were 50× slower) —
     and the shuffle carries partial mins (k longs per doc per mapper)."""
-    base_fn = _parity_base if parity_hash else _fast_base
     sh = _shingles if _shingles is not None else \
         shingle_table(df, id_col, text_col, n)
-    base = F.pmod(base_fn(F.col("shingle")), F.lit(MINHASH_PRIME))
+    base = F.pmod(_parity_base(F.col("shingle")), F.lit(MINHASH_PRIME))
     hashed = sh.select("doc_id", base.alias("base"))
     aggs = [F.min((F.col("base") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"mh{i}")
             for i, (a, b) in enumerate(_permutation_constants(k))]
@@ -162,7 +156,6 @@ def minhash_signature_table(df: DataFrame, id_col: str, text_col: str,
 
 def lsh_candidates(df: DataFrame, id_col: str, text_col: str,
                    k: int = 16, bands: int = 4, n: int = 3,
-                   parity_hash: bool = False,
                    _shingles: DataFrame | None = None) -> DataFrame:
     """LSH banding: split the signature into ``bands`` bands of k/bands
     rows; docs agreeing on any full band are candidate pairs (d1 < d2).
@@ -172,7 +165,7 @@ def lsh_candidates(df: DataFrame, id_col: str, text_col: str,
     uniformly distributed hashes, so no skew; AQE coalesces the mostly
     tiny buckets."""
     r = k // bands
-    sig = minhash_signature_table(df, id_col, text_col, k, n, parity_hash,
+    sig = minhash_signature_table(df, id_col, text_col, k, n,
                                   _shingles=_shingles)
     band_structs = F.array(*[
         F.struct(F.lit(j).alias("band"),
@@ -191,7 +184,7 @@ def lsh_candidates(df: DataFrame, id_col: str, text_col: str,
 
 def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
                             threshold: float = 0.7, k: int = 16, bands: int = 4,
-                            n: int = 3, parity_hash: bool = False) -> DataFrame:
+                            n: int = 3) -> DataFrame:
     """Full near-dup pipeline: MinHash → LSH buckets → exact-Jaccard verify.
 
     Returns (d1, d2, jaccard ≥ threshold). The verification join is
@@ -205,7 +198,7 @@ def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
     # signature+banding subtree. The candidate list is the LSH survivors —
     # tiny relative to the corpus at any scale, so this is the cheap side
     # to pin.
-    cand = lsh_candidates(df, id_col, text_col, k, bands, n, parity_hash,
+    cand = lsh_candidates(df, id_col, text_col, k, bands, n,
                           _shingles=sh_all).localCheckpoint(eager=True)
     cand_docs = (cand.select(F.col("d1").alias("doc_id"))
                      .unionByName(cand.select(F.col("d2").alias("doc_id")))
@@ -360,34 +353,33 @@ def elect_keepers(clusters: DataFrame, scores: DataFrame,
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_table(df: DataFrame, id_col: str, text_col: str, n: int = 3,
-                  parity_hash: bool = False) -> DataFrame:
-    """SimHash per document: bit b of the result is the sign of
-    Σ_shingles (±1 depending on bit b of hash(shingle)).
+SIMHASH_BITS = 60  # the width of _parity_base
+
+
+def simhash_table(df: DataFrame, id_col: str, text_col: str,
+                  n: int = 3) -> DataFrame:
+    """60-bit SimHash per document: bit b of the result is the sign of
+    Σ_shingles (±1 depending on bit b of the shingle's md5-prefix hash,
+    ``_parity_base``), so the result is never negative.
 
     Plan shape: explode shingles → hash once → groupBy(doc) with flat
     conditional-sum aggregates (all codegen'd, partial-agg'd map-side),
     then fold the sign columns into one long. The earlier nested
     higher-order-function formulation ran interpreted and was ~100×
-    slower. Docs with no shingles get simhash 0 via the left join.
-
-    ``parity_hash``: 60-bit md5-prefix base (SQL-oracle-reproducible,
-    always positive) instead of the 64-bit xxhash64 production hash."""
-    # density=8: 64 conditional sums per exploded shingle — measured
+    slower. Docs with no shingles get simhash 0 via the left join."""
+    # density=8: 60 conditional sums per exploded shingle — measured
     # fastest at full width while byte-derived ~10 partitions cost ~1.8×
     # (OPTIMIZATION_r12.md fan-out sweep)
     sh = shingle_table(df, id_col, text_col, n, density=8.0)
-    h = _parity_base(F.col("shingle")) if parity_hash \
-        else F.xxhash64(F.col("shingle"))
-    n_bits = 60 if parity_hash else 64
+    h = _parity_base(F.col("shingle"))
     aggs = [F.sum(F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1)
                    .otherwise(-1)).alias(f"b{b}")
-            for b in range(n_bits)]
+            for b in range(SIMHASH_BITS)]
     sums = sh.groupBy("doc_id").agg(*aggs)
     sim = None
-    for b in range(n_bits):
+    for b in range(SIMHASH_BITS):
         bit = F.when(F.col(f"b{b}") > 0,
-                     F.lit(1 << b if b < 63 else -(1 << 63)).cast("long")).otherwise(F.lit(0).cast("long"))
+                     F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
         sim = bit if sim is None else sim + bit
     sums = sums.select("doc_id", sim.alias("simhash"))
     ids = df.select(F.col(id_col).alias("doc_id"))
@@ -438,7 +430,7 @@ def span_dedup(df: DataFrame, id_col: str, text_col: str,
     partition — it spills and completes but, unlike the old SMJ
     join-back, AQE's skew-join splitting cannot divide it; at that
     corpus shape prefer hashing spans and salting the election
-    (``substring_dedup``'s ``hash_grams`` discipline) over reverting to
+    (``substring_dedup``'s hashed-gram discipline) over reverting to
     the double-derivation join.
 
     Contract: ``id_col`` must be unique in ``df`` (every caller passes a
@@ -511,7 +503,7 @@ def gram_table(df: DataFrame, id_col: str, text_col: str,
 
 
 def substring_dedup(df: DataFrame, id_col: str, text_col: str,
-                    k: int = 8, hash_grams: bool = True) -> DataFrame:
+                    k: int = 8) -> DataFrame:
     """Exact substring-level dedup: remove every passage of >= ``k``
     tokens that also occurs elsewhere in the corpus, keeping only its
     globally-first occurrence (the distributed re-expression of
@@ -539,17 +531,16 @@ def substring_dedup(df: DataFrame, id_col: str, text_col: str,
     partition (spills, completes, but AQE cannot split it) — at that
     corpus shape, pre-salt the election or special-case the hot grams.
 
-    ``hash_grams=True`` (the 100 TB path) shuffles 8-byte ``xxhash64``
-    keys instead of k-token strings; ``False`` keeps raw strings so a
-    SQL oracle can reproduce the grouping byte-for-byte (collision-free
-    by construction). Both modes agree on every corpus without a 64-bit
-    hash collision (tests pin this on the bench corpus).
+    The election shuffles 8-byte ``xxhash64`` keys instead of k-token
+    strings. The output never carries the key, so the result equals the
+    raw-gram grouping on every corpus without a 64-bit hash collision;
+    the DuckDB oracle groups the raw grams, so a collision on a checked
+    corpus would show as a mismatch.
 
     Returns (doc_id, n_tokens, n_removed, n_spans_removed, dedup_text).
     """
     gr = gram_table(df, id_col, text_col, k)
-    key = F.xxhash64("gram") if hash_grams else F.col("gram")
-    gr = gr.select("doc_id", "pos", key.alias("g"))
+    gr = gr.select("doc_id", "pos", F.xxhash64("gram").alias("g"))
     # Keeper election as a WINDOW over the gram partition instead of the
     # old groupBy(g) + join-back: the join's sides each embedded the
     # stride-1 gram explode, so the corpus was tokenized and exploded
@@ -625,8 +616,8 @@ def _reassemble_removed(base: DataFrame, dup: DataFrame,
 
 
 def incremental_substring_dedup(corpus: DataFrame, batch: DataFrame,
-                                id_col: str, text_col: str, k: int = 8,
-                                hash_grams: bool = True) -> DataFrame:
+                                id_col: str, text_col: str,
+                                k: int = 8) -> DataFrame:
     """Exact substring dedup of a NEW batch against an EXISTING corpus:
     every >= k-token passage of a batch document that already occurs
     anywhere in the corpus is removed (the incremental sibling of
@@ -637,16 +628,15 @@ def incremental_substring_dedup(corpus: DataFrame, batch: DataFrame,
     row per batch document.
 
     Scale shape: the corpus side reduces to its DISTINCT gram set — a
-    persistable index (8-byte xxhash64 keys under ``hash_grams=True``),
+    persistable index of 8-byte xxhash64 keys,
     exactly like the signature index in ``incremental_dedup`` — and the
     per-batch cost is one left-semi probe join of the batch's anchors
     against it, i.e. batch-sized, never corpus-rescanning (the index
     builds once and appends as batches commit)."""
-    key = (lambda c: F.xxhash64(c)) if hash_grams else (lambda c: F.col(c))
     index = (gram_table(corpus, id_col, text_col, k)
-             .select(key("gram").alias("g")).distinct())
+             .select(F.xxhash64("gram").alias("g")).distinct())
     anchors = (gram_table(batch, id_col, text_col, k)
-               .select("doc_id", "pos", key("gram").alias("g")))
+               .select("doc_id", "pos", F.xxhash64("gram").alias("g")))
     dup = anchors.join(index, "g", "left_semi").select("doc_id", "pos")
     return _reassemble_removed(
         batch.select(F.col(id_col).alias("doc_id"),
@@ -660,8 +650,7 @@ def incremental_substring_dedup(corpus: DataFrame, batch: DataFrame,
 
 def incremental_dedup(corpus: DataFrame, batch: DataFrame, id_col: str,
                       text_col: str, threshold: float = 0.7, k: int = 16,
-                      bands: int = 4, n: int = 3,
-                      parity_hash: bool = False) -> DataFrame:
+                      bands: int = 4, n: int = 3) -> DataFrame:
     """Classify each new-batch document against an existing corpus:
     ``exact`` (byte-identical after normalization), ``near`` (MinHash-LSH
     candidate verified at ``jaccard >= threshold``), or ``new``. Returns
@@ -696,7 +685,7 @@ def incremental_dedup(corpus: DataFrame, batch: DataFrame, id_col: str,
     # MinHash/LSH subtree is the expensive part — without the checkpoint
     # the whole signature+banding pipeline executes twice
     pairs = minhash_near_duplicates(both, "doc_id", text_col, threshold,
-                                    k, bands, n, parity_hash) \
+                                    k, bands, n) \
         .localCheckpoint(eager=False)
     b_ids = batch.select(F.col(id_col).alias("doc_id"))
     # orient each cross pair as (batch doc, corpus partner)

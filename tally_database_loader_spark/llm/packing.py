@@ -224,7 +224,7 @@ def weighted_sample(docs: DataFrame, weight_col: str, k: int,
 
     Exactness: ``u`` is exact (``v/2^20`` with ``v = hash mod 2^20 + 1``
     — a dyadic rational), and ``ln(u)·2^30`` is the EXACT-INTEGER
-    ``ln_fixed(v) − 20·LN2_F`` (functions/fixmath.py) — no libm/JVM
+    ``ln_fixed_staged(v) − 20·LN2_F`` (functions/fixmath.py) — no libm/JVM
     transcendental anywhere, so no 1-ulp divergence can flip the
     priority at a floor boundary; the only float steps are one
     correctly-rounded IEEE division by ``w`` and the floor, identical
@@ -247,10 +247,10 @@ def weighted_sample(docs: DataFrame, weight_col: str, k: int,
     if k <= 0:
         raise ValueError("k must be positive")
     w = F.col(weight_col).cast("double")
-    # staged ln_fixed: same int64s, but each series level is its own
-    # projection column instead of one ~2,500-node inline tree that
-    # Catalyst re-analyzed on every action (fixmath.ln_fixed_staged;
-    # 0.44s → 0.11s per execution at sf0.1)
+    # staged fixed-point ln: each series level is its own projection
+    # column instead of one ~2,500-node inline tree that Catalyst
+    # re-analyzed on every action (fixmath.ln_fixed_staged; 0.44s →
+    # 0.11s per execution at sf0.1)
     base = (docs.filter(F.col(weight_col).isNotNull()
                         & (F.col(weight_col) > 0))
                 .select(F.col(id_col).alias("doc_id"), w.alias("weight")))

@@ -94,12 +94,12 @@ def hll_distinct(df: DataFrame, col: str, b: int = 10) -> DataFrame:
     one correctly-rounded IEEE division — deterministic in every
     engine. The small-range linear-counting correction
     (``m·ln(m/v_zero)`` when E ≤ 2.5m) is EXACT INTEGER:
-    ``(m·(ln_fixed(m) − ln_fixed(v_zero))) div 2^30`` via
+    ``(m·(ln_fixed_py(m) − ln_fixed_py(v_zero))) div 2^30`` via
     functions/fixmath.py — no libm/JVM ``ln`` whose 1-ulp divergence
     at the floor boundary could break a cross-engine value hash
     (ADVICE r2). Relative error ≈ 1.04/√(2^b) (~3.2% at b=10).
 
-    ``ln_fixed(v_zero)`` enters as a broadcast-joined 2^b-row LOOKUP of
+    ``ln_fixed_py(v_zero)`` enters as a broadcast-joined 2^b-row LOOKUP of
     the identical ``ln_fixed_py`` integers, not as the inline
     comparison-fold + series expression: the arithmetic form's
     DAG-shared subtrees (z² feeds every series term, each term feeds

@@ -64,8 +64,8 @@ from . import report_gate  # noqa: F401
 # flagships rotate IN — two_tier_dedup (MinHash→SemDeDup composition),
 # semantic_dedup_capped (the hot-cluster guard, value-hash-verified where
 # the guard engages), bpe_train (the full k-merge training loop), and
-# ppm_decode_real (real-decoder value-hash gate). Displaced, per the
-# judge's own picks: simhash_parity + span_dedup (their fingerprint /
+# ppm_decode_real (real-decoder value-hash gate). Displaced: the SimHash
+# gate (now simhash_dedup) + span_dedup (their fingerprint /
 # keeper-election shapes stay verified via dedup_exact, minhash_lsh_dedup,
 # dedup_clusters and incremental_dedup slots) and interval_attribution +
 # hypertable_rollup (as-of/range/time-bucket shapes stay in-window via

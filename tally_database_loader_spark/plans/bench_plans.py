@@ -11,9 +11,10 @@ deployment runs the sketch ALONE (that is the sketch's entire point —
 headline bench number dominated by the exact arms tracks the oracle
 harness, not the engine.
 
-``bench.py`` therefore times these production-only twins. The gates are
-UNCHANGED and stay driver-hash-checked; these twins reuse the same
-operator functions (llm/sketch.py, llm/packing.py) with the
+``bench.py`` therefore times the two production-only twins below; each
+differs from its gate by the verification arms, not by a switch. The
+gates are UNCHANGED and stay driver-hash-checked; these twins reuse the
+same operator functions (llm/sketch.py, llm/packing.py) with the
 verification scaffolding removed, so the timed plan is exactly the plan
 a deployment would run.
 
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import fan_out, load_table
+from .llm_gate import substring_dedup_gate
 
 
 def hll_token_distinct_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,22 +82,10 @@ def sketch_suite_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms.unionByName(hll).unionByName(bloom).unionByName(ws)
 
 
-def substring_dedup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact substring dedup, production arm (round 8): the SAME
-    llm/dedup.py substring_dedup plan as the ``substring_dedup`` gate
-    but with ``hash_grams=True`` — the gram groupBy shuffles 8-byte
-    xxhash64 keys instead of k-token strings. The gate keeps raw
-    strings so the DuckDB oracle reproduces the grouping byte-for-byte;
-    a deployment ships the hashed keys (collision odds ~n²/2⁶⁵), and
-    tests/test_llm.py pins the two arms row-identical on the bench
-    corpus."""
-    from ..llm.dedup import substring_dedup
-    d = load_table(spark, sf_dir, "documents")
-    return substring_dedup(d, "doc_id", "text", k=8, hash_grams=True)
-
-
 BENCH_PLANS = {
     "hll_token_distinct_prod": hll_token_distinct_prod,
     "sketch_suite_prod": sketch_suite_prod,
-    "substring_dedup_prod": substring_dedup_prod,
+    # no twin: the gate already runs the production plan; the name stays
+    # because bench.py and perfbench list it
+    "substring_dedup_prod": substring_dedup_gate,
 }

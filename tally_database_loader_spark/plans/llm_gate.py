@@ -244,12 +244,12 @@ WHERE CAST(c AS DOUBLE) / (s1.n + s2.n - c) >= 0.7
 @gate_query("minhash_lsh_dedup", oracle=_DD_MINHASH)
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands × 4 rows) near-dup detection with exact
-    Jaccard verification — the 100 TB dedup path (llm/dedup.py). Uses the
-    md5-parity hash so the SQL oracle reproduces bucketing exactly; the
-    production default is xxhash64 (same plan, cheaper per shingle)."""
+    Jaccard verification — the 100 TB dedup path (llm/dedup.py). The
+    md5-prefix shingle hash is the operator's only hash, so the SQL
+    oracle reproduces the bucketing of the plan production runs."""
     d = load_table(spark, sf_dir, "documents")
     return minhash_near_duplicates(d, "doc_id", "text", threshold=0.7,
-                                   k=16, bands=4, n=3, parity_hash=True)
+                                   k=16, bands=4, n=3)
 
 
 @gate_query("lsh_candidates_probe", oracle=f"""
@@ -261,7 +261,7 @@ def lsh_candidates_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate generation alone (pre-verification) — exposes the
     banding join for correctness checking (llm/dedup.py lsh_candidates)."""
     d = load_table(spark, sf_dir, "documents")
-    return lsh_candidates(d, "doc_id", "text", k=16, bands=4, n=3, parity_hash=True)
+    return lsh_candidates(d, "doc_id", "text", k=16, bands=4, n=3)
 
 
 # ---------------------------------------------------------------------------
@@ -392,12 +392,13 @@ FROM documents,
 @gate_query("multimodal_decode", oracle=_DD_MM_DECODE)
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched fake decode over binary payloads via mapInPandas
-    (llm/multimodal.py) — deterministic byte statistics standing in for a
-    real image decoder (not installable here). The fake features are pure
-    functions of encode(text), so the oracle re-derives them per byte
-    (documents are ASCII ⇒ ord(char) == byte; int.from_bytes(b[:4]) ==
-    the base-256 fold). Exact batch plumbing additionally asserted in
-    tests/test_llm.py."""
+    (llm/multimodal.py) — deterministic byte statistics that exercise the
+    batch plumbing without a codec; the real pure-Python decoders have
+    their own gates (``ppm_decode_real``, ``multimodal_suite``). The fake
+    features are pure functions of encode(text), so the oracle re-derives
+    them per byte (documents are ASCII ⇒ ord(char) == byte;
+    int.from_bytes(b[:4]) == the base-256 fold). Exact batch plumbing
+    additionally asserted in tests/test_llm.py."""
     d = load_table(spark, sf_dir, "documents")
     payload = d.select("doc_id", mm.binary_payload(F.col("text")).alias("payload"))
     return mm.fake_decode_features(payload, "doc_id", "payload")
@@ -582,11 +583,38 @@ def multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dec.unionByName(res).unionByName(frm)
 
 
-@gate_query("simhash_dedup")  # xxhash64-based — rows-only driver check
+def _dd_simhash() -> str:
+    """DuckDB replay of llm/dedup.py simhash_table: the md5-prefix base
+    per shingle, one signed sum per bit, the positive sums folded."""
+    from ..llm.dedup import SIMHASH_BITS
+    base = _dd_hex15("substr(md5(shingle), 1, 15)")
+    sums = ",\n         ".join(
+        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
+        for b in range(SIMHASH_BITS))
+    fold = " + ".join(
+        f"(CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
+        for b in range(SIMHASH_BITS))
+    return f"""
+hashed AS (SELECT doc_id, {base} AS h FROM sh),
+sums AS (
+  SELECT doc_id,
+         {sums}
+  FROM hashed GROUP BY doc_id
+),
+folded AS (SELECT doc_id, {fold} AS simhash FROM sums)
+SELECT d.doc_id, CAST(COALESCE(f.simhash, 0) AS BIGINT) AS simhash
+FROM documents d LEFT JOIN folded f ON f.doc_id = d.doc_id"""
+
+
+@gate_query("simhash_dedup", oracle=f"""
+WITH {_DD_SHINGLE_TABLE},
+{_dd_simhash()}
+""")
 def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per document (llm/dedup.py simhash64; xxhash64-based,
-    so no SQL oracle — the driver records rows-only; Hamming-neighbor
-    behavior is asserted in tests/test_llm.py)."""
+    """60-bit SimHash per document (llm/dedup.py simhash_table), hash-
+    matched against the SQL oracle bit for bit: the md5-prefix shingle
+    hash, the per-bit signed sums and the fold. Hamming-neighbour
+    behaviour is asserted in tests/test_llm.py."""
     d = load_table(spark, sf_dir, "documents")
     return simhash_table(d, "doc_id", "text")
 
@@ -901,7 +929,7 @@ def two_tier_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
     pairs = minhash_near_duplicates(d, "doc_id", "text", threshold=0.7,
-                                    k=16, bands=4, n=3, parity_hash=True)
+                                    k=16, bands=4, n=3)
     ndrop = pairs.select(F.col("d2").alias("vec_id")).distinct()
     # survivors are consumed three times by the semantic tier (both pair
     # sides + the final anti-join base), so materialize them once — the
@@ -983,39 +1011,6 @@ def pq_adc_topk_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return pq_adc_topk(e, e.filter(F.col("vec_id") < 8), k=5, m=4,
                        n_codes=64, iters=2, refine=50, dim=64)
-
-
-def _dd_simhash_parity() -> str:
-    base = _dd_hex15("substr(md5(shingle), 1, 15)")
-    sums = ",\n         ".join(
-        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(60))
-    fold = " + ".join(
-        f"(CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END)"
-        for b in range(60))
-    return f"""
-hashed AS (SELECT doc_id, {base} AS h FROM sh),
-sums AS (
-  SELECT doc_id,
-         {sums}
-  FROM hashed GROUP BY doc_id
-),
-folded AS (SELECT doc_id, {fold} AS simhash FROM sums)
-SELECT d.doc_id, CAST(COALESCE(f.simhash, 0) AS BIGINT) AS simhash
-FROM documents d LEFT JOIN folded f ON f.doc_id = d.doc_id"""
-
-
-@gate_query("simhash_parity", oracle=f"""
-WITH {_DD_SHINGLE_TABLE},
-{_dd_simhash_parity()}
-""")
-def simhash_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash with the md5-parity base hash — hash-matched against
-    the SQL oracle bit for bit (llm/dedup.py simhash_table with
-    parity_hash=True). The xxhash64 production variant is benchmarked as
-    ``simhash_dedup``; the plan shape is identical."""
-    d = load_table(spark, sf_dir, "documents")
-    return simhash_table(d, "doc_id", "text", parity_hash=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1604,7 +1599,7 @@ def incremental_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 10 != 0)
     batch = d.filter(F.col("doc_id") % 10 == 0)
     return incremental_dedup(corpus, batch, "doc_id", "text",
-                             threshold=0.7, parity_hash=True)
+                             threshold=0.7)
 
 
 # ---------------------------------------------------------------------------
@@ -2196,7 +2191,7 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True))  # consumed by 3 stages
     # fuzzy tier: MinHash+LSH pairs over the survivors → components
     pairs = minhash_near_duplicates(surv, "doc_id", "text", threshold=0.7,
-                                    k=16, bands=4, n=3, parity_hash=True)
+                                    k=16, bands=4, n=3)
     cl = dup_clusters(pairs)
     scores = surv.select(
         "doc_id",
@@ -3389,8 +3384,8 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SUBSTR_K = 8
 
-@gate_query("substring_dedup", oracle=f"""
-WITH tok AS (
+# the stride-1 k-gram anchors (doc_id, pos, gram) over the token arrays
+_DD_GRAMS = f"""tok AS (
   SELECT doc_id, {_DD_TOKENS} AS t FROM documents
 ),
 g AS (
@@ -3401,15 +3396,15 @@ gr AS (
   SELECT doc_id, pos,
          array_to_string(t[(pos + 1):(pos + {_SUBSTR_K})], ' ') AS gram
   FROM g
-),
-el AS (
-  SELECT doc_id, pos,
-         count(*) OVER (PARTITION BY gram) AS n_occ,
-         row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
-  FROM gr
-),
-dup AS (SELECT doc_id, pos FROM el WHERE n_occ >= 2 AND rn > 1),
-cov AS (
+)"""
+
+
+def _dd_substring_tail(keep: str = "TRUE") -> str:
+    """The substring-dedup family's shared tail (llm/dedup.py
+    _reassemble_removed) over a ``dup`` CTE of duplicate anchors: covered
+    positions, island count (lag gap > 1) and the order-preserving
+    reassembly, for the documents whose ``doc_id`` satisfies ``keep``."""
+    return f"""cov AS (
   SELECT DISTINCT doc_id, pos + i AS tpos
   FROM dup, range(0, {_SUBSTR_K}) r(i)
 ),
@@ -3424,7 +3419,8 @@ spans AS (
   GROUP BY doc_id
 ),
 toks AS (
-  SELECT doc_id, unnest(t) AS tk, unnest(range(0, len(t))) AS i FROM tok
+  SELECT doc_id, unnest(t) AS tk, unnest(range(0, len(t))) AS i
+  FROM tok WHERE {keep}
 ),
 txt AS (
   SELECT tk.doc_id, string_agg(tk.tk, ' ' ORDER BY tk.i) AS dedup_text
@@ -3432,16 +3428,29 @@ txt AS (
   ANTI JOIN cov c ON c.doc_id = tk.doc_id AND c.tpos = tk.i
   GROUP BY tk.doc_id
 )
-SELECT d.doc_id,
-       CAST(len(tk.t) AS INT) AS n_tokens,
-       COALESCE(s.n_removed, 0) AS n_removed,
-       COALESCE(s.n_spans_removed, 0) AS n_spans_removed,
-       COALESCE(x.dedup_text, '') AS dedup_text
-FROM documents d
-JOIN tok tk ON tk.doc_id = d.doc_id
-LEFT JOIN spans s ON s.doc_id = d.doc_id
-LEFT JOIN txt x ON x.doc_id = d.doc_id
-""")
+SELECT * FROM (
+  SELECT d.doc_id,
+         CAST(len(tk.t) AS INT) AS n_tokens,
+         COALESCE(s.n_removed, 0) AS n_removed,
+         COALESCE(s.n_spans_removed, 0) AS n_spans_removed,
+         COALESCE(x.dedup_text, '') AS dedup_text
+  FROM documents d
+  JOIN tok tk ON tk.doc_id = d.doc_id
+  LEFT JOIN spans s ON s.doc_id = d.doc_id
+  LEFT JOIN txt x ON x.doc_id = d.doc_id
+) WHERE {keep}"""
+
+
+@gate_query("substring_dedup", oracle=f"""
+WITH {_DD_GRAMS},
+el AS (
+  SELECT doc_id, pos,
+         count(*) OVER (PARTITION BY gram) AS n_occ,
+         row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rn
+  FROM gr
+),
+dup AS (SELECT doc_id, pos FROM el WHERE n_occ >= 2 AND rn > 1),
+{_dd_substring_tail()}""")
 def substring_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring dedup (round-8 flagship): every passage of >= 8
     tokens that occurs more than once corpus-wide is removed except at
@@ -3450,15 +3459,14 @@ def substring_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     via overlapping stride-1 k-gram anchors + covered-interval merge
     (llm/dedup.py substring_dedup). Unlike span_dedup's fixed disjoint
     spans, duplicated passages are caught at ANY token alignment. The
-    gate runs the oracle-parity arm (raw gram strings); hash_grams=True
-    is the 100 TB path (8-byte xxhash64 shuffle keys), pinned equal on
-    this corpus by tests/test_llm.py. The oracle re-derives keeper
-    election (row_number over gram), interval merge (lag gap>1) and the
-    order-preserving reassembly (anti-join + string_agg)."""
+    plan elects keepers over 8-byte xxhash64 gram keys; the oracle groups
+    the raw gram strings, so a key collision on this corpus would show
+    as a mismatch. The oracle re-derives keeper election (row_number
+    over gram), interval merge (lag gap>1) and the order-preserving
+    reassembly (anti-join + string_agg)."""
     from ..llm.dedup import substring_dedup
     d = load_table(spark, sf_dir, "documents")
-    return substring_dedup(d, "doc_id", "text", k=_SUBSTR_K,
-                           hash_grams=False)
+    return substring_dedup(d, "doc_id", "text", k=_SUBSTR_K)
 
 
 # ---------------------------------------------------------------------------
@@ -3689,58 +3697,13 @@ def audio_fp_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 @gate_query("incremental_substring_dedup", oracle=f"""
-WITH tok AS (
-  SELECT doc_id, {_DD_TOKENS} AS t FROM documents
-),
-g AS (
-  SELECT doc_id, unnest(range(0, GREATEST(len(t) - {_SUBSTR_K} + 1, 0))) AS pos, t
-  FROM tok
-),
-gr AS (
-  SELECT doc_id, pos,
-         array_to_string(t[(pos + 1):(pos + {_SUBSTR_K})], ' ') AS gram
-  FROM g
-),
+WITH {_DD_GRAMS},
 idx AS (SELECT DISTINCT gram FROM gr WHERE doc_id % 2 = 0),
 dup AS (
   SELECT doc_id, pos FROM gr
   WHERE doc_id % 2 = 1 AND gram IN (SELECT gram FROM idx)
 ),
-cov AS (
-  SELECT DISTINCT doc_id, pos + i AS tpos
-  FROM dup, range(0, {_SUBSTR_K}) r(i)
-),
-spans AS (
-  SELECT doc_id,
-         CAST(count(*) AS INT) AS n_removed,
-         CAST(sum(CASE WHEN prev IS NULL OR tpos - prev > 1
-                       THEN 1 ELSE 0 END) AS INT) AS n_spans_removed
-  FROM (SELECT doc_id, tpos,
-               lag(tpos) OVER (PARTITION BY doc_id ORDER BY tpos) AS prev
-        FROM cov)
-  GROUP BY doc_id
-),
-toks AS (
-  SELECT doc_id, unnest(t) AS tk, unnest(range(0, len(t))) AS i
-  FROM tok WHERE doc_id % 2 = 1
-),
-txt AS (
-  SELECT tk.doc_id, string_agg(tk.tk, ' ' ORDER BY tk.i) AS dedup_text
-  FROM toks tk
-  ANTI JOIN cov c ON c.doc_id = tk.doc_id AND c.tpos = tk.i
-  GROUP BY tk.doc_id
-)
-SELECT d.doc_id,
-       CAST(len(tk.t) AS INT) AS n_tokens,
-       COALESCE(s.n_removed, 0) AS n_removed,
-       COALESCE(s.n_spans_removed, 0) AS n_spans_removed,
-       COALESCE(x.dedup_text, '') AS dedup_text
-FROM documents d
-JOIN tok tk ON tk.doc_id = d.doc_id
-LEFT JOIN spans s ON s.doc_id = d.doc_id
-LEFT JOIN txt x ON x.doc_id = d.doc_id
-WHERE d.doc_id % 2 = 1
-""")
+{_dd_substring_tail("doc_id % 2 = 1")}""")
 def incremental_substring_dedup_gate(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
     """Incremental exact substring dedup (round 8): the odd-doc_id half
@@ -3748,17 +3711,17 @@ def incremental_substring_dedup_gate(spark: SparkSession,
     already present in the even-half corpus is removed
     (llm/dedup.py incremental_substring_dedup). The corpus side reduces
     to its DISTINCT gram index — persistable, append-only as batches
-    commit, 8-byte xxhash64 keys on the production arm — and the
-    per-batch cost is one left-semi probe join of the batch's anchors,
-    i.e. batch-sized, never corpus-rescanning. The gate runs the
-    raw-string oracle-parity arm; the oracle re-derives the index, the
-    probe, the interval merge and the O(n) reassembly."""
+    commit, 8-byte xxhash64 keys — and the per-batch cost is one
+    left-semi probe join of the batch's anchors, i.e. batch-sized, never
+    corpus-rescanning. The oracle probes with the raw gram strings and
+    re-derives the index, the probe, the interval merge and the O(n)
+    reassembly."""
     from ..llm.dedup import incremental_substring_dedup
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     batch = d.filter(F.col("doc_id") % 2 == 1)
     return incremental_substring_dedup(corpus, batch, "doc_id", "text",
-                                       k=_SUBSTR_K, hash_grams=False)
+                                       k=_SUBSTR_K)
 
 
 # ---------------------------------------------------------------------------
@@ -3983,8 +3946,8 @@ def cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     renditions fingerprint-match. Edges:
 
     - text: MinHash(16) + LSH(4×4) candidates verified at exact Jaccard
-      >= 0.7 (llm/dedup.py minhash_near_duplicates — the md5-parity arm
-      so the oracle replays the banding and the verification);
+      >= 0.7 (llm/dedup.py minhash_near_duplicates — its md5-prefix
+      hash lets the oracle replay the banding and the verification);
     - image / audio / video: the three lossless banded Hamming joins
       over the real-decoder fingerprints (llm/multimodal.py).
 
@@ -4003,7 +3966,7 @@ def cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.dedup import dup_clusters, minhash_near_duplicates
     d = load_table(spark, sf_dir, "documents")
     text = (minhash_near_duplicates(d, "doc_id", "text", threshold=0.7,
-                                    k=16, bands=4, n=3, parity_hash=True)
+                                    k=16, bands=4, n=3)
             .select(F.col("d1").alias("id_a"), F.col("d2").alias("id_b")))
     # fingerprint edges enter the closure SPARSE (fp_cluster_edges:
     # per-value representatives + clone stars — identical components to
@@ -4166,7 +4129,7 @@ def incremental_cross_modal_dedup(spark: SparkSession,
     # (sparse closure edges + even-internal text pairs)
     text_even = (minhash_near_duplicates(d.filter(even), "doc_id",
                                          "text", threshold=0.7, k=16,
-                                         bands=4, n=3, parity_hash=True)
+                                         bands=4, n=3)
                  .select(F.col("d1").alias("id_a"),
                          F.col("d2").alias("id_b")))
     prev_edges = (text_even
@@ -4181,7 +4144,7 @@ def incremental_cross_modal_dedup(spark: SparkSession,
     # index + MinHash pairs touching an odd doc
     text_all = (minhash_near_duplicates(d, "doc_id", "text",
                                         threshold=0.7, k=16, bands=4,
-                                        n=3, parity_hash=True)
+                                        n=3)
                 .filter((F.col("d1") % 2 == 1) | (F.col("d2") % 2 == 1))
                 .select(F.col("d1").alias("id_a"),
                         F.col("d2").alias("id_b")))

@@ -46,6 +46,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader, EqualTo,
 from pyspark.sql.types import StructType
 
 from .registry import TableSpec, default_tables
+from .tally_xml import DATE_WINDOW
 
 _NULL_DATE = "ñ"
 _END_TAG = re.compile(r"</F\d+>")
@@ -76,9 +77,9 @@ def _decode_cell(raw: str, ftype: str):
     if ftype == "number":
         return int(float(v)) if v else 0
     if ftype in ("amount", "quantity", "rate"):
+        if not v:  # NULL, as tally_xml.read_tdl_response decodes it
+            return None
         q = "0.01" if ftype == "amount" else "0.0001"
-        if not v:
-            return decimal.Decimal("0").quantize(decimal.Decimal(q))
         return decimal.Decimal(v).quantize(decimal.Decimal(q))
     return v
 
@@ -241,8 +242,8 @@ class TallyReader(DataSourceReader):
             else:
                 files = [path]
             return [_Slice(None, None, p) for p in files]
-        lo = self.options.get("from_date", "1990-01-01")
-        hi = self.options.get("to_date", "2099-12-31")
+        lo = self.options.get("from_date", DATE_WINDOW[0])
+        hi = self.options.get("to_date", DATE_WINDOW[1])
         if self.options.get("slice", "year") != "year":
             return [_Slice(lo, hi, None)]
         y0, y1 = int(lo[:4]), int(hi[:4])
@@ -395,8 +396,8 @@ class TallyStreamReader(SimpleDataSourceStreamReader):
             self.spec, filters=list(self.spec.filters) + extra)
         xml = substitute_parameters(
             generate_tdl_xml(sliced, company=self.options.get("company")),
-            {"fromDate": self.options.get("from_date", "1990-01-01"),
-             "toDate": self.options.get("to_date", "2099-12-31"),
+            {"fromDate": self.options.get("from_date", DATE_WINDOW[0]),
+             "toDate": self.options.get("to_date", DATE_WINDOW[1]),
              "targetCompany": self.options.get("company",
                                                "##SVCurrentCompany")})
         text = post_tally_xml(self.options["url"], xml)

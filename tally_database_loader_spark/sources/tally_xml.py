@@ -44,6 +44,11 @@ from .registry import TableSpec
 
 _NULL_DATE = "ñ"  # ñ — reference $$StrByCharCode:241
 
+# the extraction window (ISO dates) when none is configured: the CLI's
+# ``tally.fromdate``/``todate: auto`` and ``format("tally")``'s
+# ``from_date``/``to_date`` defaults
+DATE_WINDOW = ("1990-01-01", "2099-12-31")
+
 # per-type SET expression the TDL program evaluates inside Tally
 # (reference src/tally.mts:660-676); kept data-identical so dumps produced
 # by either tool interchange.
@@ -155,8 +160,8 @@ def substitute_parameters(xml: str, subs: dict) -> str:
 
 def _decode(col: Column, ftype: str) -> Column:
     """Typed decode of one TSV-stage text field (D5)."""
-    if ftype == "date":
-        return F.when(col == _NULL_DATE, F.lit(None)).otherwise(col) \
+    if ftype == "date":  # an empty cell decodes like the ñ sentinel
+        return F.when(col.isin(_NULL_DATE, ""), F.lit(None)).otherwise(col) \
                 .cast("date")
     if ftype == "logical":
         return F.when(col == "", None).otherwise(col).cast("int")

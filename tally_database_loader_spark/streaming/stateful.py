@@ -331,7 +331,7 @@ def minhash_stream_verify(candidates: DataFrame, docs: DataFrame, *,
     other), so the verify restricts the corpus to documents appearing
     in ANY star candidate and re-runs the normal pipeline on the
     restriction. Returns exactly
-    ``minhash_near_duplicates(docs, parity_hash=True)``:
+    ``minhash_near_duplicates(docs)``:
 
     - every batch pair shared an LSH bucket, so both endpoints appear
       in that bucket's star edges; their per-document signatures are
@@ -353,4 +353,4 @@ def minhash_stream_verify(candidates: DataFrame, docs: DataFrame, *,
     restricted = docs.join(F.broadcast(members), id_col, "left_semi")
     return minhash_near_duplicates(restricted, id_col, text_col,
                                    threshold=threshold, k=k, bands=bands,
-                                   n=n, parity_hash=True)
+                                   n=n)

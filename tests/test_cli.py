@@ -57,6 +57,40 @@ def setup(tmp_path):
     return tmp_path, cfgpath
 
 
+@pytest.fixture()
+def stub_tally():
+    """A stub Tally XML server on a free local port: answers every POST
+    with two mst_unit rows and records each request body (UTF-16LE
+    decoded). Yields (port, bodies)."""
+    import http.server
+    import threading
+
+    bodies = []
+    payload = ("<ENVELOPE>\r\n"
+               "  <F01>u-1</F01><F02>Nos</F02><F03>10.00</F03>\r\n"
+               "  <F01>u-2</F01><F02>Kg</F02><F03>2.50</F03>\r\n"
+               "</ENVELOPE>").encode("utf-8")
+
+    class StubTally(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):
+            n = int(self.headers.get("Content-Length", 0))
+            bodies.append(self.rfile.read(n).decode("utf-16le"))
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(payload)))
+            self.end_headers()
+            self.wfile.write(payload)
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.HTTPServer(("127.0.0.1", 0), StubTally)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        yield srv.server_port, bodies
+    finally:
+        srv.shutdown()
+
+
 def test_cli_csv_sync_end_to_end(spark, setup):
     tmp_path, cfgpath = setup
     counts = main(["--config", str(cfgpath)], spark=spark)
@@ -280,60 +314,50 @@ def test_console_script_entry_exits_zero(monkeypatch):
     assert "__main__:cli" in toml.read_text()
 
 
-def test_cli_http_loop_and_abort(spark, setup, monkeypatch):
+def test_cli_http_loop_and_abort(spark, setup, monkeypatch, stub_tally):
     """VERDICT r3 #6: the full CLI lifecycle against a live-ish Tally —
     the continuous frequency>0 loop fetching every tick over a stub
     Tally XML HTTP server (not a dump dir), plus the cooperative abort
     on the same HTTP-sourced config."""
-    import http.server
-    import threading
-
     import tally_database_loader_spark.__main__ as cli
     from tally_database_loader_spark.__main__ import SyncAborted, run_import
     from tally_database_loader_spark.config import load_config
     from tally_database_loader_spark.streaming.progress import SyncLogger
 
-    hits = []
-    body = ("<ENVELOPE>\r\n"
-            "  <F01>u-1</F01><F02>Nos</F02><F03>10.00</F03>\r\n"
-            "  <F01>u-2</F01><F02>Kg</F02><F03>2.50</F03>\r\n"
-            "</ENVELOPE>")
-
-    class StubTally(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", 0))
-            self.rfile.read(n)
-            hits.append(1)
-            payload = body.encode("utf-8")
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.HTTPServer(("127.0.0.1", 0), StubTally)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    port, hits = stub_tally
     tmp, cfgpath = setup
     overrides = ["--tally-dumpdir", "",          # falsy ⇒ live HTTP path
                  "--tally-server", "127.0.0.1",
-                 "--tally-port", str(srv.server_port)]
-    try:
-        monkeypatch.setattr(cli, "_sleep", lambda s: None)
-        counts = main(["--config", str(cfgpath), *overrides,
-                       "--tally-frequency", "1"], spark=spark, max_ticks=2)
-        assert counts == {"mst_unit": 2}
-        assert len(hits) == 2  # one POST per table per tick, two ticks
-        log = (tmp / "import-log.txt").read_text(encoding="utf-8")
-        assert log.count("Import completed successfully") >= 2
-        # cooperative abort raises cleanly on the HTTP-sourced config too
-        cfg = load_config(cfgpath.read_text(encoding="utf-8"), overrides)
-        with pytest.raises(SyncAborted):
-            run_import(spark, cfg, SyncLogger(str(tmp / "abort-log.txt")),
-                       aborted=lambda: True)
-    finally:
-        srv.shutdown()
+                 "--tally-port", str(port)]
+    monkeypatch.setattr(cli, "_sleep", lambda s: None)
+    counts = main(["--config", str(cfgpath), *overrides,
+                   "--tally-frequency", "1"], spark=spark, max_ticks=2)
+    assert counts == {"mst_unit": 2}
+    assert len(hits) == 2  # one POST per table per tick, two ticks
+    log = (tmp / "import-log.txt").read_text(encoding="utf-8")
+    assert log.count("Import completed successfully") >= 2
+    # cooperative abort raises cleanly on the HTTP-sourced config too
+    cfg = load_config(cfgpath.read_text(encoding="utf-8"), overrides)
+    with pytest.raises(SyncAborted):
+        run_import(spark, cfg, SyncLogger(str(tmp / "abort-log.txt")),
+                   aborted=lambda: True)
+
+
+def test_cli_live_fetch_substitutes_the_date_window(spark, setup, stub_tally):
+    """The live extraction posts a TDL program with every placeholder
+    filled: ``SVFROMDATE`` carries the configured ``tally.fromdate`` and
+    ``todate: auto`` the end of the default window, both in Tally's
+    d-MMM-yyyy."""
+    port, bodies = stub_tally
+    _, cfgpath = setup
+    counts = main(["--config", str(cfgpath), "--tally-dumpdir", "",
+                   "--tally-server", "127.0.0.1", "--tally-port", str(port),
+                   "--tally-fromdate", "2024-04-01"], spark=spark)
+    assert counts == {"mst_unit": 2}
+    assert len(bodies) == 1
+    assert "{" not in bodies[0], "unfilled placeholder in the TDL program"
+    assert "<SVFROMDATE>1-Apr-2024</SVFROMDATE>" in bodies[0]
+    assert "<SVTODATE>31-Dec-2099</SVTODATE>" in bodies[0]
 
 
 def test_explicit_missing_config_rejected(spark):

@@ -175,6 +175,16 @@ def test_driver_window_covers_all_families():
     assert no_oracle == [], f"oracle-less queries inside the window: {no_oracle}"
 
 
+def test_every_benchmark_slot_has_an_oracle():
+    """Every curation slot the repo benchmark times (perfbench/workloads.py
+    SLOTS, through its SLOT_ORACLE aliases) resolves to a DuckDB oracle,
+    so no benchmarked plan runs unverified."""
+    from perfbench.workloads import SLOT_ORACLE, SLOTS
+    from tally_database_loader_spark.plans import ORACLES
+    unverified = [s for s in SLOTS if SLOT_ORACLE.get(s, s) not in ORACLES]
+    assert unverified == [], f"benchmark slots without an oracle: {unverified}"
+
+
 def test_prod_twins_reuse_gate_operator_entry_points():
     """Every production-shaped bench twin (plans/bench_plans.py) must
     call the SAME operator entry points as its hash-verified gate twin

@@ -176,62 +176,39 @@ def test_bigram_logprob_total_mass_and_nulls(spark, texts):
 
 
 @pytest.mark.slow  # driver-window budget (VERDICT r11 #1 / ADVICE r11); runs under SPARK_GRAFT_RUN_SLOW=1
-def test_ln_fixed_cross_engine_exhaustive(spark):
-    """The three renderings of the fixed-point ln (Spark Column, DuckDB
-    SQL, Python reference) produce the IDENTICAL int64 over the ENTIRE
-    [1, 2^20] domain (compared via exact count+sum+xor checksums — any
-    single differing value breaks at least the xor), and the value
-    tracks true ln within 2e-6."""
+def test_ln_fixed_exhaustive(spark):
+    """The three renderings of the fixed-point ln (staged Spark
+    projections, DuckDB SQL, Python reference) produce the IDENTICAL
+    int64 over the ENTIRE [1, 2^20] domain (compared via exact
+    count+sum+xor checksums — any single differing value breaks at least
+    the xor), and the value tracks true ln within 2e-6."""
     import math
+    from functools import reduce
 
     import duckdb
 
     from tally_database_loader_spark.functions.fixmath import (
-        LN_SCALE, dd_ln_fixed, ln_fixed, ln_fixed_py)
+        LN_SCALE, dd_ln_fixed, ln_fixed_py, ln_fixed_staged)
 
     top = 1 << 20
     py_vals = [ln_fixed_py(v) for v in range(1, top + 1)]
     # accuracy vs libm (spot the ends + a stride — full domain is slow)
     for v in list(range(1, 2050)) + list(range(1, top + 1, 997)) + [top]:
         assert abs(py_vals[v - 1] / LN_SCALE - math.log(v)) < 2e-6
-    want = (len(py_vals), sum(py_vals),
-            __import__("functools").reduce(lambda a, b: a ^ b, py_vals))
+    want = (len(py_vals), sum(py_vals), reduce(lambda a, b: a ^ b, py_vals))
 
-    s_row = (spark.range(1, top + 1)
-             .select(ln_fixed(F.col("id")).alias("lnf"))
-             .agg(F.count("*").alias("n"), F.sum("lnf").alias("s"),
-                  F.expr("bit_xor(lnf)").alias("x")).first())
-    assert (s_row["n"], s_row["s"], s_row["x"]) == want
+    df = ln_fixed_staged(spark.range(1, top + 1), F.col("id"), "lnf")
+    row = df.agg(F.count("*").alias("n"), F.sum("lnf").alias("s"),
+                 F.expr("bit_xor(lnf)").alias("x")).first()
+    assert (row["n"], row["s"], row["x"]) == want
 
     con = duckdb.connect()
     d = con.sql(
         "SELECT COUNT(*) AS n, CAST(SUM(lnf) AS BIGINT) AS s, "
         "CAST(bit_xor(lnf) AS BIGINT) AS x FROM ("
-        + dd_ln_fixed("SELECT range AS v FROM range(1, 1048577)")
+        + dd_ln_fixed(f"SELECT range AS v FROM range(1, {top + 1})")
         + ")").fetchone()
     assert tuple(d) == want
-
-
-@pytest.mark.slow  # driver-window budget (VERDICT r11 #1 / ADVICE r11); runs under SPARK_GRAFT_RUN_SLOW=1
-def test_ln_fixed_staged_exhaustive(spark):
-    """The round-11 STAGED rendering (ln_fixed_staged — each series
-    level its own projection column, so Catalyst stops re-analyzing a
-    ~2,500-node inline tree per action) is int64-identical to the
-    inline Column over the entire [1, 2^20] domain, via the same
-    count+sum+xor checksum as the three original renderings."""
-    from functools import reduce
-
-    from tally_database_loader_spark.functions.fixmath import (
-        ln_fixed_py, ln_fixed_staged)
-
-    top = 1 << 20
-    py_vals = [ln_fixed_py(v) for v in range(1, top + 1)]
-    want = (len(py_vals), sum(py_vals),
-            reduce(lambda a, b: a ^ b, py_vals))
-    df = ln_fixed_staged(spark.range(1, top + 1), F.col("id"), "lnf")
-    row = df.agg(F.count("*").alias("n"), F.sum("lnf").alias("s"),
-                 F.expr("bit_xor(lnf)").alias("x")).first()
-    assert (row["n"], row["s"], row["x"]) == want
 
 
 @given(

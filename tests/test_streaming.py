@@ -328,7 +328,7 @@ def test_band_signatures_match_batch_minhash(spark):
     from tally_database_loader_spark.streaming.stateful import band_signatures
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    batch = minhash_signature_table(d, "doc_id", "text", parity_hash=True)
+    batch = minhash_signature_table(d, "doc_id", "text")
     bexp = {(r.doc_id, j): ",".join(str(r[f"mh{j*4+i}"]) for i in range(4))
             for r in batch.collect() for j in range(4)}
     stream_style = (d.select("doc_id",
@@ -395,8 +395,7 @@ def test_streaming_near_dedup_stars_and_stable_keeper(spark, tmp_path):
                cand, all_docs, id_col="my_id", text_col="body").collect()}
     want = {(r["d1"], r["d2"]): round(r["jaccard"], 12)
             for r in minhash_near_duplicates(
-                all_docs, "my_id", "body", threshold=0.7,
-                parity_hash=True).collect()}
+                all_docs, "my_id", "body", threshold=0.7).collect()}
     assert got == want and (1, 2) in want
 
     import pytest

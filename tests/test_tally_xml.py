@@ -250,6 +250,42 @@ def test_tally_datasource_pushdown_and_slicing(spark, tmp_path):
     assert by_guid["g-002"][1] == "Sharma <Traders>"  # entity unescape
 
 
+def test_both_readers_decode_empty_cells_alike(spark, tmp_path):
+    """An empty cell of every field type decodes to the same value
+    through read_tdl_response and the format("tally") dump reader: NULL
+    for date, logical, amount, quantity and rate, 0 for number, '' for
+    text. An empty date must not abort the scan."""
+    from tally_database_loader_spark.sources import tally_datasource
+
+    tally_datasource.register(spark)
+    specs = default_tables()
+    # the two tables together carry all seven field types
+    for table in ("mst_stock_item", "mst_gst_effective_rate"):
+        spec = specs[table]
+        full = {"text": "x", "logical": "1", "date": "2024-04-01",
+                "number": "7", "amount": "-1.50", "quantity": "2.0000",
+                "rate": "3.2500"}
+        rows = [[full[f.type] for f in spec.fields],
+                ["" for _ in spec.fields]]
+        body = "\r\n".join(
+            "  " + "".join(f"<F{i:02d}>{v}</F{i:02d}>"
+                           for i, v in enumerate(r, start=1))
+            for r in rows)
+        d = tmp_path / table
+        d.mkdir()
+        (d / "dump.xml").write_text(f"<ENVELOPE>\r\n{body}\r\n</ENVELOPE>",
+                                    encoding="utf-8")
+        product = sorted(map(tuple, read_tdl_response(
+            spark, str(d / "dump.xml"), spec).collect()), key=repr)
+        source = sorted(map(tuple, spark.read.format("tally")
+                            .option("table", table).option("path", str(d))
+                            .load().collect()), key=repr)
+        assert product == source, table
+        empty = next(r for r in product if r[0] == "")
+        want = {"text": "", "number": 0}
+        assert list(empty) == [want.get(f.type) for f in spec.fields], table
+
+
 def test_tdl_formula_literal_safety():
     """Only safely-renderable literals compile into TDL formulae; dates,
     quote-bearing strings and booleans stay client-side (a malformed

@@ -788,7 +788,7 @@ def check(spark, duck_dir: str, src_dir: str,
             d = load_table(spark, dirname, "documents")
             text = (minhash_near_duplicates(d, "doc_id", "text",
                                             threshold=0.7, k=16, bands=4,
-                                            n=3, parity_hash=True)
+                                            n=3)
                     .select(F.col("d1").alias("id_a"),
                             F.col("d2").alias("id_b"))
                     .localCheckpoint(eager=True))
@@ -982,7 +982,7 @@ def check(spark, duck_dir: str, src_dir: str,
                     .localCheckpoint(eager=True))
         pairs = minhash_near_duplicates(surv, "doc_id", "text",
                                         threshold=0.7, k=16, bands=4,
-                                        n=3, parity_hash=True) \
+                                        n=3) \
             .localCheckpoint(eager=True)
         cl = dup_clusters(pairs)
         scores = surv.select(
