@@ -364,27 +364,23 @@ def simhash_table(df: DataFrame, id_col: str, text_col: str,
 
     Plan shape: explode shingles → hash once → groupBy(doc) with flat
     conditional-sum aggregates (all codegen'd, partial-agg'd map-side),
-    then fold the sign columns into one long. The earlier nested
+    whose result expression folds the positive sums into one long. The
+    sums and the fold are one SQL expression: built one ``Column`` call at
+    a time they cost ~10,000 JVM round trips per build. The earlier nested
     higher-order-function formulation ran interpreted and was ~100×
     slower. Docs with no shingles get simhash 0 via the left join."""
     # density=8: 60 conditional sums per exploded shingle — measured
     # fastest at full width while byte-derived ~10 partitions cost ~1.8×
     # (OPTIMIZATION_r12.md fan-out sweep)
     sh = shingle_table(df, id_col, text_col, n, density=8.0)
-    h = _parity_base(F.col("shingle"))
-    aggs = [F.sum(F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1)
-                   .otherwise(-1)).alias(f"b{b}")
-            for b in range(SIMHASH_BITS)]
-    sums = sh.groupBy("doc_id").agg(*aggs)
-    sim = None
-    for b in range(SIMHASH_BITS):
-        bit = F.when(F.col(f"b{b}") > 0,
-                     F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
-        sim = bit if sim is None else sim + bit
-    sums = sums.select("doc_id", sim.alias("simhash"))
+    hashed = sh.select("doc_id", _parity_base(F.col("shingle")).alias("h"))
+    fold = " + ".join(
+        f"CASE WHEN sum(CASE WHEN shiftright(h, {b}) & 1 = 1 THEN 1 ELSE -1"
+        f" END) > 0 THEN {1 << b}L ELSE 0L END" for b in range(SIMHASH_BITS))
+    sums = hashed.groupBy("doc_id").agg(F.expr(fold).alias("simhash"))
     ids = df.select(F.col(id_col).alias("doc_id"))
     return (ids.join(sums, "doc_id", "left")
-               .select("doc_id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash")))
+               .selectExpr("doc_id", "coalesce(simhash, 0L) AS simhash"))
 
 
 # ---------------------------------------------------------------------------

@@ -46,14 +46,12 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader, EqualTo,
 from pyspark.sql.types import StructType
 
 from .registry import TableSpec, default_tables
-from .tally_xml import DATE_WINDOW
+from .tally_xml import _ENTITIES, _NULL_DATE, DATE_WINDOW
 
-_NULL_DATE = "ñ"
-_END_TAG = re.compile(r"</F\d+>")
-_START_TAG = re.compile(r"\s*<F\d+>")
-_ENTITIES = [("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-             ("&apos;", "'"), ("&tab;", "")]
-_NUMREF = re.compile(r"&#\d+;")
+# ASCII classes, as in the JVM regexes of tally_xml.read_tdl_response
+_END_TAG = re.compile(r"</F\d+>", re.ASCII)
+_START_TAG = re.compile(r"\s*<F\d+>", re.ASCII)
+_NUMREF = re.compile(r"&#\d+;", re.ASCII)
 
 
 class _Slice(InputPartition):
@@ -65,7 +63,10 @@ class _Slice(InputPartition):
 
 
 def _decode_cell(raw: str, ftype: str):
-    v = raw.strip()
+    """One cell decoded as ``tally_xml.read_tdl_response`` decodes it: only
+    spaces are trimmed, a number must be an integer, and decimals round
+    half up (Spark's string casts)."""
+    v = raw.strip(" ")
     if ftype in ("text", "custom"):
         return v
     if ftype == "logical":
@@ -75,20 +76,25 @@ def _decode_cell(raw: str, ftype: str):
             return None
         return datetime.date.fromisoformat(v)
     if ftype == "number":
-        return int(float(v)) if v else 0
+        return int(v) if v else 0
     if ftype in ("amount", "quantity", "rate"):
         if not v:  # NULL, as tally_xml.read_tdl_response decodes it
             return None
         q = "0.01" if ftype == "amount" else "0.0001"
-        return decimal.Decimal(v).quantize(decimal.Decimal(q))
+        return decimal.Decimal(v).quantize(decimal.Decimal(q),
+                                           rounding=decimal.ROUND_HALF_UP)
     return v
 
 
 def _parse_rows(text: str, spec: TableSpec) -> Iterator[tuple]:
     """The reference's XML→rows rewrite (src/tally.mts:514-539) as a
     per-partition Python parse: split on <F01> records, strip end tags,
-    split on start tags, unescape entities, decode per type."""
-    for rec in text.split("<F01>")[1:]:
+    split on start tags, unescape entities, decode per type. A record
+    without a field end tag (the envelope header) is skipped; a short
+    record is padded with NULLs."""
+    for rec in text.split("<F01>"):
+        if "</F" not in rec:
+            continue
         rec = rec.replace("\r", "").replace("\n", "").replace("\t", " ")
         rec = rec.replace("</ENVELOPE>", "").replace("<FLDBLANK></FLDBLANK>", "")
         rec = _END_TAG.sub("", rec)
@@ -271,8 +277,8 @@ class TallyReader(DataSourceReader):
             xml = generate_tdl_xml(sliced,
                                    company=self.options.get("company"))
             xml = substitute_parameters(xml, {
-                "fromDate": partition.from_date,
-                "toDate": partition.to_date,
+                "fromDate": datetime.date.fromisoformat(partition.from_date),
+                "toDate": datetime.date.fromisoformat(partition.to_date),
                 "targetCompany": self.options.get("company",
                                                   "##SVCurrentCompany"),
             })
@@ -396,8 +402,10 @@ class TallyStreamReader(SimpleDataSourceStreamReader):
             self.spec, filters=list(self.spec.filters) + extra)
         xml = substitute_parameters(
             generate_tdl_xml(sliced, company=self.options.get("company")),
-            {"fromDate": self.options.get("from_date", DATE_WINDOW[0]),
-             "toDate": self.options.get("to_date", DATE_WINDOW[1]),
+            {"fromDate": datetime.date.fromisoformat(
+                self.options.get("from_date", DATE_WINDOW[0])),
+             "toDate": datetime.date.fromisoformat(
+                self.options.get("to_date", DATE_WINDOW[1])),
              "targetCompany": self.options.get("company",
                                                "##SVCurrentCompany")})
         text = post_tally_xml(self.options["url"], xml)

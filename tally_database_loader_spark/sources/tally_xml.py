@@ -17,13 +17,15 @@ Spark-first equivalents:
   ``{targetCompany}`` substitution with the reference's formatting rules
   (src/tally.mts:492-512): dates ``d-MMM-yyyy``, booleans Yes/No, strings
   HTML-escaped.
-- ``read_tdl_response`` — the D1 rewrite pipeline as a *distributed Column
-  program*: the response is read with ``lineSep='<F01>'`` so Spark splits
-  the file into one record per row **at read time** (no whole-file
+- ``read_tdl_response`` — the D1 rewrite pipeline as a *distributed SQL
+  projection*: the response is read with ``lineSep='<F01>'`` so Spark
+  splits the file into one record per row **at read time** (no whole-file
   buffering, unlike the reference's single in-memory string), then end-tag
   stripping / field splitting / entity unescaping / typed decoding all run
-  as JVM-side expressions inside whole-stage codegen. A 100 GB dump parses
-  partition-parallel.
+  as JVM-side expressions inside whole-stage codegen. The plan is written
+  as SQL text, so building it costs about 20 JVM calls plus one per
+  field. A 100 GB dump parses partition-parallel; a record with
+  fewer cells than the spec has fields parses with NULLs in the rest.
 
 Typed decoding (SURVEY §2.D5, reference src/database.mts:81-119): the
 ñ sentinel (char 241, emitted for empty dates by the TDL date encoding at
@@ -37,7 +39,7 @@ import datetime
 import html
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import TableSpec
@@ -158,20 +160,44 @@ def substitute_parameters(xml: str, subs: dict) -> str:
     return out
 
 
-def _decode(col: Column, ftype: str) -> Column:
-    """Typed decode of one TSV-stage text field (D5)."""
-    if ftype == "date":  # an empty cell decodes like the ñ sentinel
-        return F.when(col.isin(_NULL_DATE, ""), F.lit(None)).otherwise(col) \
-                .cast("date")
-    if ftype == "logical":
-        return F.when(col == "", None).otherwise(col).cast("int")
-    if ftype == "number":
-        return F.when(col == "", "0").otherwise(col).cast("long")
-    if ftype == "amount":
-        return F.when(col == "", None).otherwise(col).cast("decimal(17,2)")
-    if ftype in ("quantity", "rate"):
-        return F.when(col == "", None).otherwise(col).cast("decimal(15,4)")
-    return col  # text / custom stay strings
+def _lit(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# entity unescape in the reference's order (src/tally.mts:525-531); every
+# pattern holds '&', so a cell without one skips the chain
+_ENTITIES = (("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
+             ("&apos;", "'"), ("&tab;", ""))
+
+_ENVELOPE_END = _lit(r"</ENVELOPE>\s*$")
+_END_TAG = _lit(r"</F\d+>")
+_START_TAG = _lit(r"\s*<F\d+>")
+_NUMREF = _lit(r"&#\d+;")
+
+# typed decode of one trimmed text cell ``{0}`` (D5); an empty date cell
+# decodes like the ñ sentinel
+_DECODE = {
+    "date": "CAST(nullif(nullif({0}, %s), '') AS DATE)" % _lit(_NULL_DATE),
+    "logical": "CAST(nullif({0}, '') AS INT)",
+    "number": "CAST(CASE WHEN {0} = '' THEN '0' ELSE {0} END AS BIGINT)",
+    "amount": "CAST(nullif({0}, '') AS DECIMAL(17,2))",
+    "quantity": "CAST(nullif({0}, '') AS DECIMAL(15,4))",
+    "rate": "CAST(nullif({0}, '') AS DECIMAL(15,4))",
+}
+
+
+def _field(i: int, ftype: str) -> str:
+    """SQL for field ``i`` of the ``cells`` array: unescape, trim, decode.
+    ``get`` past the end of a short record is NULL, and so is the field."""
+    cell = f"get(cells, {i})"
+    chain = cell
+    for pat, rep in _ENTITIES:
+        chain = f"replace({chain}, {_lit(pat)}, {_lit(rep)})"
+    chain = f"regexp_replace({chain}, {_NUMREF}, '')"
+    text = (f"trim(CASE WHEN instr({cell}, '&') = 0 THEN {cell}"
+            f" ELSE {chain} END)")
+    return _DECODE.get(ftype, "{0}").format(text)
 
 
 def read_tdl_response(spark: SparkSession, path: str,
@@ -180,37 +206,33 @@ def read_tdl_response(spark: SparkSession, path: str,
 
     ``lineSep='<F01>'`` makes the scan itself emit one record per data row,
     so parsing scales with partitions instead of driver memory. The record
-    text then looks like ``v1</F01><F02>v2</F02>…`` and the whole rewrite
-    (end-tag strip → field split → entity unescape → typed cast) is Column
-    expressions — the reference's 14 regex passes (src/tally.mts:514-539)
-    collapse into 4 codegen-friendly ones.
+    text then looks like ``v1</F01><F02>v2</F02>…`` and the reference's 14
+    regex passes (src/tally.mts:514-539) become one filter and two SQL
+    projections: the first cleans the record and splits it into cells, the
+    second unescapes, trims and casts each field. Literal patterns are
+    ``replace`` calls; the only regexes left are the end-tag strip, the
+    start-tag split, the numeric-entity strip (on cells holding '&') and
+    the ``</ENVELOPE>`` strip (on the one record holding it). The plan is
+    built from SQL text: about 20 JVM calls plus one per field, where a
+    ``Column``-at-a-time build makes dozens per field.
+
+    A record with fewer cells than ``spec`` has fields is kept: its missing
+    fields are NULL, whatever their type.
     """
-    raw = spark.read.option("lineSep", "<F01>").text(path)
     # record 0 is the envelope header (no </F01> terminator on its text);
     # data records all contain at least one field end tag.
-    rows = raw.filter(F.col("value").contains("</F"))
-    clean = (
-        F.regexp_replace(                       # line breaks + tabs → space
-            F.regexp_replace(F.col("value"), r"[\r\n]+", ""), r"\t", " "))
-    clean = F.regexp_replace(clean, r"</ENVELOPE>\s*$", "")  # last record
-    clean = F.regexp_replace(clean, r"<FLDBLANK></FLDBLANK>", "")
-    clean = F.regexp_replace(clean, r"</F\d+>", "")          # end tags
-    cells = F.split(clean, r"\s*<F\d+>")                     # start tags
-
-    def _unescape(c: Column) -> Column:
-        # entity unescape in the reference's order (src/tally.mts:525-531)
-        for pat, rep in (("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
-                         ("&quot;", '"'), ("&apos;", "'"), ("&tab;", ""),
-                         ("&#\\d+;", "")):
-            c = F.regexp_replace(c, pat, rep)
-        return c
-
-    unescaped = F.transform(cells, _unescape)
-    fields = [
-        _decode(F.trim(unescaped.getItem(i)), f.type).alias(f.name)
-        for i, f in enumerate(spec.fields)
-    ]
-    return rows.select(fields)
+    rows = (spark.read.option("lineSep", "<F01>").text(path)
+            .where("instr(value, '</F') > 0"))
+    # line breaks dropped, tabs → space, then the end-of-envelope strip
+    clean = "replace(replace(replace(value, '\\r', ''), '\\n', ''), '\\t', ' ')"
+    clean = (f"CASE WHEN instr({clean}, '</ENVELOPE>') = 0 THEN {clean}"
+             f" ELSE regexp_replace({clean}, {_ENVELOPE_END}, '') END")
+    clean = f"replace({clean}, '<FLDBLANK></FLDBLANK>', '')"
+    clean = f"regexp_replace({clean}, {_END_TAG}, '')"
+    cells = rows.selectExpr(f"split({clean}, {_START_TAG}) AS cells")
+    return cells.selectExpr(*(
+        f"{_field(i, f.type)} AS `{f.name.replace('`', '``')}`"
+        for i, f in enumerate(spec.fields)))
 
 
 def auto_dates(voucher: DataFrame) -> tuple[str, str]:

@@ -50,3 +50,65 @@ def duck():
             f"SELECT * FROM read_parquet('{SF_CORRECTNESS}/{t}.parquet')")
     yield con
     con.close()
+
+
+@pytest.fixture()
+def stub_tally():
+    """A stub Tally XML server on a free local port: answers every POST
+    with two mst_unit rows and records each request body (UTF-16LE
+    decoded). Yields (port, bodies)."""
+    import http.server
+    import threading
+
+    bodies = []
+    payload = ("<ENVELOPE>\r\n"
+               "  <F01>u-1</F01><F02>Nos</F02><F03>10.00</F03>\r\n"
+               "  <F01>u-2</F01><F02>Kg</F02><F03>2.50</F03>\r\n"
+               "</ENVELOPE>").encode("utf-8")
+
+    class StubTally(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):
+            n = int(self.headers.get("Content-Length", 0))
+            bodies.append(self.rfile.read(n).decode("utf-16le"))
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(payload)))
+            self.end_headers()
+            self.wfile.write(payload)
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.HTTPServer(("127.0.0.1", 0), StubTally)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        yield srv.server_port, bodies
+    finally:
+        srv.shutdown()
+
+
+@pytest.fixture()
+def py4j_round_trips(monkeypatch):
+    """``count(build)`` → the Py4J round trips one call of ``build()``
+    makes from the calling thread, after one uncounted warm-up call. Py4J
+    releases dead JVM references from its own finalizer thread, so those
+    are not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = {}
+
+    def counting(self, command):
+        me = threading.get_ident()
+        calls[me] = calls.get(me, 0) + 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+
+    def count(build) -> int:
+        build()
+        calls.clear()
+        build()
+        return calls.get(threading.get_ident(), 0)
+    return count

@@ -57,40 +57,6 @@ def setup(tmp_path):
     return tmp_path, cfgpath
 
 
-@pytest.fixture()
-def stub_tally():
-    """A stub Tally XML server on a free local port: answers every POST
-    with two mst_unit rows and records each request body (UTF-16LE
-    decoded). Yields (port, bodies)."""
-    import http.server
-    import threading
-
-    bodies = []
-    payload = ("<ENVELOPE>\r\n"
-               "  <F01>u-1</F01><F02>Nos</F02><F03>10.00</F03>\r\n"
-               "  <F01>u-2</F01><F02>Kg</F02><F03>2.50</F03>\r\n"
-               "</ENVELOPE>").encode("utf-8")
-
-    class StubTally(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", 0))
-            bodies.append(self.rfile.read(n).decode("utf-16le"))
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.HTTPServer(("127.0.0.1", 0), StubTally)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        yield srv.server_port, bodies
-    finally:
-        srv.shutdown()
-
-
 def test_cli_csv_sync_end_to_end(spark, setup):
     tmp_path, cfgpath = setup
     counts = main(["--config", str(cfgpath)], spark=spark)

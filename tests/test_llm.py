@@ -31,6 +31,16 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     assert r_multi > r_single
 
 
+def test_simhash_table_build_round_trips(spark, py4j_round_trips):
+    """The 60 per-bit sums and the sign fold are built as one SQL
+    expression, not ~10,000 Column calls: building the plan takes at most
+    1,000 Py4J round trips. No Spark action runs."""
+    d = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")],
+                              "doc_id long, text string")
+    n = py4j_round_trips(lambda: simhash_table(d, "doc_id", "text"))
+    assert n <= 1000, n
+
+
 def test_simhash_near_dups_are_hamming_close(spark, duck):
     d = load_table(spark, SF_CORRECTNESS, "documents")
     sh = {r.doc_id: r.simhash for r in simhash_table(d, "doc_id", "text").collect()}

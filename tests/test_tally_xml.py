@@ -286,6 +286,117 @@ def test_both_readers_decode_empty_cells_alike(spark, tmp_path):
         assert list(empty) == [want.get(f.type) for f in spec.fields], table
 
 
+HOSTILE_SPEC = TableSpec("mst_hostile", "Ledger", [
+    FieldSpec("guid", "$Guid"),
+    FieldSpec("name", "$Name"),
+    FieldSpec("flag", "$IsRevenue", "logical"),
+    FieldSpec("day", "$FirstDate", "date"),
+    FieldSpec("n", "$AlterId", "number"),
+    FieldSpec("amt", "$OpeningBalance", "amount"),
+    FieldSpec("qty", "$ClosingBalance", "quantity"),
+    FieldSpec("rate", "$Rate", "rate"),
+])
+
+
+def _record(cells) -> str:
+    return "".join(f"<F{i:02d}>{v}</F{i:02d}>"
+                   for i, v in enumerate(cells, start=1))
+
+
+def test_read_tdl_response_pads_short_records(spark, tmp_path):
+    """A record with fewer cells than the spec has fields parses with NULL
+    in the missing fields instead of failing the whole job."""
+    spec = default_tables()["mst_group"]
+    full = ["g1", "Primary", "", "Primary", "1", "0", "1", "0", "5"]
+    p = tmp_path / "mst_group.xml"
+    p.write_text("<ENVELOPE>\r\n" + _record(full)
+                 + "\r\n<F01>g2</F01><F02>only</F02>\r\n</ENVELOPE>",
+                 encoding="utf-8")
+    got = sorted(map(tuple, read_tdl_response(spark, str(p), spec).collect()))
+    assert got == [("g1", "Primary", "", "Primary", 1, 0, 1, 0, 5),
+                   ("g2", "only") + (None,) * 7]
+
+
+def test_readers_agree_on_hostile_dump(spark, tmp_path):
+    """``read_tdl_response`` and the ``format("tally")`` parser
+    (``_parse_rows``) give the same rows on a dump that exercises every
+    rewrite step: nested and numeric entities, a bare '&', line breaks
+    and a tab inside a value, a FLDBLANK run, non-space edge characters,
+    digits beyond ASCII, half-way decimals, an integer past 2**53, an
+    empty cell of every type, a short record and whitespace after
+    ``</ENVELOPE>``."""
+    from tally_database_loader_spark.sources.tally_datasource import \
+        _parse_rows
+
+    records = [
+        _record(["h-1", "&amp;lt;Tag&amp;gt; &#39;q&#39; A & B&tab;C",
+                 "1", "2024-04-01", "9007199254740993", "1.005",
+                 "-2.00005", "18.0000"]),
+        _record(["h-2", "Line1\r\nLine2\tEnd &quot;&apos;", "0", "ñ",
+                 "-7", "-0.125", "3", "0.00005"]) + "<FLDBLANK></FLDBLANK>",
+        _record(["h-3", "\u00a0pad\u00a0 &#\u0661\u0662; x", "1",
+                 "1999-12-31", "0", "2.5", "0.5", "1"]),
+        _record([""] * len(HOSTILE_SPEC.fields)),
+        "<F01>h-5</F01><F02>only</F02>",
+    ]
+    text = ("<ENVELOPE>\r\n  " + "\r\n  ".join(records)
+            + "\r\n</ENVELOPE> \t \r\n")
+    p = tmp_path / "hostile.xml"
+    p.write_bytes(text.encode("utf-8"))
+    product = sorted(map(tuple, read_tdl_response(
+        spark, str(p), HOSTILE_SPEC).collect()), key=lambda r: r[0])
+    source = sorted(_parse_rows(text, HOSTILE_SPEC), key=lambda r: r[0])
+    assert product == source
+    rows = {r[0]: r for r in product}
+    assert rows["h-1"][1] == "<Tag> q A & BC"          # sequential unescape
+    assert rows["h-1"][4:6] == (9007199254740993, decimal.Decimal("1.01"))
+    assert rows["h-2"][1] == 'Line1Line2 End "\''
+    assert rows[""] == ("", "", None, None, 0, None, None, None)
+    assert rows["h-5"] == ("h-5", "only") + (None,) * 6
+
+
+def test_live_readers_post_tally_dates(stub_tally):
+    """Both live readers of ``format("tally")`` send Tally the date window
+    in d-MMM-yyyy, as the CLI does: the batch reader per year slice, the
+    stream reader over its default window."""
+    import re
+
+    from tally_database_loader_spark.sources.tally_datasource import (
+        TallyReader, TallyStreamReader)
+
+    port, bodies = stub_tally
+    url = f"http://127.0.0.1:{port}"
+    unit = TableSpec("mst_unit", "Unit", [
+        FieldSpec("guid", "$Guid"), FieldSpec("name", "$Name"),
+        FieldSpec("opening", "$OpeningBalance", "amount")])
+    reader = TallyReader({"url": url, "from_date": "2020-04-01",
+                          "to_date": "2021-03-31"}, unit)
+    assert [len(list(reader.read(s))) for s in reader.partitions()] == [2, 2]
+    streamed = TableSpec("mst_unit", "Unit", unit.fields + [
+        FieldSpec("alterid", "$AlterId", "number")])
+    TallyStreamReader({"url": url}, streamed).readBetweenOffsets(
+        {"alterid": 0}, {"alterid": 5})
+    window = re.compile(r"<SVFROMDATE>(.*?)</SVFROMDATE>"
+                        r"<SVTODATE>(.*?)</SVTODATE>")
+    assert [window.search(b).groups() for b in bodies] == [
+        ("1-Apr-2020", "31-Dec-2020"), ("1-Jan-2021", "31-Mar-2021"),
+        ("1-Jan-1990", "31-Dec-2099")]
+
+
+def test_read_tdl_response_build_round_trips(spark, tmp_path,
+                                             py4j_round_trips):
+    """Building the reader's plan is a few SQL projections, not one JVM
+    call per Column operation: at most 50 Py4J round trips for a 9- and
+    a 13-field table. No Spark action runs."""
+    p = tmp_path / "empty.xml"
+    p.write_text("<ENVELOPE>\r\n</ENVELOPE>", encoding="utf-8")
+    specs = default_tables()
+    for table in ("mst_group", "trn_voucher"):
+        n = py4j_round_trips(
+            lambda: read_tdl_response(spark, str(p), specs[table]))
+        assert n <= 50, (table, n)
+
+
 def test_tdl_formula_literal_safety():
     """Only safely-renderable literals compile into TDL formulae; dates,
     quote-bearing strings and booleans stay client-side (a malformed
