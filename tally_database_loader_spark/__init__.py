@@ -15,8 +15,8 @@ Prime.  This package re-expresses its capabilities Spark-first:
                   (SURVEY §2.C4, §2.E, §2.F12)
 - ``plans``     : the report-query library (SURVEY §2.F) as DataFrame/SQL
                   programs, plus the driver-gate analytics queries
-- ``streaming`` : continuous incremental sync on Structured Streaming
-                  (SURVEY §2.H)
+- ``streaming`` : sync run log and control-plane server; session windows
+                  and stateful streaming operators (SURVEY §2.H)
 - ``llm``       : large-scale training-data pipeline extras — exact/fuzzy
                   dedup, ANN similarity search, text analysis, multimodal
                   column plumbing

@@ -3,10 +3,11 @@
 
 Same UX: ``config.json`` defaults layered under ``--section-key value``
 overrides (A5), one-shot import when ``tally.frequency <= 0``, a polling
-loop otherwise (H1; the engine-native continuous mode is the Structured
-Streaming source in ``streaming/continuous.py`` — this loop is the
-reference-parity on-demand scheduler), per-table import-log lines and a
-completion message (``src/tally.mts:360``, ``src/logger.mts``).
+loop otherwise (H1, the reference's ``setInterval``: one sync per tick,
+ticks run one after another, and in incremental mode an unchanged source
+is a no-op through the AlterId gate), per-table import-log lines and a
+completion message (``src/tally.mts:360``, ``src/logger.mts``). This loop
+is the only poll loop; GUI mode drives the same ``run_import``.
 
 Sources (``tally`` section):
 - ``dumpdir``: a directory of per-table TDL response files
@@ -14,8 +15,8 @@ Sources (``tally`` section):
   ``read_tdl_response``). Missing files are skipped.
 - otherwise ``server``/``port``: live Tally HTTP fetch per table spec
   (requires a reachable Tally XML server, like the reference), over the
-  ``fromdate``..``todate`` window (ISO dates; ``auto`` is the
-  1990-01-01..2099-12-31 window ``format("tally")`` also defaults to).
+  ``fromdate``..``todate`` window (ISO dates; ``auto`` is the fixed
+  1990-01-01..2099-12-31 window, ``tally_xml.DATE_WINDOW``).
 
 Sinks (``database.technology``):
 - ``parquet`` (native): versioned hash-bucketed ``ParquetStore`` under

@@ -807,8 +807,7 @@ def event_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The reference's continuous mode is change-polling micro-batches
     (src/index.mts:51-88) with no event-time windows; this is the Spark-native
-    upgrade. Batch form here (hash-matchable); the identical plan runs under
-    Structured Streaming with a watermark in streaming/continuous.py."""
+    upgrade, in batch form (hash-matchable)."""
     e = load_table(spark, sf_dir, "events")
     return (e.groupBy(F.date_trunc("hour", F.col("ts")).alias("window_start"),
                       "event_type")

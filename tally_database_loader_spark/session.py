@@ -77,8 +77,6 @@ def get_spark(app_name: str = "tally_database_loader_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python Data Source filter pushdown (sources/tally_datasource.py)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # bench events.parquet carries TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as long and convert in sources.catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

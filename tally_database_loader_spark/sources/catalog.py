@@ -2,8 +2,7 @@
 
 The reference drives everything off a YAML table list (reference
 src/tally.mts:76-86); here the analogous catalog maps table name → parquet
-path and registers temp views so plans can be written in either the
-DataFrame or the SQL API.
+path, reads each table with its type fix-ups, and sizes its partitions.
 """
 
 from __future__ import annotations
@@ -12,11 +11,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-BENCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -149,13 +143,3 @@ def _parse_bytes(raw) -> int:
         s = s[:-1]
     return int(s) * mult
 
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: tuple[str, ...] = BENCH_TABLES) -> dict[str, DataFrame]:
-    """Register each table as a temp view named after itself."""
-    out = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

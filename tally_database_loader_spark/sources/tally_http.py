@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import urllib.error
 import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,18 +45,6 @@ def post_tally_xml(url: str, xml: str, *, timeout: float = 60.0) -> str:
                  "Content-Length": str(len(body))})
     with urllib.request.urlopen(req, timeout=timeout) as resp:
         return resp.read().decode("utf-8", errors="replace")
-
-
-def is_tally_reachable(url: str = DEFAULT_URL, *, timeout: float = 5.0) -> bool:
-    """Tally-status probe (reference src/server.mts /tally-status route):
-    an empty GET answers when the XML server is up."""
-    try:
-        with urllib.request.urlopen(url, timeout=timeout):
-            return True
-    except urllib.error.URLError:
-        return False
-    except Exception:
-        return False
 
 
 def fetch_table(spark: SparkSession, spec: TableSpec, *,

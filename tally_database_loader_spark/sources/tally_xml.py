@@ -1,4 +1,4 @@
-"""Tally XML source (SURVEY §2.A1-A3, A7): TDL request compiler, runtime
+"""Tally XML source (SURVEY §2.A1-A3): TDL request compiler, runtime
 parameter substitution, and a distributed reader for Tally's TDL response
 XML.
 
@@ -40,15 +40,13 @@ import html
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .registry import TableSpec
 
 _NULL_DATE = "ñ"  # ñ — reference $$StrByCharCode:241
 
-# the extraction window (ISO dates) when none is configured: the CLI's
-# ``tally.fromdate``/``todate: auto`` and ``format("tally")``'s
-# ``from_date``/``to_date`` defaults
+# the extraction window (ISO dates) that the CLI's
+# ``tally.fromdate``/``todate: auto`` stands for
 DATE_WINDOW = ("1990-01-01", "2099-12-31")
 
 # per-type SET expression the TDL program evaluates inside Tally
@@ -234,11 +232,3 @@ def read_tdl_response(spark: SparkSession, path: str,
         f"{_field(i, f.type)} AS `{f.name.replace('`', '``')}`"
         for i, f in enumerate(spec.fields)))
 
-
-def auto_dates(voucher: DataFrame) -> tuple[str, str]:
-    """Company-info probe (A7): resolve ``fromdate/todate: 'auto'`` from the
-    voucher table's first/last dates (reference src/tally.mts:575-578 uses
-    BooksFrom / LastVoucherDate from the company object)."""
-    row = voucher.agg(F.min("date").alias("lo"),
-                      F.max("date").alias("hi")).first()
-    return str(row["lo"]), str(row["hi"])

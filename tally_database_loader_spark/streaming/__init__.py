@@ -1,1 +1,1 @@
-"""Continuous / incremental sync on Structured Streaming (SURVEY §2.H)."""
+"""Sync run log, sync server and streaming operators (SURVEY §2.H)."""

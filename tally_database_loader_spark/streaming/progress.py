@@ -1,21 +1,16 @@
-"""Run/stream observability (SURVEY §2.H6).
+"""Sync run log (SURVEY §2.H6).
 
 The reference relays per-table import logs and child-process sync events to
 a browser console over WebSocket (reference src/server.mts:13-15,32-40;
 src/logger.mts:13-28; per-table counts src/tally.mts:360; import-log.txt).
-Spark-first: a plain run-log writer with the same line shape, plus a
-``StreamingQueryListener`` that turns Structured Streaming progress events
-into the same feed — the engine-native replacement for the fork+WebSocket
-relay (job state lives in the driver; no side channel needed).
+Here a plain run-log writer keeps the same line shape; GUI mode
+(``__main__.serve``) overrides ``log_line`` to put each line on the sync
+server's ``/log`` feed as well.
 """
 
 from __future__ import annotations
 
 import datetime
-import json
-
-from pyspark.sql import SparkSession
-from pyspark.sql.streaming import StreamingQueryListener
 
 
 class SyncLogger:
@@ -46,38 +41,3 @@ class SyncLogger:
     def _append(self, line: str) -> None:
         with open(self.path, "a", encoding="utf-8") as fh:
             fh.write(line + "\n")
-
-
-class SyncProgressListener(StreamingQueryListener):
-    """Streaming progress feed: collects per-batch (query, batch_id,
-    input rows, duration) — what the reference's GUI console shows per
-    poll. Attach with ``spark.streams.addListener``; events arrive on the
-    listener bus, off the query's hot path."""
-
-    def __init__(self, emit=None):
-        self.events: list[dict] = []
-        self._emit = emit
-
-    def onQueryStarted(self, event):
-        self.events.append({"kind": "started", "id": str(event.id),
-                            "name": event.name})
-
-    def onQueryProgress(self, event):
-        p = event.progress
-        rec = {"kind": "progress", "id": str(p.id), "batch_id": p.batchId,
-               "num_input_rows": p.numInputRows}
-        self.events.append(rec)
-        if self._emit:
-            self._emit(json.dumps(rec))
-
-    def onQueryIdle(self, event):
-        pass
-
-    def onQueryTerminated(self, event):
-        self.events.append({"kind": "terminated", "id": str(event.id)})
-
-
-def attach_listener(spark: SparkSession, emit=None) -> SyncProgressListener:
-    listener = SyncProgressListener(emit)
-    spark.streams.addListener(listener)
-    return listener

@@ -8,9 +8,10 @@ literal ``~`` sentinel on completion), kills it on ``POST /abort``, and
 proxies two Tally probes (``/list-company``, ``/tally-status``).
 
 Spark-first re-expression: the sync is not a child PROCESS but a
-driver-side callable (typically ``IncrementalSync.incremental_sync`` or
-a Structured Streaming start) running on a background thread of the same
-driver — Spark's unit of restartable work is the job, not the process.
+driver-side callable (``__main__.serve`` passes one that runs
+``run_import``, the same sync the CLI loop runs) on a background thread
+of the same driver — Spark's unit of restartable work is the job, not
+the process.
 The WebSocket relay becomes a cursor-polled JSON log feed
 (``GET /log?since=N``): stdlib-only, proxy-friendly, and trivially
 replaced by SSE/WebSocket behind any real gateway; the ``~`` completion

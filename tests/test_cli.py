@@ -156,6 +156,49 @@ def test_cli_incremental_sync_from_dump(spark, tmp_path):
     assert store.history("mst_unit") == hist_before
 
 
+def test_cli_poll_loop_converges_and_idles(spark, tmp_path, monkeypatch):
+    """The poll loop (``tally.frequency`` > 0) in incremental mode: the
+    tick after the source changed leaves the store equal to the changed
+    source, and a tick over an unchanged source commits no new version."""
+    import tally_database_loader_spark.__main__ as cli
+    from tally_database_loader_spark.operators.incremental import ParquetStore
+    dumpdir = _dump_incr(tmp_path, [("u-1", "Nos", "1"), ("u-2", "Kg", "2")])
+    defpath = tmp_path / "spec.yaml"
+    defpath.write_text(_DEF_INCR, encoding="utf-8")
+    cfgpath = tmp_path / "config.json"
+    store_path = tmp_path / "loopstore"
+    logpath = tmp_path / "log.txt"
+    cfgpath.write_text(json.dumps({
+        "database": {"technology": "parquet", "loadpath": str(store_path),
+                     "logpath": str(logpath)},
+        "tally": {"definition": str(defpath), "dumpdir": dumpdir,
+                  "sync": "incremental", "frequency": 1},
+    }), encoding="utf-8")
+    store = ParquetStore(str(store_path))
+    sleeps, after_tick2 = [], {}
+
+    def between_ticks(seconds):
+        sleeps.append(seconds)
+        if len(sleeps) == 1:   # delete u-1, modify u-2, insert u-3
+            _dump_incr(tmp_path, [("u-2", "Kilogram", "3"),
+                                  ("u-3", "Box", "4")])
+        else:
+            after_tick2["rows"] = sorted(map(tuple, store.read(
+                spark, "mst_unit").select("guid", "name", "alterid")
+                .collect()))
+            after_tick2["history"] = store.history("mst_unit")
+
+    monkeypatch.setattr(cli, "_sleep", between_ticks)
+    counts = main(["--config", str(cfgpath)], spark=spark, max_ticks=3)
+    assert counts == {"mst_unit": 2}
+    assert sleeps == [60, 60]
+    assert after_tick2["rows"] == [("u-2", "Kilogram", 3), ("u-3", "Box", 4)]
+    # tick 3 sees an unchanged source: the AlterId gate commits nothing
+    assert store.history("mst_unit") == after_tick2["history"]
+    log = logpath.read_text(encoding="utf-8")
+    assert log.count("Import completed successfully") == 3
+
+
 def test_cli_incremental_bootstraps_new_table_without_masking_changes(
         spark, tmp_path):
     """A table added to the definition AFTER the first sync must load —

@@ -3,12 +3,9 @@
 from __future__ import annotations
 
 import datetime
-import time
 
 from tally_database_loader_spark.config import load_config
-from tally_database_loader_spark.streaming.progress import (
-    SyncLogger, attach_listener,
-)
+from tally_database_loader_spark.streaming.progress import SyncLogger
 
 
 def test_config_layering_precedence():
@@ -32,32 +29,6 @@ def test_sync_logger(tmp_path):
     lines = open(log.path).read().splitlines()
     assert lines[0] == "mst_ledger: 3546 in 1.234 sec"   # reference line shape
     assert lines[1].endswith("sync complete")
-
-
-def test_streaming_listener_records_progress(spark, tmp_path):
-    listener = attach_listener(spark)
-    try:
-        df = spark.createDataFrame([(i,) for i in range(10)], "v int")
-        src = str(tmp_path / "src")
-        df.write.parquet(src)
-        q = (spark.readStream.schema("v int").parquet(src)
-             .groupBy().count()
-             .writeStream.format("memory").queryName("lst")
-             .outputMode("complete")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        for _ in range(40):                  # listener bus is async
-            if any(e["kind"] == "progress" and e["num_input_rows"] == 10
-                   for e in listener.events):
-                break
-            time.sleep(0.25)
-        kinds = {e["kind"] for e in listener.events}
-        assert "started" in kinds
-        assert any(e["kind"] == "progress" and e["num_input_rows"] == 10
-                   for e in listener.events)
-    finally:
-        spark.streams.removeListener(listener)
 
 
 def test_default_driver_mem_scales_with_host_ram(monkeypatch):

@@ -1,6 +1,5 @@
-"""Streaming-mode tests (SURVEY §2.H): the continuous sync query converges
-to full-resync state, replays are exactly-once, and the windowed event
-aggregation matches its batch twin."""
+"""Streaming-mode tests (SURVEY §2.H): session windows and the stateful
+streaming operators match their batch twins across micro-batches."""
 
 from __future__ import annotations
 
@@ -8,136 +7,6 @@ import datetime
 
 import pytest
 from pyspark.sql import functions as F
-
-from tally_database_loader_spark.operators.incremental import (IncrementalSync,
-                                                               ParquetStore)
-from tally_database_loader_spark.sources.registry import default_tables
-from tally_database_loader_spark.streaming.continuous import (
-    ContinuousTallySync, publish_snapshot, windowed_event_counts,
-)
-from tests.tally_fixtures import tally_source
-
-
-def _mutate(spark, src):
-    """Delete one voucher, add one (alterid 13) — a minimal poll delta."""
-    out = dict(src)
-    vch = src["Voucher"].filter(F.col("Guid") != "v-006")
-    from tests.tally_fixtures import VOUCHER_SCHEMA, _vch
-    extra = spark.createDataFrame(
-        [_vch("v-013", "2021-02-01", "Journal", "9", alter=13,
-              ledger_entries=[("Staff Advance", -25.0, None, None, None),
-                              ("Cash", 25.0, None, None, None)])],
-        schema=VOUCHER_SCHEMA)
-    out["Voucher"] = vch.unionByName(extra)
-    return out
-
-
-def _state(spark, store):
-    out = {}
-    for t in sorted(store.tables()):
-        df = store.read(spark, t)
-        out[t] = sorted([tuple(str(x) for x in r)
-                         for r in df.select(sorted(df.columns)).collect()])
-    return out
-
-
-@pytest.fixture(scope="module")
-def synced(spark, tmp_path_factory):
-    landing = str(tmp_path_factory.mktemp("landing"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt"))
-    store = ParquetStore(str(tmp_path_factory.mktemp("store")))
-    specs = default_tables()
-    cts = ContinuousTallySync(spark, store, specs, landing, ckpt)
-
-    src1 = tally_source(spark)
-    src2 = _mutate(spark, src1)
-    publish_snapshot(landing, src1, drop_id="drop-001")
-    cts.run_once()                       # batch 1: bootstrap full sync
-    publish_snapshot(landing, src2, drop_id="drop-002")
-    cts.run_once()                       # batch 2: incremental merge
-    return spark, store, cts, src2, specs
-
-
-@pytest.mark.slow  # heavy recurrence — driver-window budget, VERDICT r11 #1; runs under SPARK_GRAFT_RUN_SLOW=1
-def test_converges_to_full_resync(synced, tmp_path_factory):
-    spark, store, cts, src2, specs = synced
-    full_store = ParquetStore(str(tmp_path_factory.mktemp("full")))
-    IncrementalSync(spark, full_store, specs).full_sync(src2)
-    got, want = _state(spark, store), _state(spark, full_store)
-    assert set(got) == set(want)
-    for t in want:
-        assert got[t] == want[t], f"divergence in {t}"
-
-
-@pytest.mark.slow  # heavy recurrence — driver-window budget, VERDICT r11 #1; runs under SPARK_GRAFT_RUN_SLOW=1
-def test_exactly_once_replay(synced):
-    spark, store, cts, src2, specs = synced
-    seen = [(s["batch_id"], s["drop_id"]) for s in cts.batch_stats]
-    assert len(seen) == 2                       # one merge per drop
-    cts.run_once()                              # no new manifest entries
-    assert len(cts.batch_stats) == 2            # checkpoint skips replays
-    # the second batch was a real incremental merge, not a re-bootstrap
-    assert "deleted" in cts.batch_stats[1]
-    assert cts.batch_stats[1]["deleted"]["trn_voucher"] == 1
-
-
-def test_windowed_counts_stream_equals_batch(spark, tmp_path):
-    rows = [(datetime.datetime(2024, 1, 1, h, m), t)
-            for h in range(3) for m in (5, 25, 45)
-            for t in ("click", "view")]
-    batch = spark.createDataFrame(rows, "ts timestamp, event_type string")
-    src_dir = str(tmp_path / "events")
-    batch.write.parquet(src_dir)
-
-    stream = (spark.readStream.schema("ts timestamp, event_type string")
-              .parquet(src_dir))
-    agg = windowed_event_counts(stream, window="1 hour", watermark="30 minutes")
-    q = (agg.writeStream.format("memory").queryName("winagg")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = sorted(tuple(str(x) for x in r)
-                 for r in spark.sql("select * from winagg").collect())
-    want = sorted(tuple(str(x) for x in r)
-                  for r in windowed_event_counts(batch, window="1 hour").collect())
-    assert got == want and len(got) == 6
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream equi+interval join: streaming result == batch result
-    on identical inputs, and only pairs inside the time bounds appear."""
-    from tally_database_loader_spark.streaming.continuous import \
-        stream_interval_join
-    base = datetime.datetime(2024, 1, 1, 9, 0)
-    lrows = [(u, base + datetime.timedelta(minutes=m), f"L{u}-{m}")
-             for u in (1, 2) for m in (0, 20)]
-    rrows = [(u, base + datetime.timedelta(minutes=m), f"R{u}-{m}")
-             for u in (1, 2) for m in (1, 9, 25, 31)]
-    schema_l = "user_id bigint, ts timestamp, tag string"
-    lbatch = spark.createDataFrame(lrows, schema_l)
-    rbatch = spark.createDataFrame(rrows, schema_l)
-    want = sorted(tuple(map(str, r)) for r in
-                  stream_interval_join(lbatch, rbatch, upper="10 minutes")
-                  .collect())
-    # per user: L@0 -> {R@1, R@9}; L@20 -> {R@25} (R@31 is past +10min,
-    # R@9/R@1 are before lower=0) => 3 pairs x 2 users
-    assert len(want) == 6
-    ldir, rdir = str(tmp_path / "l"), str(tmp_path / "r")
-    lbatch.write.parquet(ldir)
-    rbatch.write.parquet(rdir)
-    ls = spark.readStream.schema(schema_l).parquet(ldir)
-    rs = spark.readStream.schema(schema_l).parquet(rdir)
-    q = (stream_interval_join(ls, rs, upper="10 minutes")
-         .writeStream.format("memory").queryName("sij")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = sorted(tuple(map(str, r))
-                 for r in spark.sql("select * from sij").collect())
-    assert got == want
 
 
 def test_sessionize_stream_matches_batch(spark, tmp_path):
@@ -429,36 +298,6 @@ def test_bloom_positions_stream_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-@pytest.mark.slow  # heavy recurrence — driver-window budget, VERDICT r11 #1; runs under SPARK_GRAFT_RUN_SLOW=1
-def test_same_batch_drops_merge_in_publication_order(spark, tmp_path):
-    """Review r4: two snapshot drops landing in ONE micro-batch must
-    apply in PUBLICATION order (the manifest's monotonic seq), not
-    drop_id order — uuid ids are random, and applying the older snapshot
-    last would classify the newer snapshot's rows as deletes and destroy
-    them. drop_ids here are chosen so id-order is the REVERSE of
-    publication order."""
-    from tests.tally_fixtures import tally_source
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    store = ParquetStore(str(tmp_path / "store"))
-    specs = default_tables()
-    cts = ContinuousTallySync(spark, store, specs, landing, ckpt)
-
-    src1 = tally_source(spark)
-    src2 = _mutate(spark, src1)           # newer state: v-006 deleted etc.
-    publish_snapshot(landing, src1, drop_id="zzz-older")
-    publish_snapshot(landing, src2, drop_id="aaa-newer")
-    cts.run_once()                        # ONE micro-batch, both drops
-
-    applied = [s["drop_id"] for s in cts.batch_stats]
-    assert applied == ["zzz-older", "aaa-newer"], \
-        f"drops applied out of publication order: {applied}"
-    vch = {r["guid"] for r in store.read(spark, "trn_voucher").collect()}
-    assert "v-006" not in vch, "older snapshot resurrected a deleted row"
-    assert "v-013" in vch, "newer snapshot's insert was lost"
-
-
 def test_stateful_operators_accept_string_keys(spark, tmp_path):
     """Review r4: output/state schemas must mirror the caller's key/id
     types — the docstring's own per-LEDGER example is string-keyed, and
@@ -495,61 +334,6 @@ def test_stateful_operators_accept_string_keys(spark, tmp_path):
     q.awaitTermination()
     got = {r["fingerprint"]: (r["doc_id"], r["dup_count"]) for r in dout}
     assert got == {"fp1": ("doc-a", 1), "fp2": ("doc-c", 0)}  # min-wins
-
-
-@pytest.mark.slow  # heavy recurrence — driver-window budget, VERDICT r11 #1; runs under SPARK_GRAFT_RUN_SLOW=1
-def test_seq_floor_reseeds_from_disk_after_producer_restart(spark, tmp_path, monkeypatch):
-    """ADVICE r4: the monotonic seq floor is process-local, so a producer
-    restart combined with a backwards wall-clock step (NTP) could
-    publish a NEWER drop with a SMALLER seq than one already on disk —
-    re-creating the out-of-order merge seq prevents. On first publish
-    the floor must seed from the max seq already in the manifest dir."""
-    import json
-    import os
-    from tally_database_loader_spark.streaming import continuous as C
-
-    landing = str(tmp_path / "landing")
-    src = tally_source(spark)
-    monkeypatch.setattr(C, "_LAST_SEQ", 0)
-    monkeypatch.setattr(C, "_SEEDED_DIRS", set())
-    C.publish_snapshot(landing, src, drop_id="before-restart")
-    mdir = os.path.join(landing, "manifest")
-    with open(os.path.join(mdir, "before-restart.json")) as fh:
-        seq_before = json.loads(fh.readline())["seq"]
-
-    # simulate restart (fresh process floor + empty seed cache) + NTP
-    # step backwards
-    monkeypatch.setattr(C, "_LAST_SEQ", 0)
-    monkeypatch.setattr(C, "_SEEDED_DIRS", set())
-    monkeypatch.setattr(C.time, "time_ns", lambda: seq_before - 10 ** 9)
-    C.publish_snapshot(landing, src, drop_id="after-restart")
-    with open(os.path.join(mdir, "after-restart.json")) as fh:
-        seq_after = json.loads(fh.readline())["seq"]
-    assert seq_after > seq_before, \
-        f"post-restart seq {seq_after} not above published {seq_before}"
-    # stage files and junk in the manifest dir must not break seeding —
-    # including valid-JSON-but-not-an-object lines (AttributeError trap)
-    monkeypatch.setattr(C, "_LAST_SEQ", 0)
-    with open(os.path.join(mdir, ".partial.json.tmp"), "w") as fh:
-        fh.write('{"seq": 99999999999999999999}')
-    with open(os.path.join(mdir, "junk.json"), "w") as fh:
-        fh.write("not json")
-    with open(os.path.join(mdir, "scalar.json"), "w") as fh:
-        fh.write("12345")
-    assert C._max_published_seq(mdir) == seq_after
-    # a second landing dir seeds ITS OWN floor even mid-process (the
-    # _SEEDED_DIRS cache is per-dir, not first-publish-only)
-    landing2 = str(tmp_path / "landing2")
-    import json as _json
-    m2 = os.path.join(landing2, "manifest")
-    os.makedirs(m2)
-    high = seq_after + 10 ** 12
-    with open(os.path.join(m2, "pre.json"), "w") as fh:
-        fh.write(_json.dumps({"drop_id": "pre", "seq": high,
-                              "roots": [], "path": "x"}) + "\n")
-    C.publish_snapshot(landing2, src, drop_id="post")
-    with open(os.path.join(m2, "post.json")) as fh:
-        assert _json.loads(fh.readline())["seq"] > high
 
 
 def test_streaming_fp_near_dedup_connectivity_matches_batch(spark, tmp_path):

@@ -12,7 +12,7 @@ from tally_database_loader_spark.sources.registry import (
     FieldSpec, TableSpec, default_tables,
 )
 from tally_database_loader_spark.sources.tally_xml import (
-    auto_dates, generate_tdl_xml, read_tdl_response, substitute_parameters,
+    generate_tdl_xml, read_tdl_response, substitute_parameters,
 )
 
 LEDGER_SPEC = TableSpec("mst_test", "Ledger", [
@@ -99,13 +99,6 @@ def test_substitute_parameters():
     assert "&amp;" in out and "42" in out
 
 
-def test_auto_dates(spark):
-    df = spark.createDataFrame(
-        [("g1", datetime.date(2024, 5, 2)), ("g2", datetime.date(2023, 4, 1))],
-        "guid string, date date")
-    assert auto_dates(df) == ("2023-04-01", "2024-05-02")
-
-
 def test_ddl_generation_all_dialects():
     """DDL derives from the registry for each reference dialect variant
     (reference platform/{mysql,postgresql,google-bigquery} + root mssql
@@ -138,7 +131,7 @@ def test_live_http_fetch_roundtrip(spark, tmp_path):
     import threading
 
     from tally_database_loader_spark.sources.tally_http import (
-        fetch_table, is_tally_reachable, post_tally_xml)
+        fetch_table, post_tally_xml)
 
     response = _response_xml()
     received = {}
@@ -154,11 +147,6 @@ def test_live_http_fetch_roundtrip(spark, tmp_path):
             self.end_headers()
             self.wfile.write(payload)
 
-        def do_GET(self):  # tally-status probe
-            self.send_response(200)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
-
         def log_message(self, *a):
             pass
 
@@ -166,7 +154,6 @@ def test_live_http_fetch_roundtrip(spark, tmp_path):
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     url = f"http://127.0.0.1:{srv.server_port}"
     try:
-        assert is_tally_reachable(url)
         df = fetch_table(spark, LEDGER_SPEC, url=url,
                          subs={"targetCompany": "##SVCurrentCompany"},
                          stage_dir=str(tmp_path))
@@ -180,110 +167,46 @@ def test_live_http_fetch_roundtrip(spark, tmp_path):
         assert post_tally_xml(url, "<x/>") == response
     finally:
         srv.shutdown()
-    assert not is_tally_reachable("http://127.0.0.1:1", timeout=0.5)
-
-
-def test_tally_datasource_pushdown_and_slicing(spark, tmp_path):
-    """spark.read.format('tally'): Catalyst predicates reach pushFilters and
-    compile into TDL <FILTER> formulae; live mode extracts year slices as
-    parallel partitions (one POST each); dump mode reads response files."""
-    import http.server
-    import threading
-
-    from pyspark.sql import functions as F
-    from tally_database_loader_spark.sources import tally_datasource
-
-    tally_datasource.register(spark)
-    response = _response_xml()
-    posts = []
-
-    class StubTally(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers["Content-Length"])
-            posts.append(self.rfile.read(n).decode("utf-16le"))
-            payload = response.encode("utf-8")
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.HTTPServer(("127.0.0.1", 0), StubTally)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_port}"
-    try:
-        # live mode, 2 year slices, one pushed filter -------------------
-        # mst_ledger's spec has name/parent/... fields; our canned response
-        # only matches the first 5 columns — enough to assert plumbing.
-        df = (spark.read.format("tally")
-              .option("table", "mst_vouchertype")
-              .option("url", url)
-              .option("from_date", "2020-04-01")
-              .option("to_date", "2021-03-31")
-              .load()
-              .filter(F.col("name") == "Journal"))
-        rows = df.collect()
-        # the pushed EqualTo must appear as a TDL IsEqual filter clause in
-        # EVERY posted program, and two year-slices => two POSTs
-        assert len(posts) == 2
-        assert all('$$IsEqual:$Name:"Journal"' in p for p in posts)
-        assert all("SVFROMDATE" in p for p in posts)
-        # canned response rows don't contain 'Journal' in the name column,
-        # so the locally re-applied filter yields 0 rows — correctness is
-        # preserved even though the stub server ignored <FILTER>
-        assert rows == []
-    finally:
-        srv.shutdown()
-
-    # dump mode: one file = one partition, typed decode -----------------
-    d = tmp_path / "dumps"
-    d.mkdir()
-    (d / "part1.xml").write_text(_response_xml(), encoding="utf-8")
-    got = (spark.read.format("tally")
-           .option("table", "mst_vouchertype")
-           .option("path", str(d))
-           .load().collect())
-    assert len(got) == 3
-    by_guid = {r[0]: r for r in got}
-    assert by_guid["g-002"][1] == "Sharma <Traders>"  # entity unescape
 
 
 def test_both_readers_decode_empty_cells_alike(spark, tmp_path):
-    """An empty cell of every field type decodes to the same value
-    through read_tdl_response and the format("tally") dump reader: NULL
-    for date, logical, amount, quantity and rate, 0 for number, '' for
-    text. An empty date must not abort the scan."""
-    from tally_database_loader_spark.sources import tally_datasource
-
-    tally_datasource.register(spark)
+    """A full and an all-empty record of every field type decode to
+    fixed rows. An empty cell is NULL for date, logical, amount, quantity
+    and rate, 0 for number and '' for text; an empty date must not abort
+    the scan. The two tables together carry all seven field types."""
     specs = default_tables()
-    # the two tables together carry all seven field types
-    for table in ("mst_stock_item", "mst_gst_effective_rate"):
+    full = {"text": "x", "logical": "1", "date": "2024-04-01",
+            "number": "7", "amount": "-1.50", "quantity": "2.0000",
+            "rate": "3.2500"}
+    want = {
+        # text ×7, conversion, opening_balance/_rate/_value, text ×3,
+        # gst_rate, text
+        "mst_stock_item": [
+            ("", "", "", "", "", "", "", 0, None, None, None,
+             "", "", "", 0, ""),
+            ("x", "x", "x", "x", "x", "x", "x", 7,
+             decimal.Decimal("2.0000"), decimal.Decimal("3.2500"),
+             decimal.Decimal("-1.50"), "x", "x", "x", 7, "x"),
+        ],
+        # item, applicable_from, text ×2, rate (amount),
+        # is_rcm_applicable, text ×4
+        "mst_gst_effective_rate": [
+            ("", None, "", "", None, None, "", "", "", ""),
+            ("x", datetime.date(2024, 4, 1), "x", "x",
+             decimal.Decimal("-1.50"), 1, "x", "x", "x", "x"),
+        ],
+    }
+    for table, rows_want in want.items():
         spec = specs[table]
-        full = {"text": "x", "logical": "1", "date": "2024-04-01",
-                "number": "7", "amount": "-1.50", "quantity": "2.0000",
-                "rate": "3.2500"}
         rows = [[full[f.type] for f in spec.fields],
                 ["" for _ in spec.fields]]
-        body = "\r\n".join(
-            "  " + "".join(f"<F{i:02d}>{v}</F{i:02d}>"
-                           for i, v in enumerate(r, start=1))
-            for r in rows)
-        d = tmp_path / table
-        d.mkdir()
-        (d / "dump.xml").write_text(f"<ENVELOPE>\r\n{body}\r\n</ENVELOPE>",
-                                    encoding="utf-8")
-        product = sorted(map(tuple, read_tdl_response(
-            spark, str(d / "dump.xml"), spec).collect()), key=repr)
-        source = sorted(map(tuple, spark.read.format("tally")
-                            .option("table", table).option("path", str(d))
-                            .load().collect()), key=repr)
-        assert product == source, table
-        empty = next(r for r in product if r[0] == "")
-        want = {"text": "", "number": 0}
-        assert list(empty) == [want.get(f.type) for f in spec.fields], table
+        body = "\r\n".join("  " + _record(r) for r in rows)
+        p = tmp_path / f"{table}.xml"
+        p.write_text(f"<ENVELOPE>\r\n{body}\r\n</ENVELOPE>",
+                     encoding="utf-8")
+        got = sorted(map(tuple, read_tdl_response(
+            spark, str(p), spec).collect()), key=repr)
+        assert got == rows_want, table
 
 
 HOSTILE_SPEC = TableSpec("mst_hostile", "Ledger", [
@@ -318,16 +241,12 @@ def test_read_tdl_response_pads_short_records(spark, tmp_path):
 
 
 def test_readers_agree_on_hostile_dump(spark, tmp_path):
-    """``read_tdl_response`` and the ``format("tally")`` parser
-    (``_parse_rows``) give the same rows on a dump that exercises every
-    rewrite step: nested and numeric entities, a bare '&', line breaks
-    and a tab inside a value, a FLDBLANK run, non-space edge characters,
-    digits beyond ASCII, half-way decimals, an integer past 2**53, an
-    empty cell of every type, a short record and whitespace after
-    ``</ENVELOPE>``."""
-    from tally_database_loader_spark.sources.tally_datasource import \
-        _parse_rows
-
+    """``read_tdl_response`` gives fixed rows on a dump that exercises
+    every rewrite step: nested and numeric entities, a bare '&', line
+    breaks and a tab inside a value, a FLDBLANK run, non-space edge
+    characters, digits beyond ASCII, half-way decimals, an integer past
+    2**53, an empty cell of every type, a short record and whitespace
+    after ``</ENVELOPE>``."""
     records = [
         _record(["h-1", "&amp;lt;Tag&amp;gt; &#39;q&#39; A & B&tab;C",
                  "1", "2024-04-01", "9007199254740993", "1.005",
@@ -343,44 +262,27 @@ def test_readers_agree_on_hostile_dump(spark, tmp_path):
             + "\r\n</ENVELOPE> \t \r\n")
     p = tmp_path / "hostile.xml"
     p.write_bytes(text.encode("utf-8"))
-    product = sorted(map(tuple, read_tdl_response(
+    got = sorted(map(tuple, read_tdl_response(
         spark, str(p), HOSTILE_SPEC).collect()), key=lambda r: r[0])
-    source = sorted(_parse_rows(text, HOSTILE_SPEC), key=lambda r: r[0])
-    assert product == source
-    rows = {r[0]: r for r in product}
-    assert rows["h-1"][1] == "<Tag> q A & BC"          # sequential unescape
-    assert rows["h-1"][4:6] == (9007199254740993, decimal.Decimal("1.01"))
-    assert rows["h-2"][1] == 'Line1Line2 End "\''
-    assert rows[""] == ("", "", None, None, 0, None, None, None)
-    assert rows["h-5"] == ("h-5", "only") + (None,) * 6
-
-
-def test_live_readers_post_tally_dates(stub_tally):
-    """Both live readers of ``format("tally")`` send Tally the date window
-    in d-MMM-yyyy, as the CLI does: the batch reader per year slice, the
-    stream reader over its default window."""
-    import re
-
-    from tally_database_loader_spark.sources.tally_datasource import (
-        TallyReader, TallyStreamReader)
-
-    port, bodies = stub_tally
-    url = f"http://127.0.0.1:{port}"
-    unit = TableSpec("mst_unit", "Unit", [
-        FieldSpec("guid", "$Guid"), FieldSpec("name", "$Name"),
-        FieldSpec("opening", "$OpeningBalance", "amount")])
-    reader = TallyReader({"url": url, "from_date": "2020-04-01",
-                          "to_date": "2021-03-31"}, unit)
-    assert [len(list(reader.read(s))) for s in reader.partitions()] == [2, 2]
-    streamed = TableSpec("mst_unit", "Unit", unit.fields + [
-        FieldSpec("alterid", "$AlterId", "number")])
-    TallyStreamReader({"url": url}, streamed).readBetweenOffsets(
-        {"alterid": 0}, {"alterid": 5})
-    window = re.compile(r"<SVFROMDATE>(.*?)</SVFROMDATE>"
-                        r"<SVTODATE>(.*?)</SVTODATE>")
-    assert [window.search(b).groups() for b in bodies] == [
-        ("1-Apr-2020", "31-Dec-2020"), ("1-Jan-2021", "31-Mar-2021"),
-        ("1-Jan-1990", "31-Dec-2099")]
+    D = decimal.Decimal
+    assert got == [
+        # every cell empty: text '', number 0, the other types NULL
+        ("", "", None, None, 0, None, None, None),
+        # sequential unescape, &tab; and numeric entities dropped; the
+        # integer 2**53 + 1 exact; ROUND_HALF_UP to the type's scale
+        ("h-1", "<Tag> q A & BC", 1, datetime.date(2024, 4, 1),
+         9007199254740993, D("1.01"), D("-2.0001"), D("18.0000")),
+        # line breaks dropped, tab to space; the ñ date is NULL; half-up
+        # rounds away from zero
+        ("h-2", 'Line1Line2 End "\'', 0, None, -7, D("-0.13"),
+         D("3.0000"), D("0.0001")),
+        # NBSP edges kept; an entity of non-ASCII digits is not numeric
+        ("h-3", "\u00a0pad\u00a0 &#\u0661\u0662; x", 1,
+         datetime.date(1999, 12, 31), 0, D("2.50"), D("0.5000"),
+         D("1.0000")),
+        # a short record pads with NULL
+        ("h-5", "only") + (None,) * 6,
+    ]
 
 
 def test_read_tdl_response_build_round_trips(spark, tmp_path,
@@ -395,122 +297,6 @@ def test_read_tdl_response_build_round_trips(spark, tmp_path,
         n = py4j_round_trips(
             lambda: read_tdl_response(spark, str(p), specs[table]))
         assert n <= 50, (table, n)
-
-
-def test_tdl_formula_literal_safety():
-    """Only safely-renderable literals compile into TDL formulae; dates,
-    quote-bearing strings and booleans stay client-side (a malformed
-    pushed formula could over-filter rows the re-check can never
-    restore)."""
-    import datetime
-
-    from pyspark.sql.datasource import EqualTo, GreaterThan, In
-    from tally_database_loader_spark.sources.registry import default_tables
-    from tally_database_loader_spark.sources.tally_datasource import \
-        _tdl_formula
-
-    spec = default_tables()["mst_vouchertype"]
-    # plain string literals on TEXT fields render
-    assert _tdl_formula(spec, EqualTo(("name",), "Journal")) \
-        == '$$IsEqual:$Name:"Journal"'
-    # NON-TEXT fields never push: their <SET> encodings rewrite the raw
-    # value (logical Yes/No → 1/0 here), so a raw-field server formula
-    # evaluates against different values than Spark's predicate over the
-    # encoded output — `$AffectsStock > 0` would compare Yes/No to 0 and
-    # over-filter rows the client re-check can never restore
-    assert _tdl_formula(spec, GreaterThan(("affects_stock",), 0)) is None
-    assert _tdl_formula(spec, EqualTo(("affects_stock",), 1)) is None
-    # a date would render as unquoted arithmetic (1995-1-1) — rejected
-    assert _tdl_formula(
-        spec, GreaterThan(("name",), datetime.date(1995, 1, 1))) is None
-    # an embedded double quote would break out of the formula — rejected
-    assert _tdl_formula(spec, EqualTo(("name",), 'a"b')) is None
-    assert _tdl_formula(spec, In(("name",), ("ok", 'a"b'))) is None
-    # XML metacharacters would corrupt the <SYSTEM> element — rejected
-    assert _tdl_formula(spec, EqualTo(("name",), "A&B Ltd")) is None
-    assert _tdl_formula(spec, EqualTo(("name",), "Sharma <Traders>")) is None
-    # booleans have no TDL literal form — rejected
-    assert _tdl_formula(spec, EqualTo(("affects_stock",), True)) is None
-    # computed-expression fields (mst_vouchertype.parent is an if/then
-    # normalization) cannot be pasted into a formula — rejected
-    assert _tdl_formula(spec, EqualTo(("parent",), "Contra")) is None
-    # numeric comparisons never push (no non-text field may), regardless
-    # of how the literal would render
-    assert _tdl_formula(spec, GreaterThan(("affects_stock",), 1e-05)) is None
-    assert _tdl_formula(spec, GreaterThan(("affects_stock",),
-                                          float("inf"))) is None
-    assert _tdl_formula(spec, GreaterThan(("affects_stock",), 0.25)) is None
-
-
-def test_tally_stream_source_alterid_offsets(spark, tmp_path):
-    """readStream.format('tally'): AlterId is the offset — unchanged probe
-    => empty batch (H2 gate); advanced probe => only rows past the last
-    committed AlterId arrive (C8 dynamic filter), across query restarts."""
-    import http.server
-    import threading
-
-    from tally_database_loader_spark.sources import tally_datasource
-
-    tally_datasource.register(spark)
-    state = {"alterid": 5}
-
-    def vch_row(i, guid, name, alt):
-        return (f"<F01>{guid}</F01><F02>{name}</F02><F03>p</F03>"
-                f"<F04>Manual</F04><F05>0</F05><F06>0</F06><F07>{alt}</F07>")
-
-    def data_rows():
-        rows = [vch_row(1, "v-1", "Sales", 3), vch_row(2, "v-2", "Receipt", 5)]
-        if state["alterid"] >= 9:
-            rows += [vch_row(3, "v-3", "Journal", 8),
-                     vch_row(4, "v-4", "Contra", 9)]
-        return "<ENVELOPE>\r\n" + "\r\n".join(rows) + "\r\n</ENVELOPE>"
-
-    class StubTally(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers["Content-Length"])
-            body = self.rfile.read(n).decode("utf-16le")
-            if "AltMstId" in body:
-                payload = (f"<ENVELOPE>\r\n<F01>{state['alterid']}</F01>"
-                           "\r\n</ENVELOPE>").encode("utf-8")
-            else:
-                payload = data_rows().encode("utf-8")
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.HTTPServer(("127.0.0.1", 0), StubTally)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_port}"
-    ck = str(tmp_path / "ck")
-
-    def run_once():
-        out: list = []
-        stream = (spark.readStream.format("tally")
-                  .option("table", "mst_vouchertype")
-                  .option("url", url)
-                  .option("with_alterid", "true")
-                  .load())
-        q = (stream.writeStream
-             .foreachBatch(lambda df, _id: out.extend(df.collect()))
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return sorted((r["guid"], r["alterid"]) for r in out)
-
-    try:
-        # first run: everything past offset 0
-        assert run_once() == [("v-1", 3), ("v-2", 5)]
-        # no AlterId movement => empty batch after restart
-        assert run_once() == []
-        # source advances; only rows past the committed offset 5 arrive
-        state["alterid"] = 9
-        assert run_once() == [("v-3", 8), ("v-4", 9)]
-    finally:
-        srv.shutdown()
 
 
 def test_tablespec_rejects_unknown_watermark_group():
