@@ -303,6 +303,14 @@ def main(argv: list[str] | None = None, *, spark: SparkSession | None = None,
         with open(cfg_path, encoding="utf-8") as fh:
             cfg_text = fh.read()
     cfg = load_config(cfg_text, args)
+    freq_min = int(cfg.get("tally", "frequency") or 0)
+    if (freq_min > 0 and not cfg["tally"].get("dumpdir")
+            and not cfg["tally"].get("company")):
+        # an empty company means "whatever Tally has open": a company
+        # switched mid-loop would merge its rows over the previous one's
+        # (the reference refuses this too, src/index.mts:83-89)
+        raise SystemExit("tally.company must name the company to sync "
+                         "when tally.frequency > 0 (continuous sync)")
 
     own_spark = spark is None
     if own_spark:
@@ -317,7 +325,6 @@ def main(argv: list[str] | None = None, *, spark: SparkSession | None = None,
         return counts
 
     try:
-        freq_min = int(cfg.get("tally", "frequency") or 0)
         if freq_min <= 0:
             return tick()
         ticks = 0

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from .text import fingerprint_md5, normalized_text, tokens
+from .text import fingerprint_md5, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -39,8 +39,9 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
         df.join(exact_duplicates(df,...).filter('n_copies>1'), ...)
     """
-    return (df.select(F.col(id_col).alias("doc_id"),
-                      fingerprint_md5(F.col(text_col)).alias("fingerprint"))
+    return (df.selectExpr(
+                f"`{id_col}` AS doc_id",
+                f"{fingerprint_md5(f'`{text_col}`')} AS fingerprint")
               .groupBy("fingerprint")
               .agg(F.min("doc_id").alias("keep_id"),
                    F.count(F.lit(1)).alias("n_copies")))
@@ -50,15 +51,14 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # shingling
 # ---------------------------------------------------------------------------
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingle array (space-joined)."""
+def shingles(text: str, n: int = 3) -> str:
+    """SQL text of the distinct word n-gram shingle array (space-joined)
+    of the SQL string expression ``text``."""
     t = tokens(text)
-    return F.when(
-        F.size(t) >= n,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), F.size(t) - (n - 1)),
-                        lambda i: F.concat_ws(" ", F.slice(t, i, n)))),
-    ).otherwise(F.array().cast("array<string>"))
+    return (f"CASE WHEN size({t}) >= {n} THEN array_distinct(transform("
+            f"sequence(1, size({t}) - {n - 1}), "
+            f"i -> concat_ws(' ', slice({t}, i, {n})))) "
+            f"ELSE CAST(array() AS array<string>) END")
 
 
 def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3,
@@ -76,7 +76,7 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3,
     from ..sources.catalog import fan_out
     df = fan_out(df, id_col, density=density)
     return (df.select(F.col(id_col).alias("doc_id"),
-                      F.explode(shingles(F.col(text_col), n)).alias("shingle")))
+                      F.explode(F.expr(shingles(f"`{text_col}`", n))).alias("shingle")))
 
 
 # ---------------------------------------------------------------------------
@@ -92,20 +92,21 @@ def jaccard_pairs(sh: DataFrame, threshold: float,
     Without candidates this is the quadratic baseline (documents sharing
     ≥1 shingle); with candidates it is the cheap LSH verification join.
     """
-    a = sh.select(F.col("doc_id").alias("d1"), "shingle")
-    b = sh.select(F.col("doc_id").alias("d2"), "shingle")
-    common = (a.join(b, ["shingle"])
-                .filter(F.col("d1") < F.col("d2"))
-                .groupBy("d1", "d2").agg(F.count(F.lit(1)).alias("c")))
-    if candidates is not None:
-        common = common.join(candidates, ["d1", "d2"], "left_semi")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = F.col("c").cast("double") / (F.col("n1") + F.col("n2") - F.col("c"))
-    return (common.join(s1, "d1").join(s2, "d2")
-                  .select("d1", "d2", jac.alias("jaccard"))
-                  .filter(F.col("jaccard") >= threshold))
+    semi = ("" if candidates is None else
+            "LEFT SEMI JOIN {cand} k ON k.d1 = common.d1 AND k.d2 = common.d2")
+    return sh.sparkSession.sql(f"""
+WITH common AS (
+  SELECT a.doc_id AS d1, b.doc_id AS d2, count(1) AS c
+  FROM {{sh}} a JOIN {{sh}} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id),
+hits AS (SELECT * FROM common {semi}),
+sizes AS (SELECT doc_id, count(1) AS n FROM {{sh}} GROUP BY doc_id)
+SELECT d1, d2, jaccard FROM (
+  SELECT d1, d2, CAST(c AS DOUBLE) / (s1.n + s2.n - c) AS jaccard
+  FROM hits JOIN sizes s1 ON s1.doc_id = d1 JOIN sizes s2 ON s2.doc_id = d2)
+WHERE jaccard >= {float(threshold)!r}D""", sh=sh,
+                               **({} if candidates is None
+                                  else {"cand": candidates}))
 
 
 # ---------------------------------------------------------------------------
@@ -149,9 +150,9 @@ def minhash_signature_table(df: DataFrame, id_col: str, text_col: str,
         shingle_table(df, id_col, text_col, n)
     base = F.pmod(_parity_base(F.col("shingle")), F.lit(MINHASH_PRIME))
     hashed = sh.select("doc_id", base.alias("base"))
-    aggs = [F.min((F.col("base") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"mh{i}")
-            for i, (a, b) in enumerate(_permutation_constants(k))]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return hashed.groupBy("doc_id").agg(*[
+        F.expr(f"min((base * {a} + {b}) % {MINHASH_PRIME}) AS mh{i}")
+        for i, (a, b) in enumerate(_permutation_constants(k))])
 
 
 def lsh_candidates(df: DataFrame, id_col: str, text_col: str,
@@ -167,19 +168,17 @@ def lsh_candidates(df: DataFrame, id_col: str, text_col: str,
     r = k // bands
     sig = minhash_signature_table(df, id_col, text_col, k, n,
                                   _shingles=_shingles)
-    band_structs = F.array(*[
-        F.struct(F.lit(j).alias("band"),
-                 F.concat_ws(",", *[F.col(f"mh{j * r + i}").cast("string")
-                                    for i in range(r)]).alias("bsig"))
-        for j in range(bands)])
-    banded = (sig.select("doc_id", F.explode(band_structs).alias("b"))
-                 .select("doc_id", F.col("b.band").alias("band"),
-                         F.col("b.bsig").alias("bsig")))
-    a = banded.select(F.col("doc_id").alias("d1"), "band", "bsig")
-    b = banded.select(F.col("doc_id").alias("d2"), "band", "bsig")
-    return (a.join(b, ["band", "bsig"])
-             .filter(F.col("d1") < F.col("d2"))
-             .select("d1", "d2").distinct())
+    band_structs = ", ".join(
+        f"named_struct('band', {j}, 'bsig', concat_ws(',', "
+        + ", ".join(f"CAST(mh{j * r + i} AS STRING)" for i in range(r))
+        + "))" for j in range(bands))
+    return sig.sparkSession.sql(f"""
+WITH banded AS (
+  SELECT doc_id, b.band, b.bsig
+  FROM (SELECT doc_id, explode(array({band_structs})) AS b FROM {{sig}}))
+SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+FROM banded a JOIN banded b ON a.band = b.band AND a.bsig = b.bsig
+WHERE a.doc_id < b.doc_id""", sig=sig)
 
 
 def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
@@ -200,15 +199,15 @@ def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
     # to pin.
     cand = lsh_candidates(df, id_col, text_col, k, bands, n,
                           _shingles=sh_all).localCheckpoint(eager=True)
-    cand_docs = (cand.select(F.col("d1").alias("doc_id"))
-                     .unionByName(cand.select(F.col("d2").alias("doc_id")))
-                     .distinct())
     # Same trick for the verify-side shingles: jaccard_pairs reads its
     # input three times (a side, b side, sizes); restricting to candidate
     # docs first makes the checkpointed table small, and checkpointing it
     # means the full-corpus shingle explode runs once, not three times.
-    sh = (sh_all.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-                .localCheckpoint(eager=True))
+    sh = sh_all.sparkSession.sql("""
+SELECT /*+ BROADCAST(c) */ s.doc_id, s.shingle FROM {sh} s
+LEFT SEMI JOIN (SELECT d1 AS doc_id FROM {cand}
+                UNION SELECT d2 FROM {cand}) c ON s.doc_id = c.doc_id""",
+                                 sh=sh_all, cand=cand).localCheckpoint(eager=True)
     return jaccard_pairs(sh, threshold, candidates=cand)
 
 
@@ -394,10 +393,9 @@ def span_table(df: DataFrame, id_col: str, text_col: str,
     The scalable unit for sub-document dedup: spans are bounded-size
     strings, so the downstream groupBy(span) shuffle carries rows of
     predictable width no matter how long individual documents are."""
-    from ..llm.text import tokens
     from ..sources.catalog import fan_out
     df = fan_out(df, id_col)
-    t = tokens(F.col(text_col))
+    t = F.expr(tokens(f"`{text_col}`"))
     n_spans = F.ceil(F.size(t) / F.lit(span_tokens)).cast("int")
     spans = F.when(F.size(t) == 0, F.array().cast("array<string>")).otherwise(
         F.transform(F.sequence(F.lit(0), n_spans - 1),
@@ -462,7 +460,7 @@ def span_dedup(df: DataFrame, id_col: str, text_col: str,
     # n_spans is closed-form per document (it is the very expression
     # span_table explodes), so the third derivation of the span table
     # collapses to map-side arithmetic over the source rows.
-    t = tokens(F.col(text_col))
+    t = F.expr(tokens(f"`{text_col}`"))
     n_spans = F.ceil(F.size(t) / F.lit(span_tokens)).cast("int")
     totals = df.select(F.col(id_col).alias("doc_id"),
                        F.coalesce(n_spans, F.lit(0)).alias("n_spans"))
@@ -490,12 +488,12 @@ def gram_table(df: DataFrame, id_col: str, text_col: str,
     # density=k: stride-1 windows amplify bytes ~×k before the gram
     # shuffle — measured fastest at full width (fan-out sweep, r12)
     df = fan_out(df, id_col, density=float(k))
-    t = tokens(F.col(text_col))
-    grams = F.when(F.size(t) < k, F.array().cast("array<string>")).otherwise(
-        F.transform(F.sequence(F.lit(1), F.size(t) - (k - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(t, i, k))))
-    return df.select(F.col(id_col).alias("doc_id"),
-                     F.posexplode(grams).alias("pos", "gram"))
+    t = tokens(f"`{text_col}`")
+    grams = (f"CASE WHEN size({t}) < {k} THEN CAST(array() AS array<string>) "
+             f"ELSE transform(sequence(1, size({t}) - {k - 1}), "
+             f"i -> concat_ws(' ', slice({t}, i, {k}))) END")
+    return df.selectExpr(f"`{id_col}` AS doc_id",
+                         f"posexplode({grams}) AS (pos, gram)")
 
 
 def substring_dedup(df: DataFrame, id_col: str, text_col: str,
@@ -536,7 +534,6 @@ def substring_dedup(df: DataFrame, id_col: str, text_col: str,
     Returns (doc_id, n_tokens, n_removed, n_spans_removed, dedup_text).
     """
     gr = gram_table(df, id_col, text_col, k)
-    gr = gr.select("doc_id", "pos", F.xxhash64("gram").alias("g"))
     # Keeper election as a WINDOW over the gram partition instead of the
     # old groupBy(g) + join-back: the join's sides each embedded the
     # stride-1 gram explode, so the corpus was tokenized and exploded
@@ -544,17 +541,16 @@ def substring_dedup(df: DataFrame, id_col: str, text_col: str,
     # election (guide §2.4); min-struct/count semantics unchanged, and
     # boilerplate-gram skew hits this shuffle exactly as it hit the
     # join's anchor side before.
-    wg = W.partitionBy("g")
-    dup = (gr.select("doc_id", "pos",
-                     F.min(F.struct("doc_id", "pos")).over(wg).alias("keep"),
-                     F.count(F.lit(1)).over(wg).alias("n_occ"))
-             .filter((F.col("n_occ") >= 2)
-                     & ~((F.col("keep.doc_id") == F.col("doc_id"))
-                         & (F.col("keep.pos") == F.col("pos"))))
-             .select("doc_id", "pos"))
+    dup = df.sparkSession.sql("""
+SELECT doc_id, pos FROM (
+  SELECT doc_id, pos, min(struct(doc_id, pos)) OVER w AS keep,
+         count(1) OVER w AS n_occ
+  FROM (SELECT doc_id, pos, xxhash64(gram) AS g FROM {gr})
+  WINDOW w AS (PARTITION BY g))
+WHERE n_occ >= 2 AND NOT (keep.doc_id = doc_id AND keep.pos = pos)""", gr=gr)
     return _reassemble_removed(
-        df.select(F.col(id_col).alias("doc_id"),
-                  tokens(F.col(text_col)).alias("t")),
+        df.selectExpr(f"`{id_col}` AS doc_id",
+                      f"{tokens(f'`{text_col}`')} AS t"),
         dup, k)
 
 
@@ -570,45 +566,36 @@ def _reassemble_removed(base: DataFrame, dup: DataFrame,
     (doc_id, t) with t the full token array; a NULL t (NULL source
     text) normalizes to the empty array so the output contract matches
     ``span_dedup`` — n_tokens 0 and dedup_text '', never NULL."""
-    base = base.select(
-        "doc_id",
-        F.coalesce("t", F.array().cast("array<string>")).alias("t"))
-    covered = dup.select(
-        "doc_id",
-        F.explode(F.sequence(F.col("pos"),
-                             F.col("pos") + F.lit(k - 1))).alias("tpos"))
-    rem = (covered.groupBy("doc_id")
-                  .agg(F.array_sort(F.collect_set("tpos")).alias("removed")))
-    joined = base.join(rem, "doc_id", "left")
-    rs = F.coalesce(F.col("removed"),
-                    F.array().cast("array<int>"))
     # island boundaries in the sorted removal set (element_at is 1-based,
     # so element_at(rs, i) IS the predecessor of the element at 0-based
-    # lambda index i; the when() guards keep ANSI mode off index 0 /
+    # lambda index i; the CASE guards keep ANSI mode off index 0 /
     # past-the-end)
-    starts = F.filter(
-        rs, lambda x, i: F.when(i == F.lit(0), F.lit(True))
-                          .otherwise(x != F.element_at(rs, i) + F.lit(1)))
-    ends = F.filter(
-        rs, lambda x, i: F.when(i == F.size(rs) - 1, F.lit(True))
-                          .otherwise(F.element_at(rs, i + 2) != x + F.lit(1)))
+    rs = "coalesce(removed, CAST(array() AS array<int>))"
+    starts = (f"filter({rs}, (x, i) -> CASE WHEN i = 0 THEN TRUE "
+              f"ELSE x != element_at({rs}, i) + 1 END)")
+    ends = (f"filter({rs}, (x, i) -> CASE WHEN i = size({rs}) - 1 THEN TRUE "
+            f"ELSE element_at({rs}, i + 2) != x + 1 END)")
     # islands are maximal, so inter-island gaps are >= 1 token and every
     # slice length below is >= 0
-    t = F.col("t")
-    inner = F.flatten(F.transform(
-        starts,
-        lambda s, j: F.when(j == F.lit(0), F.slice(t, 1, s)).otherwise(
-            F.slice(t, F.element_at(ends, j) + 2,
-                    s - F.element_at(ends, j) - 1))))
-    tail = F.slice(t, F.element_at(ends, F.size(ends)) + 2,
-                   F.size(t) - F.element_at(ends, F.size(ends)) - 1)
-    kept = F.when(F.size(rs) == 0, t).otherwise(F.concat(inner, tail))
-    return joined.select(
-        "doc_id",
-        F.size("t").alias("n_tokens"),
-        F.coalesce(F.size("removed"), F.lit(0)).alias("n_removed"),
-        F.size(starts).alias("n_spans_removed"),
-        F.array_join(kept, " ").alias("dedup_text"))
+    inner = (f"flatten(transform({starts}, (s, j) -> CASE WHEN j = 0 "
+             f"THEN slice(t, 1, s) ELSE slice(t, element_at({ends}, j) + 2, "
+             f"s - element_at({ends}, j) - 1) END))")
+    last = f"element_at({ends}, size({ends}))"
+    tail = f"slice(t, {last} + 2, size(t) - {last} - 1)"
+    return base.sparkSession.sql(f"""
+WITH b AS (SELECT doc_id, coalesce(t, CAST(array() AS array<string>)) AS t
+           FROM {{base}}),
+rem AS (
+  SELECT doc_id, array_sort(collect_set(tpos)) AS removed
+  FROM (SELECT doc_id, explode(sequence(pos, pos + {k - 1})) AS tpos
+        FROM {{dup}})
+  GROUP BY doc_id)
+SELECT b.doc_id, size(t) AS n_tokens,
+       coalesce(size(removed), 0) AS n_removed,
+       size({starts}) AS n_spans_removed,
+       array_join(CASE WHEN size({rs}) = 0 THEN t
+                       ELSE concat({inner}, {tail}) END, ' ') AS dedup_text
+FROM b LEFT JOIN rem ON b.doc_id = rem.doc_id""", base=base, dup=dup)
 
 
 def incremental_substring_dedup(corpus: DataFrame, batch: DataFrame,
@@ -636,7 +623,7 @@ def incremental_substring_dedup(corpus: DataFrame, batch: DataFrame,
     dup = anchors.join(index, "g", "left_semi").select("doc_id", "pos")
     return _reassemble_removed(
         batch.select(F.col(id_col).alias("doc_id"),
-                     tokens(F.col(text_col)).alias("t")),
+                     F.expr(tokens(f"`{text_col}`")).alias("t")),
         dup, k)
 
 
@@ -666,11 +653,9 @@ def incremental_dedup(corpus: DataFrame, batch: DataFrame, id_col: str,
     the same incremental-cost argument as the reference's AlterId diff
     protocol (reference src/tally.mts:88-307), transplanted to dedup.
     """
-    from .text import fingerprint_md5
-    fp_c = corpus.select(F.col(id_col).alias("c_id"),
-                         fingerprint_md5(F.col(text_col)).alias("fp"))
-    fp_b = batch.select(F.col(id_col).alias("doc_id"),
-                        fingerprint_md5(F.col(text_col)).alias("fp"))
+    fp = f"{fingerprint_md5(f'`{text_col}`')} AS fp"
+    fp_c = corpus.selectExpr(f"`{id_col}` AS c_id", fp)
+    fp_b = batch.selectExpr(f"`{id_col}` AS doc_id", fp)
     exact = (fp_b.join(fp_c, "fp")
                  .groupBy("doc_id").agg(F.min("c_id").alias("match_id")))
 

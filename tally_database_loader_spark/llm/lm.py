@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .packing import hash_order
 from .text import tokens as _tokens
 
@@ -57,7 +58,7 @@ def unigram_logprob(docs: DataFrame, id_col: str = "doc_id",
     run several scorers over one corpus (lm_score_suite) materialize the
     token arrays ONCE and every scorer reads them (the round-11 staging
     discipline of llm/text.py, extended across operators in round 12)."""
-    toks_arr = F.col(tokens_col) if tokens_col else _tokens(F.col(text_col))
+    toks_arr = F.col(tokens_col) if tokens_col else F.expr(_tokens(f"`{text_col}`"))
     tok = docs.select(F.col(id_col).alias("doc_id"),
                       F.explode(toks_arr).alias("tok"))
     # vocabulary-sized model table, checkpointed: the N probe folds from
@@ -114,7 +115,7 @@ def bigram_logprob(docs: DataFrame, id_col: str = "doc_id",
     """
     if add_k <= 0:
         raise ValueError("add_k must be positive")
-    toks = F.col(tokens_col) if tokens_col else _tokens(F.col(text_col))
+    toks = F.col(tokens_col) if tokens_col else F.expr(_tokens(f"`{text_col}`"))
     n = F.size(toks)
     # adjacent pairs via slice+zip_with (two O(n) array walks) — ~40%
     # faster than element_at-per-index, which re-derives positions
@@ -174,7 +175,7 @@ def bpe_pair_counts(docs: DataFrame, text_col: str = "text",
     """
     if top_k <= 0:
         raise ValueError("top_k must be positive")
-    toks_arr = F.col(tokens_col) if tokens_col else _tokens(F.col(text_col))
+    toks_arr = F.col(tokens_col) if tokens_col else F.expr(_tokens(f"`{text_col}`"))
     words = (docs.select(F.explode(toks_arr).alias("w"))
                  .groupBy("w").agg(F.count("*").alias("wc")))
     ln = F.length("w")
@@ -223,7 +224,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text", k: int = 3,
     if k < 1:
         raise ValueError("k must be positive")
     spark = docs.sparkSession
-    words = (docs.select(F.explode(_tokens(F.col(text_col))).alias("w"))
+    words = (docs.select(F.explode(F.expr(_tokens(f"`{text_col}`"))).alias("w"))
                  .groupBy("w").agg(F.count("*").cast("long").alias("wc")))
     ln = F.length("w")
     chars = F.transform(F.sequence(F.lit(1), ln),
@@ -254,8 +255,8 @@ def bpe_train(docs: DataFrame, text_col: str = "text", k: int = 3,
                          F.array(F.lit(a + b))))
              .otherwise(F.concat(acc, F.array(x))))
         cur = cur.select("wc", fold.alias("syms")).localCheckpoint()
-    return spark.createDataFrame(
-        merges, "step int, lhs string, rhs string, n_pairs long")
+    return local_frame(spark, merges,
+                       "step int, lhs string, rhs string, n_pairs long")
 
 
 def _color_candidates(ranked: list[tuple[str, str, int]], batch: int,
@@ -372,7 +373,7 @@ def bpe_train_batched(docs: DataFrame, text_col: str = "text",
         raise ValueError(
             "rounds, batch, scan_mult and max_classes must be positive")
     spark = docs.sparkSession
-    words = (docs.select(F.explode(_tokens(F.col(text_col))).alias("w"))
+    words = (docs.select(F.explode(F.expr(_tokens(f"`{text_col}`"))).alias("w"))
                  .groupBy("w").agg(F.count("*").cast("long").alias("wc")))
     ln = F.length("w")
     chars = F.transform(F.sequence(F.lit(1), ln),
@@ -426,8 +427,8 @@ def bpe_train_batched(docs: DataFrame, text_col: str = "text",
                                make_fold(tuple(pairs)))
             cur = cur.select("wc", fold.alias("syms"))
         cur = cur.localCheckpoint()
-    return spark.createDataFrame(
-        merges,
+    return local_frame(
+        spark, merges,
         "round int, cls int, step int, lhs string, rhs string, "
         "n_pairs long")
 
@@ -455,7 +456,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],
     Output: ``doc_id, n_words, n_bpe_tokens`` — one row per input
     document (zero-token documents kept with zeros)."""
     words = docs.select(F.col(id_col).alias("doc_id"),
-                        F.explode(_tokens(F.col(text_col))).alias("w"))
+                        F.explode(F.expr(_tokens(f"`{text_col}`"))).alias("w"))
     ln = F.length("w")
     chars = F.transform(F.sequence(F.lit(1), ln),
                         lambda i: F.col("w").substr(i, F.lit(1)))
@@ -528,7 +529,7 @@ def dsir_importance(docs: DataFrame, target: Column,
     """
     if n_buckets <= 0 or add_k <= 0:
         raise ValueError("n_buckets and add_k must be positive")
-    toks_arr = F.col(tokens_col) if tokens_col else _tokens(F.col(text_col))
+    toks_arr = F.col(tokens_col) if tokens_col else F.expr(_tokens(f"`{text_col}`"))
     tok = docs.select(F.col(id_col).alias("doc_id"),
                       target.alias("is_t"),
                       F.explode(toks_arr).alias("tok"))
@@ -673,7 +674,7 @@ def cooccurrence_pmi(docs: DataFrame, id_col: str = "doc_id",
     """
     if window < 1:
         raise ValueError("window must be positive")
-    toks = F.col(tokens_col) if tokens_col else _tokens(F.col(text_col))
+    toks = F.col(tokens_col) if tokens_col else F.expr(_tokens(f"`{text_col}`"))
     n = F.size(toks)
     # pairs at distance o for o = 1..window, each as a slice+zip_with of
     # the array against its own o-shifted tail — O(window·n) array walks

@@ -33,11 +33,16 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+# UDF result types are DataType objects: a type STRING is first tried as a
+# DDL schema, and a bare type name fails that parse inside the JVM, whose
+# exception costs dozens of Py4J round trips per UDF
+from pyspark.sql.types import (ArrayType, ByteType, DoubleType, IntegerType,
+                               LongType, StructField, StructType)
 
 
-def dot(a: Column, b: Column) -> Column:
+def dot(a: Column | str, b: Column | str) -> Column:
     """Σ a[i]*b[i] in double, left-to-right (float→double is exact, so the
     only rounding is the adds — deterministic and oracle-reproducible).
 
@@ -49,7 +54,7 @@ def dot(a: Column, b: Column) -> Column:
     return _fold_vec("dot")(a, b)
 
 
-def cosine(a: Column, b: Column) -> Column:
+def cosine(a: Column | str, b: Column | str) -> Column:
     """dot/(‖a‖·‖b‖) with every operand derived by the same fold rules,
     as ONE Arrow exchange (three sequential folds + sqrt + divide in
     numpy, each op correctly-rounded IEEE like the JVM)."""
@@ -111,7 +116,7 @@ def _fold_vec(kind: str):
       poison similarity thresholds (NaN orders above every τ in Spark
       AND DuckDB). A NaN denominator is not zero and propagates NaN."""
 
-    @F.arrow_udf("double")
+    @F.arrow_udf(DoubleType())
     def fold(xs: pa.Array, ys: pa.Array) -> pa.Array:
         xv, xo, xl = _flat(xs, np.float64)
         yv, yo, yl = _flat(ys, np.float64)
@@ -144,23 +149,32 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     ranking window partitions by query id — the shuffle is O(queries ×
     corpus) rows but each post-filter partition is tiny. Ties break on
     neighbor id for determinism."""
-    q = F.broadcast(queries.select(F.col(id_col).alias("q_id"),
-                                   F.col(vec_col).alias("q_vec")))
-    c = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-    scored = (c.join(q, F.col("n_id") != F.col("q_id"))
-               .select("q_id", "n_id", cosine(F.col("q_vec"), F.col("n_vec")).alias("cos")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", F.col("n_id").alias("neighbor_id"),
-                          F.col("rank").cast("int").alias("rank"), "cos"))
+    q = F.broadcast(queries.selectExpr(f"`{id_col}` AS q_id",
+                                       f"`{vec_col}` AS q_vec"))
+    c = corpus.selectExpr(f"`{id_col}` AS n_id", f"`{vec_col}` AS n_vec")
+    scored = (c.join(q, F.expr("n_id != q_id"))
+               .withColumn("cos", cosine("q_vec", "n_vec"))
+               .select("q_id", "n_id", "cos"))
+    return _top_k(scored, k, "cos", "cos DESC")
+
+
+def _top_k(scored: DataFrame, k: int, score: str, order: str) -> DataFrame:
+    """The ``k`` best ``(q_id, n_id, score)`` rows per query under
+    ``order``, ties to the lower neighbor id: ``q_id, neighbor_id, rank,
+    score`` — the output shape every top-k search here shares. One
+    window projection and one filter, built from SQL text."""
+    return (scored.selectExpr(
+                "q_id", "n_id AS neighbor_id",
+                f"CAST(row_number() OVER (PARTITION BY q_id ORDER BY {order}, "
+                f"n_id) AS INT) AS rank", score)
+            .filter(f"rank <= {k}"))
 
 
 # ---------------------------------------------------------------------------
 # int8 quantization (scalar quantization, per-vector scale)
 # ---------------------------------------------------------------------------
 
-def quantize_int8(vec: Column) -> Column:
+def quantize_int8(vec: Column | str) -> Column:
     """Per-vector symmetric int8 quantization: ``struct(scale, q)`` with
     ``scale = max|x|/127`` and ``q[i] = floor(x[i]/scale + 0.5)`` (zero
     vectors quantize to all-zero, scale 0).
@@ -178,7 +192,8 @@ def quantize_int8(vec: Column) -> Column:
     scale); a NaN component, or a NULL vector, gives a fields-NULL
     struct — the NaN pin, since ``floor(NaN)`` has no int8 value."""
 
-    @F.arrow_udf("struct<scale: double, q: array<tinyint>>")
+    @F.arrow_udf(StructType([StructField("scale", DoubleType()),
+                             StructField("q", ArrayType(ByteType()))]))
     def quant(xs: pa.Array) -> pa.Array:
         n = len(xs)
         offs = xs.offsets.to_numpy().astype(np.int64)
@@ -216,14 +231,14 @@ def quantize_int8(vec: Column) -> Column:
     return quant(vec)
 
 
-def int_dot(a: Column, b: Column) -> Column:
+def int_dot(a: Column | str, b: Column | str) -> Column:
     """Σ a[i]*b[i] over int64 — exact, order-independent. Inputs may be
     stored narrow (tinyint); each component is widened to long *before*
     the multiply so tinyint×tinyint can never wrap. Integer addition is
     associative, so the kernel may sum in any order. A NULL vector, a
     NULL element or a ragged pair gives NULL, as ``_fold_vec``."""
 
-    @F.arrow_udf("long")
+    @F.arrow_udf(LongType())
     def idot(xs: pa.Array, ys: pa.Array) -> pa.Array:
         xv, xo, xl = _flat(xs, np.int64)
         yv, yo, yl = _flat(ys, np.int64)
@@ -245,19 +260,15 @@ def quantized_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     — the int8 rescoring path. The integer dot is exact; only the two
     final double multiplies round, deterministically, so a SQL oracle
     matches bit-for-bit. Recall vs the float path is asserted in tests."""
-    q = F.broadcast(queries.select(F.col(id_col).alias("q_id"),
-                                   quantize_int8(F.col(vec_col)).alias("qq")))
-    c = corpus.select(F.col(id_col).alias("n_id"),
-                      quantize_int8(F.col(vec_col)).alias("nq"))
-    score = (F.col("qq.scale") * F.col("nq.scale")
-             * int_dot(F.col("qq.q"), F.col("nq.q")).cast("double"))
-    scored = (c.join(q, F.col("n_id") != F.col("q_id"))
-               .select("q_id", "n_id", score.alias("score")))
-    w = W.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", F.col("n_id").alias("neighbor_id"),
-                          F.col("rank").cast("int").alias("rank"), "score"))
+    q = F.broadcast(queries.withColumn("qq", quantize_int8(vec_col))
+                           .selectExpr(f"`{id_col}` AS q_id", "qq"))
+    c = (corpus.withColumn("nq", quantize_int8(vec_col))
+               .selectExpr(f"`{id_col}` AS n_id", "nq"))
+    scored = (c.join(q, F.expr("n_id != q_id"))
+               .withColumn("dotq", int_dot("qq.q", "nq.q"))
+               .selectExpr("q_id", "n_id",
+                           "qq.scale * nq.scale * CAST(dotq AS DOUBLE) AS score"))
+    return _top_k(scored, k, "score", "score DESC")
 
 
 # ---------------------------------------------------------------------------
@@ -277,7 +288,7 @@ def _planes(n_bits: int, dim: int) -> list[list[float]]:
     return out
 
 
-def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
+def srp_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
     """B-bit bucket id: bit p = sign(vec · plane_p), each projection the
     same left-to-right fold as ``dot`` (n_bits sequential folds over the
     Arrow batch).
@@ -292,7 +303,7 @@ def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
     weights = np.array([1 << p for p in range(len(planes))], dtype=np.int64)
     dim = pl.shape[1]
 
-    @F.arrow_udf("long")
+    @F.arrow_udf(LongType())
     def bucket(xs: pa.Array) -> pa.Array:
         vals, starts, lens = _flat(xs, np.float64)
         out = np.zeros(len(xs), dtype=np.int64)
@@ -360,36 +371,35 @@ def centroid_cosine(corpus: DataFrame, id_col: str = "vec_id",
     Output: ``vec_id, label, cos_centroid`` (vectors with zero norm are
     dropped — cosine undefined).
     """
-    _d = "decimal(38,0)"
-    qv = F.floor(F.col("v").cast("double") * F.lit(float(_CQ))
-                 + F.lit(0.5)).cast("long")
-    e = (corpus.select(F.col(id_col).alias("vid"),
-                       F.col(label_col).alias("label"),
-                       F.posexplode(F.col(vec_col)).alias("pos", "v"))
-               .select("vid", "label", "pos", qv.alias("qv")))
-    s = e.groupBy("label", "pos").agg(F.sum("qv").alias("sq"))
-    cn = s.groupBy("label").agg(
-        F.sum((F.col("sq").cast(_d) * F.col("sq").cast(_d))).alias("cn2"))
-    scored = (e.join(F.broadcast(s), ["label", "pos"])
-               .groupBy("vid", "label")
-               .agg(F.sum(F.col("qv").cast(_d) * F.col("sq").cast(_d))
-                     .alias("dotq"),
-                    F.sum(F.col("qv").cast(_d) * F.col("qv").cast(_d))
-                     .alias("vn2"))
-               .join(F.broadcast(cn), "label")
-               .filter((F.col("vn2") > 0) & (F.col("cn2") > 0)))
-    cos = (F.col("dotq").cast("double")
-           / (F.sqrt(F.col("vn2").cast("double"))
-              * F.sqrt(F.col("cn2").cast("double"))))
-    return scored.select(F.col("vid").alias("vec_id"), "label",
-                         cos.alias("cos_centroid"))
+    def dsum(a: str, b: str) -> str:
+        return f"sum(CAST({a} AS DECIMAL(38,0)) * CAST({b} AS DECIMAL(38,0)))"
+
+    return corpus.sparkSession.sql(f"""
+WITH e AS (
+  SELECT vid, label, pos,
+         CAST(floor(CAST(v AS DOUBLE) * {float(_CQ)!r}D + 0.5D) AS BIGINT) AS qv
+  FROM (SELECT `{id_col}` AS vid, `{label_col}` AS label,
+               posexplode(`{vec_col}`) AS (pos, v) FROM {{corpus}})),
+s AS (SELECT label, pos, sum(qv) AS sq FROM e GROUP BY label, pos),
+cn AS (SELECT label, {dsum('sq', 'sq')} AS cn2 FROM s GROUP BY label),
+sc AS (
+  SELECT /*+ BROADCAST(s) */ e.vid, e.label,
+         {dsum('e.qv', 's.sq')} AS dotq, {dsum('e.qv', 'e.qv')} AS vn2
+  FROM e JOIN s ON e.label = s.label AND e.pos = s.pos
+  GROUP BY e.vid, e.label)
+SELECT /*+ BROADCAST(cn) */ sc.vid AS vec_id, sc.label,
+       CAST(dotq AS DOUBLE)
+       / (sqrt(CAST(vn2 AS DOUBLE)) * sqrt(CAST(cn2 AS DOUBLE))) AS cos_centroid
+FROM sc JOIN cn ON sc.label = cn.label
+WHERE vn2 > 0 AND cn2 > 0""", corpus=corpus)
 
 
 _KQ = 1 << 14  # component quantization for exact k-means arithmetic
 
 
-def _kmeans_uq(vec: Column) -> Column:
-    """Non-negative integer quantization for exact k-means distances:
+def _kmeans_uq(vec: str) -> str:
+    """SQL text of the non-negative integer quantization for exact
+    k-means distances, over the SQL array expression ``vec``:
     ``u[i] = clamp(floor(v[i]·2^14 + 0.5), ±2^14) + 2^14`` ∈ [0, 2^15].
 
     The +2^14 offset makes every value (hence every per-cell component
@@ -404,21 +414,22 @@ def _kmeans_uq(vec: Column) -> Column:
     0, where the oracle's double ``floor`` keeps NaN, which ``least``
     then saturates to +2^14 — clamping first gives that in both. A NULL
     element is skipped by ``greatest`` in both engines (→ 0), so the
-    output holds no NULL."""
-    return F.transform(vec, lambda x: (
-        F.floor(F.least(F.greatest(x.cast("double") * F.lit(float(_KQ))
-                                   + F.lit(0.5), F.lit(-float(_KQ))),
-                        F.lit(float(_KQ)))) + F.lit(_KQ)).cast("long"))
+    output holds no NULL. One ``transform`` lambda parsed from text
+    costs a handful of JVM round trips where the Column-API form cost
+    ~145."""
+    return (f"transform({vec}, x -> CAST(floor(least(greatest("
+            f"CAST(x AS DOUBLE) * {float(_KQ)!r}D + 0.5D, {-float(_KQ)!r}D), "
+            f"{float(_KQ)!r}D)) + {_KQ} AS BIGINT))")
 
 
-def _sql_array2(rows: list[list[int]]) -> Column:
-    """k×d integer codebook as ONE parsed SQL array literal. ``F.lit`` of
-    a nested Python list round-trips every element through py4j (~2s per
+def _sql_array2(rows: list[list[int]]) -> str:
+    """k×d integer codebook as ONE SQL array literal. ``F.lit`` of a
+    nested Python list round-trips every element through py4j (~2s per
     4096-element codebook, per expression); the SQL parser ingests the
     same text in milliseconds."""
-    return F.expr("array(" + ",".join(
+    return "array(" + ",".join(
         "array(" + ",".join(f"{int(v)}L" for v in row) + ")"
-        for row in rows) + ")")
+        for row in rows) + ")"
 
 
 def _hash_head(df: DataFrame, id_col: str, n: int) -> DataFrame:
@@ -427,84 +438,143 @@ def _hash_head(df: DataFrame, id_col: str, n: int) -> DataFrame:
     pure function of the data, so the selected set is identical across
     retries, repartitioning and AQE re-plans, yet hash-uniform like a
     random sample."""
-    return (df.withColumn("__h", F.md5(F.col(id_col).cast("string")))
-              .orderBy("__h", id_col).limit(n).drop("__h"))
+    return df.orderBy(F.expr(f"md5(CAST(`{id_col}` AS STRING))"),
+                      id_col).limit(n)
 
 
-def _dist_table(u: Column, cents: list[list[int]]) -> Column:
-    """Array of exact integer squared distances from a u-quantized
-    vector (scale 2^14, offset +2^14 — multiplied by 64 here to reach
-    the centroid scale 2^20) to EVERY centroid. The codebook is one
-    nested-array literal and the loop is a single ``transform`` fold, so
-    the expression tree is O(1) in codebook size — per-centroid literal
-    arrays blow the plan (and task binaries) up ~100× at k=64. Max
-    magnitude: dim·(2^21)² ≤ 2^48 for dim ≤ 64 — comfortably int64."""
-    cb = _sql_array2(cents)
-    return F.transform(cb, lambda c: F.aggregate(
-        F.zip_with(u, c, lambda x, y: (x * F.lit(64) - y)
-                   * (x * F.lit(64) - y)),
-        F.lit(0).cast("long"), lambda acc, d: acc + d))
+def _dist_table(u: str, cents: list[list[int]]) -> str:
+    """SQL text of the array of exact integer squared distances from a
+    u-quantized vector (scale 2^14, offset +2^14 — multiplied by 64 here
+    to reach the centroid scale 2^20) to EVERY centroid. The codebook is
+    one nested-array literal and the loop is a single ``transform`` fold,
+    so the expression tree is O(1) in codebook size — per-centroid
+    literal arrays blow the plan (and task binaries) up ~100× at k=64.
+    Max magnitude: dim·(2^21)² ≤ 2^48 for dim ≤ 64 — comfortably
+    int64."""
+    return (f"transform({_sql_array2(cents)}, c -> aggregate("
+            f"zip_with({u}, c, (x, y) -> (x * 64 - y) * (x * 64 - y)), "
+            f"CAST(0 AS BIGINT), (acc, d) -> acc + d))")
 
 
-def _assign_cell(u: Column, cents: list[list[int]]) -> Column:
-    """Index of the nearest centroid by exact integer squared distance,
-    ties to the lower cell id: a batch argmin over the codebook in numpy
-    int64. Exactness: ``(64u-c)² = (64u)² - 2·64u·c + c²`` — every
-    product ≤ 2^42 and every sum ≤ dim·2^42 ≤ 2^48, so int64 matrix ops
-    are exact (no float, no overflow), and ``np.argmin`` returns the
-    FIRST minimum — the lower-cell tie rule the SQL oracles replay
-    (``ORDER BY`` distance, cell). The assignment is the
-    k-means hot loop (corpus × k × dim integer ops per pass); a
-    higher-order-function form would run as interpreted CodegenFallback,
-    ~1.3 ms per vector at k=64 (FAISS makes the same choice: quantizer
-    assignment is vectorized native code).
+def _argmin_cells(mat: np.ndarray, cb: np.ndarray,
+                  cb2: np.ndarray) -> np.ndarray:
+    """Nearest centroid per row of ``mat`` (u-quantized rows already
+    ×64) by exact integer squared distance, ties to the lower cell id.
+    Exactness: ``(64u-c)² = (64u)² - 2·64u·c + c²`` — every product
+    ≤ 2^42 and every sum ≤ dim·2^42 ≤ 2^48, so int64 matrix ops are
+    exact (no float, no overflow), and ``np.argmin`` returns the FIRST
+    minimum — the lower-cell tie rule the SQL oracles replay
+    (``ORDER BY`` distance, cell)."""
+    d = (mat * mat).sum(axis=1, keepdims=True) - 2 * (mat @ cb.T) + cb2
+    return np.argmin(d, axis=1).astype(np.int32)
+
+
+def _assign_codes(u: Column, books: list[list[list[int]]]) -> Column:
+    """``struct<code_0 int, …>``: the nearest centroid
+    (``_argmin_cells``) of the ``s``-th equal slice of the u-quantized
+    vector in codebook ``s`` — one Arrow batch UDF for every codebook
+    (a whole-vector k-means has one; PQ has one per subspace). The
+    assignment is the k-means hot loop (corpus × k × dim integer ops
+    per pass); a higher-order-function form would run as interpreted
+    CodegenFallback, ~1.3 ms per vector at k=64 (FAISS makes the same
+    choice: quantizer assignment is vectorized native code).
 
     A pandas UDF suffices here: its input is ``_kmeans_uq``'s output,
     which holds no NULL element (``greatest``/``least`` skip nulls).
     Contract: non-null fixed-dim vectors (the ``kmeans_cells``
     id/vector requirement); corrupt rows raise rather than silently
     diverge."""
-    cb = np.asarray(cents, dtype=np.int64)          # k × d
-    cb2 = (cb * cb).sum(axis=1)                     # k
+    cbs = [np.asarray(b, dtype=np.int64) for b in books]    # k × sub
+    cb2s = [(cb * cb).sum(axis=1) for cb in cbs]
+    sub = cbs[0].shape[1]
+    names = [f"code_{s}" for s in range(len(books))]
 
-    @F.pandas_udf("int")
-    def enc(us: pd.Series) -> pd.Series:
+    @F.pandas_udf(StructType([StructField(n, IntegerType()) for n in names]))
+    def enc(us: pd.Series) -> pd.DataFrame:
         if len(us) == 0:
-            return pd.Series([], dtype="int32")
+            return pd.DataFrame({n: pd.Series([], dtype="int32")
+                                 for n in names})
         mat = np.array(list(us), dtype=np.int64) * 64
-        d = ((mat * mat).sum(axis=1, keepdims=True)
-             - 2 * (mat @ cb.T) + cb2)              # n × k, exact int64
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
+        return pd.DataFrame({
+            n: _argmin_cells(mat[:, s * sub:(s + 1) * sub], cbs[s], cb2s[s])
+            for s, n in enumerate(names)})
 
     return enc(u)
 
 
-def _assign_cell_tagged(s: Column, su: Column,
-                        codebooks: list[list[list[int]]]) -> Column:
-    """``_assign_cell`` for the PQ training loop's tagged-subspace rows:
-    one Arrow batch holds rows of every subspace; the batch is
-    partitioned by the tag and each group runs the exact-int64 matrix
-    argmin against its own codebook."""
-    cbs = [np.asarray(cb, dtype=np.int64) for cb in codebooks]
-    cb2s = [(cb * cb).sum(axis=1) for cb in cbs]
+def _u_matrix(arr: pa.Array) -> np.ndarray:
+    """The ``n × dim`` int64 matrix of an Arrow ``list<bigint>`` column
+    of ``_kmeans_uq`` rows. A NULL vector or a ragged batch violates the
+    non-null fixed-dim vector contract and raises."""
+    if arr.null_count:
+        raise ValueError("kmeans_cells: NULL vector violates the non-null "
+                         "vector contract")
+    lens = np.diff(arr.offsets.to_numpy())
+    if len(arr) and (lens != lens[0]).any():
+        raise ValueError("kmeans_cells: vectors of different lengths")
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    return flat.reshape(len(arr), lens[0] if len(arr) else 0)
 
-    @F.pandas_udf("int")
-    def enc(tags: pd.Series, us: pd.Series) -> pd.Series:
-        n = len(tags)
-        if n == 0:
-            return pd.Series([], dtype="int32")
-        out = np.empty(n, dtype=np.int32)
-        tv = tags.to_numpy()
-        mat = np.array(list(us), dtype=np.int64) * 64
-        m2 = (mat * mat).sum(axis=1)
-        for si, (cb, cb2) in enumerate(zip(cbs, cb2s)):
-            mask = tv == si
-            if mask.any():
-                d = m2[mask, None] - 2 * (mat[mask] @ cb.T) + cb2
-                out[mask] = np.argmin(d, axis=1).astype(np.int32)
-        return pd.Series(out)
 
-    return enc(s, su)
+_PARTIALS = StructType([StructField("s", IntegerType()),
+                        StructField("cell", IntegerType()),
+                        StructField("cnt", LongType()),
+                        StructField("sums", ArrayType(LongType()))])
+
+
+def _lloyd(base: DataFrame, books: list[list[list[int]]],
+           iters: int) -> list[list[list[int]]]:
+    """``iters`` exact-integer Lloyd rounds over the ``u`` column of
+    ``base``, for ``len(books)`` codebooks at once: codebook ``s`` fits
+    the ``s``-th equal slice of every vector (one slice: ``kmeans_cells``;
+    m slices: ``pq_encode``'s subspaces).
+
+    A round is ONE single-stage job: a ``mapInArrow`` kernel assigns each
+    row of its partition with ``_argmin_cells`` and emits the mergeable
+    per-partition summary ``(s, cell, cnt, sums)`` — at most
+    partitions × m × k rows, never one row per vector component. The
+    driver adds the partials (integer addition, so the result does not
+    depend on how the corpus is partitioned) and sets each centroid to
+    ``(64·sum) div count``; a cell that lost all its vectors keeps its
+    previous centroid."""
+    m = len(books)
+    k = len(books[0])
+    sub = len(books[0][0])
+    vectors = base.select("u")
+    for _ in range(iters):
+        cbs = [np.asarray(b, dtype=np.int64) for b in books]
+        cb2s = [(cb * cb).sum(axis=1) for cb in cbs]
+
+        def partials(batches, cbs=cbs, cb2s=cb2s):
+            cnt = np.zeros((m, k), dtype=np.int64)
+            sums = np.zeros((m, k, sub), dtype=np.int64)
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                u = _u_matrix(batch.column(0))
+                for s in range(m):
+                    us = u[:, s * sub:(s + 1) * sub]
+                    cell = _argmin_cells(us * 64, cbs[s], cb2s[s])
+                    onehot = (cell[:, None] == np.arange(k)).astype(np.int64)
+                    cnt[s] += onehot.sum(axis=0)
+                    sums[s] += onehot.T @ us
+            s_idx, c_idx = np.nonzero(cnt)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(s_idx.astype(np.int32)),
+                 pa.array(c_idx.astype(np.int32)),
+                 pa.array(cnt[s_idx, c_idx]),
+                 pa.array(list(sums[s_idx, c_idx]), pa.list_(pa.int64()))],
+                names=["s", "cell", "cnt", "sums"])
+
+        tot: dict = {}
+        for s, c, n, sm in vectors.mapInArrow(partials, _PARTIALS).collect():
+            prev = tot.get((s, c))
+            tot[(s, c)] = (n, sm) if prev is None else (
+                prev[0] + n, [a + b for a, b in zip(prev[1], sm)])
+        books = [[[(64 * v) // tot[(s, j)][0] for v in tot[(s, j)][1]]
+                  if (s, j) in tot else books[s][j]
+                  for j in range(k)] for s in range(m)]
+    return books
 
 
 def kmeans_cells(corpus: DataFrame, n_lists: int = 8, iters: int = 2,
@@ -519,18 +589,19 @@ def kmeans_cells(corpus: DataFrame, n_lists: int = 8, iters: int = 2,
       ``md5(cast(id as string))`` (hash order ≈ uniform sample, stable
       under retries/repartition — the same keyed-hash trick as
       ``hash_sample``/``domain_cap``).
-    - **Iterate** (fixed ``iters`` rounds): assignment is an ``array_min``
-      over exact integer squared distances (map-side, zero shuffle);
-      the update is one posexplode → groupBy(cell, pos) partial-agg
-      (n_lists × dim groups) whose sums are exact int64; new centroid
-      components are ``(64·sum) div count`` — non-negative integer
-      division, identical in Spark/DuckDB/Python. Cells that lose all
-      vectors keep their previous centroid.
-    - **Scale**: the corpus is scanned once per iteration with a
-      dimension-sized shuffle (n_lists·dim rows); centroids live as plan
-      literals (n_lists × dim ints ≤ a few KB — the same
-      probe-then-parameterize pattern as the BM25 corpus scalars), so
-      lineage does NOT grow with iterations and no checkpoint is needed.
+    - **Iterate** (fixed ``iters`` rounds, ``_lloyd``): each round is one
+      single-stage job whose Arrow kernel assigns every vector by the
+      exact int64 argmin and emits per-partition ``(cell, count,
+      component sums)`` partials; the driver adds them exactly and sets
+      new centroid components to ``(64·sum) div count`` — non-negative
+      integer division, identical in Spark/DuckDB/Python. Cells that
+      lose all vectors keep their previous centroid.
+    - **Scale**: the corpus is scanned once per round and the round ships
+      at most partitions × n_lists summary rows to the driver, whatever
+      the corpus size. The centroids live on the driver as Python ints
+      (n_lists × dim values ≤ a few KB) and enter each plan as constants
+      of the assignment kernel, so lineage does NOT grow with iterations
+      and no checkpoint is needed.
 
     ``id_col`` must be non-null: the keyed-hash ordering of NULL ids is
     engine-specific (Spark sorts NULLS FIRST, DuckDB LAST), which would
@@ -538,49 +609,37 @@ def kmeans_cells(corpus: DataFrame, n_lists: int = 8, iters: int = 2,
 
     Returns ``(assignments, centroids)``: the corpus with a ``cell``
     column, and the final scale-2^20 integer centroid components."""
-    base = corpus.select(F.col(id_col).alias("vid"),
-                         _kmeans_uq(F.col(vec_col)).alias("u"))
+    base = corpus.selectExpr(f"`{id_col}` AS vid",
+                             f"{_kmeans_uq(f'`{vec_col}`')} AS u")
     seed_rows = _hash_head(base, "vid", n_lists).collect()
     if not seed_rows:
         # without this, cents=[] builds the malformed literal `array()`
         # downstream and fails analysis with an opaque parser error
         raise ValueError("kmeans_cells: empty corpus (no seed vectors)")
-    cents = [[64 * int(x) for x in r["u"]] for r in seed_rows]
-    n_lists = len(cents)
-    dim = len(cents[0]) if cents else 0
-    for _ in range(iters):
-        # NB: the argmin projection and the posexplode must be separate
-        # selects — a generator in the same projection as a getField
-        # expression breaks struct-field resolution (Spark 4 analyzer).
-        sums = (base
-                .select(_assign_cell(F.col("u"), cents).alias("cell"), "u")
-                .select("cell", F.posexplode("u").alias("pos", "uv"))
-                .groupBy("cell", "pos")
-                .agg(F.sum("uv").alias("s"), F.count(F.lit(1)).alias("cnt"))
-                .collect())
-        new = {(r["cell"], r["pos"]): (64 * r["s"]) // r["cnt"] for r in sums}
-        cents = [[new.get((j, p), cents[j][p]) for p in range(dim)]
-                 for j in range(n_lists)]
+    if any(r["u"] is None for r in seed_rows):
+        raise ValueError("kmeans_cells: NULL vector violates the non-null "
+                         "vector contract")
+    (cents,) = _lloyd(base, [[[64 * int(x) for x in r["u"]]
+                              for r in seed_rows]], iters)
     # coalesce(-1) marks the column non-nullable (the UDF never returns
     # null for contract-valid vectors, so -1 is unreachable): without it,
     # every equi-join on `cell` injects IsNotNull(cell), and the optimizer
     # evaluates the assignment UDF TWICE per join side — once under the
     # pushed filter, once in the projection (guide §4.4). The plans for
     # semantic_dedup went from 4 `enc` ArrowEvalPython nodes to 2.
-    # The inner when/raise_error validates the input: a NULL vector
+    # The inner CASE/raise_error validates the input: a NULL vector
     # fails LOUDLY with a message naming the contract, where the -1
     # sentinel would otherwise silently merge such rows into one shared
     # pair cell. raise_error sits only on the contract-violating branch,
     # so valid rows pay one isNotNull test.
-    assigned = corpus.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        F.coalesce(
-            F.when(F.col(vec_col).isNotNull(),
-                   _assign_cell(_kmeans_uq(F.col(vec_col)), cents))
-             .otherwise(F.raise_error(F.lit(
-                 "kmeans_cells: NULL vector violates the non-null "
-                 "vector contract"))),
-            F.lit(-1)).alias("cell"))
+    assigned = corpus.selectExpr(
+        f"`{id_col}` AS n_id", f"`{vec_col}` AS n_vec").withColumn(
+        "__codes", _assign_codes(F.expr(_kmeans_uq("n_vec")), [cents])
+    ).selectExpr(
+        "n_id", "n_vec",
+        "coalesce(CASE WHEN n_vec IS NOT NULL THEN __codes.code_0 ELSE "
+        "raise_error('kmeans_cells: NULL vector violates the non-null "
+        "vector contract') END, -1) AS cell")
     return assigned, cents
 
 
@@ -604,27 +663,19 @@ def ivf_kmeans_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     assigned, cents = fitted if fitted is not None else kmeans_cells(
         corpus, n_lists=n_lists, iters=iters, id_col=id_col, vec_col=vec_col)
 
-    def _cell_rank(u: Column) -> Column:
-        d = _dist_table(u, cents)
-        idx = F.sequence(F.lit(0), F.lit(len(cents) - 1))
-        structs = F.zip_with(d, idx, lambda dd, i: F.struct(
-            dd.alias("dist"), i.alias("cell")))
-        return F.transform(F.slice(F.array_sort(structs), 1, nprobe),
-                           lambda s: s.getField("cell"))
-
-    q = (queries.select(F.col(id_col).alias("q_id"),
-                        F.col(vec_col).alias("q_vec"))
-         .withColumn("cell",
-                     F.explode(_cell_rank(_kmeans_uq(F.col("q_vec"))))))
+    # the nprobe nearest cells: (distance, cell) structs sorted, sliced
+    dists = _dist_table(_kmeans_uq(f"`{vec_col}`"), cents)
+    probe = (f"transform(slice(array_sort(zip_with({dists}, "
+             f"sequence(0, {len(cents) - 1}), "
+             f"(dd, i) -> named_struct('dist', dd, 'cell', i))), 1, {nprobe}), "
+             f"s -> s.cell)")
+    q = queries.selectExpr(f"`{id_col}` AS q_id", f"`{vec_col}` AS q_vec",
+                           f"explode({probe}) AS cell")
     scored = (assigned.join(F.broadcast(q), "cell")
-              .filter(F.col("n_id") != F.col("q_id"))
-              .select("q_id", "n_id",
-                      cosine(F.col("q_vec"), F.col("n_vec")).alias("cos")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", F.col("n_id").alias("neighbor_id"),
-                          F.col("rank").cast("int").alias("rank"), "cos"))
+              .filter("n_id != q_id")
+              .withColumn("cos", cosine("q_vec", "n_vec"))
+              .select("q_id", "n_id", "cos"))
+    return _top_k(scored, k, "cos", "cos DESC")
 
 
 def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 50,
@@ -650,14 +701,13 @@ def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 50,
     assigned, _ = fitted if fitted is not None else kmeans_cells(
         corpus, n_lists=n_clusters, iters=iters,
         id_col=id_col, vec_col=vec_col)
-    w = W.partitionBy("cell").orderBy(
-        F.md5(F.col("n_id").cast("string")), F.col("n_id"))
     return (assigned
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= per_cluster)
-            .select(F.col("n_id").alias(id_col),
-                    F.col("cell").cast("int").alias("cell"),
-                    F.col("rk").cast("int").alias("rk")))
+            .selectExpr("n_id", "cell",
+                        "row_number() OVER (PARTITION BY cell ORDER BY "
+                        "md5(CAST(n_id AS STRING)), n_id) AS rk")
+            .filter(f"rk <= {per_cluster}")
+            .selectExpr(f"n_id AS `{id_col}`", "CAST(cell AS INT) AS cell",
+                        "CAST(rk AS INT) AS rk"))
 
 
 def semantic_dedup(corpus: DataFrame, threshold: float = 0.3,
@@ -710,10 +760,9 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.3,
                                    id_col=id_col, vec_col=vec_col,
                                    cell_cap=cell_cap)
     drops = _cell_drops(assigned, key, float(threshold))
-    return (assigned.join(drops,
-                          assigned["n_id"] == drops["drop_id"], "left_anti")
-                    .select(F.col("n_id").alias(id_col),
-                            F.col("cell").cast("int").alias("cell")))
+    return (assigned.join(drops, F.expr("n_id = drop_id"), "left_anti")
+                    .selectExpr(f"n_id AS `{id_col}`",
+                                "CAST(cell AS INT) AS cell"))
 
 
 # columns of the pairwise block a kernel task holds at once: bounds the
@@ -841,6 +890,7 @@ def semantic_cells(corpus: DataFrame, n_lists: int | None = 8,
     split a cell) and ``key`` is the pair-join key list. The pair stage
     is exactly ``assigned ⋈ assigned ON key`` filtered to ``a_id <
     b_id`` — its row count is what ``cell_cap`` bounds."""
+    from ..session import local_frame
     from .packing import hash_order
     if cell_cap is not None and cell_cap < 1:
         raise ValueError("cell_cap must be positive")
@@ -855,9 +905,9 @@ def semantic_cells(corpus: DataFrame, n_lists: int | None = 8,
     # full embedding vectors (n_vec rides every consumer) — cold-run
     # A/B at bench SF put the localCheckpoint variant ~15% SLOWER than
     # re-running the Arrow-batched assignment UDF per consumer
-    # (tools_isolate_slot.py --cold; OPTIMIZATION_r12.md). The cheap
-    # model table inside kmeans_cells stays checkpointed — it is
-    # centroid-sized; this table is corpus-sized.
+    # (tools_isolate_slot.py --cold; OPTIMIZATION_r12.md). The centroids
+    # are driver-side constants of that UDF, so nothing upstream of it
+    # needs materializing either.
     key = ["cell"]
     if cell_cap is not None:
         sizes = (assigned.groupBy("cell")
@@ -868,8 +918,9 @@ def semantic_cells(corpus: DataFrame, n_lists: int | None = 8,
             # (cell, n_subs) is a ≤ n_lists-row dimension — broadcast
             # it rather than folding literals into a when-chain (the
             # temperature_resample lesson, review r4 #1).
-            subs_df = corpus.sparkSession.createDataFrame(
-                sorted(n_subs.items()), "cell int, __n_subs long")
+            subs_df = local_frame(corpus.sparkSession,
+                                  sorted(n_subs.items()),
+                                  "cell int, __n_subs long")
             assigned = (assigned
                         .join(F.broadcast(subs_df), "cell")
                         .withColumn("__sub", F.pmod(
@@ -895,7 +946,16 @@ def pq_encode(corpus: DataFrame, m: int = 4, n_codes: int = 16,
 
     Every step is the deterministic integer Lloyd math of
     ``kmeans_cells``, so encoding is bit-reproducible and SQL-replayable
-    (plans/llm_gate.py unrolls the per-subspace chains).
+    (plans/llm_gate.py unrolls the per-subspace chains). The m subspaces
+    train together (``_lloyd``): each round is one single-stage job whose
+    Arrow kernel assigns every subvector against its own codebook and
+    emits per-partition ``(subspace, cell, count, component sums)``
+    partials — at most partitions × m × n_codes rows — and the driver
+    adds them exactly and applies ``(64·sum) div count``, keeping the
+    old centroid of an emptied cell. The codebooks live on the driver
+    as Python ints and enter the plans as constants of the assignment
+    kernels (``encoded``) or as one SQL array literal
+    (``pq_adc_topk``'s distance tables).
 
     Returns ``(encoded, codebooks)``: ``encoded`` has ``n_id`` plus
     ``code_0..code_{m-1}`` (one map-side projection — the m argmins
@@ -913,50 +973,28 @@ def pq_encode(corpus: DataFrame, m: int = 4, n_codes: int = 16,
         raise ValueError(f"dim {dim} not divisible into {m} subspaces")
     sub_len = dim // m
 
-    # Joint Lloyd over all m subspaces at once: each vector explodes into
-    # its m tagged subvectors and one (s, cell, pos) partial-agg serves
-    # every codebook — the per-round cost is ONE corpus scan + one
-    # m·k·sub_len-group shuffle, not m sequential k-means jobs. The
-    # per-subspace math is exactly kmeans_cells', so the SQL oracle can
-    # still replay each subspace independently.
-    base = corpus.select(F.col(id_col).alias("vid"),
-                         _kmeans_uq(F.col(vec_col)).alias("u"))
+    # Joint Lloyd over all m subspaces at once: one kernel pass per round
+    # assigns every subvector against its own codebook and emits the
+    # (s, cell) partials of every subspace — ONE corpus scan per round,
+    # not m sequential k-means jobs. The per-subspace math is exactly
+    # kmeans_cells', so the SQL oracle can still replay each subspace
+    # independently.
+    base = corpus.selectExpr(f"`{id_col}` AS vid",
+                             f"{_kmeans_uq(f'`{vec_col}`')} AS u")
     seed_rows = _hash_head(base, "vid", n_codes).collect()
     if not seed_rows:
         raise ValueError("pq_encode: empty corpus (no seed vectors)")
-    codebooks = [[[64 * int(x) for x in r["u"][s * sub_len:(s + 1) * sub_len]]
-                  for r in seed_rows] for s in range(m)]
-    n_codes = len(seed_rows)
-    subs = base.select(
-        "vid",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("s"),
-                     F.slice("u", s * sub_len + 1, sub_len).alias("su"))
-            for s in range(m)])).alias("e")) \
-        .select("vid", "e.s", "e.su")
-    for _ in range(iters):
-        cell = _assign_cell_tagged(F.col("s"), F.col("su"), codebooks)
-        sums = (subs
-                .select("s", cell.alias("cell"), "su")
-                .select("s", "cell", F.posexplode("su").alias("pos", "uv"))
-                .groupBy("s", "cell", "pos")
-                .agg(F.sum("uv").alias("sm"), F.count(F.lit(1)).alias("cnt"))
-                .collect())
-        new = {(r["s"], r["cell"], r["pos"]): (64 * r["sm"]) // r["cnt"]
-               for r in sums}
-        codebooks = [[[new.get((s, j, p), codebooks[s][j][p])
-                       for p in range(sub_len)]
-                      for j in range(n_codes)] for s in range(m)]
-    encoded = corpus.select(
-        F.col(id_col).alias("n_id"),
-        *[_assign_cell(
-            _kmeans_uq(F.slice(F.col(vec_col), s * sub_len + 1, sub_len)),
-            codebooks[s]).alias(f"code_{s}")
-          for s in range(m)])
+    codebooks = _lloyd(base, [
+        [[64 * int(x) for x in r["u"][s * sub_len:(s + 1) * sub_len]]
+         for r in seed_rows] for s in range(m)], iters)
+    encoded = (corpus.selectExpr(f"`{id_col}` AS n_id", f"`{vec_col}` AS v")
+               .withColumn("codes", _assign_codes(F.expr(_kmeans_uq("v")),
+                                                  codebooks))
+               .select("n_id", "codes.*"))
     return encoded, codebooks
 
 
-def l2_dist(a: Column, b: Column) -> Column:
+def l2_dist(a: Column | str, b: Column | str) -> Column:
     """Σ (a[i]-b[i])² in double, left-to-right — same fold discipline
     (and same kernel) as ``dot``, so a SQL oracle reproduces it
     bit-for-bit."""
@@ -996,19 +1034,13 @@ def pq_adc_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                                    iters=iters, dim=dim, id_col=id_col,
                                    vec_col=vec_col)
     sub_len = dim // m
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        *[_dist_table(
-            _kmeans_uq(F.slice(F.col(vec_col), s * sub_len + 1, sub_len)),
-            codebooks[s]).alias(f"qd_{s}")
-          for s in range(m)])
-    total = None
-    for s in range(m):
-        term = F.element_at(F.col(f"qd_{s}"), F.col(f"code_{s}") + 1)
-        total = term if total is None else total + term
-    scored = (encoded.crossJoin(F.broadcast(q))
-              .filter(F.col("n_id") != F.col("q_id"))
-              .select("q_id", "n_id", total.alias("pq_dist")))
+    tables = ", ".join(
+        _dist_table(_kmeans_uq(
+            f"slice(`{vec_col}`, {s * sub_len + 1}, {sub_len})"),
+            codebooks[s]) + f" AS qd_{s}"
+        for s in range(m))
+    total = " + ".join(f"element_at(q.qd_{s}, e.code_{s} + 1)"
+                       for s in range(m))
     # Two-phase top-`refine`: a single partitionBy(q_id) window would
     # sort the ENTIRE corpus inside one partition per query — terabytes
     # through single tasks at 10^11 docs. Phase 1 keeps refine rows per
@@ -1018,32 +1050,36 @@ def pq_adc_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # contained in the union of per-salt top-refine sets, so the result —
     # and therefore the SQL oracle, which replays the single-window form —
     # is IDENTICAL; only the physical shape changes. The salt never leaves
-    # the plan, so it needs no cross-engine hash, just determinism.
-    salt = F.pmod(F.xxhash64(F.col("n_id")), F.lit(n_salt))
-    wl = W.partitionBy("q_id", "salt").orderBy(F.col("pq_dist").asc(),
-                                               F.col("n_id"))
-    local = (scored.withColumn("salt", salt)
-                   .withColumn("lrn", F.row_number().over(wl))
-                   .filter(F.col("lrn") <= refine)
-                   .select("q_id", "n_id", "pq_dist"))
-    wc = W.partitionBy("q_id").orderBy(F.col("pq_dist").asc(), F.col("n_id"))
-    cand = (local.withColumn("crn", F.row_number().over(wc))
-                 .filter(F.col("crn") <= refine)
-                 .select("q_id", "n_id"))
-    cvec = corpus.select(F.col(id_col).alias("n_id"),
-                         F.col(vec_col).alias("n_vec"))
-    qvec = queries.select(F.col(id_col).alias("q_id"),
-                          F.col(vec_col).alias("q_vec"))
-    ref = (cvec.join(F.broadcast(cand), "n_id")
-               .join(F.broadcast(qvec), "q_id")
-               .select("q_id", "n_id",
-                       l2_dist(F.col("q_vec"), F.col("n_vec"))
-                       .alias("l2_dist")))
-    w = W.partitionBy("q_id").orderBy(F.col("l2_dist").asc(), F.col("n_id"))
-    return (ref.withColumn("rank", F.row_number().over(w))
-               .filter(F.col("rank") <= k)
-               .select("q_id", F.col("n_id").alias("neighbor_id"),
-                       F.col("rank").cast("int").alias("rank"), "l2_dist"))
+    # the plan, so it needs no cross-engine hash, just determinism. The
+    # refine set (queries × refine rows) broadcasts back onto the corpus
+    # for the vector fetch.
+    ref = corpus.sparkSession.sql(f"""
+WITH q AS (SELECT `{id_col}` AS q_id, {tables} FROM {{queries}}),
+scored AS (
+  SELECT /*+ BROADCAST(q) */ q.q_id, e.n_id, {total} AS pq_dist,
+         pmod(xxhash64(e.n_id), {n_salt}) AS salt
+  FROM {{encoded}} e CROSS JOIN q WHERE e.n_id != q.q_id),
+local AS (
+  SELECT q_id, n_id, pq_dist FROM (
+    SELECT *, row_number() OVER (PARTITION BY q_id, salt
+                                 ORDER BY pq_dist, n_id) AS lrn
+    FROM scored)
+  WHERE lrn <= {refine}),
+cand AS (
+  SELECT q_id, n_id FROM (
+    SELECT q_id, n_id, row_number() OVER (
+             PARTITION BY q_id ORDER BY pq_dist, n_id) AS crn
+    FROM local)
+  WHERE crn <= {refine})
+SELECT /*+ BROADCAST(cand, qv) */ cand.q_id, cand.n_id, qv.`{vec_col}` AS q_vec,
+       c.`{vec_col}` AS n_vec
+FROM {{corpus}} c
+JOIN cand ON c.`{id_col}` = cand.n_id
+JOIN {{queries}} qv ON qv.`{id_col}` = cand.q_id""",
+                                  queries=queries, encoded=encoded,
+                                  corpus=corpus).withColumn(
+        "l2_dist", l2_dist("q_vec", "n_vec")).select("q_id", "n_id", "l2_dist")
+    return _top_k(ref, k, "l2_dist", "l2_dist")
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -1106,11 +1142,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
               .filter(F.col("n_id") != F.col("q_id"))
               .select("q_id", "n_id",
                       cosine(F.col("q_vec"), F.col("n_vec")).alias("cos")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", F.col("n_id").alias("neighbor_id"),
-                          F.col("rank").cast("int").alias("rank"), "cos"))
+    return _top_k(scored, k, "cos", "cos DESC")
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_bits: int = 4,
@@ -1124,22 +1156,18 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5, n_bits: int = 4,
     when vectors near a hyperplane land on opposite sides. Recall is
     verified against cosine_topk in tests (tests/test_llm.py)."""
     planes = _planes(n_bits, dim)
-    qb = queries.select(F.col(id_col).alias("q_id"),
-                        F.col(vec_col).alias("q_vec"),
-                        srp_bucket(F.col(vec_col), planes).alias("bucket"))
+    qb = (queries.selectExpr(f"`{id_col}` AS q_id", f"`{vec_col}` AS q_vec")
+                 .withColumn("bucket", srp_bucket("q_vec", planes)))
     if multiprobe >= 1:
-        probes = F.array(F.col("bucket"),
-                         *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                           for i in range(n_bits)])
-        qb = qb.select("q_id", "q_vec", F.explode(probes).alias("bucket"))
+        flips = ", ".join(f"bucket ^ CAST({1 << i} AS BIGINT)"
+                          for i in range(n_bits))
+        qb = qb.selectExpr("q_id", "q_vec",
+                           f"explode(array(bucket, {flips})) AS bucket")
     q = F.broadcast(qb)
-    c = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-                      srp_bucket(F.col(vec_col), planes).alias("bucket"))
+    c = (corpus.selectExpr(f"`{id_col}` AS n_id", f"`{vec_col}` AS n_vec")
+               .withColumn("bucket", srp_bucket("n_vec", planes)))
     scored = (c.join(q, "bucket")
-               .filter(F.col("n_id") != F.col("q_id"))
-               .select("q_id", "n_id", cosine(F.col("q_vec"), F.col("n_vec")).alias("cos")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", F.col("n_id").alias("neighbor_id"),
-                          F.col("rank").cast("int").alias("rank"), "cos"))
+               .filter("n_id != q_id")
+               .withColumn("cos", cosine("q_vec", "n_vec"))
+               .select("q_id", "n_id", "cos"))
+    return _top_k(scored, k, "cos", "cos DESC")

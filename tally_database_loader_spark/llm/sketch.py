@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .packing import hash_order
 
 _HASH_BITS = 60  # conv(substr(md5(x),1,15),16,10) — 15 hex digits
@@ -135,8 +136,8 @@ def hll_distinct(df: DataFrame, col: str, b: int = 10) -> DataFrame:
     # broadcast-joins from the ≤ 2^b-row lookup (the v_zero=0 key maps
     # to lnf(1), matching the old greatest(V, 1) in-domain clamp on the
     # unused branch — the `small` guard already excludes it).
-    lnf_lookup = df.sparkSession.createDataFrame(
-        [(v, ln_fixed_py(max(v, 1))) for v in range(m + 1)],
+    lnf_lookup = local_frame(
+        df.sparkSession, [(v, ln_fixed_py(max(v, 1))) for v in range(m + 1)],
         "v_zero int, __lnf long")
     lnf_diff = F.lit(ln_fixed_py(m)) - F.col("__lnf")
     est_lc = F.call_function("div", F.lit(m).cast("long") * lnf_diff,

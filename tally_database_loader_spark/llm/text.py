@@ -1,9 +1,15 @@
 """Text-analysis operators for training-data pipelines.
 
-All hot-path logic is built-in ``pyspark.sql.functions`` (JVM-side,
-whole-stage codegen) — no Python UDFs. Each builder returns Column
-expressions so callers compose them into a single projection pass over the
-corpus: at 100 TB one parquet scan computes every signal.
+All hot-path logic is built-in Spark SQL (JVM-side, whole-stage codegen)
+— no Python UDFs. The per-document signal builders (tokens, counts,
+quality, language ID, repetition, fingerprints, Gopher rules) take and
+return SQL expression TEXT: the caller names its text column (``"text"``)
+and places the returned expressions with ``selectExpr`` / ``F.expr``, so
+one projection over the corpus computes every signal and the JVM parses
+each expression once, instead of receiving one Py4J call per operator of
+a Column-API tree (a ``text_profile`` build made ~2,500 such calls). The
+scrubbing and URL builders further down operate on arbitrary payload
+Columns and stay Column builders.
 
 Determinism note: every expression here has an exact DuckDB twin (see
 plans/llm_gate.py) so the driver can hash-match results.
@@ -21,6 +27,9 @@ from pyspark.sql import functions as F
 TOKEN_PATTERN = "[a-z0-9]+"
 # BPE-ish pre-tokenizer: letter runs, single digits, single punctuation
 BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
+_WS_RUN = r"\s+"
+_NOT_PUNCT = r"[a-z0-9\s]"
+_CJK = r"[\x{4e00}-\x{9fff}]"
 
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "is"],
@@ -30,44 +39,56 @@ STOPWORDS = {
 }
 
 
-def tokens(text: Column) -> Column:
-    """Lower-cased alnum token array."""
-    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_PATTERN), 0)
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslashes, quotes and
+    control characters escaped for the SQL parser)."""
+    return "'" + (value.replace("\\", "\\\\").replace("'", "\\'")
+                  .replace("\n", "\\n").replace("\t", "\\t")
+                  .replace("\r", "\\r")) + "'"
 
 
-def whitespace_token_count(text: Column) -> Column:
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
+def _words(words: list[str]) -> str:
+    return ", ".join(sql_str(w) for w in words)
 
 
-def word_token_count(text: Column) -> Column:
-    return F.size(tokens(text))
+def tokens(text: str) -> str:
+    """Lower-cased alnum token array of the SQL string expression
+    ``text``."""
+    return f"regexp_extract_all(lower({text}), {sql_str(TOKEN_PATTERN)}, 0)"
 
 
-def bpe_ish_token_count(text: Column) -> Column:
+def whitespace_token_count(text: str) -> str:
+    return (f"CASE WHEN length(trim({text})) = 0 THEN 0 "
+            f"ELSE size(split(trim({text}), {sql_str(_WS_RUN)})) END")
+
+
+def word_token_count(text: str) -> str:
+    return f"size({tokens(text)})"
+
+
+def bpe_ish_token_count(text: str) -> str:
     """Approximate BPE token count: count pre-tokenizer pieces (letter runs
     count once — real BPE splits long words further, so this is a lower
     bound, adequate for mixture/length bucketing)."""
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0))
+    return f"size(regexp_extract_all({text}, {sql_str(BPE_ISH_PATTERN)}, 0))"
 
 
-def stopword_hits(toks: Column, lang: str = "en") -> Column:
-    words = STOPWORDS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
+def stopword_hits(toks: str, lang: str = "en") -> str:
+    return f"size(filter({toks}, w -> w IN ({_words(STOPWORDS[lang])})))"
 
 
 # Staging note (round 11): every builder below accepts an optional
-# ``toks`` column. Callers that compute several builders in one
+# ``toks`` expression. Callers that compute several builders in one
 # projection should FIRST materialize the token array as its own column
-# (``df.withColumn("__toks", tokens(text))``) and pass it in: Spark's
-# subexpression elimination cannot hoist an expression out of a
-# ``when`` branch, so the inline ``tokens(text)`` regex re-ran once per
-# conditional consumer (lang_id alone holds five). Staged, the regex
-# runs once per row — text_profile measured 1.6s -> 0.37s at sf0.1,
-# rows identical.
+# (``df.withColumn("__toks", F.expr(tokens("text")))``) and pass its
+# name: Spark's subexpression elimination cannot hoist an expression out
+# of a ``CASE WHEN`` branch, so the inline tokenize regex re-ran once per
+# conditional consumer (lang_id alone holds five). Staged, the regex runs
+# once per row — text_profile measured 1.6s -> 0.37s at sf0.1, rows
+# identical.
 
 
-def quality_columns(text: Column, toks: Column | None = None) -> dict[str, Column]:
+def quality_columns(text: str, toks: str | None = None) -> dict[str, str]:
     """Heuristic document-quality signals (length, punctuation density,
     stopword density, mean word length) and a composite [0,1] score.
 
@@ -75,21 +96,20 @@ def quality_columns(text: Column, toks: Column | None = None) -> dict[str, Colum
     double arithmetic evaluated identically by Spark and the SQL oracle."""
     if toks is None:
         toks = tokens(text)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    lower = F.lower(text)
-    alpha_chars = F.length(F.regexp_replace(lower, "[^a-z0-9]", ""))
-    punct_chars = F.length(F.regexp_replace(lower, "[a-z0-9\\s]", ""))
-    denom_t = F.greatest(n_tokens, F.lit(1)).cast("double")
-    denom_c = F.greatest(n_chars, F.lit(1)).cast("double")
-    avg_word_len = alpha_chars.cast("double") / denom_t
-    punct_ratio = punct_chars.cast("double") / denom_c
-    stop_ratio = stopword_hits(toks, "en").cast("double") / denom_t
+    n_chars = f"length({text})"
+    n_tokens = f"size({toks})"
+    alpha_chars = f"length(regexp_replace(lower({text}), '[^a-z0-9]', ''))"
+    punct_chars = (f"length(regexp_replace(lower({text}), "
+                   f"{sql_str(_NOT_PUNCT)}, ''))")
+    denom_t = f"CAST(greatest({n_tokens}, 1) AS DOUBLE)"
+    denom_c = f"CAST(greatest({n_chars}, 1) AS DOUBLE)"
+    avg_word_len = f"(CAST({alpha_chars} AS DOUBLE) / {denom_t})"
+    punct_ratio = f"(CAST({punct_chars} AS DOUBLE) / {denom_c})"
+    stop_ratio = f"(CAST({stopword_hits(toks, 'en')} AS DOUBLE) / {denom_t})"
     score = (
-        F.least(F.lit(1.0), n_tokens.cast("double") / F.lit(100.0)) * F.lit(0.5)
-        + (F.lit(1.0) - F.least(F.lit(1.0), punct_ratio * F.lit(10.0))) * F.lit(0.3)
-        + F.least(F.lit(1.0), stop_ratio * F.lit(5.0)) * F.lit(0.2)
-    )
+        f"((least(1.0D, CAST({n_tokens} AS DOUBLE) / 100.0D) * 0.5D"
+        f" + (1.0D - least(1.0D, {punct_ratio} * 10.0D)) * 0.3D)"
+        f" + least(1.0D, {stop_ratio} * 5.0D) * 0.2D)")
     return {
         "n_chars": n_chars,
         "n_tokens": n_tokens,
@@ -100,7 +120,7 @@ def quality_columns(text: Column, toks: Column | None = None) -> dict[str, Colum
     }
 
 
-def lang_id(text: Column, toks: Column | None = None) -> Column:
+def lang_id(text: str, toks: str | None = None) -> str:
     """N-gram/stopword-heuristic language ID over {en,de,es,fr,zh}.
 
     CJK characters force 'zh'; otherwise argmax of per-language stopword
@@ -109,46 +129,40 @@ def lang_id(text: Column, toks: Column | None = None) -> Column:
     shape (single projection, no UDF) is the point."""
     if toks is None:
         toks = tokens(text)
-    hits = {lang: stopword_hits(toks, lang) for lang in STOPWORDS}
-    cjk = F.size(F.regexp_extract_all(text, F.lit("[\\x{4e00}-\\x{9fff}]"), 0))
-    en, de, es, fr = hits["en"], hits["de"], hits["es"], hits["fr"]
-    return (F.when(cjk > 0, F.lit("zh"))
-             .when((en >= de) & (en >= es) & (en >= fr), F.lit("en"))
-             .when((de >= es) & (de >= fr), F.lit("de"))
-             .when(es >= fr, F.lit("es"))
-             .otherwise(F.lit("fr")))
+    en, de, es, fr = (stopword_hits(toks, lang) for lang in STOPWORDS)
+    cjk = f"size(regexp_extract_all({text}, {sql_str(_CJK)}, 0))"
+    return (f"CASE WHEN {cjk} > 0 THEN 'zh'"
+            f" WHEN {en} >= {de} AND {en} >= {es} AND {en} >= {fr} THEN 'en'"
+            f" WHEN {de} >= {es} AND {de} >= {fr} THEN 'de'"
+            f" WHEN {es} >= {fr} THEN 'es' ELSE 'fr' END")
 
 
-def ngram_array(toks: Column, n: int) -> Column:
-    """Space-joined word n-grams as an array column (JVM-side ``transform``
-    over an index sequence — no explode, no UDF). Empty for docs shorter
-    than ``n`` tokens."""
-    idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + F.lit(k)) for k in range(n)]),
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.expr("cast(array() as array<string>)"))
+def ngram_array(toks: str, n: int) -> str:
+    """Space-joined word n-grams as an array expression (JVM-side
+    ``transform`` over an index sequence — no explode, no UDF). Empty for
+    docs shorter than ``n`` tokens."""
+    parts = ", ".join(f"element_at({toks}, i + {k})" for k in range(n))
+    return (f"CASE WHEN size({toks}) >= {n} THEN "
+            f"transform(sequence(1, size({toks}) - {n - 1}), "
+            f"i -> concat_ws(' ', {parts})) "
+            f"ELSE CAST(array() AS array<string>) END")
 
 
-def _dup_fraction(toks: Column, n: int) -> Column:
+def _dup_fraction(toks: str, n: int) -> str:
     """Fraction of n-grams that are within-doc repeats.
 
     The gram count is derived from ``size(toks)`` (never from the gram
     array), and the gram array feeds exactly one ``array_distinct`` — the
-    array-building ``transform`` lives inside a ``when`` branch, which
+    array-building ``transform`` lives inside a ``CASE`` branch, which
     Spark's subexpression elimination cannot hoist, so every additional
     textual occurrence would re-run the whole n-gram construction."""
-    total = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    distinct = F.size(F.array_distinct(ngram_array(toks, n)))
-    return F.when(
-        total > 0,
-        (total - distinct).cast("double") / total.cast("double"),
-    ).otherwise(F.lit(0.0))
+    total = f"greatest(size({toks}) - {n - 1}, 0)"
+    distinct = f"size(array_distinct({ngram_array(toks, n)}))"
+    return (f"CASE WHEN {total} > 0 THEN CAST({total} - {distinct} AS DOUBLE)"
+            f" / CAST({total} AS DOUBLE) ELSE 0.0D END")
 
 
-def repetition_columns(text: Column, toks: Column | None = None) -> dict[str, Column]:
+def repetition_columns(text: str, toks: str | None = None) -> dict[str, str]:
     """Gopher-style repetition signals: the fraction of word 2-grams and
     3-grams that are repeats within the document. High values flag
     boilerplate/degenerate text for filtering. Single projection pass,
@@ -156,36 +170,32 @@ def repetition_columns(text: Column, toks: Column | None = None) -> dict[str, Co
     if toks is None:
         toks = tokens(text)
     return {
-        "n_bigrams": F.greatest(F.size(toks) - 1, F.lit(0)).cast("int"),
+        "n_bigrams": f"CAST(greatest(size({toks}) - 1, 0) AS INT)",
         "dup_bigram_frac": _dup_fraction(toks, 2),
         "dup_trigram_frac": _dup_fraction(toks, 3),
     }
 
 
-def normalized_text(text: Column) -> Column:
+def normalized_text(text: str) -> str:
     """Whitespace-collapsed lower-case normalization for fingerprinting."""
-    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+    return f"trim(regexp_replace(lower({text}), {sql_str(_WS_RUN)}, ' '))"
 
 
-def fingerprint_md5(text: Column) -> Column:
+def fingerprint_md5(text: str) -> str:
     """Content fingerprint: md5 of normalized text (exact-dup key)."""
-    return F.md5(F.encode(normalized_text(text), "utf-8"))
+    return f"md5(encode({normalized_text(text)}, 'utf-8'))"
 
 
 POLY_MOD = 2147483647  # 2^31-1; keeps acc*31+c < 2^36, safe in int64
 
 
-def fingerprint_rolling(text: Column) -> Column:
+def fingerprint_rolling(text: str) -> str:
     """Polynomial rolling hash over the normalized character stream:
     ``h = (h*31 + codepoint) mod (2^31-1)`` — the classic document
     fingerprint, computed with the higher-order ``aggregate`` (codegen'd,
     no UDF; left-to-right fold matches the SQL oracle's list_reduce)."""
-    chars = F.split(normalized_text(text), "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(POLY_MOD),
-    )
+    return (f"aggregate(split({normalized_text(text)}, ''), CAST(0 AS BIGINT), "
+            f"(acc, c) -> (acc * 31 + ascii(c)) % {POLY_MOD})")
 
 
 # ---------------------------------------------------------------------------
@@ -206,9 +216,9 @@ _ELLIPSIS_END = r"(\.\.\.|…)[ \t]*$"
 _SYMBOLS = r"#|\.\.\.|…"
 
 
-def gopher_columns(text: Column, min_words: int = 50,
+def gopher_columns(text: str, min_words: int = 50,
                    max_words: int = 100_000,
-                   toks: Column | None = None) -> dict[str, Column]:
+                   toks: str | None = None) -> dict[str, str]:
     """Gopher-style rule-filter signals: per-rule booleans plus the raw
     ratios they threshold, and a composite ``gopher_pass``.
 
@@ -225,46 +235,42 @@ def gopher_columns(text: Column, min_words: int = 50,
     divisions of exact integers — IEEE-identical across engines)."""
     if toks is None:
         toks = tokens(text)
-    n_words = F.size(toks)
-    denom_w = F.greatest(n_words, F.lit(1)).cast("double")
+    n_words = f"size({toks})"
+    denom_w = f"CAST(greatest({n_words}, 1) AS DOUBLE)"
     # sum of token lengths == length of the gap-free concatenation
-    mean_word_len = (F.length(F.concat_ws("", toks)).cast("double") / denom_w)
-    n_symbols = F.size(F.regexp_extract_all(text, F.lit(_SYMBOLS), 0))
-    symbol_ratio = n_symbols.cast("double") / denom_w
-    lines = F.split(text, "\n")
-    n_lines = F.greatest(F.size(lines), F.lit(1)).cast("double")
-    bullet_frac = (F.size(F.filter(lines, lambda l: l.rlike(_BULLET_START)))
-                   .cast("double") / n_lines)
-    ellipsis_frac = (F.size(F.filter(lines, lambda l: l.rlike(_ELLIPSIS_END)))
-                     .cast("double") / n_lines)
-    alpha_frac = (F.size(F.filter(toks, lambda t: t.rlike("[a-z]")))
-                  .cast("double") / denom_w)
-    n_req_stops = F.size(F.array_intersect(
-        F.array_distinct(toks),
-        F.array(*[F.lit(w) for w in GOPHER_REQUIRED_STOPWORDS])))
+    mean_word_len = f"(CAST(length(concat_ws('', {toks})) AS DOUBLE) / {denom_w})"
+    n_symbols = f"size(regexp_extract_all({text}, {sql_str(_SYMBOLS)}, 0))"
+    symbol_ratio = f"(CAST({n_symbols} AS DOUBLE) / {denom_w})"
+    lines = f"split({text}, {sql_str(chr(10))})"
+    n_lines = f"CAST(greatest(size({lines}), 1) AS DOUBLE)"
+    bullet_frac = (f"(CAST(size(filter({lines}, l -> l RLIKE "
+                   f"{sql_str(_BULLET_START)})) AS DOUBLE) / {n_lines})")
+    ellipsis_frac = (f"(CAST(size(filter({lines}, l -> l RLIKE "
+                     f"{sql_str(_ELLIPSIS_END)})) AS DOUBLE) / {n_lines})")
+    alpha_frac = (f"(CAST(size(filter({toks}, w -> w RLIKE '[a-z]')) "
+                  f"AS DOUBLE) / {denom_w})")
+    n_req_stops = (f"size(array_intersect(array_distinct({toks}), "
+                   f"array({_words(GOPHER_REQUIRED_STOPWORDS)})))")
     rules = {
-        "r_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "r_mean_word_len": (mean_word_len >= 3.0) & (mean_word_len <= 10.0),
-        "r_symbol_ratio": symbol_ratio <= 0.1,
-        "r_bullet_lines": bullet_frac <= 0.9,
-        "r_ellipsis_lines": ellipsis_frac <= 0.3,
-        "r_alpha_words": alpha_frac >= 0.8,
-        "r_stopwords": n_req_stops >= 2,
+        "r_word_count": f"({n_words} >= {min_words} AND {n_words} <= {max_words})",
+        "r_mean_word_len": f"({mean_word_len} >= 3.0D AND {mean_word_len} <= 10.0D)",
+        "r_symbol_ratio": f"({symbol_ratio} <= 0.1D)",
+        "r_bullet_lines": f"({bullet_frac} <= 0.9D)",
+        "r_ellipsis_lines": f"({ellipsis_frac} <= 0.3D)",
+        "r_alpha_words": f"({alpha_frac} >= 0.8D)",
+        "r_stopwords": f"({n_req_stops} >= 2)",
     }
-    out: dict[str, Column] = {
-        "n_words": n_words.cast("int"),
+    out: dict[str, str] = {
+        "n_words": f"CAST({n_words} AS INT)",
         "mean_word_len": mean_word_len,
         "symbol_ratio": symbol_ratio,
         "bullet_frac": bullet_frac,
         "ellipsis_frac": ellipsis_frac,
         "alpha_frac": alpha_frac,
-        "n_req_stopwords": n_req_stops.cast("int"),
+        "n_req_stopwords": f"CAST({n_req_stops} AS INT)",
     }
-    passed = F.lit(True)
-    for name, rule in rules.items():
-        out[name] = rule
-        passed = passed & rule
-    out["gopher_pass"] = passed
+    out.update(rules)
+    out["gopher_pass"] = "(" + " AND ".join(["TRUE", *rules.values()]) + ")"
     return out
 
 

@@ -50,7 +50,7 @@ def postings(df: DataFrame, id_col: str, text_col: str,
     if tokens_col is None:
         from ..sources.catalog import fan_out
         df = fan_out(df, id_col)
-        toks = tokens(F.col(text_col))
+        toks = F.expr(tokens(f"`{text_col}`"))
     else:
         toks = F.col(tokens_col)
     return (df.select(F.col(id_col).alias("doc_id"),
@@ -75,7 +75,7 @@ def _corpus_stats(df: DataFrame, id_col: str, text_col: str) -> tuple[int, float
     subtree was strictly slower in every variant tried (the
     checkpoint/reuse table in OPTIMIZATION_r12.md)."""
     row = df.agg(F.count(F.lit(1)).alias("n"),
-                 F.sum(F.size(tokens(F.col(text_col)))).alias("toks")).collect()[0]
+                 F.sum(F.size(F.expr(tokens(f"`{text_col}`")))).alias("toks")).collect()[0]
     n = int(row["n"])
     return n, (float(row["toks"]) / n if n else 0.0)
 
@@ -104,7 +104,7 @@ def bm25_table(df: DataFrame, id_col: str, text_col: str,
     dfreq = doc_freq(post)
     # dl off the RAW scan (no fan-out exchange): see _corpus_stats note
     dl = (df.select(F.col(id_col).alias("doc_id"),
-                    F.size(tokens(F.col(text_col))).cast("int").alias("dl")))
+                    F.size(F.expr(tokens(f"`{text_col}`"))).cast("int").alias("dl")))
     tf = F.col("tf").cast("double")
     dfl = F.col("df").cast("double")
     idf = F.log(F.lit(1.0) + (F.lit(float(n)) - dfl + F.lit(0.5))

@@ -41,7 +41,7 @@ def hll_token_distinct_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.lm import _tokens
     from ..llm.sketch import hll_distinct
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+    tok = d.select(F.explode(F.expr(_tokens("text"))).alias("tok"))
     return hll_distinct(tok, "tok", b=10)
 
 
@@ -60,7 +60,7 @@ def sketch_suite_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The CMS/HLL/Bloom arms each re-run the token explode above the
     # shared fan-out exchange — measured faster at bench SF than
     # materializing the token arrays once (OPTIMIZATION_r12.md)
-    tok = d.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+    tok = d.select(F.explode(F.expr(_tokens("text"))).alias("tok"))
     cms = cms_build(tok, "tok", d=4, w=4096).select(
         F.lit("cms").alias("family"),
         F.concat_ws(":", F.col("r").cast("string"),
@@ -70,7 +70,7 @@ def sketch_suite_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("hll").alias("family"), F.lit("tokens").alias("key"),
         F.col("estimate").alias("metric"))
     even = (d.filter(F.col("doc_id") % 2 == 0)
-             .select(F.explode(_tokens(F.col("text"))).alias("tok")))
+             .select(F.explode(F.expr(_tokens("text"))).alias("tok")))
     bloom = bloom_build(even, "tok", m=4096, k=4).select(
         F.lit("bloom").alias("family"),
         F.col("pos").cast("string").alias("key"),

@@ -105,11 +105,10 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace, word, and BPE-ish pre-tokenizer counts —
     one projection pass, all JVM-side regex (llm/text.py)."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return d.select("doc_id",
-                    tx.whitespace_token_count(t).alias("n_ws_tokens"),
-                    tx.word_token_count(t).alias("n_words"),
-                    tx.bpe_ish_token_count(t).alias("n_bpe_ish"))
+    return d.selectExpr(
+        "doc_id", f"{tx.whitespace_token_count('text')} AS n_ws_tokens",
+        f"{tx.word_token_count('text')} AS n_words",
+        f"{tx.bpe_ish_token_count('text')} AS n_bpe_ish")
 
 
 _DD_QUALITY = f"""
@@ -135,8 +134,8 @@ FROM ({_DD_QUALITY})
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring (length/punct/stopword signals) — llm/text.py."""
     d = load_table(spark, sf_dir, "documents")
-    cols = tx.quality_columns(F.col("text"))
-    return d.select("doc_id", *[c.alias(n) for n, c in cols.items()])
+    cols = tx.quality_columns("text")
+    return d.selectExpr("doc_id", *[f"{c} AS {n}" for n, c in cols.items()])
 
 
 def _dd_lang_hits(lang: str) -> str:
@@ -162,10 +161,9 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     when-branches the optimizer cannot hoist a shared tokenize out of
     (llm/text.py staging note)."""
     d = load_table(spark, sf_dir, "documents") \
-        .withColumn("__toks", tx.tokens(F.col("text")))
-    return d.select("doc_id", "lang",
-                    tx.lang_id(F.col("text"),
-                               toks=F.col("__toks")).alias("lang_pred"))
+        .withColumn("__toks", F.expr(tx.tokens("text")))
+    return d.selectExpr("doc_id", "lang",
+                        f"{tx.lang_id('text', toks='__toks')} AS lang_pred")
 
 
 @gate_query("fingerprints", oracle="""
@@ -180,9 +178,9 @@ def fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: md5 of normalized text + polynomial rolling
     hash folded with the higher-order aggregate (llm/text.py)."""
     d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id",
-                    tx.fingerprint_md5(F.col("text")).alias("fp_md5"),
-                    tx.fingerprint_rolling(F.col("text")).alias("fp_rolling"))
+    return d.selectExpr("doc_id",
+                        f"{tx.fingerprint_md5('text')} AS fp_md5",
+                        f"{tx.fingerprint_rolling('text')} AS fp_rolling")
 
 
 # ---------------------------------------------------------------------------
@@ -1047,9 +1045,9 @@ def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``maxPartitionBytes``, see SCALE.md §1)."""
     from ..sources.catalog import fan_out
     d = fan_out(load_table(spark, sf_dir, "documents")) \
-        .withColumn("__toks", tx.tokens(F.col("text")))
-    cols = tx.repetition_columns(F.col("text"), toks=F.col("__toks"))
-    return d.select("doc_id", *[c.alias(n) for n, c in cols.items()])
+        .withColumn("__toks", F.expr(tx.tokens("text")))
+    cols = tx.repetition_columns("text", toks="__toks")
+    return d.selectExpr("doc_id", *[f"{c} AS {n}" for n, c in cols.items()])
 
 
 CHUNK_TOKENS = 32
@@ -1075,7 +1073,7 @@ def chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the row expansion carries no duplicated text through the shuffle —
     there is no shuffle; chunking stays map-side at any scale."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tx.tokens(F.col("text"))
+    toks = F.expr(tx.tokens("text"))
     starts = F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1)),
                         F.lit(CHUNK_TOKENS))
     chunk = F.slice(F.col("t"), F.col("s"), CHUNK_TOKENS)
@@ -1111,7 +1109,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ranks only the surviving 100 rows."""
     from pyspark.sql import Window
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tx.tokens(F.col("text"))).alias("token"))
+    tok = d.select("doc_id", F.explode(F.expr(tx.tokens("text"))).alias("token"))
     agg = (tok.groupBy("token")
               .agg(F.count(F.lit(1)).alias("tf"),
                    F.countDistinct("doc_id").alias("df")))
@@ -1145,12 +1143,10 @@ def mixture_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive under AQE, unlike a float mean (the per-row double
     quality score is thresholded *before* aggregation on purpose)."""
     d = load_table(spark, sf_dir, "documents")
-    q = tx.quality_columns(F.col("text"))
-    per_doc = d.select(
-        "lang", "source",
-        q["n_tokens"].alias("nt"),
-        F.length("text").alias("nc"),
-        (q["quality_score"] >= 0.5).alias("hi"))
+    q = tx.quality_columns("text")
+    per_doc = d.selectExpr(
+        "lang", "source", f"{q['n_tokens']} AS nt", "length(text) AS nc",
+        f"{q['quality_score']} >= 0.5D AS hi")
     return (per_doc.groupBy("lang", "source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum("nt").cast("long").alias("total_tokens"),
@@ -1344,7 +1340,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (reading materialized string-array blocks costs more than the
     # codegen'd tokenize+concat; OPTIMIZATION_r12.md).
     sh = d.select("doc_id",
-                  F.explode(shingles(F.col("text"), 3)).alias("shingle"))
+                  F.explode(F.expr(shingles("text", 3))).alias("shingle"))
     bench = (sh.filter(F.col("doc_id") % 97 == 0)
                .select("shingle").distinct()
                .withColumn("hit", F.lit(1)))
@@ -1832,7 +1828,7 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint of the token arrays read by both arms — ~2× slower
     # at bench SF than the duplicated regex (string-array block reads
     # cost more than the codegen'd tokenizer; OPTIMIZATION_r12.md).
-    tok = d.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+    tok = d.select(F.explode(F.expr(_tokens("text"))).alias("tok"))
     sketch = cms_build(tok, "tok", d=4, w=4096)
     cand = (tok.groupBy("tok").agg(F.count(F.lit(1)).alias("exact"))
                .orderBy(F.col("exact").desc(), F.col("tok")).limit(20))
@@ -1892,9 +1888,9 @@ def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared fan-out exchange — measured faster than materializing the
     # token arrays once (cms_token_counts note; OPTIMIZATION_r12.md)
     even = (d.filter(F.col("doc_id") % 2 == 0)
-             .select(F.explode(_tokens(F.col("text"))).alias("tok")))
+             .select(F.explode(F.expr(_tokens("text"))).alias("tok")))
     bloom = bloom_build(even, "tok", m=4096, k=4)
-    alltok = d.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+    alltok = d.select(F.explode(F.expr(_tokens("text"))).alias("tok"))
     cand = (alltok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
                   .orderBy(F.col("c").desc(), F.col("tok")).limit(30)
                   .select("tok")
@@ -1968,7 +1964,7 @@ def hll_token_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.sketch import hll_distinct
     from ..sources.catalog import fan_out
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    tok = d.select(F.explode(_tokens(F.col("text"))).alias("tok"))
+    tok = d.select(F.explode(F.expr(_tokens("text"))).alias("tok"))
     est = hll_distinct(tok, "tok", b=10)
     exact = tok.agg(F.countDistinct("tok").alias("exact_distinct"))
     return est.crossJoin(exact)
@@ -2069,9 +2065,9 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejects every synthetic bench doc — keeping it would make the gate
     # a trivially-empty hash match); composed from the same per-rule
     # booleans gopher_rules checks individually
-    g = tx.gopher_columns(F.col("text"), min_words=20)
-    gp = (g["r_word_count"] & g["r_mean_word_len"]
-          & g["r_symbol_ratio"] & g["r_alpha_words"])
+    g = tx.gopher_columns("text", min_words=20)
+    gp = " AND ".join(g[r] for r in ("r_word_count", "r_mean_word_len",
+                                      "r_symbol_ratio", "r_alpha_words"))
     kept = (d.filter(gp)
              .select("doc_id", "source", "n_chars",
                      F.md5("text").alias("fp")))
@@ -2177,9 +2173,9 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.packing import pack_sequences
     from ..sources.catalog import fan_out
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    g = tx.gopher_columns(F.col("text"), min_words=20)
-    gp = (g["r_word_count"] & g["r_mean_word_len"]
-          & g["r_symbol_ratio"] & g["r_alpha_words"])
+    g = tx.gopher_columns("text", min_words=20)
+    gp = " AND ".join(g[r] for r in ("r_word_count", "r_mean_word_len",
+                                      "r_symbol_ratio", "r_alpha_words"))
     kept = (d.filter(gp)
              .select("doc_id", "source", "n_chars", "text",
                      F.md5("text").alias("fp")))
@@ -2195,7 +2191,7 @@ def curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = dup_clusters(pairs)
     scores = surv.select(
         "doc_id",
-        tx.quality_columns(F.col("text"))["quality_score"].alias("score"))
+        F.expr(tx.quality_columns("text")["quality_score"]).alias("score"))
     elected = elect_keepers(cl, scores)
     drop = elected.filter(F.col("keep") == 0).select("doc_id")
     final = surv.join(drop, "doc_id", "left_anti")
@@ -2284,32 +2280,30 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``maxPartitionBytes``, SCALE.md §1)."""
     from ..sources.catalog import fan_out
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    t = F.col("text")
     # STAGE the token array once (round 11): inline, the tokenizing
     # regex sat inside when-branches of five builders and subexpression
     # elimination cannot hoist conditional branches, so it re-ran up to
     # ~10× per row; as a materialized column every consumer references
     # the attribute. 1.6s → 0.37s at sf0.1, rows identical (see
     # llm/text.py staging note).
-    d = d.withColumn("__toks", tx.tokens(t))
-    toks = F.col("__toks")
-    quality = tx.quality_columns(t, toks=toks)
-    repetition = tx.repetition_columns(t, toks=toks)
-    gopher = tx.gopher_columns(t, min_words=20, toks=toks)
+    d = d.withColumn("__toks", F.expr(tx.tokens("text")))
+    quality = tx.quality_columns("text", toks="__toks")
+    repetition = tx.repetition_columns("text", toks="__toks")
+    gopher = tx.gopher_columns("text", min_words=20, toks="__toks")
     gopher.pop("n_words")  # already emitted by word_token_count
-    return d.select(
+    as_int = {n for n in gopher if n.startswith("r_") or n == "gopher_pass"}
+    return d.selectExpr(
         "doc_id",
-        tx.whitespace_token_count(t).alias("n_ws_tokens"),
-        F.size(toks).alias("n_words"),
-        tx.bpe_ish_token_count(t).alias("n_bpe_ish"),
-        *[c.alias(n) for n, c in quality.items()],
+        f"{tx.whitespace_token_count('text')} AS n_ws_tokens",
+        "size(__toks) AS n_words",
+        f"{tx.bpe_ish_token_count('text')} AS n_bpe_ish",
+        *[f"{c} AS {n}" for n, c in quality.items()],
         "lang",
-        tx.lang_id(t, toks=toks).alias("lang_pred"),
-        tx.fingerprint_md5(t).alias("fp_md5"),
-        tx.fingerprint_rolling(t).alias("fp_rolling"),
-        *[c.alias(n) for n, c in repetition.items()],
-        *[(c.cast("int").alias(n)
-           if n.startswith("r_") or n == "gopher_pass" else c.alias(n))
+        f"{tx.lang_id('text', toks='__toks')} AS lang_pred",
+        f"{tx.fingerprint_md5('text')} AS fp_md5",
+        f"{tx.fingerprint_rolling('text')} AS fp_rolling",
+        *[f"{c} AS {n}" for n, c in repetition.items()],
+        *[f"CAST({c} AS INT) AS {n}" if n in as_int else f"{c} AS {n}"
           for n, c in gopher.items()])
 
 
@@ -2412,47 +2406,47 @@ def similarity_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.similarity import (centroid_cosine, cluster_balanced_sample,
                                   ivf_kmeans_topk, kmeans_cells,
                                   quantized_topk)
+    from ..session import run_concurrently
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
+    q = e.filter("vec_id < 8")
     # ONE Lloyd fit shared by the ivf and cluster-balanced arms — each
     # fit scans the corpus `iters` times, and both arms use the identical
     # (n_lists=8, iters=2) quantizer (review r4: the suite previously fit
-    # it twice, bit-identically)
-    fitted = kmeans_cells(e, n_lists=8, iters=2)
-
-    def tag(df: DataFrame, method: str, score_col: str) -> DataFrame:
-        return df.select(F.lit(method).alias("method"), "q_id", "neighbor_id",
-                         "rank", F.col(score_col).alias("score"))
-
-    cw = W.partitionBy("label").orderBy(F.asc("cos_centroid"), F.asc("vec_id"))
-    cent = (centroid_cosine(e)
-            .withColumn("rank", F.row_number().over(cw))
-            .filter(F.col("rank") <= 5)
-            .select(F.lit("centroid_outlier").alias("method"),
-                    F.col("label").cast("long").alias("q_id"),
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("rank").cast("int").alias("rank"),
-                    F.col("cos_centroid").alias("score")))
-    pq = pq_adc_topk_gate(spark, sf_dir).select(
-        F.lit("pq_adc").alias("method"), "q_id", "neighbor_id", "rank",
-        F.col("l2_dist").alias("score"))
-    cb = cluster_balanced_sample(e, per_cluster=40, n_clusters=8, iters=2,
-                                 fitted=fitted).select(
-        F.lit("cluster_balanced").alias("method"),
-        F.col("cell").cast("long").alias("q_id"),
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("rk").alias("rank"),
-        F.lit(None).cast("double").alias("score"))
-    return (tag(cosine_topk(e, q, k=5), "cosine", "cos")
-            .unionByName(tag(lsh_topk(e, q, k=5, n_bits=4, dim=64),
-                             "srp_lsh", "cos"))
-            .unionByName(tag(quantized_topk(e, q, k=5), "int8", "score"))
-            .unionByName(tag(ivf_kmeans_topk(e, q, k=5, n_lists=8, iters=2,
-                                             nprobe=2, fitted=fitted),
-                             "ivf_kmeans", "cos"))
-            .unionByName(cent)
-            .unionByName(pq)
-            .unionByName(cb))
+    # it twice, bit-identically). It and the PQ arm's fit read the same
+    # corpus independently, so they build side by side on their own
+    # driver threads and their single-task Lloyd jobs share the cores.
+    fitted, pq = run_concurrently(spark, lambda build: build(), [
+        lambda: kmeans_cells(e, n_lists=8, iters=2),
+        lambda: pq_adc_topk_gate(spark, sf_dir)])
+    arms = {
+        "cosine": cosine_topk(e, q, k=5),
+        "srp_lsh": lsh_topk(e, q, k=5, n_bits=4, dim=64),
+        "int8": quantized_topk(e, q, k=5),
+        "ivf_kmeans": ivf_kmeans_topk(e, q, k=5, n_lists=8, iters=2,
+                                      nprobe=2, fitted=fitted),
+        "centroid_outlier": centroid_cosine(e),
+        "pq_adc": pq,
+        "cluster_balanced": cluster_balanced_sample(
+            e, per_cluster=40, n_clusters=8, iters=2, fitted=fitted)}
+    # one SQL statement tags and unions the seven arms
+    return spark.sql("""
+SELECT 'cosine' AS method, q_id, neighbor_id, rank, cos AS score
+FROM {cosine}
+UNION ALL SELECT 'srp_lsh', q_id, neighbor_id, rank, cos FROM {srp_lsh}
+UNION ALL SELECT 'int8', q_id, neighbor_id, rank, score FROM {int8}
+UNION ALL SELECT 'ivf_kmeans', q_id, neighbor_id, rank, cos FROM {ivf_kmeans}
+UNION ALL
+SELECT 'centroid_outlier', CAST(label AS BIGINT), vec_id, CAST(rank AS INT),
+       cos_centroid
+FROM (SELECT *, row_number() OVER (PARTITION BY label
+                                   ORDER BY cos_centroid, vec_id) AS rank
+      FROM {centroid_outlier})
+WHERE rank <= 5
+UNION ALL SELECT 'pq_adc', q_id, neighbor_id, rank, l2_dist FROM {pq_adc}
+UNION ALL
+SELECT 'cluster_balanced', CAST(cell AS BIGINT), vec_id, rk,
+       CAST(NULL AS DOUBLE)
+FROM {cluster_balanced}""", **arms)
 
 
 # ---------------------------------------------------------------------------
@@ -3003,7 +2997,7 @@ def lm_score_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured ~2× slower at bench SF (OPTIMIZATION_r12.md — string-array
     # block reads cost more than the codegen'd regex).
     staged = d.select("doc_id", "lang",
-                      tx.tokens(F.col("text")).alias("__toks"))
+                      F.expr(tx.tokens("text")).alias("__toks"))
     uni = unigram_logprob(staged, tokens_col="__toks").select(
         F.lit("unigram").alias("method"), "doc_id",
         F.col("n_tokens").alias("n_units"), F.col("lm_score").alias("score"))
@@ -3077,7 +3071,7 @@ def token_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lm_score_suite staging note): single regex evaluation per
     # projection where PMI references the array many times; deliberately
     # NOT checkpointed (measured slower — OPTIMIZATION_r12.md).
-    staged = d.select("doc_id", tx.tokens(F.col("text")).alias("__toks"))
+    staged = d.select("doc_id", F.expr(tx.tokens("text")).alias("__toks"))
     tok = staged.select("doc_id", F.explode("__toks").alias("token"))
     vocab = (tok.groupBy("token")
                 .agg(F.count(F.lit(1)).alias("tf"),
@@ -3349,13 +3343,11 @@ def gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     as INT 0/1 for engine-neutral hashing."""
     from ..sources.catalog import fan_out
     d = fan_out(load_table(spark, sf_dir, "documents"))
-    cols = tx.gopher_columns(F.col("text"), min_words=20)
-    sel = [F.col("doc_id")]
-    for n, c in cols.items():
-        sel.append(c.cast("int").alias(n)
-                   if n.startswith("r_") or n == "gopher_pass"
-                   else c.alias(n))
-    return d.select(*sel)
+    cols = tx.gopher_columns("text", min_words=20)
+    return d.selectExpr("doc_id", *[
+        f"CAST({c} AS INT) AS {n}"
+        if n.startswith("r_") or n == "gopher_pass" else f"{c} AS {n}"
+        for n, c in cols.items()])
 
 
 @gate_query("dsir_weights", oracle=f"""
@@ -4057,8 +4049,8 @@ def cross_modal_keeper_election(spark: SparkSession,
     from ..llm.dedup import elect_keepers
     cl = cross_modal_dedup(spark, sf_dir).select("doc_id", "cluster_id")
     d = load_table(spark, sf_dir, "documents")
-    cols = tx.quality_columns(F.col("text"))
-    scores = d.select("doc_id", cols["quality_score"].alias("score"))
+    scores = d.selectExpr(
+        "doc_id", f"{tx.quality_columns('text')['quality_score']} AS score")
     return elect_keepers(cl, scores)
 
 

@@ -30,6 +30,7 @@ import threading
 import weakref
 from collections import defaultdict
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -467,22 +468,26 @@ def _walk_groups(cat: Catalog, group: str, max_depth: int,
     the dimension, walked on the driver, level by level exactly as the
     recursive CTE joins: NULL matches nothing, every matching row is
     emitted (duplicate names keep the join's multiplicity) and a cycle
-    stops after ``max_depth`` levels."""
+    stops after ``max_depth`` levels. The reached rows go back as an
+    Arrow table, which Spark keeps as a local relation: executing it
+    starts no Python worker."""
     g = cat["mst_group"].select("name", "parent")
-    rows = g.collect()
+    tbl = g.toArrow()
+    rows = list(zip(*(tbl.column(c).to_pylist() for c in ("name", "parent"))))
     match, link = (1, 0) if down else (0, 1)
     edges = defaultdict(list)
-    for r in rows:
+    for i, r in enumerate(rows):
         if r[match] is not None:  # NULL matches nothing, so never index it
-            edges[r[match]].append(r)
-    level = [r for r in rows if r[0] == group]
+            edges[r[match]].append(i)
+    level = [i for i, r in enumerate(rows) if r[0] == group]
     out = list(level)
     for _ in range(max_depth - 1):
-        level = [e for r in level for e in edges.get(r[link], ())]
+        level = [e for i in level for e in edges.get(rows[i][link], ())]
         if not level:
             break
         out += level
-    return g.sparkSession.createDataFrame(out, g.schema)
+    return g.sparkSession.createDataFrame(
+        tbl.take(pa.array(out, pa.int64())), g.schema)
 
 
 def group_tree_parent_child(cat: Catalog, group: str, max_depth: int = 32) -> DataFrame:

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults match the driver environment (local[32], 128 GiB). On a real
 # cluster SPARK_GRAFT_CPUS is irrelevant — master comes from spark-submit.
@@ -121,3 +121,22 @@ def run_concurrently(spark: SparkSession, fn, items) -> list:
         futures = [pool.submit(inheritable_thread_target(spark)(fn), item)
                    for item in items]
     return [f.result() for f in futures]
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str) -> DataFrame:
+    """``rows`` — tuples in the column order of the DDL ``schema`` — as a
+    DataFrame built from an Arrow table. Spark keeps such a frame in the
+    plan as a local relation, so executing it starts no Python worker,
+    where a frame built from Python rows is a Python-RDD scan that runs a
+    Python task per partition on every execution."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.table([pa.array(c, to_arrow_type(f.dataType))
+                      for c, f in zip(cols, struct.fields)],
+                     names=struct.names)
+    return spark.createDataFrame(table, struct)

@@ -122,8 +122,9 @@ def streaming_dedup(docs: DataFrame, *, key_col: str = "fingerprint",
 
 
 
-def band_signatures(text, n: int = 3, k: int = 16, bands: int = 4):
-    """``array<struct<band:int, bsig:string>>`` — the document's LSH band
+def band_signatures(text: str, n: int = 3, k: int = 16, bands: int = 4):
+    """``array<struct<band:int, bsig:string>>`` of the SQL string
+    expression ``text`` (a column name, say) — the document's LSH band
     signatures computed entirely MAP-SIDE (array_min over transformed
     shingle hashes), no explode/groupBy. Same constants and md5-parity
     base hash as the batch path (llm/dedup.minhash_signature_table), so
@@ -141,7 +142,7 @@ def band_signatures(text, n: int = 3, k: int = 16, bands: int = 4):
         raise ValueError("bands must divide k (every minhash row belongs "
                          "to exactly one band)")
     consts = _permutation_constants(k)
-    sh = shingles(text, n)
+    sh = F.expr(shingles(text, n))
     bases = F.transform(sh, lambda s: F.pmod(_parity_base(s),
                                              F.lit(MINHASH_PRIME)))
     mh = [F.array_min(F.transform(
@@ -203,7 +204,7 @@ def streaming_near_dedup(docs: DataFrame, *, id_col: str = "doc_id",
 
     from pyspark.sql import functions as F
     sig = (docs.select(F.col(id_col).alias("doc_id"),
-                       F.explode(band_signatures(F.col(text_col), n, k, bands))
+                       F.explode(band_signatures(f"`{text_col}`", n, k, bands))
                         .alias("b"))
                .select("doc_id", F.col("b.band").alias("band"),
                        F.col("b.bsig").alias("bsig"))

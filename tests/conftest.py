@@ -89,26 +89,31 @@ def stub_tally():
 @pytest.fixture()
 def py4j_round_trips(monkeypatch):
     """``count(build)`` → the Py4J round trips one call of ``build()``
-    makes from the calling thread, after one uncounted warm-up call. Py4J
-    releases dead JVM references from its own finalizer thread, so those
-    are not counted."""
+    makes, after one uncounted warm-up call: those of the calling thread
+    and of every thread the build hands work to. Py4J releases dead JVM
+    references from its own finalizer thread, so those are not
+    counted."""
+    import gc
     import threading
 
-    from py4j.clientserver import ClientServerConnection
+    from py4j.clientserver import ClientServerConnection, FinalizerWorker
 
     send = ClientServerConnection.send_command
-    calls = {}
+    calls = [0]
+    lock = threading.Lock()
 
     def counting(self, command):
-        me = threading.get_ident()
-        calls[me] = calls.get(me, 0) + 1
+        if not isinstance(threading.current_thread(), FinalizerWorker):
+            with lock:
+                calls[0] += 1
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
 
     def count(build) -> int:
         build()
-        calls.clear()
+        gc.collect()  # release the warm-up's JVM references first
+        calls[0] = 0
         build()
-        return calls.get(threading.get_ident(), 0)
+        return calls[0]
     return count

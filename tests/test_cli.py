@@ -337,7 +337,8 @@ def test_cli_http_loop_and_abort(spark, setup, monkeypatch, stub_tally):
     tmp, cfgpath = setup
     overrides = ["--tally-dumpdir", "",          # falsy ⇒ live HTTP path
                  "--tally-server", "127.0.0.1",
-                 "--tally-port", str(port)]
+                 "--tally-port", str(port),
+                 "--tally-company", "Acme Traders"]
     monkeypatch.setattr(cli, "_sleep", lambda s: None)
     counts = main(["--config", str(cfgpath), *overrides,
                    "--tally-frequency", "1"], spark=spark, max_ticks=2)
@@ -350,6 +351,21 @@ def test_cli_http_loop_and_abort(spark, setup, monkeypatch, stub_tally):
     with pytest.raises(SyncAborted):
         run_import(spark, cfg, SyncLogger(str(tmp / "abort-log.txt")),
                    aborted=lambda: True)
+
+
+def test_cli_live_poll_loop_requires_company(spark, setup, stub_tally):
+    """A live poll loop (``tally.frequency`` > 0, no dump directory)
+    with an empty ``tally.company`` would sync whatever company Tally
+    has open, so a company switched mid-loop would merge its rows over
+    the previous company's. The CLI refuses to start it, naming the
+    setting, before any request reaches Tally."""
+    port, bodies = stub_tally
+    _, cfgpath = setup
+    with pytest.raises(SystemExit, match="tally.company"):
+        main(["--config", str(cfgpath), "--tally-dumpdir", "",
+              "--tally-server", "127.0.0.1", "--tally-port", str(port),
+              "--tally-frequency", "1"], spark=spark, max_ticks=1)
+    assert bodies == []
 
 
 def test_cli_live_fetch_substitutes_the_date_window(spark, setup, stub_tally):

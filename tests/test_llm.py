@@ -429,9 +429,10 @@ def test_repetition_and_chunking_edge_cases(spark):
                                                       tokens)
     rows = [(0, ""), (1, "   "), (2, "solo"), (3, "a a a a"), (4, "x y x y z")]
     d = spark.createDataFrame(rows, "doc_id int, text string")
-    cols = repetition_columns(F.col("text"))
+    cols = repetition_columns("text")
     out = {r["doc_id"]: r for r in
-           d.select("doc_id", *[c.alias(n) for n, c in cols.items()]).collect()}
+           d.selectExpr("doc_id",
+                        *[f"{c} AS {n}" for n, c in cols.items()]).collect()}
     for empty_id in (0, 1, 2):  # fewer than 2 tokens -> no bigrams, frac 0
         assert out[empty_id]["n_bigrams"] == 0
         assert out[empty_id]["dup_bigram_frac"] == 0.0
@@ -442,7 +443,7 @@ def test_repetition_and_chunking_edge_cases(spark):
     assert abs(out[3]["dup_trigram_frac"] - 1 / 2) < 1e-15
     # "x y x y z": bigrams [xy, yx, xy, yz] -> 1 repeat of 4
     assert abs(out[4]["dup_bigram_frac"] - 1 / 4) < 1e-15
-    grams = d.select(ngram_array(tokens(F.col("text")), 2).alias("g")) \
+    grams = d.select(F.expr(ngram_array(tokens("text"), 2)).alias("g")) \
              .where(F.col("doc_id") == 4).collect()[0]["g"]
     assert grams == ["x y", "y x", "x y", "y z"]
 
@@ -1208,10 +1209,10 @@ def test_gopher_columns_rules_fire_correctly(spark):
     docs = spark.createDataFrame(
         [(1, good), (2, bullets), (3, dots), (4, symbols), (5, numbers)],
         "doc_id long, text string")
-    cols = gopher_columns(F.col("text"), min_words=5)
+    cols = gopher_columns("text", min_words=5)
     got = {r.doc_id: r for r in
-           docs.select("doc_id",
-                       *[c.alias(n) for n, c in cols.items()]).collect()}
+           docs.selectExpr("doc_id",
+                           *[f"{c} AS {n}" for n, c in cols.items()]).collect()}
     assert got[1].gopher_pass  # fluent english, all rules pass
     assert got[1].n_req_stopwords >= 2 and got[1].r_alpha_words
     assert not got[2].r_bullet_lines          # 4/4 lines bullet-started

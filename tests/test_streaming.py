@@ -201,7 +201,7 @@ def test_band_signatures_match_batch_minhash(spark):
     bexp = {(r.doc_id, j): ",".join(str(r[f"mh{j*4+i}"]) for i in range(4))
             for r in batch.collect() for j in range(4)}
     stream_style = (d.select("doc_id",
-                             F.explode(band_signatures(F.col("text")))
+                             F.explode(band_signatures("text"))
                               .alias("b"))
                      .select("doc_id", "b.band", "b.bsig")
                      .filter(F.col("bsig") != ""))

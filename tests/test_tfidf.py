@@ -66,7 +66,7 @@ def test_postings_staged_tokens_col_matches_inline(spark):
     from tally_database_loader_spark.llm.text import tokens
 
     d = _docs(spark)
-    staged = d.select("doc_id", tokens(F.col("text")).alias("__toks"))
+    staged = d.select("doc_id", F.expr(tokens("text")).alias("__toks"))
     a = {(r["term"], r["doc_id"]): r["tf"]
          for r in postings(d, "doc_id", "text").collect()}
     b = {(r["term"], r["doc_id"]): r["tf"]
@@ -89,7 +89,7 @@ def test_lm_scorers_staged_tokens_col_match_inline(spark):
          (3, "la la table scan", "es"),
          (4, "", "en")],
         "doc_id long, text string, lang string")
-    staged = d.select("doc_id", "lang", tokens(F.col("text")).alias("__toks"))
+    staged = d.select("doc_id", "lang", F.expr(tokens("text")).alias("__toks"))
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())

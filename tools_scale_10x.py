@@ -899,7 +899,7 @@ def check(spark, duck_dir: str, src_dir: str,
         # (c) quality keeper election validity at the decade
         scores = d10.select(
             "doc_id",
-            tx.quality_columns(F.col("text"))["quality_score"]
+            F.expr(tx.quality_columns("text")["quality_score"])
             .alias("score")).localCheckpoint(eager=True)
         t0 = time.perf_counter()
         elected = elect_keepers(labels.select("doc_id", "cluster_id"),
@@ -970,9 +970,9 @@ def check(spark, duck_dir: str, src_dir: str,
         from tally_database_loader_spark.llm.packing import pack_sequences
         t0 = time.perf_counter()
         d10 = fan_out(load_table(spark, duck_dir, "documents"))
-        g = tx.gopher_columns(F.col("text"), min_words=20)
-        gp = (g["r_word_count"] & g["r_mean_word_len"]
-              & g["r_symbol_ratio"] & g["r_alpha_words"])
+        g = tx.gopher_columns("text", min_words=20)
+        gp = " AND ".join(g[r] for r in ("r_word_count", "r_mean_word_len",
+                                          "r_symbol_ratio", "r_alpha_words"))
         kept = (d10.filter(gp)
                    .select("doc_id", "source", "n_chars", "text",
                            F.md5("text").alias("fp")))
@@ -987,7 +987,7 @@ def check(spark, duck_dir: str, src_dir: str,
         cl = dup_clusters(pairs)
         scores = surv.select(
             "doc_id",
-            tx.quality_columns(F.col("text"))["quality_score"]
+            F.expr(tx.quality_columns("text")["quality_score"])
             .alias("score")).localCheckpoint(eager=True)
         elected = elect_keepers(cl, scores).localCheckpoint(eager=True)
         drop = elected.filter(F.col("keep") == 0).select("doc_id")
