@@ -34,6 +34,8 @@ src/tally.mts:406-446).
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
@@ -111,6 +113,12 @@ class ParquetStore:
     def __init__(self, root: str, n_buckets: int = 16):
         self.root = root
         self.n_buckets = n_buckets
+        # touched-keys frame → its buckets: a scoped commit passes the
+        # same frame to ``scoped_base`` and ``write_scoped``, and the
+        # commits of one batch run on concurrent driver threads
+        self._buckets_of: weakref.WeakKeyDictionary = \
+            weakref.WeakKeyDictionary()
+        self._buckets_lock = threading.Lock()
 
     def _versions(self, table: str) -> list[int]:
         """Live versions. The commit record is the manifest: a ``v{n}``
@@ -158,10 +166,17 @@ class ParquetStore:
 
     def _touched_buckets(self, touched_keys: DataFrame) -> list[int]:
         """Sorted buckets holding a key of ``touched_keys`` (its first
-        column) — ≤ n_buckets ints, a scalar probe."""
-        return sorted(r[0] for r in touched_keys
-                      .select(self._bucket_col(touched_keys.columns[0]))
-                      .distinct().collect())
+        column) — ≤ n_buckets ints, a scalar probe, run once per frame
+        object."""
+        with self._buckets_lock:
+            buckets = self._buckets_of.get(touched_keys)
+        if buckets is None:
+            buckets = sorted(r[0] for r in touched_keys
+                             .select(self._bucket_col(touched_keys.columns[0]))
+                             .distinct().collect())
+            with self._buckets_lock:
+                self._buckets_of[touched_keys] = buckets
+        return buckets
 
     # -- manifest mechanics -------------------------------------------------
 
@@ -1002,12 +1017,11 @@ class IncrementalSync:
                          .localCheckpoint(eager=True))
         if changed.isEmpty():
             return
-        base = self.store.scoped_base(self.spark, "trn_voucher",
-                                      changed.select("guid"))
+        touched = changed.select("guid")
+        base = self.store.scoped_base(self.spark, "trn_voucher", touched)
         updated = (base.join(F.broadcast(changed), "guid", "left")
                        .withColumn("voucher_number",
                                    F.coalesce("__new_no", "voucher_number"))
                        .drop("__new_no"))
         # only buckets holding a renumbered voucher are rewritten
-        self.store.write_scoped(updated, "trn_voucher",
-                                changed.select("guid"))
+        self.store.write_scoped(updated, "trn_voucher", touched)

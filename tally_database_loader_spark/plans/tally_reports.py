@@ -1,5 +1,5 @@
 """The Tally report library (SURVEY §2.F): all 15 reference reports as
-parameterized DataFrame programs over the 22-table model.
+parameterized Spark SQL programs over the 22-table model.
 
 Each function takes a catalog (table name → DataFrame) and parameters, and
 cites the reference SQL it re-expresses (reports/mssql/*.sql — the T-SQL
@@ -14,342 +14,393 @@ Cross-cutting semantics (reference docs/data-structure.md):
 - accounting effects = is_order_voucher=0 AND is_inventory_voucher=0 (:203-213)
 - partial-workflow dedup on tracking_number via ROW_NUMBER (:242-258)
 
-Scale notes: masters broadcast onto transaction facts; the date and month
-spines are tiny exploded sequences broadcast onto the aggregates;
-aggregations are single groupBys with map-side partials. The header ⋈
-detail joins are staged once per catalog snapshot (``acct_voucher``), and
-the group trees read ``mst_group`` once and walk it on the driver
-(``_walk_groups``): each report costs a handful of Spark jobs, and at the
-library's table sizes a job's fixed cost is what a report pays for.
+Scale notes. A report pass shares what its reports have in common, staged
+once per catalog (``_staged``) and reused by every later report:
+- the three dimensions (``mst_ledger``, ``mst_group``, ``mst_vouchertype``)
+  are collected once each into Arrow-backed local relations. Every
+  broadcast join collects them to the driver anyway (they sit under the
+  64 MB ``autoBroadcastJoinThreshold``); staging collects each once per
+  pass instead of once per join. ``mst_ledger ⋈ mst_group`` is joined on
+  the driver over the staged rows (``_ledger_groups``), and the group
+  trees walk the staged ``mst_group`` rows there (``_walk_groups``);
+- the header ⋈ detail joins (``acct_voucher``, ``inv_voucher``) and the
+  ``acct_voucher ⋈ mst_ledger ⋈ mst_group`` fact seven reports start from
+  (``_ledger_fact``) are lazily ``localCheckpoint``-ed: the first report
+  to run one materializes it, later reports read its blocks.
+The date and month spines are closed-form sequences on the probe side of
+a broadcast join; aggregations are single groupBys with map-side
+partials. Each report is one ``spark.sql`` statement over those staged
+relations, so building it costs a few Py4J round trips. At the library's
+table sizes a Spark job's fixed cost is what a report pays for, and a
+report runs a handful of them.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import threading
 import weakref
 from collections import defaultdict
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 Catalog = dict[str, DataFrame]
 
-_D17 = T.DecimalType(17, 2)
+_Z = "CAST(0 AS DECIMAL(17,2))"
+_ZQ = "CAST(0 AS DECIMAL(15,4))"
+_ACCOUNTING = "is_order_voucher = 0 AND is_inventory_voucher = 0"
+_NOTES = "('Receipt Note', 'Delivery Note')"
 
-
-def _dzero():
-    return F.lit("0").cast(_D17)
-
-
-# (detail, header) → their join on guid, staged; keyed on the catalog's
-# own DataFrame objects, so a catalog's reports share one staged join,
-# a catalog re-read from the store (new objects) gets a fresh one, and
-# an entry — with its checkpoint blocks — goes when its catalog does
+# catalog DataFrame objects → what the library staged from them. Keyed
+# level by level on the catalog's own DataFrames, then on the staging
+# function: a catalog's reports share one staged relation, a catalog
+# re-read from the store (new objects) is staged afresh, and an entry —
+# with its blocks — goes when its catalog does
 _STAGED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _STAGED_LOCK = threading.Lock()
 
 
-def _staged_join(detail: DataFrame, header: DataFrame) -> DataFrame:
-    """``detail ⋈ header`` on guid, lazily ``localCheckpoint``-ed once per
-    pair of DataFrame objects: the first report to run it materializes
-    the join, every later report reads the checkpoint blocks."""
+def _staged(build, frames, *args):
+    """``build(*args)``, once per staging function and tuple of catalog
+    DataFrames it is derived from (``frames``): the first report to ask
+    stages it, every later report gets the same value."""
     with _STAGED_LOCK:
-        by_header = _STAGED.setdefault(detail, weakref.WeakKeyDictionary())
-        staged = by_header.get(header)
-        if staged is None:
-            staged = detail.join(header, "guid").localCheckpoint(eager=False)
-            by_header[header] = staged
-        return staged
+        node = _STAGED
+        for f in frames:
+            node = node.setdefault(f, weakref.WeakKeyDictionary())
+        if build not in node:
+            node[build] = build(*args)
+        return node[build]
+
+
+def _local(df: DataFrame) -> tuple[pa.Table, DataFrame]:
+    """``df``'s rows as an Arrow table and as a local relation over them,
+    which reads no file (broadcasting it still runs a job)."""
+    tbl = df.toArrow()
+    return tbl, df.sparkSession.createDataFrame(tbl, df.schema)
+
+
+def _dim_rows(cat: Catalog, name: str) -> tuple[pa.Table, DataFrame]:
+    """Dimension ``name`` collected once per catalog (``_local``)."""
+    return _staged(_local, [cat[name]], cat[name])
+
+
+def _dim(cat: Catalog, name: str) -> DataFrame:
+    """Dimension ``name`` as a local relation (``_dim_rows``)."""
+    return _dim_rows(cat, name)[1]
+
+
+def _join_on_guid(detail: DataFrame, header: DataFrame) -> DataFrame:
+    return detail.join(header, "guid").localCheckpoint(eager=False)
 
 
 def acct_voucher(cat: Catalog) -> DataFrame:
     """trn_accounting ⋈ trn_voucher on guid (all voucher columns) — the
     report library's hottest join: nearly every report starts from it.
-    Staged once per catalog snapshot (``_staged_join``), so the whole
-    library pays the header/detail join once instead of once per report."""
-    return _staged_join(cat["trn_accounting"], cat["trn_voucher"])
+    Staged once per catalog snapshot, so the whole library pays the
+    header/detail join once instead of once per report."""
+    pair = (cat["trn_accounting"], cat["trn_voucher"])
+    return _staged(_join_on_guid, pair, *pair)
 
 
 def inv_voucher(cat: Catalog) -> DataFrame:
     """trn_inventory ⋈ trn_voucher on guid — the inventory-side analogue
     of ``acct_voucher``, staged the same way."""
-    return _staged_join(cat["trn_inventory"], cat["trn_voucher"])
+    pair = (cat["trn_inventory"], cat["trn_voucher"])
+    return _staged(_join_on_guid, pair, *pair)
 
 
-def _accounting_effects(cat: Catalog) -> DataFrame:
-    """trn_accounting ⋈ trn_voucher filtered to pure accounting effects
-    (reference docs/data-structure.md:203-213)."""
-    return acct_voucher(cat).filter((F.col("is_order_voucher") == 0)
-                                    & (F.col("is_inventory_voucher") == 0))
+def _ledger_groups(led: tuple[pa.Table, DataFrame],
+                   grp: tuple[pa.Table, DataFrame]) -> DataFrame:
+    """``mst_ledger ⋈ mst_group`` on the ledger's parent, joined on the
+    driver over the two staged dimensions, so it runs no job: each
+    ledger's ``name``, ``parent`` and ``opening_balance`` with its
+    group's ``primary_group``, ``is_revenue``, ``is_deemedpositive`` and
+    ``affects_gross_profit``, as a local relation. As in the SQL join,
+    NULL matches nothing and a repeated name repeats its matches."""
+    (ltbl, ldf), (gtbl, gdf) = led, grp
+    named = defaultdict(list)
+    for j, name in enumerate(gtbl.column("name").to_pylist()):
+        if name is not None:  # NULL matches nothing, so never index it
+            named[name].append(j)
+    pairs = [(i, j) for i, parent in enumerate(ltbl.column("parent").to_pylist())
+             for j in named.get(parent, ())]
+    li = pa.array([i for i, _ in pairs], pa.int64())
+    gi = pa.array([j for _, j in pairs], pa.int64())
+    lcols = ["name", "parent", "opening_balance"]
+    gcols = ["primary_group", "is_revenue", "is_deemedpositive",
+             "affects_gross_profit"]
+    tbl = pa.Table.from_arrays(
+        [ltbl.column(c).take(li) for c in lcols]
+        + [gtbl.column(c).take(gi) for c in gcols], names=lcols + gcols)
+    schema = T.StructType([ldf.schema[c] for c in lcols]
+                          + [gdf.schema[c] for c in gcols])
+    return ldf.sparkSession.createDataFrame(tbl, schema)
 
 
-def _range_bounds(from_date: str, to_date: str):
-    """(start, stop) date columns; stop is NULL when the range is
-    inverted, which makes ``sequence`` NULL and its explode empty
-    (Spark's ``sequence`` would otherwise count down, or raise with a
-    positive step)."""
-    start, stop = F.lit(from_date).cast("date"), F.lit(to_date).cast("date")
-    return start, F.when(start <= stop, stop)
+def _lg(cat: Catalog) -> DataFrame:
+    """``_ledger_groups`` of the catalog, staged once per catalog."""
+    return _staged(_ledger_groups, [cat["mst_ledger"], cat["mst_group"]],
+                   _dim_rows(cat, "mst_ledger"), _dim_rows(cat, "mst_group"))
 
 
-def _date_spine(spark, from_date: str, to_date: str) -> DataFrame:
-    """Closed-form calendar spine — replaces the reference's recursive CTE
-    capped at maxrecursion 500 (reports/mssql/sales-daily.sql:4-9);
-    formulation follows reports/bigquery/sales-daily.sql:13. An inverted
-    range (``from_date > to_date``) is empty, as ``generate_series`` is."""
-    start, stop = _range_bounds(from_date, to_date)
-    return spark.range(1).select(F.explode(F.sequence(start, stop)).alias("date"))
+def _join_ledger_group(av: DataFrame, lg: DataFrame) -> DataFrame:
+    return av.sparkSession.sql("""
+SELECT /*+ BROADCAST(lg) */ a.*, lg.primary_group, lg.is_revenue,
+       lg.is_deemedpositive, lg.affects_gross_profit
+FROM {av} a JOIN {lg} lg ON a.ledger = lg.name""",
+                               av=av, lg=lg).localCheckpoint(eager=False)
 
 
-def _month_spine(spark, from_date: str, to_date: str) -> DataFrame:
-    """(year, month) of every month the range touches, one row each —
-    the months of ``_date_spine`` without exploding and deduplicating
-    its days; empty for an inverted range."""
-    start, stop = _range_bounds(from_date, to_date)
-    month = F.explode(F.sequence(F.trunc(start, "month"), stop,
-                                 F.expr("INTERVAL 1 MONTH")))
-    return (spark.range(1).select(month.alias("m"))
-                 .select(F.year("m").alias("year"), F.month("m").alias("month")))
+def _ledger_fact(cat: Catalog) -> DataFrame:
+    """``acct_voucher ⋈ mst_ledger ⋈ mst_group`` (ledger → its parent
+    group): every ``acct_voucher`` column plus the group's
+    ``primary_group``, ``is_revenue``, ``is_deemedpositive`` and
+    ``affects_gross_profit``; staged like ``acct_voucher``. Inner
+    equi-joins commute, so a report that filters or joins this fact
+    sees each line with the multiplicity its own join chain gave it,
+    rows fanned out by a repeated dimension name included."""
+    frames = [cat[t] for t in ("trn_accounting", "trn_voucher", "mst_ledger",
+                               "mst_group")]
+    return _staged(_join_ledger_group, frames, acct_voucher(cat), _lg(cat))
+
+
+def _sql(cat: Catalog, query: str, **args) -> DataFrame:
+    """One report statement: DataFrame arguments become views, strings
+    quoted SQL literals (``SparkSession.sql``'s formatter)."""
+    return cat["trn_voucher"].sparkSession.sql(query, **args)
+
+
+# Closed-form calendar spines (`{from_date}`/`{to_date}` are the range
+# literals). The day spine replaces the reference's recursive CTE capped
+# at maxrecursion 500 (reports/mssql/sales-daily.sql:4-9); formulation
+# follows reports/bigquery/sales-daily.sql:13. The stop is NULL when the
+# range is inverted, which makes ``sequence`` NULL and the spine empty,
+# as ``generate_series`` is (Spark's ``sequence`` would otherwise count
+# down, or raise with a positive step).
+_STOP = """CASE WHEN CAST({from_date} AS DATE) <= CAST({to_date} AS DATE)
+            THEN CAST({to_date} AS DATE) END"""
+_DAYS = f"SELECT explode(sequence(CAST({{from_date}} AS DATE), {_STOP})) AS date"
+# (year, month) of every month the range touches, one row each — the
+# months of the day spine without exploding and deduplicating its days
+_MONTHS = f"""SELECT year(m) AS year, month(m) AS month FROM (
+  SELECT explode(sequence(trunc(CAST({{from_date}} AS DATE), 'month'), {_STOP},
+                          INTERVAL 1 MONTH)) AS m)"""
 
 
 # ---------------------------------------------------------------------------
 
 def trial_balance(cat: Catalog, from_date: str, to_date: str) -> DataFrame:
     """reports/mssql/trial-balance.sql:4-31 — per-ledger opening/debit/
-    credit/closing; revenue ledgers report period movement only."""
-    eff = _accounting_effects(cat)
-    led = cat["mst_ledger"]
-    # opening movement, debit and credit in one aggregate: each sum only
-    # sees its own date window (rows outside it are NULL to the sum)
-    before = F.col("date") < F.lit(from_date).cast("date")
-    within = F.col("date").between(from_date, to_date)
-    amt = F.col("amount")
-    mov = (eff.filter(before | within)
-              .groupBy(F.col("ledger").alias("mv_ledger"))
-              .agg(F.sum(F.when(before, amt)).alias("op_amount"),
-                   F.sum(F.when(within, F.when(amt < 0, F.abs(amt))
-                                        .otherwise(_dzero()))).alias("cu_debit"),
-                   F.sum(F.when(within, F.when(amt > 0, amt)
-                                        .otherwise(_dzero()))).alias("cu_credit")))
-    opening_all = F.col("opening_balance") + F.coalesce(F.col("op_amount"), _dzero())
-    opening = F.when(F.col("is_revenue") == 0, opening_all).otherwise(_dzero())
-    debit = F.coalesce(F.col("cu_debit"), _dzero())
-    credit = F.coalesce(F.col("cu_credit"), _dzero())
-    closing = F.when(F.col("is_revenue") == 0, opening_all + credit - debit) \
-               .otherwise(credit - debit)
-    return (led.join(F.broadcast(mov), led.name == F.col("mv_ledger"), "left")
-               .select(F.col("name"),
-                       opening.cast(_D17).alias("opening"),
-                       debit.cast(_D17).alias("debit"),
-                       credit.cast(_D17).alias("credit"),
-                       closing.cast(_D17).alias("closing"))
-               .orderBy("name"))
+    credit/closing; revenue ledgers report period movement only. Opening
+    movement, debit and credit come from one aggregate: each sum only
+    sees its own date window (rows outside it are NULL to the sum). The
+    result is one row per ledger, built from the local ledger relation
+    and a broadcast aggregate, so it is sorted in one partition
+    (``COALESCE(1)``): no range-partitioning sample job and shuffle."""
+    return _sql(cat, f"""
+WITH mov AS (
+  SELECT ledger AS mv_ledger,
+         sum(CASE WHEN is_before THEN amount END) AS op_amount,
+         sum(CASE WHEN is_within THEN CASE WHEN amount < 0 THEN abs(amount)
+                                        ELSE {_Z} END END) AS cu_debit,
+         sum(CASE WHEN is_within THEN CASE WHEN amount > 0 THEN amount
+                                        ELSE {_Z} END END) AS cu_credit
+  FROM (SELECT ledger, amount,
+               date < CAST({{from_date}} AS DATE) AS is_before,
+               date BETWEEN {{from_date}} AND {{to_date}} AS is_within
+        FROM {{av}} WHERE {_ACCOUNTING})
+  WHERE is_before OR is_within
+  GROUP BY ledger),
+bal AS (
+  SELECT /*+ BROADCAST(m) */ l.name, l.is_revenue,
+         l.opening_balance + coalesce(m.op_amount, {_Z}) AS opening_all,
+         coalesce(m.cu_debit, {_Z}) AS debit,
+         coalesce(m.cu_credit, {_Z}) AS credit
+  FROM {{led}} l LEFT JOIN mov m ON l.name = m.mv_ledger)
+SELECT /*+ COALESCE(1) */ name,
+       CAST(CASE WHEN is_revenue = 0 THEN opening_all ELSE {_Z} END
+            AS DECIMAL(17,2)) AS opening,
+       CAST(debit AS DECIMAL(17,2)) AS debit,
+       CAST(credit AS DECIMAL(17,2)) AS credit,
+       CAST(CASE WHEN is_revenue = 0 THEN opening_all + credit - debit
+                 ELSE credit - debit END AS DECIMAL(17,2)) AS closing
+FROM bal ORDER BY name""", av=acct_voucher(cat), led=_dim(cat, "mst_ledger"),
+                from_date=from_date, to_date=to_date)
 
 
 def profit_loss(cat: Catalog) -> DataFrame:
     """reports/mssql/profit-loss.sql — revenue-group balances ∪ opening
     stock ∪ closing stock (latest trn_closingstock_ledger row per ledger
     via ranking window, :32-35)."""
-    led, grp = cat["mst_ledger"], cat["mst_group"]
-    vt = cat["mst_vouchertype"]
-    eff = (_accounting_effects(cat)
-           .join(F.broadcast(vt.select(F.col("name").alias("voucher_type"),
-                                       "affects_stock")), "voucher_type")
-           .filter(F.col("affects_stock") == 0))
-    gb = (eff.join(F.broadcast(led.select(F.col("name").alias("ledger"),
-                                          F.col("parent").alias("l_parent"))), "ledger")
-             .join(F.broadcast(grp.select(F.col("name").alias("l_parent"),
-                                          "primary_group", "is_revenue",
-                                          "is_deemedpositive", "affects_gross_profit")),
-                   "l_parent")
-             .filter(F.col("is_revenue") == 1)
-             .groupBy("primary_group", "ledger")
-             .agg(F.max("is_deemedpositive").alias("mdp"),
-                  F.max("affects_gross_profit").alias("magp"),
-                  F.sum("amount").alias("balance"))
-             .select(F.col("primary_group").alias("group"),
-                     F.col("ledger"),
-                     F.when(F.col("mdp") == 1, "expense").otherwise("income").alias("nature"),
-                     F.when(F.col("magp") == 1, "Y").otherwise("N").alias("affects_gross_profit"),
-                     F.col("balance").cast(_D17).alias("balance")))
-    op_stock = (led.join(F.broadcast(grp.select(F.col("name").alias("parent"),
-                                                "primary_group")), "parent")
-                   .filter(F.col("primary_group") == "Stock-in-hand")
-                   .agg(F.sum("opening_balance").alias("balance"))
-                   .select(F.lit("Opening Stock").alias("group"),
-                           F.lit("Opening Stock").alias("ledger"),
-                           F.lit("expense").alias("nature"),
-                           F.lit("Y").alias("affects_gross_profit"),
-                           F.col("balance").cast(_D17).alias("balance")))
-    w = W.partitionBy("ledger").orderBy(F.col("stock_date").desc())
-    cl_stock = (cat["trn_closingstock_ledger"]
-                .withColumn("ctr", F.row_number().over(w))
-                .filter(F.col("ctr") == 1)
-                .agg((-F.sum("stock_value")).alias("balance"))
-                .select(F.lit("Closing Stock").alias("group"),
-                        F.lit("Closing Stock").alias("ledger"),
-                        F.lit("income").alias("nature"),
-                        F.lit("Y").alias("affects_gross_profit"),
-                        F.col("balance").cast(_D17).alias("balance")))
-    return gb.unionByName(op_stock).unionByName(cl_stock)
+    return _sql(cat, f"""
+SELECT primary_group AS `group`, ledger,
+       CASE WHEN max(is_deemedpositive) = 1 THEN 'expense' ELSE 'income' END
+         AS nature,
+       CASE WHEN max(affects_gross_profit) = 1 THEN 'Y' ELSE 'N' END
+         AS affects_gross_profit,
+       CAST(sum(amount) AS DECIMAL(17,2)) AS balance
+FROM (SELECT /*+ BROADCAST(t) */ f.*
+      FROM {{fact}} f JOIN {{vt}} t ON f.voucher_type = t.name
+      WHERE {_ACCOUNTING}
+        AND t.affects_stock = 0 AND f.is_revenue = 1)
+GROUP BY primary_group, ledger
+UNION ALL
+SELECT 'Opening Stock', 'Opening Stock', 'expense', 'Y',
+       CAST(sum(opening_balance) AS DECIMAL(17,2))
+FROM {{lg}} WHERE primary_group = 'Stock-in-hand'
+UNION ALL
+SELECT 'Closing Stock', 'Closing Stock', 'income', 'Y',
+       CAST(-sum(stock_value) AS DECIMAL(17,2))
+FROM (SELECT stock_value, row_number() OVER (PARTITION BY ledger
+                                             ORDER BY stock_date DESC) AS ctr
+      FROM {{csl}})
+WHERE ctr = 1""", fact=_ledger_fact(cat), vt=_dim(cat, "mst_vouchertype"),
+                lg=_lg(cat), csl=cat["trn_closingstock_ledger"])
 
 
 def stock_summary(cat: Catalog) -> DataFrame:
     """reports/mssql/stock-summary.sql — per-item opening/in/out/closing
-    with the 3-regime tracking reconciliation (docs/data-structure.md:242-258)."""
-    inv = (inv_voucher(cat)
-           .join(F.broadcast(cat["mst_vouchertype"]
-                             .select(F.col("name").alias("voucher_type"),
-                                     F.col("parent").alias("vt_parent"))), "voucher_type"))
-    # blank tracking = no workflow: the text encoding stores '' (the T-SQL
-    # original checks NULL; the relational model stores '' — same regime)
-    is_note = F.col("vt_parent").isin("Receipt Note", "Delivery Note")
-    # Tracking reconciliation as a WINDOW over (item, tracking_number)
-    # instead of the former groupBy + left-join-back (round 11): the
-    # join's two sides each re-derived the full inv subtree (two
-    # broadcast joins over the staging tables, twice), and the SMJ
-    # shuffled/sorted inv by the same key the window needs anyway — one
-    # exchange now carries the whole reconciliation (guide §2.4).
-    # Blank-tracking rows (no workflow) masked to NULL note/invoice,
-    # exactly the old left join's miss (reco excluded them); their
-    # filter branch never reads the values. Sums are over the identical
-    # row groups, so the decimals are bit-identical.
-    wrk = W.partitionBy("item", "tracking_number")
-    has_trk = F.col("tracking_number") != ""
-    note_w = F.when(has_trk, F.sum(
-        F.when(is_note, F.abs(F.col("quantity")))
-         .otherwise(F.lit(0))).over(wrk))
-    invoice_w = F.when(has_trk, F.sum(
-        F.when(~is_note, F.abs(F.col("quantity")))
-         .otherwise(F.lit(0))).over(wrk))
-    eff = (inv.select("item", "tracking_number", "quantity", "vt_parent",
-                      "is_order_voucher",
-                      note_w.alias("note"), invoice_w.alias("invoice"))
-              .filter((F.col("is_order_voucher") == 0)
-                      & ((F.col("tracking_number") == "")
-                         | (~is_note & (F.col("note") == F.col("invoice")))
-                         | (is_note & (F.col("note") > F.col("invoice")))))
-              .groupBy("item")
-              .agg(F.sum(F.when(F.col("quantity") > 0, F.col("quantity"))
-                          .otherwise(F.lit(0))).alias("in_qty"),
-                   F.sum(F.when(F.col("quantity") < 0, -F.col("quantity"))
-                          .otherwise(F.lit(0))).alias("out_qty")))
-    s = cat["mst_stock_item"]
-    q = T.DecimalType(15, 4)
-    zq = F.lit("0").cast(q)
-    return (s.join(F.broadcast(eff), s.name == eff.item, "left")
-             .select("name", "parent", "uom",
-                     F.col("opening_balance").cast(q).alias("op_qty"),
-                     F.coalesce(F.col("in_qty"), zq).cast(q).alias("in_qty"),
-                     F.coalesce(F.col("out_qty"), zq).cast(q).alias("out_qty"),
-                     (F.col("opening_balance") + F.coalesce(F.col("in_qty"), zq)
-                      - F.coalesce(F.col("out_qty"), zq)).cast(q).alias("clo_bal")))
+    with the 3-regime tracking reconciliation (docs/data-structure.md:242-258).
+
+    Blank tracking = no workflow: the text encoding stores '' (the T-SQL
+    original checks NULL; the relational model stores '' — same regime).
+    The reconciliation is a WINDOW over (item, tracking_number), one
+    exchange instead of a groupBy joined back. Blank-tracking rows get
+    NULL note/invoice, which their filter branch never reads."""
+    return _sql(cat, f"""
+WITH inv AS (
+  SELECT /*+ BROADCAST(t) */ i.item, i.tracking_number, i.quantity,
+         i.is_order_voucher, t.parent AS vt_parent
+  FROM {{iv}} i JOIN {{vt}} t ON i.voucher_type = t.name),
+reco AS (
+  SELECT item, quantity, tracking_number, is_order_voucher, vt_parent,
+         CASE WHEN tracking_number != '' THEN sum(
+           CASE WHEN vt_parent IN {_NOTES} THEN abs(quantity) ELSE 0 END)
+           OVER (PARTITION BY item, tracking_number) END AS note,
+         CASE WHEN tracking_number != '' THEN sum(
+           CASE WHEN vt_parent NOT IN {_NOTES} THEN abs(quantity) ELSE 0 END)
+           OVER (PARTITION BY item, tracking_number) END AS invoice
+  FROM inv),
+eff AS (
+  SELECT item,
+         sum(CASE WHEN quantity > 0 THEN quantity ELSE 0 END) AS in_qty,
+         sum(CASE WHEN quantity < 0 THEN -quantity ELSE 0 END) AS out_qty
+  FROM reco
+  WHERE is_order_voucher = 0
+    AND (tracking_number = ''
+         OR (vt_parent NOT IN {_NOTES} AND note = invoice)
+         OR (vt_parent IN {_NOTES} AND note > invoice))
+  GROUP BY item)
+SELECT /*+ BROADCAST(e) */ s.name, s.parent, s.uom,
+       CAST(s.opening_balance AS DECIMAL(15,4)) AS op_qty,
+       CAST(coalesce(e.in_qty, {_ZQ}) AS DECIMAL(15,4)) AS in_qty,
+       CAST(coalesce(e.out_qty, {_ZQ}) AS DECIMAL(15,4)) AS out_qty,
+       CAST(s.opening_balance + coalesce(e.in_qty, {_ZQ})
+            - coalesce(e.out_qty, {_ZQ}) AS DECIMAL(15,4)) AS clo_bal
+FROM {{si}} s LEFT JOIN eff e ON s.name = e.item""",
+                iv=inv_voucher(cat), vt=_dim(cat, "mst_vouchertype"),
+                si=cat["mst_stock_item"])
 
 
 def account_ledger(cat: Catalog, ledger: str, from_date: str, to_date: str) -> DataFrame:
     """reports/mssql/account-ledger.sql:6-26 — statement of one ledger with
-    co-ledger string aggregation (sorted for determinism)."""
-    av = acct_voucher(cat)
-    led = (av.filter(F.col("ledger") == ledger)
-             .filter((F.col("is_accounting_voucher") == 1)
-                     & F.col("date").between(from_date, to_date))
-            .select("guid", "date", "voucher_number", "voucher_type", "narration",
-                    F.when(F.col("amount") < 0, -F.col("amount")).otherwise(_dzero())
-                     .cast(_D17).alias("debit"),
-                    F.when(F.col("amount") > 0, F.col("amount")).otherwise(_dzero())
-                     .cast(_D17).alias("credit")))
-    entry = (av.filter(F.col("ledger") != ledger)
-               .filter((F.col("is_order_voucher") == 0)
-                       & (F.col("is_inventory_voucher") == 0))
-               .join(led.select("guid").distinct(), "guid", "left_semi")
-              .groupBy("guid")
-              .agg(F.array_join(F.sort_array(F.collect_list("ledger")), ",").alias("ledgers")))
-    return (led.join(entry, "guid")
-               .select("date", "voucher_number", "voucher_type", "ledgers",
-                       "debit", "credit", "narration")
-               .orderBy("date"))
+    co-ledger string aggregation (sorted for determinism).
+
+    One window pass over ``acct_voucher``: each line carries the list of
+    its voucher's co-ledger lines (the other ledgers' accounting
+    effects), and the ledger's own lines are kept where that list is not
+    empty — the reference's join of the statement with its co-ledger
+    aggregate. ``acct_voucher`` is an inner join on guid, so a line with
+    a NULL guid never reaches the window. The window shuffles every line
+    by guid once; a statement of a few vouchers in a very large book
+    would read less through a semi-join on the ledger's guids, at the
+    cost of a second scan, a distinct, a group and a join."""
+    return _sql(cat, f"""
+SELECT date, voucher_number, voucher_type,
+       array_join(sort_array(co), ',') AS ledgers, debit, credit, narration
+FROM (SELECT date, voucher_number, voucher_type, narration, ledger,
+             is_accounting_voucher,
+             CAST(CASE WHEN amount < 0 THEN -amount ELSE {_Z} END
+                  AS DECIMAL(17,2)) AS debit,
+             CAST(CASE WHEN amount > 0 THEN amount ELSE {_Z} END
+                  AS DECIMAL(17,2)) AS credit,
+             collect_list(CASE WHEN ledger != {{ledger}} AND {_ACCOUNTING}
+                               THEN ledger END)
+               OVER (PARTITION BY guid) AS co
+      FROM {{av}})
+WHERE ledger = {{ledger}} AND is_accounting_voucher = 1
+  AND date BETWEEN {{from_date}} AND {{to_date}} AND size(co) > 0
+ORDER BY date""", av=acct_voucher(cat), ledger=ledger,
+                from_date=from_date, to_date=to_date)
 
 
 def accounting_voucher_view(cat: Catalog) -> DataFrame:
     """reports/mssql/accounting-voucher-view.sql — opening-balance synthetic
     vouchers (dated 2000-01-01) ∪ accounting effects, annotated with
     primary group and voucher category."""
-    led, grp = cat["mst_ledger"], cat["mst_group"]
-    vt = cat["mst_vouchertype"]
-    lg = led.join(F.broadcast(grp.select(F.col("name").alias("parent"),
-                                         "primary_group")), "parent")
-    opening = (lg.filter(F.col("opening_balance") != 0)
-                 .select(F.lit(_dt.date(2000, 1, 1)).alias("date"),
-                         F.lit("Opening Balance").alias("voucher_type"),
-                         F.lit("").alias("voucher_number"),
-                         F.col("name").alias("ledger"),
-                         F.col("opening_balance").cast(_D17).alias("amount"),
-                         F.lit("").alias("party_name"),
-                         F.col("primary_group"),
-                         F.lit("Opening Balance").alias("voucher_category")))
-    eff = (_accounting_effects(cat)
-           .join(F.broadcast(lg.select(F.col("name").alias("ledger"),
-                                       "primary_group")), "ledger")
-           .join(F.broadcast(vt.select(F.col("name").alias("voucher_type"),
-                                       F.col("parent").alias("voucher_category"))),
-                 "voucher_type")
-           .select("date", "voucher_type", "voucher_number", "ledger",
-                   F.col("amount").cast(_D17).alias("amount"),
-                   "party_name", "primary_group", "voucher_category"))
-    return opening.unionByName(eff)
+    return _sql(cat, f"""
+SELECT DATE'2000-01-01' AS date, 'Opening Balance' AS voucher_type,
+       '' AS voucher_number, name AS ledger,
+       CAST(opening_balance AS DECIMAL(17,2)) AS amount, '' AS party_name,
+       primary_group, 'Opening Balance' AS voucher_category
+FROM {{lg}} WHERE opening_balance != 0
+UNION ALL
+SELECT /*+ BROADCAST(t) */ f.date, f.voucher_type, f.voucher_number, f.ledger,
+       CAST(f.amount AS DECIMAL(17,2)), f.party_name, f.primary_group,
+       t.parent
+FROM {{fact}} f JOIN {{vt}} t ON f.voucher_type = t.name
+WHERE {_ACCOUNTING}""",
+                lg=_lg(cat), fact=_ledger_fact(cat),
+                vt=_dim(cat, "mst_vouchertype"))
 
 
 def stock_voucher_view(cat: Catalog) -> DataFrame:
     """reports/mssql/stock-voucher-view.sql — opening batch allocations ∪
-    inventory movements deduped to workflow repetition 1."""
-    opening = cat["mst_opening_batch_allocation"].select(
-        F.lit(_dt.date(2000, 1, 1)).alias("date"),
-        F.lit("").alias("voucher_number"),
-        F.lit("Opening Balance").alias("voucher_type"),
-        F.col("item"),
-        F.col("opening_balance").cast(T.DecimalType(15, 4)).alias("quantity"),
-        F.col("opening_value").cast(_D17).alias("amount"),
-        F.col("godown"))
-    # tie-break beyond the reference's ORDER BY date: rows tied on date
-    # inside a (tracking, item) partition would otherwise be elected
-    # nondeterministically (across retries AND engines) — pin the full
-    # order so the kept repetition-1 row is stable (SURVEY §4's
-    # deterministic-ordering convention)
-    w = W.partitionBy("tracking_number", "item") \
-         .orderBy("date", "quantity", "amount", "godown")
-    moves = (inv_voucher(cat)
-             .filter(F.col("is_order_voucher") == 0)
-             .withColumn("repetition",
-                         F.when(F.col("tracking_number") == "", F.lit(1))
-                          .otherwise(F.row_number().over(w)))
-             .filter(F.col("repetition") == 1)
-             .select("date", "voucher_number", "voucher_type", "item",
-                     F.col("quantity").cast(T.DecimalType(15, 4)).alias("quantity"),
-                     F.col("amount").cast(_D17).alias("amount"), "godown"))
-    return opening.unionByName(moves)
+    inventory movements deduped to workflow repetition 1.
+
+    Tie-break beyond the reference's ORDER BY date: rows tied on date
+    inside a (tracking, item) partition would otherwise be elected
+    nondeterministically (across retries AND engines), so the full order
+    is pinned and the kept repetition-1 row is stable (SURVEY §4's
+    deterministic-ordering convention)."""
+    return _sql(cat, """
+SELECT DATE'2000-01-01' AS date, '' AS voucher_number,
+       'Opening Balance' AS voucher_type, item,
+       CAST(opening_balance AS DECIMAL(15,4)) AS quantity,
+       CAST(opening_value AS DECIMAL(17,2)) AS amount, godown
+FROM {oba}
+UNION ALL
+SELECT date, voucher_number, voucher_type, item,
+       CAST(quantity AS DECIMAL(15,4)), CAST(amount AS DECIMAL(17,2)), godown
+FROM (SELECT date, voucher_number, voucher_type, item, quantity, amount,
+             godown,
+             CASE WHEN tracking_number = '' THEN 1
+                  ELSE row_number() OVER (
+                    PARTITION BY tracking_number, item
+                    ORDER BY date, quantity, amount, godown) END AS repetition
+      FROM {iv} WHERE is_order_voucher = 0)
+WHERE repetition = 1""", oba=cat["mst_opening_batch_allocation"],
+                iv=inv_voucher(cat))
 
 
 def _register(cat: Catalog, voucher_parent: str, negate: bool) -> DataFrame:
     """reports/mssql/sales-register.sql / purchase-register.sql — long-format
     register (pivot input): ledger lines of Sales/Purchase vouchers with the
     party's GSTN via a second (self-)join of mst_ledger."""
-    vt, led = cat["mst_vouchertype"], cat["mst_ledger"]
-    amount = (-F.col("amount")) if negate else F.col("amount")
-    return (acct_voucher(cat)
-             .join(F.broadcast(vt.select(F.col("name").alias("voucher_type"),
-                                         F.col("parent").alias("vt_parent"))),
-                   "voucher_type")
-             .join(F.broadcast(led.select(F.col("name").alias("ledger"))), "ledger")
-             .join(F.broadcast(led.select(F.col("name").alias("party_name"),
-                                          "gstn")), "party_name")
-             .filter((F.col("vt_parent") == voucher_parent)
-                     & (F.col("ledger") != F.col("party_name")))
-             .select("date", "voucher_number", "voucher_type", "party_name",
-                     "gstn", "ledger", amount.cast(_D17).alias("amount"))
-             .orderBy("date", "guid", F.col("amount").desc()))
+    return _sql(cat, f"""
+SELECT /*+ BROADCAST(t), BROADCAST(l), BROADCAST(z) */
+       a.date, a.voucher_number, a.voucher_type, a.party_name, z.gstn, a.ledger,
+       CAST({"-" if negate else ""}a.amount AS DECIMAL(17,2)) AS amount
+FROM {{av}} a
+JOIN {{vt}} t ON a.voucher_type = t.name
+JOIN {{led}} l ON a.ledger = l.name
+JOIN {{led}} z ON a.party_name = z.name
+WHERE t.parent = {{parent}} AND a.ledger != a.party_name
+ORDER BY date, a.guid, amount DESC""", av=acct_voucher(cat),
+                vt=_dim(cat, "mst_vouchertype"), led=_dim(cat, "mst_ledger"),
+                parent=voucher_parent)
 
 
 def sales_register(cat: Catalog) -> DataFrame:
@@ -362,23 +413,18 @@ def purchase_register(cat: Catalog) -> DataFrame:
 
 def _daily_series(cat: Catalog, primary_group: str, from_date: str, to_date: str,
                   negate: bool, accounting_only: bool) -> DataFrame:
-    spark = cat["trn_voucher"].sparkSession
-    eff = (acct_voucher(cat)
-           .join(F.broadcast(cat["mst_ledger"].select(F.col("name").alias("ledger"),
-                                                      F.col("parent").alias("l_parent"))),
-                 "ledger")
-           .join(F.broadcast(cat["mst_group"].select(F.col("name").alias("l_parent"),
-                                                     "primary_group")), "l_parent")
-           .filter((F.col("primary_group") == primary_group)
-                   & F.col("date").between(from_date, to_date)))
-    if accounting_only:
-        eff = eff.filter((F.col("is_order_voucher") == 0)
-                         & (F.col("is_inventory_voucher") == 0))
-    daily = eff.groupBy("date").agg(F.sum("amount").alias("amount"))
-    spine = _date_spine(spark, from_date, to_date)
-    amt = F.coalesce((-F.col("amount")) if negate else F.col("amount"), _dzero())
-    return (spine.join(F.broadcast(daily), "date", "left")
-                 .select("date", amt.cast(_D17).alias("amount")))
+    return _sql(cat, f"""
+WITH daily AS (
+  SELECT date, sum(amount) AS amount FROM {{fact}}
+  WHERE primary_group = {{group}} AND date BETWEEN {{from_date}} AND {{to_date}}
+    {"AND " + _ACCOUNTING if accounting_only else ""}
+  GROUP BY date)
+SELECT /*+ BROADCAST(d) */ s.date,
+       CAST(coalesce({"-" if negate else ""}d.amount, {_Z}) AS DECIMAL(17,2))
+         AS amount
+FROM ({_DAYS}) s LEFT JOIN daily d ON s.date = d.date""",
+                fact=_ledger_fact(cat), group=primary_group,
+                from_date=from_date, to_date=to_date)
 
 
 def sales_daily(cat: Catalog, from_date: str, to_date: str) -> DataFrame:
@@ -396,29 +442,23 @@ def purchase_daily(cat: Catalog, from_date: str, to_date: str) -> DataFrame:
 def _monthly_series(cat: Catalog, primary_group: str, from_date: str,
                     to_date: str, negate: bool,
                     accounting_only: bool = False) -> DataFrame:
-    spark = cat["trn_voucher"].sparkSession
-    months = _month_spine(spark, from_date, to_date)
-    eff = (acct_voucher(cat)
-           .join(F.broadcast(cat["mst_ledger"].select(F.col("name").alias("ledger"),
-                                                      F.col("parent").alias("l_parent"))),
-                 "ledger")
-           .join(F.broadcast(cat["mst_group"].select(F.col("name").alias("l_parent"),
-                                                     "primary_group")), "l_parent")
-           .filter((F.col("primary_group") == primary_group)
-                   & F.col("date").between(from_date, to_date)))
-    if accounting_only:
-        # purchase-monthly.sql:24 — order/inventory vouchers excluded,
-        # exactly like the daily variant; sales-monthly.sql has no such
-        # filter (same asymmetry as daily)
-        eff = eff.filter((F.col("is_order_voucher") == 0)
-                         & (F.col("is_inventory_voucher") == 0))
-    eff = (eff.groupBy(F.year("date").alias("year"),
-                       F.month("date").alias("month"))
-              .agg(F.sum("amount").alias("amount")))
-    amt = F.coalesce((-F.col("amount")) if negate else F.col("amount"), _dzero())
-    return (months.join(F.broadcast(eff), ["year", "month"], "left")
-                  .select("year", "month", amt.cast(_D17).alias("amount"))
-                  .orderBy("year", "month"))
+    """purchase-monthly.sql:24 excludes order/inventory vouchers, exactly
+    like the daily variant; sales-monthly.sql has no such filter (the
+    same asymmetry as daily). One row per month of the range, sorted in
+    one partition like the trial balance."""
+    return _sql(cat, f"""
+WITH monthly AS (
+  SELECT year(date) AS year, month(date) AS month, sum(amount) AS amount
+  FROM {{fact}}
+  WHERE primary_group = {{group}} AND date BETWEEN {{from_date}} AND {{to_date}}
+    {"AND " + _ACCOUNTING if accounting_only else ""}
+  GROUP BY year(date), month(date))
+SELECT /*+ BROADCAST(m), COALESCE(1) */ s.year, s.month,
+       CAST(coalesce({"-" if negate else ""}m.amount, {_Z}) AS DECIMAL(17,2))
+         AS amount
+FROM ({_MONTHS}) s LEFT JOIN monthly m ON s.year = m.year AND s.month = m.month
+ORDER BY year, month""", fact=_ledger_fact(cat), group=primary_group,
+                from_date=from_date, to_date=to_date)
 
 
 def sales_monthly(cat: Catalog, from_date: str, to_date: str) -> DataFrame:
@@ -436,44 +476,37 @@ def daily_cash_movement(cat: Catalog, from_date: str, to_date: str) -> DataFrame
     """reports/mssql/daily-cash-movement.sql — receipts/payments of
     cash-in-hand ledgers over receipt/payment/contra vouchers (lower()
     comparisons per the BigQuery variant)."""
-    spark = cat["trn_voucher"].sparkSession
-    mov = (acct_voucher(cat)
-           .join(F.broadcast(cat["mst_ledger"].select(F.col("name").alias("ledger"),
-                                                      F.col("parent").alias("l_parent"))),
-                 "ledger")
-           .join(F.broadcast(cat["mst_group"].select(F.col("name").alias("l_parent"),
-                                                     "primary_group")), "l_parent")
-           .join(F.broadcast(cat["mst_vouchertype"]
-                             .select(F.col("name").alias("voucher_type"),
-                                     F.col("parent").alias("vt_parent"))), "voucher_type")
-           .filter((F.lower(F.col("primary_group")) == "cash-in-hand")
-                   & F.lower(F.col("vt_parent")).isin("receipt", "payment", "contra"))
-           .groupBy("date")
-           .agg(F.sum(F.when(F.col("amount") < 0, -F.col("amount"))
-                       .otherwise(_dzero())).alias("receipt"),
-                F.sum(F.when(F.col("amount") > 0, F.col("amount"))
-                       .otherwise(_dzero())).alias("payment")))
-    spine = _date_spine(spark, from_date, to_date)
-    return (spine.join(F.broadcast(mov), "date", "left")
-                 .select("date",
-                         F.coalesce("receipt", _dzero()).cast(_D17).alias("receipt"),
-                         F.coalesce("payment", _dzero()).cast(_D17).alias("payment")))
+    return _sql(cat, f"""
+WITH mov AS (
+  SELECT /*+ BROADCAST(t) */ f.date,
+         sum(CASE WHEN f.amount < 0 THEN -f.amount ELSE {_Z} END) AS receipt,
+         sum(CASE WHEN f.amount > 0 THEN f.amount ELSE {_Z} END) AS payment
+  FROM {{fact}} f JOIN {{vt}} t ON f.voucher_type = t.name
+  WHERE lower(f.primary_group) = 'cash-in-hand'
+    AND lower(t.parent) IN ('receipt', 'payment', 'contra')
+  GROUP BY f.date)
+SELECT /*+ BROADCAST(m) */ s.date,
+       CAST(coalesce(m.receipt, {_Z}) AS DECIMAL(17,2)) AS receipt,
+       CAST(coalesce(m.payment, {_Z}) AS DECIMAL(17,2)) AS payment
+FROM ({_DAYS}) s LEFT JOIN mov m ON s.date = m.date""",
+                fact=_ledger_fact(cat), vt=_dim(cat, "mst_vouchertype"),
+                from_date=from_date, to_date=to_date)
 
 
 def _walk_groups(cat: Catalog, group: str, max_depth: int,
                  down: bool) -> DataFrame:
     """Rows of ``mst_group(name, parent)`` reachable from ``group``: down
     to its descendants (a row's parent equals a reached name) or up its
-    ancestor chain (a row's name equals a reached parent). One read of
-    the dimension, walked on the driver, level by level exactly as the
-    recursive CTE joins: NULL matches nothing, every matching row is
+    ancestor chain (a row's name equals a reached parent). The staged
+    dimension's rows are walked on the driver, level by level exactly as
+    the recursive CTE joins: NULL matches nothing, every matching row is
     emitted (duplicate names keep the join's multiplicity) and a cycle
     stops after ``max_depth`` levels. The reached rows go back as an
-    Arrow table, which Spark keeps as a local relation: executing it
-    starts no Python worker."""
-    g = cat["mst_group"].select("name", "parent")
-    tbl = g.toArrow()
-    rows = list(zip(*(tbl.column(c).to_pylist() for c in ("name", "parent"))))
+    Arrow table, which Spark keeps as a local relation: building and
+    collecting the report run no job and start no Python worker."""
+    tbl, g = _dim_rows(cat, "mst_group")
+    rows = list(zip(tbl.column("name").to_pylist(),
+                    tbl.column("parent").to_pylist()))
     match, link = (1, 0) if down else (0, 1)
     edges = defaultdict(list)
     for i, r in enumerate(rows):
@@ -487,7 +520,8 @@ def _walk_groups(cat: Catalog, group: str, max_depth: int,
             break
         out += level
     return g.sparkSession.createDataFrame(
-        tbl.take(pa.array(out, pa.int64())), g.schema)
+        tbl.select(["name", "parent"]).take(pa.array(out, pa.int64())),
+        T.StructType([g.schema["name"], g.schema["parent"]]))
 
 
 def group_tree_parent_child(cat: Catalog, group: str, max_depth: int = 32) -> DataFrame:

@@ -281,3 +281,89 @@ def test_voucher_only_batch_leaves_masters_untouched(spark, tmp_path):
         got = sorted(tuple(r) for r in store.read(spark, t)
                      .select(cols).collect())
         assert got == sorted(tuple(r) for r in df.select(cols).collect()), t
+
+
+_RENUMBER_SPEC = """
+master:
+  - name: mst_vouchertype
+    collection: VoucherType
+    fields:
+      - {name: guid, field: $Guid, type: text}
+      - {name: name, field: $Name, type: text}
+      - {name: numbering_method, field: $NumberingMethod, type: text}
+      - {name: alterid, field: $AlterId, type: number}
+transaction:
+  - name: trn_voucher
+    collection: Voucher
+    fields:
+      - {name: guid, field: $Guid, type: text}
+      - {name: voucher_type, field: $VoucherTypeName, type: text}
+      - {name: voucher_number, field: $VoucherNumber, type: text}
+      - {name: alterid, field: $AlterId, type: number}
+    cascade_delete:
+      trn_accounting: guid
+  - name: trn_accounting
+    collection: Voucher.AllLedgerEntries
+    nature: Derived
+    fields:
+      - {name: guid, field: $Guid, type: text}
+      - {name: ledger, field: $LedgerName, type: text}
+      - {name: amount, field: $Amount, type: number}
+"""
+
+# Spark jobs of the batch below: a scoped commit of trn_voucher, its
+# cascade into trn_accounting and the renumbering commit, each probing
+# its touched buckets once (a distinct-collect of two jobs); the same
+# batch ran 46 when scoped_base and write_scoped each probed
+_BATCH_JOBS = 40
+
+
+def test_cdc_batch_job_budget(spark, tmp_path):
+    """An insert that shifts later auto-numbered vouchers: the batch
+    converges, and a plan edit that adds a Spark job to it (such as a
+    second bucket probe of one touched-keys frame) fails here."""
+    specs = load_yaml_spec(_RENUMBER_SPEC)
+    store = ParquetStore(str(tmp_path / "st"), n_buckets=4)
+    eng = IncrementalSync(spark, store, specs)
+
+    def frames(vouchers, lines):
+        return {
+            "mst_vouchertype": spark.createDataFrame(
+                [("t-1", "Sales", "Automatic", 1)],
+                "guid string, name string, numbering_method string, "
+                "alterid long"),
+            "trn_voucher": spark.createDataFrame(
+                vouchers, "guid string, voucher_type string, "
+                          "voucher_number string, alterid long"),
+            "trn_accounting": spark.createDataFrame(
+                lines, "guid string, ledger string, amount long")}
+
+    for t, df in frames(
+            [("v-1", "Sales", "1", 10), ("v-2", "Sales", "2", 11),
+             ("v-3", "Sales", "3", 12)],
+            [("v-1", "Cash", 5), ("v-2", "Cash", 7),
+             ("v-3", "Sales", 9)]).items():
+        store.write(df, t)
+    # v-4 is inserted as number 2: v-2 and v-3 shift to 3 and 4 without
+    # a new AlterId, so only the renumbering pass can repair them
+    after = frames([("v-1", "Sales", "1", 10), ("v-4", "Sales", "2", 13),
+                    ("v-2", "Sales", "3", 11), ("v-3", "Sales", "4", 12)],
+                   [("v-1", "Cash", 5), ("v-2", "Cash", 7),
+                    ("v-3", "Sales", 9), ("v-4", "Cash", 1)])
+
+    sc = spark.sparkContext
+    group = f"batch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "cdc batch")
+    try:
+        eng.incremental_sync_frames(after)
+    finally:
+        _clear_job_group(sc)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for t, df in after.items():
+        cols = sorted(df.columns)
+        got = sorted(tuple(r) for r in store.read(spark, t)
+                     .select(cols).collect())
+        assert got == sorted(tuple(r) for r in df.select(cols).collect()), t
+    assert jobs == _BATCH_JOBS
