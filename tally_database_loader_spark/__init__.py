@@ -16,7 +16,7 @@ Prime.  This package re-expresses its capabilities Spark-first:
 - ``plans``     : the report-query library (SURVEY §2.F) as DataFrame/SQL
                   programs, plus the driver-gate analytics queries
 - ``streaming`` : sync run log and control-plane server; session windows
-                  and stateful streaming operators (SURVEY §2.H)
+                  (SURVEY §2.H)
 - ``llm``       : large-scale training-data pipeline extras — exact/fuzzy
                   dedup, ANN similarity search, text analysis, multimodal
                   column plumbing

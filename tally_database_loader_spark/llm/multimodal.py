@@ -7,30 +7,29 @@ columns so downstream filters prune without touching bytes.
 
 Decoders:
 
-- **Real** for formats the standard library + numpy can parse — WAV
-  audio (``wave``), binary PPM (P6), uncompressed BMP (24/32-bit +
-  8-bit palette), and (new round 5) PNG and baseline JPEG. PNG's only codec is DEFLATE, i.e.
-  stdlib ``zlib``: a full chunk/CRC/unfilter decoder (all five filter
-  types, gray / RGB / palette / alpha at bit depth 8) lives in
+- **Real** for formats the standard library + numpy can parse — integer
+  PCM WAV audio (``wave``; ``_wav_pcm_samples`` feeds
+  ``audio_fingerprint``), binary PPM (P6), uncompressed BMP (24/32-bit +
+  8-bit palette), PNG and baseline JPEG. PNG's only codec is DEFLATE,
+  i.e. stdlib ``zlib``: a full chunk/CRC/unfilter decoder (all five
+  filter types, gray / RGB / palette / alpha at bit depth 8) lives in
   ``_decode_png_bytes``. Baseline JPEG's math (huffman entropy decode,
   dequantization, 8×8 inverse DCT, chroma upsampling, YCbCr→RGB) is
   pure numpy — ``llm/jpeg.py``, spec-checked against an independent
   encoder. GIF's LZW is pure bit-twiddling — ``_decode_gif_bytes``
-  (variable-width LSB codes, interlacing, local color tables). MP4's
-  CONTAINER metadata (brand/duration/tracks/dims) is a stdlib box walk
-  — ``decode_video_metadata``. ``decode_audio_features``
-  / ``decode_image_features`` / ``resize_images`` (all decodable
-  formats → nearest resample → P6 re-emit) / ``image_ahash`` run
-  genuine decode/resample math over Arrow batches. These pure-Python
-  spec decoders are the only decode path, so every value-hash gate
-  sees the same pixels on every host.
+  (variable-width LSB codes, interlacing, local color tables).
+  ``decode_image_features`` / ``resize_images`` (all decodable formats
+  → nearest resample → P6 re-emit) / ``image_ahash`` /
+  ``audio_fingerprint`` run genuine decode/resample math over Arrow
+  batches. These pure-Python spec decoders are the only decode path,
+  so every value-hash gate sees the same pixels on every host.
 - **Not decoded**: lossy VP8 WebP and arithmetic-coded JPEG payloads
-  yield NULL-feature rows; MP4 is read at the container level only
-  (``decode_video_metadata``, ``sample_frames``). The ``fake_*``
-  operators exercise the identical Spark plumbing — Arrow batches
-  through ``mapInPandas``, binary in, fixed-schema out — which is the
-  part that must be right at scale (batch sizes, schema, partition
-  mapping).
+  yield NULL-feature rows; float and G.711 WAV payloads yield NULL
+  fingerprints; video is only split into byte frames
+  (``sample_frames``). The ``fake_*`` operators exercise the identical
+  Spark plumbing — Arrow batches through ``mapInPandas``, binary in,
+  fixed-schema out — which is the part that must be right at scale
+  (batch sizes, schema, partition mapping).
 """
 
 from __future__ import annotations
@@ -78,159 +77,8 @@ def payload_metadata(df: DataFrame, id_col: str, payload: Column) -> DataFrame:
 # zlib + LZW); baseline JPEG lives in llm/jpeg.py
 # ---------------------------------------------------------------------------
 
-AUDIO_SCHEMA = ("doc_id bigint, sample_rate int, n_channels int, "
-                "sample_width int, n_frames bigint, duration_s double, "
-                "rms double")
-
 IMAGE_SCHEMA = ("doc_id bigint, format string, width int, height int, "
                 "channels int, mean_r double, mean_g double, mean_b double")
-
-
-def _riff_wav_chunks(b: bytes) -> tuple[bytes, bytes]:
-    """Direct RIFF chunk walk (fmt + data, odd sizes padded) shared by
-    the format-tag paths the stdlib ``wave`` reader rejects (IEEE
-    float, G.711). Duplicate fmt/data chunks reject — silently keeping
-    one would decode with the other chunk's parameters or misreport
-    every duration/RMS (ADVICE r7: the old walk kept the LAST fmt)."""
-    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a WAV")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(b):
-        tag = b[pos:pos + 4]
-        size, = struct.unpack_from("<I", b, pos + 4)
-        chunk = b[pos + 8:pos + 8 + size]
-        if len(chunk) != size:
-            raise ValueError("truncated WAV chunk")
-        if tag == b"fmt ":
-            if fmt is not None:
-                raise ValueError("WAV with multiple fmt chunks")
-            fmt = chunk
-        elif tag == b"data":
-            if data is not None:
-                raise ValueError("WAV with multiple data chunks")
-            data = chunk
-        pos += 8 + size + (size & 1)
-    if fmt is None or data is None or len(fmt) < 16:
-        raise ValueError("WAV missing fmt/data chunk")
-    return fmt, data
-
-
-def _g711_expand(u: "np.ndarray", law: str) -> "np.ndarray":
-    """G.711 §B.2/B.3 expansion to 16-bit linear PCM — pure spec
-    FORMULAS (sign/segment/mantissa), no memorized table, so the
-    decoder-tier contract is satisfied the same way the VP8L distance
-    LUT's structural check satisfies it: the mapping is property-
-    checked (odd symmetry, strict monotonicity per segment, ±32124 /
-    ±32256 extrema) and round-trips a spec-side compressor in tests."""
-    u = u.astype(np.int64)
-    if law == "ulaw":
-        v = ~u & 0xFF
-        mag = (((v & 0x0F) << 3) + 0x84) << ((v >> 4) & 0x07)
-        x = mag - 0x84
-        return np.where(v & 0x80, -x, x)
-    v = u ^ 0x55
-    mant = (v & 0x0F) << 4
-    seg = (v >> 4) & 0x07
-    mag = np.where(seg == 0, mant + 8,
-                   (mant + 0x108) << np.maximum(seg - 1, 0))
-    # A-law sign bit SET means positive (G.711 table 1a)
-    return np.where(v & 0x80, mag, -mag)
-
-
-def _decode_wav_g711(b: bytes) -> dict:
-    """µ-law (format tag 7) / A-law (tag 6) telephony WAV — 8-bit
-    companded samples expanded to 16-bit linear via the G.711 formulas;
-    RMS is in the EXPANDED linear units (the signal's natural scale,
-    like the integer-PCM path), sample_width reports the stored byte."""
-    fmt, data = _riff_wav_chunks(b)
-    wtag, nch, rate, _, _, bits = struct.unpack_from("<HHIIHH", fmt, 0)
-    if wtag not in (6, 7):
-        raise ValueError(f"WAV format tag {wtag} is not G.711")
-    if bits != 8 or nch < 1 or rate < 1:
-        raise ValueError("malformed G.711 WAV header")
-    n = len(data) // nch
-    raw = np.frombuffer(data, dtype=np.uint8, count=n * nch)
-    samples = _g711_expand(raw, "alaw" if wtag == 6 else "ulaw") \
-        .astype(np.float64)
-    rms = float(np.sqrt(np.mean(samples * samples))) if samples.size \
-        else 0.0
-    return {"sample_rate": rate, "n_channels": nch, "sample_width": 1,
-            "n_frames": n, "duration_s": n / rate, "rms": rms}
-
-
-def _decode_wav_float(b: bytes) -> dict:
-    """IEEE-float WAV (format tag 3, 32/64-bit) — the common DAW/ML
-    export the stdlib ``wave`` reader rejects: direct RIFF chunk walk
-    (fmt + data, odd sizes padded). RMS is in the payload's native
-    float units (nominal [-1, 1]), integer PCM RMS stays in raw sample
-    units — documented asymmetry, both exact."""
-    fmt, data = _riff_wav_chunks(b)
-    wtag, nch, rate, _, _, bits = struct.unpack_from("<HHIIHH", fmt, 0)
-    if wtag != 3:
-        raise ValueError(f"WAV format tag {wtag} unsupported (PCM via "
-                         "stdlib wave; 3=IEEE float here)")
-    if bits not in (32, 64) or nch < 1 or rate < 1:
-        raise ValueError("malformed float WAV header")
-    width = bits // 8
-    n = len(data) // (width * nch)
-    # truncate to whole FRAMES (n * nch samples) so RMS and n_frames
-    # agree on payloads with a trailing partial frame — matching the
-    # integer-PCM path, which only ever sees whole frames from `wave`
-    samples = np.frombuffer(data, dtype=f"<f{width}",
-                            count=n * nch).astype(np.float64)
-    if not np.isfinite(samples).all():
-        raise ValueError("float WAV contains non-finite samples")
-    rms = float(np.sqrt(np.mean(samples * samples))) if samples.size \
-        else 0.0
-    return {"sample_rate": rate, "n_channels": nch, "sample_width": width,
-            "n_frames": n, "duration_s": n / rate, "rms": rms}
-
-
-def _decode_wav_bytes(b: bytes) -> dict:
-    """Parse one RIFF/WAV payload: container fields via the stdlib
-    ``wave`` reader, RMS over the PCM samples via numpy. All four
-    integer PCM widths decode for real — 8-bit unsigned, 16-bit signed,
-    24-bit packed (round 5: three-byte little-endian reassembled and
-    sign-extended in numpy) and 32-bit signed — plus 32/64-bit IEEE
-    FLOAT (round 6: format tag 3 via ``_decode_wav_float``) and G.711
-    µ-law/A-law telephony audio (round 7: tags 7/6 via
-    ``_decode_wav_g711`` — pure spec formulas); ``wave`` itself rejects
-    all three."""
-    try:
-        with wave.open(io.BytesIO(b)) as w:
-            rate, nch = w.getframerate(), w.getnchannels()
-            width = w.getsampwidth()
-            n = w.getnframes()
-            pcm = w.readframes(n)
-    except wave.Error as exc:
-        # exact message match: a substring test would misroute
-        # multi-digit tags (65534 = WAVE_FORMAT_EXTENSIBLE starts
-        # with '6') into the wrong decoder
-        if str(exc) == "unknown format: 3":
-            return _decode_wav_float(b)
-        if str(exc) in ("unknown format: 6", "unknown format: 7"):
-            return _decode_wav_g711(b)
-        raise
-    if width == 2:
-        samples = np.frombuffer(pcm, dtype="<i2").astype(np.float64)
-    elif width == 1:
-        samples = np.frombuffer(pcm, dtype=np.uint8).astype(np.float64) - 128.0
-    elif width == 4:
-        samples = np.frombuffer(pcm, dtype="<i4").astype(np.float64)
-    elif width == 3:
-        u = np.frombuffer(pcm, dtype=np.uint8)
-        u = u[:len(u) - len(u) % 3].reshape(-1, 3).astype(np.int64)
-        v = u[:, 0] | (u[:, 1] << 8) | (u[:, 2] << 16)
-        samples = (v - ((v >= (1 << 23)).astype(np.int64) << 24)) \
-            .astype(np.float64)
-    else:  # width 0 or >4: malformed — rms must be NULL, never garbage
-        samples = None
-    rms = (None if samples is None
-           else float(np.sqrt(np.mean(samples * samples))) if samples.size
-           else 0.0)  # a zero-FRAME file is genuinely silent
-    return {"sample_rate": rate, "n_channels": nch, "sample_width": width,
-            "n_frames": n, "duration_s": (n / rate) if rate else 0.0,
-            "rms": rms}
 
 
 def _parse_ppm_header(b: bytes) -> tuple[int, int, int, int]:
@@ -694,29 +542,6 @@ def _decode_image_pixels(b: bytes) -> dict:
                      "arithmetic JPEG are not decoded)")
 
 
-def decode_audio_features(df: DataFrame, id_col: str = "doc_id",
-                          payload_col: str = "payload") -> DataFrame:
-    """REAL WAV decode over Arrow batches: container fields + PCM RMS per
-    payload, one row out per row in. Un-parseable payloads surface as a
-    row of NULL features (never a task failure — at 100 TB some corrupt
-    bytes are a certainty and one bad payload must not kill the job)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "sample_rate", "n_channels", "sample_width",
-                "n_frames", "duration_s", "rms"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rec = _decode_wav_bytes(bytes(payload))
-                except Exception:
-                    rec = dict.fromkeys(cols[1:])
-                rows.append({"doc_id": doc_id, **rec})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(decode, schema=AUDIO_SCHEMA)
-
-
 def decode_image_features(df: DataFrame, id_col: str = "doc_id",
                           payload_col: str = "payload") -> DataFrame:
     """REAL image decode over Arrow batches (dimensions + per-channel
@@ -813,99 +638,6 @@ def fake_resize(df: DataFrame, width: int, height: int,
 
     return df.mapInPandas(
         resize, schema="doc_id bigint, width int, height int, payload binary")
-
-
-VIDEO_SCHEMA = ("doc_id bigint, brand string, duration_s double, "
-                "n_tracks int, width double, height double")
-
-
-def _parse_mp4_boxes(b: bytes, start: int, end: int):
-    """Yield (type, payload_start, payload_end) for each ISO-BMFF box in
-    b[start:end]. Handles 64-bit largesize boxes; rejects malformed
-    sizes loudly."""
-    pos = start
-    while pos + 8 <= end:
-        size, = struct.unpack_from(">I", b, pos)
-        btype = b[pos + 4:pos + 8]
-        head = 8
-        if size == 1:                       # 64-bit largesize
-            if pos + 16 > end:
-                raise ValueError("truncated MP4 largesize box")
-            size, = struct.unpack_from(">Q", b, pos + 8)
-            head = 16
-        elif size == 0:                     # box extends to end
-            size = end - pos
-        if size < head or pos + size > end:
-            raise ValueError(f"malformed MP4 box {btype!r} size {size}")
-        yield btype, pos + head, pos + size
-        pos += size
-
-
-def _decode_mp4_bytes(b: bytes) -> dict:
-    """REAL MP4/MOV CONTAINER parse, stdlib-only (round 5): the ISO
-    base-media box structure needs no codec — walk ftyp/moov, read
-    mvhd's timescale+duration (version 0 and 1) and each trak/tkhd's
-    16.16 fixed-point width/height. Frame DECODE still needs ffmpeg and
-    stays stubbed; container metadata (duration, track count, display
-    dims) is what a 100 TB curation pipeline filters on before ever
-    paying for a decode. Corrupt/truncated boxes raise → NULL row."""
-    boxes = list(_parse_mp4_boxes(b, 0, len(b)))
-    if not boxes or boxes[0][0] != b"ftyp":
-        raise ValueError("not an ISO-BMFF file (missing leading ftyp)")
-    brand = b[boxes[0][1]:boxes[0][1] + 4].decode("ascii", "replace")
-    moov = next(((s, e) for t, s, e in boxes if t == b"moov"), None)
-    if moov is None:
-        raise ValueError("MP4 missing moov box")
-    duration_s = None
-    n_tracks = 0
-    width = height = None
-    for t, s, e in _parse_mp4_boxes(b, *moov):
-        if t == b"mvhd":
-            ver = b[s]
-            if ver == 1:
-                timescale, = struct.unpack_from(">I", b, s + 20)
-                duration, = struct.unpack_from(">Q", b, s + 24)
-            else:
-                timescale, = struct.unpack_from(">I", b, s + 12)
-                duration, = struct.unpack_from(">I", b, s + 16)
-            if timescale == 0:
-                raise ValueError("MP4 mvhd timescale 0")
-            duration_s = duration / timescale
-        elif t == b"trak":
-            n_tracks += 1
-            for t2, s2, e2 in _parse_mp4_boxes(b, s, e):
-                if t2 == b"tkhd":
-                    ver = b[s2]
-                    off = s2 + (88 if ver == 1 else 76)
-                    w16, h16 = struct.unpack_from(">II", b, off)
-                    if w16 and h16:        # audio tracks carry 0x0
-                        width = w16 / 65536.0
-                        height = h16 / 65536.0
-    if duration_s is None:
-        raise ValueError("MP4 moov missing mvhd")
-    return {"brand": brand, "duration_s": duration_s, "n_tracks": n_tracks,
-            "width": width, "height": height}
-
-
-def decode_video_metadata(df: DataFrame, id_col: str = "doc_id",
-                          payload_col: str = "payload") -> DataFrame:
-    """REAL MP4 container metadata over Arrow batches (brand, duration,
-    track count, display dims); corrupt payloads → NULL rows."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "brand", "duration_s", "n_tracks", "width",
-                "height"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rec = _decode_mp4_bytes(bytes(payload))
-                except Exception:
-                    rec = dict.fromkeys(cols[1:])
-                rows.append({"doc_id": doc_id, **rec})
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(decode, schema=VIDEO_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_n: int = 4, frame_bytes: int = 64,
@@ -1031,10 +763,11 @@ def image_ahash(df: DataFrame, id_col: str = "doc_id",
 
 def _wav_pcm_samples(b: bytes) -> "np.ndarray":
     """Integer PCM samples of a RIFF/WAV payload as int64 (widths
-    1/2/3/4; the same width handling as ``_decode_wav_bytes`` but
-    WITHOUT the float cast, so downstream arithmetic stays exact).
-    Raises for float/G.711 payloads — fingerprinting is defined on
-    integer PCM; other tiers surface as NULL rows upstream."""
+    1/2/3/4: 8-bit unsigned, 16/32-bit signed, 24-bit packed
+    little-endian sign-extended), kept exact for the fingerprint
+    arithmetic. Raises for float (tag 3) and G.711 (tags 6/7) payloads,
+    which the stdlib ``wave`` reader rejects, and for any malformed
+    container — ``audio_fingerprint`` turns those into NULL rows."""
     with wave.open(io.BytesIO(b)) as w:
         width = w.getsampwidth()
         pcm = w.readframes(w.getnframes())

@@ -143,8 +143,7 @@ def group_split(docs: DataFrame, group_col: str,
 
 
 def length_bucketed_batches(docs: DataFrame, id_col: str, len_col: str,
-                            batch_size: int, n_shards: int,
-                            passthrough: bool = False) -> DataFrame:
+                            batch_size: int, n_shards: int) -> DataFrame:
     """Padding-efficient batch layout: deterministically shard the corpus,
     sort each shard by length, and cut fixed-size batches — so a batch
     holds similar-length documents and the pad-to-max waste collapses
@@ -160,10 +159,7 @@ def length_bucketed_batches(docs: DataFrame, id_col: str, len_col: str,
     global ordering bottleneck exists at any corpus size; shards are
     hash-balanced in expectation.
 
-    Output: ``shard, batch_idx, doc_id, n_tokens, pos_in_batch`` — or,
-    with ``passthrough=True``, ALL input columns plus ``shard``,
-    ``batch_idx``, ``pos_in_batch`` (the writer-side form: one window, no
-    join back to the input, exact even for duplicate or NULL ids).
+    Output: ``shard, batch_idx, doc_id, n_tokens, pos_in_batch``.
     """
     if batch_size <= 0 or n_shards <= 0:
         raise ValueError("batch_size and n_shards must be positive")
@@ -182,8 +178,6 @@ def length_bucketed_batches(docs: DataFrame, id_col: str, len_col: str,
                          F.expr(f"(__rn - 1) div {batch_size}").cast("int"))
              .withColumn("pos_in_batch",
                          F.expr(f"(__rn - 1) % {batch_size}").cast("int")))
-    if passthrough:
-        return d.drop("__rn", "__len")
     return d.select("shard", "batch_idx",
                     F.col(id_col).alias("doc_id"),
                     F.col("__len").alias("n_tokens"), "pos_in_batch")

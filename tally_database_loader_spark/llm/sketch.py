@@ -1,6 +1,6 @@
 """Relational bounded-state sketches, deterministically, from DataFrame
 primitives: HyperLogLog (cardinality), count-min (frequency), Bloom
-(membership + the map-side semi-join reducer ``bloom_semi_reduce``).
+(membership).
 
 At 100 TB, corpus telemetry (distinct tokens / URLs / fingerprints per
 slice) cannot afford exact ``count(DISTINCT x)`` — the shuffle is sized
@@ -28,8 +28,6 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -247,44 +245,3 @@ def bloom_contains(bloom: DataFrame, items: DataFrame, col: str,
              .groupBy(col)
              .agg(F.min(F.coalesce(F.col("__set"), F.lit(0))).alias("hit")))
     return hits.select(col, F.col("hit").cast("int").alias("in_bloom"))
-
-
-def bloom_semi_reduce(fact: DataFrame, keys: DataFrame, key: str,
-                      m: int = 1 << 20, k: int = 4) -> DataFrame:
-    """Bloom semi-join reduction: drop ``fact`` rows whose ``key``
-    CANNOT appear in ``keys`` — the explicit, deterministic analogue of
-    Spark's AQE runtime Bloom-filter join (engine-private, cost-gated;
-    this one is an operator you compose). Entirely MAP-SIDE on the fact
-    table: the small side's filter collapses to a packed bit array
-    (m/8 bytes — 128 KB at m=2^20, the probe-then-parameterize pattern
-    the k-means codebooks use), the k salted positions are computed
-    JVM-side per fact row, and an Arrow-batched numpy closure tests the
-    bits — the fact side is never shuffled, never distinct-ed. No false
-    negatives ⇒ the result is a superset of the exact semi-join; the
-    exact join on the survivors is precise. The 100 TB win: the fact
-    shuffle an exact join would pay shrinks by the true selectivity for
-    128 KB of closure."""
-    positions = [r.pos for r in bloom_build(keys, key, m=m, k=k).collect()]
-    bits = np.zeros(m, dtype=bool)
-    if positions:
-        bits[np.asarray(positions, dtype=np.int64)] = True
-    packed = np.packbits(bits)  # ship 1 bit/position in the closure
-
-    @F.pandas_udf("boolean")
-    def hit(poss: pd.Series) -> pd.Series:
-        # index the PACKED bytes directly (packbits is MSB-first:
-        # bit i lives at packed[i >> 3] & (0x80 >> (i & 7))) — per-batch
-        # work is k lookups per row, not an m-bit unpack per Arrow batch
-        # (the r3 shape re-expanded 1 MB of bools per batch at m=2^20;
-        # micro-bench, 4096-row × k=4 batches: 0.28 → 0.15 ms/batch,
-        # ~2× faster and no per-batch megabyte allocation)
-        if len(poss) == 0:
-            return pd.Series([], dtype="bool")
-        mat = np.stack([np.asarray(p, dtype=np.int64) for p in poss])
-        set_ = (packed[mat >> 3] & (0x80 >> (mat & 7))) != 0
-        return pd.Series(set_.all(axis=1))
-
-    sk = F.coalesce(F.col(key).cast("string"), F.lit("\x00<null>"))
-    pos_cols = [F.pmod(hash_order(F.concat(F.lit(f"bf{i}:"), sk)), F.lit(m))
-                for i in range(k)]
-    return fact.filter(hit(F.array(*pos_cols)))

@@ -105,7 +105,6 @@ class ParquetStore:
 
     _BUCKET = "__bucket"
     _MANIFEST = "_manifest.json"
-    _VACUUMED = "_vacuumed"
     # vacuum only reclaims superseded staging dirs older than this —
     # a live commit stages for minutes; a crashed writer's stage forever
     STAGE_RETENTION_S = 3600.0
@@ -122,33 +121,16 @@ class ParquetStore:
 
     def _versions(self, table: str) -> list[int]:
         """Live versions. The commit record is the manifest: a ``v{n}``
-        directory carrying ``_manifest.json`` is a snapshot. The LEGACY
-        fallback (bucket-layout directory, no manifest — the pre-manifest
-        release's layout) applies ONLY when the table has no manifest in
-        ANY version: once a single manifest exists, a manifest-less
-        directory can only be an aborted commit from the pre-staging
-        release or a vacuum-delisted shell, and treating it as the newest
-        snapshot would silently drop every carried-forward row (ADVICE
-        r3). Legacy stores keep working and migrate on their next commit;
-        aborted partials are invisible and reclaimed by ``vacuum``."""
+        directory carrying ``_manifest.json`` is a snapshot, and nothing
+        else is. A manifest-less ``v{n}`` — a vacuum-delisted shell that
+        still holds carried-forward files, or the debris of a vacuum that
+        crashed part-way — is invisible here and reclaimed by ``vacuum``."""
         d = os.path.join(self.root, table)
         if not os.path.isdir(d):
             return []
-        entries = [v for v in os.listdir(d)
-                   if v.startswith("v") and v[1:].isdigit()
-                   and os.path.isdir(os.path.join(d, v))]
-        committed = [int(v[1:]) for v in entries
-                     if os.path.isfile(os.path.join(d, v, self._MANIFEST))]
-        if committed:
-            return sorted(committed)
-        out = []
-        for v in entries:
-            vdir = os.path.join(d, v)
-            if not os.path.isfile(os.path.join(vdir, self._VACUUMED)) \
-                    and any(e.startswith(f"{self._BUCKET}=")
-                            for e in os.listdir(vdir)):
-                out.append(int(v[1:]))  # legacy pre-manifest snapshot
-        return sorted(out)
+        return sorted(int(v[1:]) for v in os.listdir(d)
+                      if v.startswith("v") and v[1:].isdigit()
+                      and os.path.isfile(os.path.join(d, v, self._MANIFEST)))
 
     def _vdir(self, table: str, v: int) -> str:
         return os.path.join(self.root, table, f"v{v}")
@@ -184,29 +166,22 @@ class ParquetStore:
         return os.path.join(self._vdir(table, v), self._MANIFEST)
 
     def _read_manifest(self, table: str, v: int) -> dict[int, list[str]]:
-        """bucket → data-file paths relative to the table root. A LEGACY
-        version directory (written before manifests existed) has no
-        manifest file — its layout IS the manifest, so fall back to the
-        directory scan; the next commit on top of it records a real one."""
+        """bucket → data-file paths relative to the table root."""
         import json
-        p = self._manifest_path(table, v)
-        if not os.path.isfile(p):
-            return self._scan_bucket_files(table, v)
-        with open(p) as fh:
+        with open(self._manifest_path(table, v)) as fh:
             m = json.load(fh)
         return {int(b): files for b, files in m["buckets"].items()}
 
     def _manifest_schema(self, table: str, v: int):
+        """The snapshot's recorded schema (a ``StructType``)."""
         import json
-        p = self._manifest_path(table, v)
-        if not os.path.isfile(p):  # legacy pre-manifest snapshot
-            return None
-        with open(p) as fh:
-            return json.load(fh).get("schema")
+
+        from pyspark.sql import types as T
+        with open(self._manifest_path(table, v)) as fh:
+            return T.StructType.fromJson(json.load(fh)["schema"])
 
     def _write_manifest(self, table: str, v: int,
-                        buckets: dict[int, list[str]],
-                        schema_json: str | None = None,
+                        buckets: dict[int, list[str]], schema_json: str,
                         at: str | None = None) -> None:
         """Write the manifest for version ``v`` into directory ``at``
         (default: the final version directory). Commits pass the STAGING
@@ -216,13 +191,12 @@ class ParquetStore:
         import json
         d = at or self._vdir(table, v)
         os.makedirs(d, exist_ok=True)
+        # the schema is recorded so a committed-EMPTY snapshot (e.g. a
+        # sync that deleted every row) still reads back with its schema —
+        # files can't carry it when there are none
         body = {"version": v,
-                "buckets": {str(b): sorted(f) for b, f in buckets.items() if f}}
-        if schema_json is not None:
-            # recorded so a committed-EMPTY snapshot (e.g. a sync that
-            # deleted every row) still reads back with its schema — files
-            # can't carry it when there are none
-            body["schema"] = json.loads(schema_json)
+                "buckets": {str(b): sorted(f) for b, f in buckets.items() if f},
+                "schema": json.loads(schema_json)}
         tmp = os.path.join(d, self._MANIFEST + ".tmp")
         with open(tmp, "w") as fh:
             json.dump(body, fh, indent=1, sort_keys=True)
@@ -270,9 +244,10 @@ class ParquetStore:
         version. (On an object store this one rename would be the table
         format's commit call — e.g. a conditional PUT.)
 
-        An ordinal blocked by a MANIFEST-LESS directory (aborted partial
-        from the pre-staging release) is SKIPPED, not reclaimed: the
-        claim path never deletes anything, because any check-then-delete
+        An ordinal blocked by a MANIFEST-LESS directory (a ``vacuum`` that
+        crashed after de-listing a snapshot but before sweeping its
+        directory leaves one) is SKIPPED, not reclaimed: the claim path
+        never deletes anything, because any check-then-delete
         here races a concurrent winner committing between the check and
         the delete (a current-protocol snapshot appears atomically WITH
         its manifest, so the check alone can't be trusted a moment
@@ -309,7 +284,7 @@ class ParquetStore:
                     f"version v{nxt} of table {table!r} was committed by "
                     f"a concurrent writer while this commit was staging; "
                     f"re-read the table and retry the sync")
-            nxt += 1  # aborted-partial junk: skip the ordinal
+            nxt += 1  # manifest-less leftover: skip the ordinal
 
     # -- snapshot I/O -------------------------------------------------------
 
@@ -335,22 +310,15 @@ class ParquetStore:
             raise FileNotFoundError(f"{table} has no version {version}; "
                                     f"available: {vs}")
         files = self._files(table, version)
-        sj = self._manifest_schema(table, version)
+        schema = self._manifest_schema(table, version)
         if not files:  # a committed-empty snapshot
-            if sj is not None:
-                from pyspark.sql import types as T
-                return spark.createDataFrame([], T.StructType.fromJson(sj))
-            return spark.read.parquet(self._vdir(table, version))
-        if sj is not None:
-            # apply the manifest's recorded schema: carried-forward files
-            # can span versions with different schemas (evolution via
-            # direct commits), and schema-less multi-file reads depend on
-            # which file Spark samples (ADVICE r3) — the manifest is the
-            # source of truth, so reads are deterministic
-            from pyspark.sql import types as T
-            return spark.read.schema(T.StructType.fromJson(sj)).parquet(*files)
-        df = spark.read.parquet(*files)  # legacy pre-manifest snapshot
-        return df.drop(self._BUCKET) if self._BUCKET in df.columns else df
+            return spark.createDataFrame([], schema)
+        # apply the manifest's recorded schema: carried-forward files can
+        # span versions with different schemas (evolution via direct
+        # commits), and schema-less multi-file reads depend on which file
+        # Spark samples (ADVICE r3) — the manifest is the source of truth,
+        # so reads are deterministic
+        return spark.read.schema(schema).parquet(*files)
 
     def history(self, table: str) -> list[int]:
         return self._versions(table)
@@ -363,9 +331,9 @@ class ParquetStore:
         including files orphaned in directories whose snapshot was
         de-listed by an EARLIER vacuum pass (the sweep walks every
         version directory, not just the ones dropped now, so repeated
-        sync+vacuum cycles cannot leak). De-listed directories that
-        still hold carried-forward files get a ``_vacuumed`` tombstone so
-        they are never mistaken for legacy snapshots."""
+        sync+vacuum cycles cannot leak). A de-listed directory that still
+        holds carried-forward files stays as a manifest-less shell, which
+        ``_versions`` never lists."""
         import shutil
         vs = self._versions(table)
         keep = vs[len(vs) - keep_last:] if keep_last > 0 else []
@@ -408,12 +376,8 @@ class ParquetStore:
                       for rel in rels}
         keep_meta = {os.path.join(f"v{v}", self._MANIFEST) for v in keep}
         for v in dropped:
-            mp = self._manifest_path(table, v)
-            if os.path.isfile(mp):
-                os.remove(mp)  # de-list the snapshot
-            with open(os.path.join(self._vdir(table, v), self._VACUUMED),
-                      "w") as fh:
-                fh.write("")  # tombstone: not a legacy snapshot
+            # de-list every dropped snapshot before any of its files go
+            os.remove(self._manifest_path(table, v))
         for entry in sorted(os.listdir(troot)):
             if not (entry.startswith("v") and entry[1:].isdigit()) \
                     or int(entry[1:]) in keep:
@@ -423,17 +387,10 @@ class ParquetStore:
                 for fn in files:
                     full = os.path.join(dirpath, fn)
                     rel = os.path.relpath(full, troot)
-                    if rel in referenced or rel in keep_meta \
-                            or fn == self._VACUUMED:
+                    if rel in referenced or rel in keep_meta:
                         continue
                     os.remove(full)
-                remaining = os.listdir(dirpath)
-                if not remaining:
-                    os.rmdir(dirpath)
-                elif remaining == [self._VACUUMED] and dirpath == vdir:
-                    # nothing carried forward survives here — drop the
-                    # tombstoned shell entirely
-                    os.remove(os.path.join(dirpath, self._VACUUMED))
+                if not os.listdir(dirpath):
                     os.rmdir(dirpath)
         return dropped
 
@@ -498,20 +455,11 @@ class ParquetStore:
         if not vs:
             raise FileNotFoundError(f"no versions for table {table}")
         touched = self._touched_buckets(touched_keys)
-        sj = self._manifest_schema(table, vs[-1])
-        if sj is None:
-            # legacy pre-manifest snapshot: no recorded schema, so fall
-            # back to the full read and prune by the recomputed bucket
-            # hash (the next commit migrates the table to a manifest)
-            df = self.read(spark, table)
-            return df.filter(self._bucket_col(self._key_of(df))
-                             .isin(touched))
         man = self._read_manifest(table, vs[-1])
         troot = os.path.join(self.root, table)
         files = [os.path.join(troot, rel)
                  for b in touched for rel in man.get(b, [])]
-        from pyspark.sql import types as T
-        schema = T.StructType.fromJson(sj)
+        schema = self._manifest_schema(table, vs[-1])
         if not files:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(*files)
@@ -529,8 +477,8 @@ class ParquetStore:
 
         Trustworthy by construction only for integer physical types
         (string min/max may be truncated in footers); returns None —
-        caller falls back to the scan — for non-integer columns, files
-        missing the column or its statistics, or legacy snapshots."""
+        caller falls back to the scan — for non-integer columns or files
+        missing the column or its statistics."""
         import pyarrow.parquet as pq
         vs = self._versions(table)
         if not vs:

@@ -1,20 +1,13 @@
-"""Skew-handling operators: deterministic salting for hot-key
-aggregations and joins.
+"""Skew handling: deterministic salting for hot-key aggregations.
 
 At 100 TB, AQE's skew-join splitting (enabled in session.py) covers
-sort-merge joins whose *partitions* are oversized, but two shapes still
-need explicit salting:
-
-- **Low-cardinality / hot-key aggregation** where the aggregation state
-  is heavy (collect_list/collect_set, large distinct sets): partial
-  aggregation reduces sum/count map-side, but state-heavy aggregates
-  ship every element to the one reducer owning the hot key. Two-phase
-  salted aggregation (`salted_aggregate`) splits each key across
-  ``n_salt`` reducers, then combines the ``n_salt`` partial states.
-- **Hot-key equi-join** where neither side fits a broadcast
-  (`salted_join`): the big side gets a deterministic per-row salt, the
-  smaller side is replicated ``n_salt`` ways, and the join key becomes
-  (key, salt) — each hot key's rows spread over ``n_salt`` tasks.
+sort-merge joins whose *partitions* are oversized, but a low-cardinality
+/ hot-key aggregation with heavy state (collect_list/collect_set, large
+distinct sets) still needs explicit salting: partial aggregation reduces
+sum/count map-side, but state-heavy aggregates ship every element to the
+one reducer owning the hot key. Two-phase salted aggregation
+(`salted_aggregate`) splits each key across ``n_salt`` reducers, then
+combines the ``n_salt`` partial states.
 
 Salts are ``xxhash64`` of a caller-named distinguishing column —
 deterministic under task retries (``F.rand``/``monotonically_increasing_id``
@@ -79,33 +72,3 @@ def salted_aggregate(df: DataFrame, keys: Sequence[str],
         _DECOMPOSABLE[fn][0](col).alias(name) for name, (fn, col) in aggs.items()])
     return phase1.groupBy(*keys).agg(*[
         _DECOMPOSABLE[fn][1](name).alias(name) for name, (fn, _) in aggs.items()])
-
-
-def salted_join(big: DataFrame, small: DataFrame, on: Sequence[str],
-                distinct_on: str, n_salt: int = 8,
-                how: str = "inner") -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
-
-    For the case AQE cannot fix (extreme single-key skew in a
-    non-broadcastable sort-merge join): ``big`` rows get
-    ``salt = xxhash64(distinct_on) % n_salt``; ``small`` is exploded over
-    all ``n_salt`` salt values (×n_salt rows — still far cheaper than one
-    straggler task owning the hot key); the join runs on
-    (*on, salt) and the salt column is dropped.
-
-    ``how`` is restricted to join types that do NOT preserve unmatched
-    SMALL-side rows: right/full outer would emit ``n_salt`` null-extended
-    copies of every unmatched small row (one per salt replica). Flip the
-    arguments (and the join direction) for those shapes.
-    """
-    if how in ("right", "rightouter", "right_outer", "full", "outer",
-               "fullouter", "full_outer"):
-        raise ValueError(
-            f"salted_join(how={how!r}): join types preserving unmatched "
-            f"small-side rows would duplicate them n_salt times; salt the "
-            f"other side instead")
-    b = big.withColumn("_salt", salt_column(distinct_on, n_salt))
-    s = (small.select("*", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                            .alias("_salt"))
-              .withColumn("_salt", F.col("_salt").cast("int")))
-    return b.join(s, [*on, "_salt"], how).drop("_salt")

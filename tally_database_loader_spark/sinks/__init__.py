@@ -1,17 +1,13 @@
-"""Sink/writer layer (SURVEY §2.B) — CSV, JSON, JDBC, BigQuery, CDM,
-config table, plus the scale-layout writers."""
+"""Sink/writer layer (SURVEY §2.B) — CSV, JSON, JDBC, BigQuery, CDM and
+the config table."""
 
 from .writers import (  # noqa: F401
     bigquery_writer_options,
     jdbc_writer_options,
-    overwrite_table,
     write_bigquery,
-    write_bucketed_table,
     write_cdm,
     write_config_table,
     write_csv,
     write_jdbc,
     write_json,
-    write_parquet_partitioned,
-    write_training_shards,
 )

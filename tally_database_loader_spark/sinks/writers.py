@@ -12,7 +12,8 @@ Reference behaviors reproduced (citations are reference files):
   connections replace the reference's single connection.
 - B5 BigQuery / B6 ADLS-CDM — CDM ``model.json`` (entity/attribute/partition
   metadata, type map at src/database.mts:341-360) + per-table CSV parts.
-- B9 truncate-before-load (src/database.mts:269-288) — ``mode('overwrite')``.
+- B9 truncate-before-load (src/database.mts:269-288) — the JDBC
+  ``truncate=true`` option and the store's full-sync ``write``.
 - B10 config-table writer (src/tally.mts:580-591).
 
 Scale notes: every writer is a distributed ``df.write`` — no driver
@@ -197,11 +198,6 @@ def write_jdbc(df: DataFrame, url: str, table: str, *, technology: str,
     writer.save()
 
 
-def overwrite_table(df: DataFrame, path: str) -> None:
-    """Truncate-before-load (B9) on file storage = atomic overwrite."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def bigquery_writer_options(dataset: str, table: str, *,
                             truncate: bool = True,
                             temp_bucket: str | None = None) -> dict[str, str]:
@@ -323,111 +319,3 @@ def write_config_table(spark: SparkSession, path: str, *, company: str,
         "name string, value string")
     df.write.mode("overwrite").parquet(path)
     return df
-
-
-def write_parquet_partitioned(df: DataFrame, path: str, *,
-                              partition_by: list[str] | None = None,
-                              date_col: str | None = None,
-                              mode: str = "overwrite") -> None:
-    """Scale-layout parquet write: partition directories by the given
-    columns, with the common case — month buckets from a date column —
-    derived automatically.
-
-    This is the 100 TB layout for the transaction tables: partitioning
-    ``trn_*`` by month turns every report's date filter (all of them —
-    trial balance, registers, daily/monthly series) into partition
-    pruning, so a one-quarter query touches ~3/120 of a decade's files.
-    Masters stay unpartitioned (dimension-sized, broadcast at read).
-    """
-    cols = list(partition_by or [])
-    if date_col is not None:
-        df = df.withColumn("_ym", F.date_format(F.col(date_col), "yyyy-MM"))
-        cols = ["_ym", *cols]
-    w = df.write.mode(mode)
-    if cols:
-        w = w.partitionBy(*cols)
-    w.parquet(path)
-
-
-def write_bucketed_table(df: DataFrame, name: str, *, bucket_col: str,
-                         n_buckets: int = 32, sort_col: str | None = None,
-                         path: str | None = None) -> None:
-    """Bucketed managed table: pre-shuffles rows into ``n_buckets`` by
-    ``bucket_col`` so equi-joins and groupBys on that key are
-    shuffle-free at read time.
-
-    The header/detail star (trn_voucher ⋈ trn_accounting ⋈ trn_inventory
-    on guid) is the target: bucket all three by guid and every report's
-    join runs map-side. At 100 TB this converts the biggest repeated
-    shuffle in the workload into a one-time write cost."""
-    w = df.write.mode("overwrite").format("parquet") \
-        .bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    if path:
-        w = w.option("path", path)  # external table at an explicit location
-    w.saveAsTable(name)
-
-
-def write_training_shards(df: DataFrame, path: str, *, id_col: str,
-                          len_col: str, n_shards: int,
-                          batch_size: int | None = None,
-                          mode: str = "overwrite") -> dict:
-    """Write a corpus as the training-loader layout: ``shard=K/`` parquet
-    directories with deterministic hash-shard assignment (optionally
-    length-bucketed ``batch_idx``/``pos_in_batch`` columns so the loader
-    streams padding-efficient batches straight off disk, no per-epoch
-    sort), plus a ``_manifest.json`` recording per-shard document/token
-    totals and a content checksum.
-
-    Scale shape: shard assignment is a map-side hash expression over the
-    full-width rows — the batched variant runs ONE per-shard window
-    (``length_bucketed_batches(passthrough=True)``), never a join back to
-    the input, so duplicate or NULL ids cannot fan out or drop rows. The
-    manifest checksum is a ``bit_xor`` of per-row hashes —
-    order-insensitive and overflow-free, so retries and AQE re-plans
-    cannot change it — and is written through the Hadoop FileSystem API,
-    so ``s3a://``/``abfs://``/``hdfs://`` destinations work exactly like
-    local paths. Returns the manifest dict.
-    """
-    from ..llm.packing import hash_order, length_bucketed_batches
-
-    if n_shards <= 0:
-        raise ValueError("n_shards must be positive")
-    if batch_size is not None:
-        out = length_bucketed_batches(df, id_col, len_col, batch_size,
-                                      n_shards, passthrough=True)
-    else:
-        key = F.coalesce(F.col(id_col).cast("string"), F.lit("\x00<null>"))
-        out = df.withColumn(
-            "shard", F.pmod(hash_order(key), F.lit(n_shards)).cast("int"))
-    out.write.mode(mode).partitionBy("shard").parquet(path)
-
-    back = df.sparkSession.read.parquet(path)
-    rows = (back.groupBy("shard")
-            .agg(F.count(F.lit(1)).cast("long").alias("docs"),
-                 F.sum(F.col(len_col).cast("long")).alias("tokens"),
-                 F.expr(f"bit_xor(xxhash64(CAST({id_col} AS STRING)))")
-                  .alias("checksum"))
-            .collect())
-    manifest = {
-        "n_shards": n_shards,
-        "shards": sorted(
-            ({"shard": int(r["shard"]), "docs": int(r["docs"]),
-              # all-NULL len_col in a shard sums to NULL, like checksum
-              "tokens": int(r["tokens"]) if r["tokens"] is not None else 0,
-              "checksum": int(r["checksum"]) if r["checksum"] is not None
-              else 0}
-             for r in rows), key=lambda s: s["shard"]),
-    }
-    spark = df.sparkSession
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path + "/_manifest.json")
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    stream = fs.create(hpath, True)
-    try:
-        stream.write(bytearray(json.dumps(manifest, indent=1,
-                                          sort_keys=True).encode("utf-8")))
-    finally:
-        stream.close()
-    return manifest

@@ -1,1 +1,1 @@
-"""Sync run log, sync server and streaming operators (SURVEY §2.H)."""
+"""Sync run log, sync control-plane server and session windows (SURVEY §2.H)."""

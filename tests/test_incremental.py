@@ -297,32 +297,6 @@ def test_vacuum_reclaims_cross_pass_orphans(spark, tmp_path):
         == {f"g-{i}" for i in range(60)}
 
 
-def test_legacy_store_without_manifests_migrates(spark, tmp_path):
-    """A store written by the pre-manifest release (bucket dirs, no
-    _manifest.json) stays readable, accepts a scoped commit on top (the
-    directory scan stands in for the missing manifest and the new
-    version records a real one), and never clobbers the legacy data."""
-    import os
-    store = ParquetStore(str(tmp_path / "lg"), n_buckets=4)
-    df = spark.range(40).select(
-        F.concat(F.lit("g-"), F.col("id").cast("string")).alias("guid"),
-        F.col("id").alias("val"))
-    store.write(df, "t")
-    os.remove(store._manifest_path("t", 1))  # simulate the old layout
-    assert store.history("t") == [1]         # legacy dir counts as live
-    assert store.read(spark, "t").count() == 40
-    upd = df.withColumn("val", F.when(F.col("guid") == "g-3", -3)
-                               .otherwise(F.col("val")))
-    store.write_scoped(upd, "t", spark.createDataFrame([("g-3",)],
-                                                       "guid string"))
-    got = {r.guid: r.val for r in store.read(spark, "t").collect()}
-    assert got["g-3"] == -3 and len(got) == 40
-    # v2's manifest references the legacy files it carried forward
-    refs = {rel for rels in store._read_manifest("t", 2).values()
-            for rel in rels}
-    assert any(rel.startswith("v1/") for rel in refs)
-
-
 def test_delete_all_rows_reads_back_empty_with_schema(spark, tmp_path):
     """MERGE semantics include delete-everything: a scoped commit whose
     merged frame is empty yields a committed-empty snapshot that reads
@@ -379,8 +353,6 @@ def test_time_travel_and_vacuum(spark, tmp_path):
     if os.path.isdir(v1_dir):
         for dirpath, _dirs, files in os.walk(v1_dir):
             for fn in files:
-                if fn == "_vacuumed":  # de-list tombstone, not data
-                    continue
                 rel = os.path.relpath(os.path.join(dirpath, fn),
                                       os.path.join(str(tmp_path / "tt"), "t"))
                 assert rel in v2_refs, f"unreclaimed unreferenced file: {rel}"
@@ -421,21 +393,20 @@ def test_concurrent_writer_loses_cleanly(spark, tmp_path):
 
 
 def test_aborted_partial_commit_is_invisible(spark, tmp_path):
-    """ADVICE r3: a crash between the data write and the manifest write
-    (pre-staging release shape: bucket dirs, no manifest) must NOT be
-    resurrected as the newest 'legacy' snapshot — that would silently
-    drop every carried-forward row. With manifests present anywhere in
-    the table, manifest-less v-dirs are invisible; a later commit SKIPS
-    the blocked ordinal (the claim path never deletes — a check-then-
-    delete would race a concurrent winner) and vacuum reclaims the
-    junk."""
+    """A manifest-less ``v{n}`` past the newest snapshot (what a vacuum
+    that crashed between de-listing a snapshot and sweeping its
+    directory leaves) must NOT surface as the newest snapshot — that
+    would silently drop every carried-forward row. It is invisible; a
+    later commit SKIPS the blocked ordinal (the claim path never deletes
+    — a check-then-delete would race a concurrent winner) and vacuum
+    reclaims the junk."""
     import os
     store = ParquetStore(str(tmp_path / "ab"), n_buckets=4)
     df = _guid_df(spark)
     store.write(df, "t")                                        # v1
     store.write_scoped(df, "t",
                        spark.createDataFrame([("g-1",)], "guid string"))  # v2
-    # simulate the old code crashing mid-commit at v3
+    # manifest-less debris at v3
     junk = os.path.join(store._vdir("t", 3), "__bucket=0")
     os.makedirs(junk)
     with open(os.path.join(junk, "part-00000.parquet"), "wb") as fh:
@@ -452,6 +423,35 @@ def test_aborted_partial_commit_is_invisible(spark, tmp_path):
     # vacuum (not the claim path) reclaims the junk ordinal
     store.vacuum("t", keep_last=1)
     assert not os.path.isdir(store._vdir("t", 3)), "junk v3 not reclaimed"
+
+
+def test_manifest_less_versions_are_absent(spark, tmp_path):
+    """The manifest is the only commit record: a table directory whose
+    ``v{n}`` directories hold ``__bucket=K`` parquet files but no
+    manifest is no table at all. ``exists`` is False, ``read`` raises,
+    and a scoped commit on it is a full write at an ordinal past the
+    junk, which vacuum then reclaims."""
+    import os
+    store = ParquetStore(str(tmp_path / "ml"), n_buckets=4)
+    df = _guid_df(spark, 40)
+    store.write(df, "t")                                        # v1
+    store.write(df.filter("val < 10"), "t")                     # v2
+    for v in (1, 2):
+        os.remove(store._manifest_path("t", v))
+    assert any(e.startswith("__bucket=")
+               for e in os.listdir(store._vdir("t", 2)))
+    assert not store.exists("t") and store.history("t") == []
+    with pytest.raises(FileNotFoundError):
+        store.read(spark, "t")
+    assert store.write_scoped(
+        df, "t", spark.createDataFrame([("g-1",)], "guid string")) == 4
+    assert store.history("t") == [3]
+    want = {(r.guid, r.val) for r in df.collect()}
+    assert {(r.guid, r.val) for r in store.read(spark, "t").collect()} == want
+    assert store.vacuum("t") == []
+    for v in (1, 2):
+        assert not os.path.isdir(store._vdir("t", v)), f"junk v{v} kept"
+    assert {(r.guid, r.val) for r in store.read(spark, "t").collect()} == want
 
 
 def test_crashed_staging_is_invisible_and_vacuumed(spark, tmp_path):

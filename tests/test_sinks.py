@@ -9,11 +9,10 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tally_database_loader_spark.sinks import (
-    jdbc_writer_options, overwrite_table, write_cdm, write_config_table,
+    jdbc_writer_options, write_cdm, write_config_table,
     write_csv, write_json,
 )
 from tally_database_loader_spark.sources.registry import default_tables
@@ -100,12 +99,11 @@ def test_jdbc_options():
     assert jdbc_writer_options("postgres")["truncate"] == "true"
 
 
-def test_overwrite_and_config_table(sample, spark, tmp_path):
-    p = str(tmp_path / "tbl")
-    overwrite_table(sample, p)
-    overwrite_table(sample.limit(1), p)              # truncate-before-load
-    assert spark.read.parquet(p).count() == 1
+def test_overwrite_and_config_table(spark, tmp_path):
     cfg = str(tmp_path / "config")
+    write_config_table(spark, cfg, company="Old Co", from_date="2023-04-01",
+                       to_date="2024-03-31", updated_at="2025-01-01 00:00:00")
+    # a second write replaces the first (truncate-before-load, B10)
     write_config_table(spark, cfg, company="Demo Co (Quoted)",
                        from_date="2024-04-01", to_date="2025-03-31",
                        updated_at="2026-08-13 00:00:00")
@@ -113,41 +111,6 @@ def test_overwrite_and_config_table(sample, spark, tmp_path):
     assert got["Company Name"] == "Demo Co (Quoted)"
     assert got["Period From"] == "2024-04-01"
     assert len(got) == 4
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    from tally_database_loader_spark.sinks.writers import write_parquet_partitioned
-    import datetime
-    rows = [(i, datetime.date(2024, 1 + i % 3, 1 + i)) for i in range(9)]
-    df = spark.createDataFrame(rows, "k int, d date")
-    out = str(tmp_path / "part")
-    write_parquet_partitioned(df, out, date_col="d")
-    assert os.path.isdir(os.path.join(out, "_ym=2024-01"))
-    back = spark.read.parquet(out).filter("_ym = '2024-02'")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert back.count() == 3
-    # the month filter must prune partitions at scan, not post-filter
-    assert "PartitionFilters: [isnotnull(_ym" in plan \
-        or "_ym#" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from tally_database_loader_spark.sinks.writers import write_bucketed_table
-    a = spark.range(0, 1000).selectExpr("id AS guid", "id * 2 AS v")
-    b = spark.range(0, 1000).selectExpr("id AS guid", "id * 3 AS w")
-    write_bucketed_table(a, "t_head", bucket_col="guid", n_buckets=8,
-                         path=str(tmp_path / "head"))
-    write_bucketed_table(b, "t_detail", bucket_col="guid", n_buckets=8,
-                         path=str(tmp_path / "detail"))
-    try:
-        j = spark.table("t_head").join(spark.table("t_detail"), "guid")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert j.count() == 1000
-        assert "Exchange hashpartitioning" not in plan, \
-            "bucketed equi-join must not shuffle"
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_head")
-        spark.sql("DROP TABLE IF EXISTS t_detail")
 
 
 def test_bigquery_stub_load_job(spark, tmp_path):
@@ -181,66 +144,3 @@ def test_bigquery_stub_load_job(spark, tmp_path):
                     "intermediateFormat": "parquet",
                     "temporaryGcsBucket": "b"}
 
-
-def test_write_training_shards_layout_and_manifest(spark, tmp_path):
-    """Sharded training layout: every document lands in exactly one
-    shard, shard assignment matches the deterministic hash, the manifest
-    totals/checksums match an independent recomputation, and the batched
-    variant carries loader-ready (batch_idx, pos_in_batch) columns."""
-    from pyspark.sql import functions as F
-
-    from tally_database_loader_spark.llm.packing import hash_order
-    from tally_database_loader_spark.sinks.writers import write_training_shards
-    from tally_database_loader_spark.sources.catalog import load_table
-
-    d = load_table(spark, "/root/testdata/sf0.01", "documents")
-    path = str(tmp_path / "shards")
-    man = write_training_shards(d, path, id_col="doc_id",
-                                len_col="n_chars", n_shards=4)
-    assert man["n_shards"] == 4 and len(man["shards"]) == 4
-    back = spark.read.parquet(path)
-    assert back.count() == d.count()
-    # assignment is the documented hash, not arbitrary
-    bad = back.filter(
-        F.col("shard") != F.pmod(hash_order(F.col("doc_id")), F.lit(4))
-        .cast("int")).count()
-    assert bad == 0
-    # manifest matches an independent recomputation from the files
-    ref = {r["shard"]: r for r in
-           back.groupBy("shard")
-               .agg(F.count(F.lit(1)).alias("docs"),
-                    F.sum("n_chars").alias("tokens"),
-                    F.expr("bit_xor(xxhash64(CAST(doc_id AS STRING)))")
-                     .alias("checksum")).collect()}
-    for s in man["shards"]:
-        r = ref[s["shard"]]
-        assert (s["docs"], s["tokens"], s["checksum"]) == \
-            (r["docs"], r["tokens"], r["checksum"])
-    # hash shards balance within a loose envelope on 500 docs
-    docs = [s["docs"] for s in man["shards"]]
-    assert max(docs) <= 2 * min(docs)
-
-    batched = str(tmp_path / "batched")
-    write_training_shards(d, batched, id_col="doc_id", len_col="n_chars",
-                          n_shards=2, batch_size=16)
-    b = spark.read.parquet(batched)
-    assert {"batch_idx", "pos_in_batch", "shard"} <= set(b.columns)
-    assert b.count() == d.count()
-    full = b.filter(F.col("batch_idx") == 0).groupBy("shard").count().collect()
-    assert all(r["count"] == 16 for r in full)
-
-
-def test_write_training_shards_duplicate_and_null_ids(spark, tmp_path):
-    """The batched path must neither fan out duplicate ids (the old
-    self-join multiplied rows k x k) nor drop NULL-id rows; totals in the
-    manifest match the input exactly."""
-    from tally_database_loader_spark.sinks.writers import write_training_shards
-    rows = [(1, 10), (1, 20), (1, 30), (2, 5), (None, 7), (None, 9)]
-    d = spark.createDataFrame(rows, "doc_id long, n_chars long")
-    path = str(tmp_path / "dups")
-    man = write_training_shards(d, path, id_col="doc_id",
-                                len_col="n_chars", n_shards=2, batch_size=2)
-    back = spark.read.parquet(path)
-    assert back.count() == len(rows)
-    assert sum(s["docs"] for s in man["shards"]) == len(rows)
-    assert sum(s["tokens"] for s in man["shards"]) == sum(n for _, n in rows)

@@ -1,4 +1,4 @@
-"""Salted-aggregation / salted-join equivalence (operators/skew.py).
+"""Salted-aggregation equivalence (operators/skew.py).
 
 The invariant: salting changes the physical distribution only — every
 salted result must equal its unsalted counterpart exactly.
@@ -9,8 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tally_database_loader_spark.operators.skew import (
-    salted_aggregate, salted_join)
+from tally_database_loader_spark.operators.skew import salted_aggregate
 from tests.conftest import SF_CORRECTNESS
 
 
@@ -60,18 +59,6 @@ def test_salted_aggregate_spreads_hot_key(spark):
     assert n_groups == 16
 
 
-def test_salted_join_equals_plain_join(spark):
-    e = _events(spark)
-    dim = e.select("event_type").distinct() \
-           .withColumn("label", F.upper("event_type"))
-    salted = salted_join(e, dim, on=["event_type"],
-                         distinct_on="event_id", n_salt=4)
-    plain = e.join(dim, "event_type")
-    cols = sorted(plain.columns)
-    assert salted.select(*cols).exceptAll(plain.select(*cols)).isEmpty()
-    assert plain.select(*cols).exceptAll(salted.select(*cols)).isEmpty()
-
-
 def test_non_decomposable_aggregate_rejected(spark):
     e = _events(spark)
     with pytest.raises(ValueError, match="non-decomposable"):
@@ -79,17 +66,3 @@ def test_non_decomposable_aggregate_rejected(spark):
                          aggs={"m": ("median", "value")},
                          distinct_on="event_id")
 
-
-def test_salted_join_rejects_small_side_preserving_types(spark):
-    """right/full outer would emit n_salt null-extended copies of every
-    unmatched small-side row — rejected with a clear error."""
-    import pytest
-    from tally_database_loader_spark.operators.skew import salted_join
-    big = spark.createDataFrame([(1, "a")], "k int, v string")
-    small = spark.createDataFrame([(2, "b")], "k int, w string")
-    for how in ("right", "full", "outer", "full_outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(big, small, ["k"], "k", n_salt=4, how=how)
-    # left outer keeps exactly one copy of each big row — unaffected
-    got = salted_join(big, small, ["k"], "k", n_salt=4, how="left").collect()
-    assert len(got) == 1 and got[0]["w"] is None

@@ -12,6 +12,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bench import HEADLINE, SF_DIR  # noqa: E402
 
 
+def normalize_plan(plan: str) -> str:
+    """Replace the ids a Spark session assigns per run (expression ids,
+    ``plan_id``, RDD numbers and the ``localCheckpoint`` call site) with
+    placeholders, so two dumps of an identical plan are byte-identical."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    return re.sub(r"at localCheckpoint at [^,]*,",
+                  "at localCheckpoint at <site>,", plan)
+
+
 def main():
     from tally_database_loader_spark.plans import gate
     from tally_database_loader_spark.plans.bench_plans import BENCH_PLANS
@@ -37,8 +48,7 @@ def main():
             bnlj[name] = tree.count("BroadcastNestedLoopJoin")
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        # strip the per-run plan ids to keep diffs reviewable
-        plan = re.sub(r"#\d+", "#N", plan)
+        plan = normalize_plan(plan)
         body.write(f"\n## {name}\n\n```\n{plan.strip()}\n```\n")
     inventory = ", ".join(f"`{n}` ({c})" for n, c in sorted(bnlj.items())) \
         or "none"

@@ -5,15 +5,17 @@ rounds commit (VERDICT r11 #7).
 
 Usage: python tools_dump_slot_plans.py <tag> <suffix> <slot> [<slot>...]
 e.g.   python tools_dump_slot_plans.py r12 before lm_score_suite
-Plan ids are normalized (#\\d+ -> #N) so before/after diffs are clean.
+Per-run ids are normalized (``tools_dump_plans.normalize_plan``) so
+before/after diffs are clean.
 """
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from tools_dump_plans import normalize_plan  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -36,15 +38,7 @@ def main() -> None:
         .fromString("formatted")
     for slot in slots:
         df = plans[slot](spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(mode)
-        plan = re.sub(r"#\d+", "#N", plan)
-        # session-dependent ids that would otherwise make two dumps of
-        # an IDENTICAL plan diff non-empty: plan_id, RDD numbers, and
-        # the localCheckpoint call-site frame
-        plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
-        plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
-        plan = re.sub(r"at localCheckpoint at [^,]*,",
-                      "at localCheckpoint at <site>,", plan)
+        plan = normalize_plan(df._jdf.queryExecution().explainString(mode))
         path = os.path.join(out_dir, f"{slot}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan.strip() + "\n")
